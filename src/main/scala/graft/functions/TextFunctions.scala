@@ -53,16 +53,4 @@ object TextFunctions {
     */
   def shingleList(text: Column, k: Int = 3): Column =
     toCol(graft.functions.expressions.ShingleList(toExpr(text), k))
-
-  /** Word k-grams over an already-clean token array (no tokenizer quirks).
-    * Prefer [[shingleSet]] (single-pass kernel) when starting from text.
-    */
-  def ngramSet(tokens: Column, k: Int): Column = array_distinct(shingles(tokens, k))
-
-  /** Character k-gram set ("shingling" in the char sense). */
-  def charNgramSet(text: Column, k: Int): Column =
-    when(length(text) < k, array().cast("array<string>"))
-      .otherwise(array_distinct(transform(
-        sequence(lit(1), length(text) - (k - 1)),
-        i => substr(text, i, lit(k)))))
 }

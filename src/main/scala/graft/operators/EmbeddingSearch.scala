@@ -171,20 +171,10 @@ object EmbeddingSearch {
     * bound cost hash the moderate-angle heavy-norm answers apart).
     * `nprobe = 0` derives the probe width from the corpus
     * ([[cellsNprobeFor]] — hold candidate volume, shrink the fraction).
+    * The quantizer is the PERSISTED sized one — the SAME index dir as the
+    * whole sized family (identical ⌈√N⌉/iters derivation), so a sweep's
+    * one training also serves MIPS.
     */
-  def mipsTopKIvf(spark: SparkSession, dir: String, k: Int = 5,
-      nQueries: Int = 10, nprobe: Int = 0): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val n = emb.count()
-    val cells = ivfCellCount(n)
-    mipsOverInverted(emb, trainKmeansIndex(emb, cells, 2), k, nQueries,
-      if (nprobe > 0) nprobe else cellsNprobeFor(n, cells))
-  }
-
-  /** [[mipsTopKIvf]] from the PERSISTED sized quantizer — the SAME index
-    * dir as the whole sized family (identical ⌈√N⌉/iters derivation), so
-    * a sweep's one training also serves MIPS. */
   def mipsTopKIvfPersisted(spark: SparkSession, dir: String, indexPath: String,
       k: Int = 5, nQueries: Int = 10, nprobe: Int = 0): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
@@ -280,17 +270,6 @@ object EmbeddingSearch {
     recallOf(mipsTopKWhere(spark, dir, col("label") === labelEq, k, nQueries),
       mipsTopKFiltered(spark, dir, indexPath, k, nQueries, labelEq))
 
-  /** Recall twin of the IVF MIPS serve vs exact [[mipsTopK]]. */
-  def mipsRecallIvf(spark: SparkSession, dir: String, k: Int = 5,
-      nQueries: Int = 10): DataFrame =
-    mipsRecallOf(spark, dir, mipsTopKIvf(spark, dir, k, nQueries), k, nQueries)
-
-  /** Recall twin of the PERSISTED IVF MIPS serve. */
-  def mipsRecallIvfPersisted(spark: SparkSession, dir: String,
-      indexPath: String, k: Int = 5, nQueries: Int = 10): DataFrame =
-    mipsRecallOf(spark, dir,
-      mipsTopKIvfPersisted(spark, dir, indexPath, k, nQueries), k, nQueries)
-
   /** ALSH-accelerated MIPS (Shrivastava & Li NIPS'14 / Neyshabur & Srebro
     * ICML'15 Simple-LSH): inner product is NOT a metric (it violates the
     * triangle inequality and a vector need not be its own nearest
@@ -383,27 +362,15 @@ object EmbeddingSearch {
   def mipsRecall(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame =
     mipsRecallOf(spark, dir, mipsTopKAlsh(spark, dir, k, nQueries), k, nQueries)
 
-  /** Measurement-only MIPS recall of an already-built approximate frame
-    * (the Scratch `mipsivf` probe) — not a registered surface. */
-  private[graft] def mipsRecallProbe(spark: SparkSession, dir: String,
-      approxTopK: DataFrame, k: Int = 5, nQueries: Int = 10): DataFrame =
-    mipsRecallOf(spark, dir, approxTopK, k, nQueries)
-
   /** The ONE MIPS recall rollup both ALSH layouts share — forked copies
     * would let the fixed and sized rows silently measure different rules.
+    * The exact side is memoized per (dataset, ip, k, nQueries), like
+    * [[recallAgainstBrute]]'s.
     */
   private def mipsRecallOf(spark: SparkSession, dir: String, approxTopK: DataFrame,
-      k: Int, nQueries: Int): DataFrame = {
-    // exact side memoized per (dataset, ip, k, nQueries) — the
-    // exactTopKMemo discipline (see recallAgainstBrute)
-    val br = memoizedExactPairs(spark, dir, "ip", k, nQueries)(
-      mipsTopK(spark, dir, k, nQueries))
-    val ap = approxTopK.select(col("query_id").as("aq"), col("vec_id").as("av"))
-    br.join(ap, col("query_id") === col("aq") && col("vec_id") === col("av"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"), count(col("av")).as("n_hit"),
-        round(count(col("av")).cast("double") / count(lit(1)).cast("double"), 6).as("recall"))
-  }
+      k: Int, nQueries: Int): DataFrame =
+    recallOf(memoizedExactPairs(spark, dir, "ip", k, nQueries)(
+      mipsTopK(spark, dir, k, nQueries)), approxTopK)
 
   /** 16-bit hyperplane signature of a double vector (native kernel —
     * [[graft.functions.expressions.HyperplaneSignature]]; weights are the
@@ -453,8 +420,9 @@ object EmbeddingSearch {
     * base key (C(rowsPerBand, 2) keys — the next probe ring out from
     * [[lshFlipKeys]]'s Hamming-1 shell). Same string format, same
     * is_base=false tagging in the kernels, so probe-probe skipping works
-    * unchanged; key fan-out grows to 1 + r + r(r−1)/2 per band. Measured
-    * on the frontier harness (Scratch knnh2) before any default moves.
+    * unchanged; key fan-out grows to 1 + r + r(r−1)/2 per band. The
+    * measured recall/wall frontier is SCALING.md's round-11 Hamming-2
+    * table.
     */
   def lshFlip2Keys(sig: Column, bands: Int = 4, rowsPerBand: Int = 4): Column = {
     // Spark's sequence(0, -1) DESCENDS ([0, -1]) instead of being empty,
@@ -844,16 +812,10 @@ object EmbeddingSearch {
     val exact = memoizedExactPairs(spark, dir, s"pairtau$tau", 0, nProbes)(
       nearDupPairsBrute(spark, dir, tau, nProbes)
         .select(col("vec_a").as("query_id"), col("vec_b").as("vec_id")))
-      .select(col("query_id").as("e_a"), col("vec_id").as("e_b"))
+      .select(col("query_id").as("vec_id"), col("vec_id").as("nbr_id"))
     val approx = approxPairs.where(col("vec_a") < nProbes)
-      .select(col("vec_a").as("a_a"), col("vec_b").as("a_b"))
-    exact.join(approx,
-        exact("e_a") === approx("a_a") && exact("e_b") === approx("a_b"), "left")
-      .groupBy(col("e_a"))
-      .agg(count(lit(1)).as("n_exact"), count(col("a_b")).as("n_hit"))
-      .select(col("e_a").as("vec_id"), col("n_exact"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("n_exact").cast("double"), 6)
-          .as("recall"))
+      .select(col("vec_a").as("vec_id"), col("vec_b").as("nbr_id"))
+    recallOf(exact, approx, "vec_id", "nbr_id")
   }
 
   /** SemDeDup-style SEMANTIC PRUNE (Abbas et al. '23): drop every vector
@@ -1240,9 +1202,9 @@ object EmbeddingSearch {
 
   /** The descent LOOP over any seed graph (vec_id, nbr_id, cosine,
     * top-kBuild per vertex) — shared by the banded-seeded default
-    * ([[knnJoinDescent]]) and any measured composition (e.g. a
-    * cells-graph seed in the Scratch harness); one loop definition so
-    * the refinement rule can never fork across seeds.
+    * ([[knnJoinDescent]]) and any measured composition (e.g. the
+    * cells-graph seed of SCALING.md's round-12 cells+descent rows); one
+    * loop definition so the refinement rule can never fork across seeds.
     */
   /** Fail-fast flag for the slot contract above: two CONCURRENT descents
     * would free each other's checkpoint blocks mid-build and surface as
@@ -1336,25 +1298,19 @@ object EmbeddingSearch {
     * (probe filter, brute-force exact side, left join so misses count,
     * per-probe n_exact/n_hit/round(recall, 6)) shared by every kNN-graph
     * recall surface ([[knnJoinRecall]], [[knnJoinDescentRecall]],
-    * [[knnJoinCellsRecall]]); a hand-rolled copy would silently fork the
-    * rule on any future edit (tie-break, rounding, n_exact definition).
+    * [[knnJoinCellsRecallPersisted]]); a hand-rolled copy would silently
+    * fork the rule on any future edit (tie-break, rounding, n_exact
+    * definition).
     */
   private def graphRecallVsBrute(spark: SparkSession, dir: String,
       approxGraph: DataFrame, k: Int, nProbes: Int): DataFrame = {
-    val approx = approxGraph.where(col("vec_id") < nProbes)
-      .select(col("vec_id").as("a_id"), col("nbr_id").as("a_nbr"))
-    // exact side memoized per (dataset, cos, k, |P|) — the exactTopKMemo
-    // discipline (see recallAgainstBrute): five graph recall twins share
-    // one probe-set brute pass per session
+    // exact side memoized per (dataset, cos, k, |P|) (see
+    // recallAgainstBrute): the graph recall twins share one probe-set
+    // brute pass per session
     val exTop = memoizedExactPairs(spark, dir, "cos", k, nProbes)(
       bruteForceTopK(spark, dir, k, nQueries = nProbes))
-      .select(col("query_id").as("p_id"), col("vec_id").as("e_nbr"))
-    exTop.join(approx,
-        exTop("p_id") === approx("a_id") && exTop("e_nbr") === approx("a_nbr"), "left")
-      .groupBy(col("p_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("a_nbr")).as("n_hit"))
-      .select(col("p_id").as("vec_id"), col("n_exact"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("n_exact").cast("double"), 6).as("recall"))
+      .select(col("query_id").as("vec_id"), col("vec_id").as("nbr_id"))
+    recallOf(exTop, approxGraph.where(col("vec_id") < nProbes), "vec_id", "nbr_id")
   }
 
   /** Recall@k of the NN-descent-refined graph against the exact graph on
@@ -1538,27 +1494,14 @@ object EmbeddingSearch {
     graphRecallVsBrute(spark, dir, knnJoinAuto(spark, dir, indexPath, k), k, nProbes)
 
   /** Recall@k of the IVF-cell graph vs the exact graph on the fixed
-    * probe set — [[graphRecallVsBrute]] over [[knnJoinCells]]. */
-  def knnJoinCellsRecall(spark: SparkSession, dir: String, k: Int = 3,
-      nProbes: Int = 100, nprobe: Int = 0): DataFrame =
-    graphRecallVsBrute(spark, dir, knnJoinCells(spark, dir, k, nprobe), k, nProbes)
-
-  /** [[knnJoinCellsRecall]] over the PERSISTED-quantizer serve — the
-    * registered twin, so the gated recall measures exactly the plan the
-    * cells entry ships. */
+    * probe set — [[graphRecallVsBrute]] over the PERSISTED-quantizer
+    * serve, so the gated recall measures exactly the plan the cells entry
+    * ships. */
   def knnJoinCellsRecallPersisted(spark: SparkSession, dir: String,
       indexPath: String, k: Int = 3, nProbes: Int = 100,
       nprobe: Int = 0): DataFrame =
     graphRecallVsBrute(spark, dir,
       knnJoinCellsPersisted(spark, dir, indexPath, k, nprobe), k, nProbes)
-
-  /** Measurement-only recall of an already-built graph frame (the
-    * Scratch `cellsnnd` probe scores the SAME refined graph it just
-    * timed, instead of rebuilding seed + rounds a second time) — not a
-    * registered surface. */
-  private[graft] def graphRecallProbe(spark: SparkSession, dir: String,
-      graph: DataFrame, k: Int = 3, nProbes: Int = 100): DataFrame =
-    graphRecallVsBrute(spark, dir, graph, k, nProbes)
 
   /** GRAPH-NAVIGATED query serving (r15, the r14 verdict's item 3 — the
     * measured `graphserve` frontier probe promoted to a registered
@@ -2096,7 +2039,7 @@ object EmbeddingSearch {
     * signature pass, so the blocks can't be released inside this call —
     * instead the most recent tiled cache is tracked session-wide and
     * freed when the NEXT tiled frame is built, bounding a long-lived
-    * session (ScaleBench min-of-2 loops, repeated Scratch passes) at ONE
+    * session (ScaleBench min-of-2 loops) at ONE
     * pinned corpus-sized cache instead of one per invocation. The cache
     * is `persist` (lineage KEPT), not localCheckpoint: a previous tiled
     * frame re-evaluated after its blocks were freed RECOMPUTES the
@@ -2316,48 +2259,6 @@ object EmbeddingSearch {
       .where(col("cosine") >= tau)
   }
 
-  /** Measurement-only BUILD-COST split probe for the standing IVF index
-    * (r16, the r15 verdict's item 5): walls the two N^1.5 phases of
-    * [[buildIvfIndex]] separately — full-corpus Lloyd TRAINING (iters ×
-    * n × k cosines at the sized k = ⌈√N⌉) and the one-pass ASSIGNMENT
-    * (n × k argmax) — so the build curve's superlinear term is named by
-    * measurement, not guessed. Not a registered surface.
-    */
-  private[graft] def ivfBuildSplitProbe(embV: DataFrame, cells: Int,
-      iters: Int = 2, samplePct: Int = 100): (Double, Double) = {
-    val t0 = System.nanoTime()
-    val cent = trainKmeansIndex(embV, cells, iters, samplePct)
-    val tTrain = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    // aggregate over the assigned cell FORCES the argmax per row — a bare
-    // count() lets Catalyst prune the whole assignment expression away
-    // and times a metadata count instead
-    kmeansAssign(withNorm(embV), cent)
-      .agg(sum(col("cl")), sum(col("centrality"))).collect()
-    val tAssign = (System.nanoTime() - t1) / 1e9
-    org.apache.spark.sql.GraftShim.unpersistCheckpoint(cent)
-    (tTrain, tAssign)
-  }
-
-  /** Measurement-only candidate-volume probe for the banded near-dup
-    * join (the Scratch `slopeprobe` diagnosis of super-linear scale
-    * rows): Σ per-band C(sz, 2) — the pair volume the band join feeds
-    * the exact verify — as pure arithmetic over bucket counts, no pair
-    * materialization. Not a registered surface. */
-  private[graft] def bandCandidateCountProbe(spark: SparkSession, dir: String,
-      nPlanes: Int, bands: Int): Long = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    emb.select(explode(lshBandKeys(lshSignature(col("v"), nPlanes), bands,
-        nPlanes / bands)).as("band"))
-      .groupBy("band").agg(count(lit(1)).as("c"))
-      // sum over zero rows is NULL — coalesce so an empty corpus probes
-      // to 0 instead of an NPE (ADVICE r15)
-      .agg(coalesce(sum((col("c") * (col("c") - lit(1))) / lit(2)), lit(0L))
-        .cast("long"))
-      .collect()(0).getLong(0)
-  }
-
   /** The embedding-modality twin of [[Dedup.buildDedupIndex]]: persist a
     * vector corpus's near-dup state as two parquet tables —
     * `vecs/` (vec_id, v: array<double>) and `bands/` (vec_id, band:
@@ -2548,11 +2449,6 @@ object EmbeddingSearch {
     kmeansTopKWithIndex(emb, trainKmeansIndex(emb, cells, iters), k, nQueries, nprobe)
   }
 
-  /** Recall@k of the sized-quantizer serve vs the exact top-k. */
-  def kmeansRecallSized(spark: SparkSession, dir: String, k: Int = 5,
-      nQueries: Int = 10): DataFrame =
-    recallAgainstBrute(spark, dir, kmeansTopKSized(spark, dir, k, nQueries), k, nQueries)
-
   /** [[kmeansTopKSized]] from a PERSISTED sized quantizer (train-or-load)
     * — the train-once/serve-many shape of the registered entry; shares
     * its index dir with [[knnJoinCellsPersisted]] (same ⌈√N⌉/iters
@@ -2582,12 +2478,6 @@ object EmbeddingSearch {
       s"the persisted sized-quantizer family is pinned to iters=2 (the " +
         s"shared index dir encodes i2); got iters=$iters — use the " +
         s"non-persisted sized form or an iters-keyed index dir instead")
-
-  /** Recall twin of the persisted sized serve. */
-  def kmeansRecallSizedPersisted(spark: SparkSession, dir: String,
-      indexPath: String, k: Int = 5, nQueries: Int = 10): DataFrame =
-    recallAgainstBrute(spark, dir,
-      kmeansTopKSizedPersisted(spark, dir, indexPath, k, nQueries), k, nQueries)
 
   // Norms hoisted OUT of the k-way argmax: sqrt(v·v) is identical whether
   // computed once per row or once per (row, centroid) pair — same doubles,
@@ -3020,18 +2910,8 @@ object EmbeddingSearch {
     * pruning — the join and rollup are negligible next to the searches.
     * Output: (query_id, n_exact, n_hit, recall).
     */
-  def lshRecall(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val exact = bruteForceTopK(spark, dir, k, nQueries)
-      .select(col("query_id"), col("vec_id"))
-    val approx = lshTopK(spark, dir, k, nQueries)
-      .select(col("query_id").as("q2"), col("vec_id").as("v2"))
-    exact.join(approx,
-        exact("query_id") === approx("q2") && exact("vec_id") === approx("v2"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("v2")).as("n_hit"))
-      .select(col("query_id"), col("n_exact"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("n_exact").cast("double"), 6).as("recall"))
-  }
+  def lshRecall(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame =
+    recallOf(bruteForceTopK(spark, dir, k, nQueries), lshTopK(spark, dir, k, nQueries))
 
   /** Recall@k of the kNN-graph path ([[knnJoinScaled]]) against the
     * exact graph, on a fixed probe set (`vec_id < nProbes`) — the
@@ -3058,18 +2938,9 @@ object EmbeddingSearch {
     * index layout. Output: (query_id, n_exact, n_hit, recall).
     */
   def multiProbeRecall(spark: SparkSession, dir: String, k: Int = 5,
-      nQueries: Int = 10): DataFrame = {
-    val exact = bruteForceTopK(spark, dir, k, nQueries)
-      .select(col("query_id"), col("vec_id"))
-    val approx = lshTopKMultiProbe(spark, dir, k, nQueries)
-      .select(col("query_id").as("q2"), col("vec_id").as("v2"))
-    exact.join(approx,
-        exact("query_id") === approx("q2") && exact("vec_id") === approx("v2"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("v2")).as("n_hit"))
-      .select(col("query_id"), col("n_exact"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("n_exact").cast("double"), 6).as("recall"))
-  }
+      nQueries: Int = 10): DataFrame =
+    recallOf(bruteForceTopK(spark, dir, k, nQueries),
+      lshTopKMultiProbe(spark, dir, k, nQueries))
 
   /** Persist / load the PQ codebooks — [[saveKmeansIndex]]'s discipline
     * for the compressed-search index: m·ksub rows of (s, cl, cv),
@@ -3204,88 +3075,81 @@ object EmbeddingSearch {
       .where(col("rank") <= k)
   }
 
-  /** Recall@k of the PQ path against the exact brute-force top-k — the
-    * compression-loss measurement an ANN deployment runs before choosing
-    * (m, ksub): same joined-pipelines shape as [[lshRecall]]. Output:
+  /** Recall@k of the composed IVF-PQ index against the exact top-k — the
+    * knob-tuning loop (nprobe × m × ksub) an IVF-PQ deployment runs —
+    * over the PERSISTED composed index, the recall twin of the registered
+    * serve sharing its one-training-per-dataset artifact (r16 opt; rows
+    * identical, the serve is deterministic). Output:
     * (query_id, n_exact, n_hit, recall).
     */
-  def pqRecall(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame =
-    recallAgainstBrute(spark, dir, pqTopK(spark, dir, k, nQueries), k, nQueries)
-
-  /** Recall@k of the composed IVF-PQ index against the exact top-k — the
-    * knob-tuning loop (nprobe × m × ksub) an IVF-PQ deployment runs.
-    */
-  def ivfPqRecall(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame =
-    recallAgainstBrute(spark, dir, ivfPqTopK(spark, dir, k, nQueries), k, nQueries)
-
-  /** [[ivfPqRecall]] against the PERSISTED composed index — the recall
-    * twin of the registered serve, sharing its one-training-per-dataset
-    * artifact (r16 opt; rows identical, the serve is deterministic). */
   def ivfPqRecallPersisted(spark: SparkSession, dir: String, indexPath: String,
       k: Int = 5, nQueries: Int = 10): DataFrame =
     recallAgainstBrute(spark, dir,
       ivfPqTopKPersisted(spark, dir, indexPath, k, nQueries), k, nQueries)
 
-  /** The shared recall@k rollup: left-join an approximate searcher's top-k
-    * against the brute-force exact set (both |Q|·k rows — the join is
-    * negligible next to the searches). */
-  /** One exact ground-truth pass per (dataset, metric, k, nQueries),
-    * memoized for the sweep (r14, the r13 verdict's item 5 — the
-    * bpeModelMemo discipline applied to the recall harness): a bench or
-    * verify pass runs a dozen recall twins against the SAME brute top-k,
-    * and each was re-scanning the corpus for it. The memo holds the
-    * collected (query_id, vec_id) pairs — ≤ nQueries·k rows, result
-    * scale, never data scale — keyed per dir with the embeddings file
-    * fingerprint validating the cached value (a regenerated dataset
-    * REPLACES the entry). Results are bit-identical either way; only
-    * the cost moves.
+  /** One collected ground-truth pair set per memo `key` (r14, the r13
+    * verdict's item 5 — the bpeModelMemo discipline applied to the recall
+    * harness): a bench or verify pass runs a dozen recall twins against
+    * the SAME exact side, and each was re-scanning the corpus for it. The
+    * memo holds the collected (query_id, vec_id) pairs — result scale,
+    * never data scale — and `fp` validates the cached value: a changed
+    * fingerprint (a regenerated dataset, a re-committed index) REPLACES
+    * the entry instead of serving stale pairs. Results are bit-identical
+    * either way; only the cost moves.
+    *
+    * The Spark job runs OUTSIDE the map lock (r15, ADVICE r14): a
+    * collect() inside ConcurrentHashMap.compute holds the bin lock for
+    * the job's duration — concurrent recall twins whose keys share a bin
+    * serialize, and a re-entrant access from inside the job's call path
+    * would deadlock. The value is deterministic, so the worst a lost race
+    * costs is one redundant exact pass; the put still swaps atomically
+    * under the fingerprint check.
     */
-  private val exactTopKMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int), (String, Array[(Long, Long)])]()
+  private val exactPairsMemo = new java.util.concurrent.ConcurrentHashMap[
+    Any, (String, Array[(Long, Long)])]()
 
-  private def memoizedExactPairs(spark: SparkSession, dir: String,
-      metric: String, k: Int, nQueries: Int)(compute: => DataFrame): DataFrame = {
-    val fp = java.lang.Long.toHexString(
-      Tables.datasetFingerprint(s"$dir/embeddings.parquet"))
-    // the Spark job runs OUTSIDE the map lock (r15, ADVICE r14): a
-    // collect() inside ConcurrentHashMap.compute holds the bin lock for
-    // the job's duration — concurrent recall twins whose keys share a
-    // bin serialize, and a re-entrant access from inside the job's
-    // call path would deadlock. The value is deterministic, so the
-    // worst a lost race costs is one redundant exact pass; the put
-    // still swaps atomically under the fingerprint check.
-    val key = (dir, metric, k, nQueries)
-    val cached = exactTopKMemo.get(key)
+  private[graft] def memoizedPairs(spark: SparkSession, key: Any, fp: String)(
+      compute: => DataFrame): DataFrame = {
+    val cached = exactPairsMemo.get(key)
     val rows = if (cached != null && cached._1 == fp) cached._2
       else {
-        val computed = compute.select(col("query_id"), col("vec_id"))
+        val computed = compute
+          .select(col("query_id").cast("long"), col("vec_id").cast("long"))
           .collect().map(r => (r.getLong(0), r.getLong(1)))
-        exactTopKMemo.put(key, (fp, computed))
+        exactPairsMemo.put(key, (fp, computed))
         computed
       }
     import spark.implicits._
     spark.createDataset(rows.toIndexedSeq).toDF("query_id", "vec_id")
   }
 
+  /** [[memoizedPairs]] per (dataset, metric, k, nQueries), validated by
+    * the embeddings file fingerprint. */
+  private def memoizedExactPairs(spark: SparkSession, dir: String,
+      metric: String, k: Int, nQueries: Int)(compute: => DataFrame): DataFrame =
+    memoizedPairs(spark, (dir, metric, k, nQueries), java.lang.Long.toHexString(
+      Tables.datasetFingerprint(s"$dir/embeddings.parquet")))(compute)
+
   private def recallAgainstBrute(spark: SparkSession, dir: String,
       approxTopK: DataFrame, k: Int, nQueries: Int): DataFrame =
     recallOf(memoizedExactPairs(spark, dir, "cos", k, nQueries)(
       bruteForceTopK(spark, dir, k, nQueries)), approxTopK)
 
-  /** Per-query recall of `approx` against `exact` — both (query_id,
-    * vec_id, ...) result sets; queries with an empty exact side carry no
-    * row (recall is undefined there). The one recall-join shape every
-    * cosine-side recall twin shares ([[mipsRecallOf]] is the IP-side
-    * sibling with its own exact query).
+  /** THE recall rollup every recall twin shares: per `key`, how many of
+    * the exact side's (key, item) pairs the approximate side also holds.
+    * Left join, so a missed neighbor counts in n_exact but not in n_hit;
+    * a key with an empty exact side carries no row (recall is undefined
+    * there). Output: (key, n_exact, n_hit, recall rounded to 6).
     */
-  private def recallOf(exactRes: DataFrame, approxRes: DataFrame): DataFrame = {
-    val exact = exactRes.select(col("query_id"), col("vec_id"))
-    val approx = approxRes.select(col("query_id").as("q2"), col("vec_id").as("v2"))
+  private[graft] def recallOf(exactRes: DataFrame, approxRes: DataFrame,
+      key: String = "query_id", item: String = "vec_id"): DataFrame = {
+    val exact = exactRes.select(col(key), col(item))
+    val approx = approxRes.select(col(key).as("a_key"), col(item).as("a_item"))
     exact.join(approx,
-        exact("query_id") === approx("q2") && exact("vec_id") === approx("v2"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("v2")).as("n_hit"))
-      .select(col("query_id"), col("n_exact"), col("n_hit"),
+        exact(key) === approx("a_key") && exact(item) === approx("a_item"), "left")
+      .groupBy(col(key))
+      .agg(count(lit(1)).as("n_exact"), count(col("a_item")).as("n_hit"))
+      .select(col(key), col("n_exact"), col("n_hit"),
         round(col("n_hit").cast("double") / col("n_exact").cast("double"), 6).as("recall"))
   }
 
@@ -3869,7 +3733,7 @@ object EmbeddingSearch {
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
     val key = ivfCommitKey(fs, indexPath)
-    // count runs OUTSIDE the map lock (the memoizedExactPairs
+    // count runs OUTSIDE the map lock (the memoizedPairs
     // discipline) — a lost race costs one redundant metadata count
     val cached = ivfRowsMemo.get(indexPath)
     if (cached != null && cached._1 == key) cached._2
@@ -4577,15 +4441,6 @@ object EmbeddingSearch {
     recallAgainstBrute(spark, dir,
       kmeansSizedStandingServe(spark, dir, indexPath, k, nQueries), k, nQueries)
 
-  /** Measurement-only recall of the standing sized serve at an explicit
-    * probe width (the Scratch `np4` frontier probe) — not a registered
-    * surface. */
-  private[graft] def recallOfStandingSized(spark: SparkSession, dir: String,
-      indexPath: String, nprobe: Int, k: Int = 5, nQueries: Int = 10): DataFrame =
-    recallAgainstBrute(spark, dir,
-      kmeansSizedStandingServe(spark, dir, indexPath, k, nQueries, nprobe),
-      k, nQueries)
-
   /** The REGISTERED sound-range default (r14): the triangle-bound serve
     * from the standing index's stored radii table
     * ([[rangeBatchAgainstIvfIndex]]) instead of re-assigning the corpus
@@ -5243,22 +5098,12 @@ object EmbeddingSearch {
   }
 
   /** Recall@k of the SQ8 ADC path against exact brute force — the same
-    * evaluation loop as [[lshRecall]]/[[pqRecall]], measuring what the
-    * 4× compression costs in ranking quality (here: distortion only, since
-    * the small-SF serve is exhaustive — candidate recall is 1).
+    * evaluation loop as [[lshRecall]], measuring what the 4× compression
+    * costs in ranking quality (here: distortion only, since the small-SF
+    * serve is exhaustive — candidate recall is 1).
     */
-  def sq8Recall(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val exact = bruteForceTopK(spark, dir, k, nQueries)
-      .select(col("query_id"), col("vec_id"))
-    val approx = sq8TopK(spark, dir, k, nQueries)
-      .select(col("query_id").as("q2"), col("vec_id").as("v2"))
-    exact.join(approx,
-        exact("query_id") === approx("q2") && exact("vec_id") === approx("v2"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("v2")).as("n_hit"))
-      .select(col("query_id"), col("n_exact"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("n_exact").cast("double"), 6).as("recall"))
-  }
+  def sq8Recall(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame =
+    recallOf(bruteForceTopK(spark, dir, k, nQueries), sq8TopK(spark, dir, k, nQueries))
 
   /** Dimension-TRUNCATION recall curve — the Matryoshka question: how much
     * ranking quality do the first d' dimensions alone buy? For each d' the

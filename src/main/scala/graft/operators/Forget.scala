@@ -39,8 +39,6 @@ object Forget {
     */
   def textDedupTarget(indexPath: String): Target =
     Target(indexPath, Seq("exact", "sets", "bands"), "doc_id")
-  def vecDedupTarget(indexPath: String): Target =
-    Target(indexPath, Seq("vecs", "bands"), "vec_id")
   def bm25Target(indexPath: String): Target =
     Target(indexPath, Seq("postings", "doclens", "fwd"), "doc_id")
   /** The IVF index's VECTOR table — the per-record side of the ANN
@@ -51,9 +49,6 @@ object Forget {
     */
   def ivfTarget(indexPath: String): Target =
     Target(indexPath, Seq("ivf", "idmap"), "vec_id")
-  def phashTarget(indexPath: String): Target = Target(indexPath, Seq("phashes"), "doc_id")
-  def audioFpTarget(indexPath: String): Target = Target(indexPath, Seq("afps"), "doc_id")
-  def videoFpTarget(indexPath: String): Target = Target(indexPath, Seq("vfps"), "doc_id")
 
   /** Order-independent fingerprint of a forget id set: distinct count +
     * summed crc32 of the key's string form — one aggregation over a frame

@@ -636,9 +636,6 @@ object Multimodal {
 
   def audioFpIndexExists(path: String): Boolean = fpIndexExistsAt(path)
 
-  def extendAudioFpIndex(indexPath: String, fps: Dataset[AudioFpRow]): Unit =
-    extendFpIndexAt(indexPath, fps.toDF(), "afps")
-
   /** Incremental audio dedup vs the persisted fingerprint index — the audio
     * twin of [[phashDedupAgainst]]; output (doc_id, dup_of, hamming).
     */

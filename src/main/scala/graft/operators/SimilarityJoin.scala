@@ -277,51 +277,6 @@ object SimilarityJoin {
         round(col("c"), 6).as("containment"))
   }
 
-  /** Measurement-only candidate-volume probe for [[containmentPairs]]
-    * (the Scratch `slopeprobe` diagnosis): Σ_t prefixCount(t)·df(t) —
-    * the probe⋈index pair volume — as arithmetic over token counts,
-    * no pair materialization. Not a registered surface. */
-  private[graft] def containmentCandidateCountProbe2(docs: DataFrame,
-      tau: Double = 0.8, k: Int = 3): (Long, Long) = {
-    val sets = docs.select(col("doc_id"), shingleSet(col("text"), k).as("sh"))
-      .where(size(col("sh")) > 0)
-    val hsets = hashSets(sets)
-    val ex = hsets.select(col("doc_id"), size(col("hs")).as("sz"), explode(col("hs")).as("t"))
-    val dfT = ex.groupBy("t").agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy("doc_id").orderBy("df", "t")
-    val ranked = ex.join(Scale.maybeBroadcast(dfT), "t")
-      .withColumn("rnk", row_number().over(w))
-    val probe = ranked
-      .where(col("rnk") <= col("sz") - floor(lit(tau) * col("sz")) + 1)
-    val rows = probe
-      .groupBy("t").agg(count(lit(1)).as("p"))
-      .join(dfT, "t")
-      // sum over zero rows is NULL — coalesce so an empty corpus probes
-      // to 0 instead of an NPE (ADVICE r15)
-      .agg(coalesce(sum(col("p") * col("df")), lit(0L)).cast("long"))
-      .collect()(0).getLong(0)
-    // survivors of the size + positional + prefix-count pruning — what
-    // actually reaches the array prefilter in [[containmentPairs]] (r16:
-    // mirrors the shipped groupBy form, o_pre bound included)
-    val dd = probe
-      .select(col("doc_id").as("doc_a"), col("sz").as("sz_a"), col("t"),
-        col("rnk").as("rnk_a"))
-      .join(ranked.select(col("doc_id").as("doc_b"), col("sz").as("sz_b"),
-        col("t"), col("rnk").as("rnk_b")), "t")
-      .where(col("doc_a") =!= col("doc_b"))
-      .where(col("sz_b").cast("double") >= lit(tau) * col("sz_a").cast("double"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("o_pre"), first(col("sz_a")).as("sz_a"),
-        max(least(col("sz_a") - col("rnk_a"), col("sz_b") - col("rnk_b")) + 1)
-          .as("pos_bound"))
-      .where(col("pos_bound").cast("double") >= lit(tau) * col("sz_a").cast("double"))
-      .where(col("o_pre") >=
-        ceil(lit(tau) * col("sz_a").cast("double")).cast("long")
-          - floor(lit(tau) * col("sz_a").cast("double")).cast("long") + 1L)
-      .count()
-    (rows, dd)
-  }
-
   /** All-pairs EDIT-DISTANCE join (Ed-Join, Xiao/Wang/Lin VLDB'08): unordered
     * string pairs within Levenshtein distance `maxDist`, without a cartesian
     * product. Candidate generation mirrors [[pairsFromSets]]' prefix

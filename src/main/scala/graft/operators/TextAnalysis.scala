@@ -1013,25 +1013,27 @@ object TextAnalysis {
     * that shares no n-gram with the benchmark but is a near-duplicate of a
     * contaminated doc (or of a near-dup of one, …) still leaks eval signal
     * through paraphrase chains, so hygiene flags the bounded-hop closure of
-    * the flagged set over the near-dup graph. Declared as a RECURSIVE CTE
-    * (Spark 4 `WITH RECURSIVE`): seeds are [[decontaminate]]'s flagged docs,
-    * edges the symmetric MinHash-LSH verified pairs among corpus docs, and
-    * each recursion step is one hop, engine-scheduled as an iterated join.
-    * Scale shape: the recursion depth is BOUNDED (`maxHops` joins total, no
-    * fixpoint risk), seeds are benchmark-overlap-sized (small), and the edge
-    * list is the already-sub-quadratic LSH pair output — the per-hop work is
-    * a seeds-sized-side join, not a corpus scan. For the UNBOUNDED closure
-    * use [[Dedup.dedupClusters]] (pointer-halving fixpoint, O(log d)
-    * rounds); the CTE form is the interactive bounded-hop audit query.
-    * Output: (doc_id, hops) — every reachable doc with its minimum hop
-    * count (0 = directly contaminated).
+    * the flagged set over the near-dup graph. Computed as a BFS FRONTIER
+    * loop: seeds are [[decontaminate]]'s flagged docs, edges the symmetric
+    * MinHash-LSH verified pairs among corpus docs, and each hop joins only
+    * the previous hop's newly reached docs against the edges, anti-joined
+    * against everything already reached. The loop stops after `maxHops`
+    * hops or as soon as a hop reaches nothing new. Scale shape: at most
+    * `maxHops` joins (no fixpoint risk), seeds are benchmark-overlap-sized
+    * (small), and the edge list is the already-sub-quadratic LSH pair
+    * output — the per-hop work is a frontier-sized-side join, not a corpus
+    * scan. The DuckDB oracle still replays the bounded recursive-CTE form
+    * (`WITH RECURSIVE ... GROUP BY min(hops)`), which yields the same rows.
+    * For the UNBOUNDED closure use [[Dedup.dedupClusters]] (pointer-halving
+    * fixpoint, O(log d) rounds). Output: (doc_id, hops) — every reachable
+    * doc with its minimum hop count (0 = directly contaminated).
     */
   def contaminationSpread(docs: DataFrame, tau: Double = 0.7, maxHops: Int = 3,
       k: Int = 5, nEval: Int = 5): DataFrame = {
     val seeds = decontaminate(docs, k, nEval)
       .where(col("contaminated")).select(col("doc_id"))
     // EAGER checkpoint before the loop (same discipline as dedupClusters):
-    // the recursive term re-evaluates its plan every hop, so without this
+    // each hop re-evaluates the edge plan, so without this
     // the whole LSH pair pipeline — shingle, minhash, band, verify — would
     // re-run maxHops+1 times; checkpointed, each hop joins the (small)
     // materialized edge list. Both directions from one pass over pairs.
@@ -1060,7 +1062,11 @@ object TextAnalysis {
     var reached = seeds.select(col("doc_id"), lit(0L).as("hops"))
       .localCheckpoint()
     var frontier = reached
-    for (h <- 1 to maxHops) {
+    var h = 1
+    // an empty frontier reaches nothing: stop instead of joining and
+    // checkpointing empty frames until maxHops (the check reads the
+    // just-materialized checkpoint, not the plan)
+    while (h <= maxHops && !frontier.isEmpty) {
       val next = frontier.select(col("doc_id").as("doc_a"))
         .join(edges, "doc_a")
         .select(col("doc_b").as("doc_id")).distinct()
@@ -1071,6 +1077,7 @@ object TextAnalysis {
       // checkpoint of its own needed, the lineage never nests
       reached = reached.union(next)
       frontier = next
+      h += 1
     }
     reached
   }
@@ -2127,22 +2134,14 @@ object TextAnalysis {
     * difference is the semantic tier (probed cells vs flat scan), so the
     * recall measured here is exactly what the knob costs the FUSED
     * ranking — lexical rank shifts ripple through RRF, so this is NOT
-    * just semantic-list recall. Output per query:
+    * just semantic-list recall. The exact arm is memoized per (dataset,
+    * index pair, nQueries) through
+    * [[graft.operators.EmbeddingSearch.memoizedPairs]] (r14: it re-ran
+    * both retrieval stacks end-to-end every invocation — the r13
+    * verdict's #2 steady cost center). Output per query:
     * (query_id, n_exact, n_hit, recall), the
     * [[graft.operators.EmbeddingSearch.knnJoinRecall]] shape.
     */
-  /** One exact fused-rank ground-truth pass per (dataset, index pair,
-    * nQueries), memoized for the sweep (r14, the exactTopKMemo
-    * discipline on the hybrid harness): the recall entry's exact arm
-    * re-ran both retrieval stacks end-to-end every invocation — the r13
-    * verdict's #2 steady cost center. The memo holds the collected
-    * (query_id, doc_id) pairs (≤ nQueries·10 rows, result scale), keyed
-    * with BOTH table fingerprints so a regenerated dataset replaces the
-    * entry. Bit-identical results; only the cost moves.
-    */
-  private val hybridExactMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Int), (String, Array[(Long, Long)])]()
-
   def hybridProbedRecall(spark: org.apache.spark.sql.SparkSession, dir: String,
       bm25IndexPath: String, ivfIndexPath: String, nQueries: Int = 20,
       nprobe: Int = 2): DataFrame = {
@@ -2162,31 +2161,12 @@ object TextAnalysis {
       java.lang.Long.toHexString(
         Tables.datasetFingerprint(s"$dir/embeddings.parquet")) + "_" +
       doneToken(bm25IndexPath) + "_" + doneToken(ivfIndexPath)
-    // the exact pass runs OUTSIDE the map lock (r15, ADVICE r14 — the
-    // memoizedExactPairs discipline): a collect() inside compute() holds
-    // the bin lock for the whole Spark job; a lost race here costs one
-    // redundant deterministic pass, never a wrong value
-    val memoKey = (dir, bm25IndexPath, ivfIndexPath, nQueries)
-    val cachedExact = hybridExactMemo.get(memoKey)
-    val exactRows = if (cachedExact != null && cachedExact._1 == fp) cachedExact._2
-      else {
-        val computed = hybridServeBatch(queries, bm25IndexPath, ivfIndexPath)
-          .select(col("query_id").cast("long"), col("doc_id").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        hybridExactMemo.put(memoKey, (fp, computed))
-        computed
-      }
-    import spark.implicits._
-    val exact = spark.createDataset(exactRows.toIndexedSeq)
-      .toDF("query_id", "doc_id")
-    val probed = hybridServeBatch(queries, bm25IndexPath, ivfIndexPath,
-        nprobe = nprobe)
-      .select(col("query_id"), col("doc_id"), lit(1).as("hit"))
-    exact.join(probed, Seq("query_id", "doc_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"),
-        round(count(col("hit")).cast("double") / count(lit(1)).cast("double"), 6)
-          .as("recall"))
+    def served(np: Int): DataFrame =
+      hybridServeBatch(queries, bm25IndexPath, ivfIndexPath, nprobe = np)
+        .select(col("query_id"), col("doc_id").as("vec_id"))
+    val exact = EmbeddingSearch.memoizedPairs(spark,
+      ("hybrid", dir, bm25IndexPath, ivfIndexPath, nQueries), fp)(served(0))
+    EmbeddingSearch.recallOf(exact, served(nprobe))
   }
 
   /** Consecutive global TRAINING positions 0..N−1 in the epoch-0 shuffle
@@ -2844,13 +2824,9 @@ object TextAnalysis {
     * worse effective context and compute share); this is the table that
     * decision reads, and the natural consumer of [[sourceMixTemperature]]
     * upstream. Cost: the BPE serve pass + one lang-keyed rollup. Ratios
-    * divide exact integer sums, so the output is hash-gated.
+    * divide exact integer sums, so the output is hash-gated. Takes an
+    * EXPLICIT merge list (train-once serve form; see [[bpeVocabWith]]).
     */
-  def bpeFertility(docs: DataFrame, rounds: Int = 8): DataFrame =
-    bpeFertilityWith(docs, trainBpe(docs, rounds).map(m => (m._1, m._2)))
-
-  /** [[bpeFertility]] under an EXPLICIT merge list (train-once serve form;
-    * see [[bpeVocabWith]]). */
   def bpeFertilityWith(docs: DataFrame, merges: Seq[(String, String)],
       kernel: Boolean = false): DataFrame =
     docs.select(col("doc_id"), col("lang"))

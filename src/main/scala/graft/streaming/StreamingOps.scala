@@ -451,17 +451,6 @@ object StreamingOps {
     fpMatchesAgainstIndexImpl(images, indexPath, "phashes", "phash", maxDist,
       "run buildPhashIndex first")
 
-  /** The AUDIO twin of [[phashMatchesAgainstIndex]]: stateless in-stream
-    * match of audio fingerprints ([[graft.operators.Multimodal
-    * .audioFingerprintsOf]] upstream) against the persisted audio index —
-    * append mode, zero streaming state, same min-shared-key exactly-once
-    * rule. Output: (doc_id, corpus_match, hamming).
-    */
-  def audioMatchesAgainstIndex(audio: DataFrame, indexPath: String,
-      maxDist: Int = 3): DataFrame =
-    fpMatchesAgainstIndexImpl(audio, indexPath, "afps", "afp", maxDist,
-      "run buildAudioFpIndex first")
-
   /** The VIDEO twin of [[phashMatchesAgainstIndex]] — frame-sequence
     * fingerprints vs the persisted video index, stateless.
     * Output: (doc_id, corpus_match, hamming).
@@ -471,7 +460,7 @@ object StreamingOps {
     fpMatchesAgainstIndexImpl(video, indexPath, "vfps", "vfp", maxDist,
       "run buildVideoFpIndex first")
 
-  /** The one kernel behind the three modality match streams: stream
+  /** The one kernel behind the modality match streams: stream
     * fingerprints explode into the sharded pigeonhole chunk keys, equi-join
     * the index's `$table` fingerprint table, exact-Hamming verify, and the
     * min-shared-key rule keeps emission at exactly one row per
@@ -530,15 +519,6 @@ object StreamingOps {
     audio.withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("afp")
 
-  /** The VIDEO twin of [[dedupPhashWithinWatermark]] — first video per
-    * frame-sequence fingerprint within the watermark; the batch
-    * [[graft.operators.Multimodal.videoNearDupPairs]] sweep is the deep
-    * clean. Input carries (doc_id, vfp, `tsCol`).
-    */
-  def dedupVideoFpWithinWatermark(video: DataFrame, tsCol: String, delay: String): DataFrame =
-    video.withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("vfp")
-
   /** Per-micro-batch image dedup-vs-index with per-image VERDICTS — the
     * image twin of [[dedupAgainstIndexNear]]: each micro-batch of
     * (doc_id, phash) fingerprints runs the batch
@@ -570,14 +550,7 @@ object StreamingOps {
     fpDedupAgainstIndexNearImpl(audio, indexPath, "afps", "afp",
       maxDist, extendIndex)(sink)
 
-  /** The VIDEO twin of [[phashDedupAgainstIndexNear]]. */
-  def videoDedupAgainstIndexNear(video: DataFrame, indexPath: String,
-      maxDist: Int = 3, extendIndex: Boolean = false)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    fpDedupAgainstIndexNearImpl(video, indexPath, "vfps", "vfp",
-      maxDist, extendIndex)(sink)
-
-  /** The one kernel behind the three modality serve tiers: each micro-batch
+  /** The one kernel behind the modality serve tiers: each micro-batch
     * runs the batch fingerprint-vs-index join
     * ([[graft.operators.Multimodal.fpDedupAgainstAt]]), collapses matches
     * to one verdict per item (closest corpus match; ties to the lowest
