@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import graft.operators._
 import graft.sources.Tables
 
@@ -229,6 +230,10 @@ object SparkEntry {
   private[graft] def ivfFullIndexDirFor(dir: String, nClusters: Int = 8,
       iters: Int = 2): String =
     fingerprintedDir(dir, s"graft_ivffull_c${nClusters}i$iters", Seq("embeddings.parquet"))
+
+  /** The corpus predicate every filtered `embed_*` entry serves; each
+    * oracle replays it as `label = 3`. */
+  private[graft] def registeredFilter: Column = col("label") === 3
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1075,7 +1080,7 @@ object SparkEntry {
     // latest in-window click per purchase (rank over the pair frame)
     "events_attribution_last" -> ((s, dir) => Events.attributionLastTouch(s, dir)),
     // — embedding similarity search (SURVEY.md §7.5) —
-    "embed_knn_brute" -> ((s, dir) => EmbeddingSearch.bruteForceTopK(s, dir)),
+    "embed_knn_brute" -> ((s, dir) => EmbeddingSearch.exactTopK(s, dir, EmbeddingSearch.Cos)),
     // MIPS: retrieval by raw inner product (the trained objective of most
     // embedding models — unnormalized, so norm carries signal cosine drops).
     // DEFAULT = the count-gated auto branch (r14, the r13 verdict's top
@@ -1094,11 +1099,12 @@ object SparkEntry {
     // the exact inner-product scan under its explicit name — the small-
     // corpus arm of the auto default and every MIPS recall twin's
     // ground truth
-    "embed_knn_mips_brute" -> ((s, dir) => EmbeddingSearch.mipsTopK(s, dir)),
+    "embed_knn_mips_brute" -> ((s, dir) => EmbeddingSearch.exactTopK(s, dir, EmbeddingSearch.Ip)),
     // gated recall of the registered auto default — 1.0 below the
     // crossover by construction, the IVF serve's measured number past it
     "embed_mips_auto_recall" -> ((s, dir) =>
-      EmbeddingSearch.mipsAutoRecall(s, dir, standingIvfIndexDirFor(dir))),
+      EmbeddingSearch.recallVsExact(s, dir, EmbeddingSearch.Ip,
+        EmbeddingSearch.mipsTopKAuto(s, dir, standingIvfIndexDirFor(dir)))),
     // ALSH (asymmetric transform [x;√(M²−|x|²)] / [q;0]) makes inner
     // product — not a metric, not directly LSH-able — indexable by the
     // existing hyperplane bands; exact dot re-rank of band-mates.
@@ -1120,8 +1126,10 @@ object SparkEntry {
     "embed_knn_mips_alsh_fixed" -> ((s, dir) => EmbeddingSearch.mipsTopKAlsh(s, dir)),
     // recall of the DEFAULT (sized) ALSH path vs exact MIPS — the width
     // rule's recall cost, measured beside the fixed layout's twin below
-    "embed_mips_recall" -> ((s, dir) => EmbeddingSearch.mipsRecallScaled(s, dir)),
-    "embed_mips_fixed_recall" -> ((s, dir) => EmbeddingSearch.mipsRecall(s, dir)),
+    "embed_mips_recall" -> ((s, dir) => EmbeddingSearch.recallVsExact(s, dir,
+      EmbeddingSearch.Ip, EmbeddingSearch.mipsTopKAlshScaled(s, dir))),
+    "embed_mips_fixed_recall" -> ((s, dir) => EmbeddingSearch.recallVsExact(s, dir,
+      EmbeddingSearch.Ip, EmbeddingSearch.mipsTopKAlsh(s, dir))),
     // IVF MIPS — the SCALE RECOMMENDATION for inner-product retrieval
     // (r13): cells ranked per query by rounded IP, count-derived probe
     // width, exact-IP re-rank; serves from the sized family's ONE
@@ -1140,19 +1148,26 @@ object SparkEntry {
     // recall twin of the IVF MIPS serve — the gated evidence for the
     // recommendation above
     "embed_mips_ivf_recall" -> ((s, dir) =>
-      EmbeddingSearch.mipsRecallStanding(s, dir, standingIvfIndexDirFor(dir))),
+      EmbeddingSearch.recallVsExact(s, dir, EmbeddingSearch.Ip,
+        EmbeddingSearch.mipsStandingServe(s, dir, standingIvfIndexDirFor(dir)))),
     "embed_knn_lsh" -> ((s, dir) => EmbeddingSearch.lshTopK(s, dir)),
-    "embed_lsh_recall" -> ((s, dir) => EmbeddingSearch.lshRecall(s, dir)),
+    "embed_lsh_recall" -> ((s, dir) => EmbeddingSearch.recallOf(
+      EmbeddingSearch.exactTopK(s, dir, EmbeddingSearch.Cos), EmbeddingSearch.lshTopK(s, dir))),
     // serves from the SAME persisted codebooks as embed_knn_pq
     "embed_pq_recall" -> ((s, dir) =>
-      EmbeddingSearch.pqRecallPersisted(s, dir, pqIndexDirFor(dir))),
+      EmbeddingSearch.recallVsExact(s, dir, EmbeddingSearch.Cos,
+        EmbeddingSearch.pqTopKPersisted(s, dir, pqIndexDirFor(dir)))),
     // r16 opt: the recall twin serves from the SAME persisted composed
     // index as embed_knn_ivfpq (zero extra trainings)
     "embed_ivfpq_recall" -> ((s, dir) =>
-      EmbeddingSearch.ivfPqRecallPersisted(s, dir, ivfPqIndexDirFor(dir))),
+      EmbeddingSearch.recallVsExact(s, dir, EmbeddingSearch.Cos,
+        EmbeddingSearch.ivfPqTopKPersisted(s, dir, ivfPqIndexDirFor(dir)))),
     // multi-probe: Hamming-1 neighbor buckets probed at fixed index layout
-    "embed_knn_multiprobe" -> ((s, dir) => EmbeddingSearch.lshTopKMultiProbe(s, dir)),
-    "embed_multiprobe_recall" -> ((s, dir) => EmbeddingSearch.multiProbeRecall(s, dir)),
+    "embed_knn_multiprobe" -> ((s, dir) =>
+      EmbeddingSearch.lshTopK(s, dir, multiProbe = true)),
+    "embed_multiprobe_recall" -> ((s, dir) => EmbeddingSearch.recallOf(
+      EmbeddingSearch.exactTopK(s, dir, EmbeddingSearch.Cos),
+      EmbeddingSearch.lshTopK(s, dir, multiProbe = true))),
     // two-sided kNN JOIN (kNN-graph): every vector × its band-mates /
     // cell-mates, no broadcastable query side — the corpus-vs-corpus
     // shuffle shape. DEFAULT = DATA-DERIVED method selection (r13, the
@@ -1249,7 +1264,8 @@ object SparkEntry {
       EmbeddingSearch.knnGraphServe(s, dir, sizedKmeansIndexDirFor(dir))),
     // the gated evidence for the last-recall-points claim
     "embed_graph_recall" -> ((s, dir) =>
-      EmbeddingSearch.knnGraphServeRecall(s, dir, sizedKmeansIndexDirFor(dir))),
+      EmbeddingSearch.recallVsExact(s, dir, EmbeddingSearch.Cos,
+        EmbeddingSearch.knnGraphServe(s, dir, sizedKmeansIndexDirFor(dir)))),
     // NN-DESCENT refinement of the probed default (Dong et al. WWW'11):
     // 2 rounds of capped neighbor-of-neighbor expansion at internal
     // width kBuild=10 + exact-cosine re-rank — per-round fan-out
@@ -1360,7 +1376,8 @@ object SparkEntry {
     // cells at fixed nprobe probe a smaller corpus fraction); measured
     // through the REGISTERED standing plan
     "embed_kmeans_sized_recall" -> ((s, dir) =>
-      EmbeddingSearch.kmeansRecallSizedStanding(s, dir, standingIvfIndexDirFor(dir))),
+      EmbeddingSearch.recallVsExact(s, dir, EmbeddingSearch.Cos,
+        EmbeddingSearch.kmeansSizedStandingServe(s, dir, standingIvfIndexDirFor(dir)))),
     // FILTERED kNN (metadata predicate + vector top-k — FAISS IDSelector /
     // vector-store filtered search): the scale path under the DEFAULT name.
     // ONE full-corpus quantizer serves every filter (shared sized index,
@@ -1381,19 +1398,25 @@ object SparkEntry {
     // same count-gated branch from the index's own trained cell count);
     // the per-call auto keeps an explicit name below
     "embed_knn_filtered" -> ((s, dir) =>
-      EmbeddingSearch.filteredIndexServe(s, dir, standingIvfIndexDirFor(dir))),
+      EmbeddingSearch.filteredIndexServe(s, dir, standingIvfIndexDirFor(dir),
+        registeredFilter)),
     // the per-call count-gated auto under its explicit name — the
     // pre-r14 default (re-assigns the filter's survivors per call); same
     // UNION-ALL oracle, so standing ≡ per-call row identity stays gated
     "embed_knn_filtered_percall" -> ((s, dir) =>
-      EmbeddingSearch.filteredTopKAuto(s, dir, sizedKmeansIndexDirFor(dir))),
+      EmbeddingSearch.filteredTopKAutoWhere(s, dir, sizedKmeansIndexDirFor(dir),
+        registeredFilter)),
     // the selectivity-widened IVF serve under its explicit name — the
     // at-scale branch, callable below the branch point for measurement
     "embed_knn_filtered_ivf" -> ((s, dir) =>
-      EmbeddingSearch.filteredTopKIvfPersisted(s, dir, sizedKmeansIndexDirFor(dir))),
-    "embed_knn_filtered_brute" -> ((s, dir) => EmbeddingSearch.filteredTopK(s, dir)),
-    "embed_filtered_recall" -> ((s, dir) =>
-      EmbeddingSearch.filteredRecallPersisted(s, dir, sizedKmeansIndexDirFor(dir))),
+      EmbeddingSearch.filteredTopKIvfWhere(s, dir, sizedKmeansIndexDirFor(dir),
+        registeredFilter)),
+    "embed_knn_filtered_brute" -> ((s, dir) =>
+      EmbeddingSearch.exactTopK(s, dir, EmbeddingSearch.Cos, registeredFilter)),
+    "embed_filtered_recall" -> ((s, dir) => EmbeddingSearch.recallOf(
+      EmbeddingSearch.exactTopK(s, dir, EmbeddingSearch.Cos, registeredFilter),
+      EmbeddingSearch.filteredTopKAutoWhere(s, dir, sizedKmeansIndexDirFor(dir),
+        registeredFilter))),
     // RANGE SEARCH (FAISS range_search): all corpus vectors with cosine ≥ τ
     // of each probe query — radius twin of top-k. DEFAULT = the SOUND
     // triangle-inequality cell pruning (result ≡ the exact τ-set — the
@@ -1410,24 +1433,27 @@ object SparkEntry {
     // pre-r14 default (assignment + floors re-derived per call); same
     // brute-replay oracle
     "embed_range_search_percall" -> ((s, dir) =>
-      EmbeddingSearch.rangeSearchPruned(s, dir, sizedKmeansIndexDirFor(dir))),
+      EmbeddingSearch.rangeSearchPrunedWhere(s, dir, sizedKmeansIndexDirFor(dir),
+        lit(true))),
     "embed_range_search_probed" -> ((s, dir) =>
       EmbeddingSearch.rangeSearchIvfPersisted(s, dir, sizedKmeansIndexDirFor(dir))),
-    "embed_range_search_brute" -> ((s, dir) => EmbeddingSearch.rangeSearch(s, dir)),
+    "embed_range_search_brute" -> ((s, dir) =>
+      EmbeddingSearch.rangeSearchWhere(s, dir, lit(true))),
     // completeness invariant of the sound default (reads 1.0 everywhere)
     // — measured through the REGISTERED standing plan (r14)
     "embed_range_recall" -> ((s, dir) =>
       EmbeddingSearch.rangeStandingRecall(s, dir, standingIvfIndexDirFor(dir))),
     // the probed form's measured τ-set coverage (the honest trade row)
     "embed_range_probed_recall" -> ((s, dir) =>
-      EmbeddingSearch.rangeRecallPersisted(s, dir, sizedKmeansIndexDirFor(dir))),
+      EmbeddingSearch.recallOf(EmbeddingSearch.rangeSearchWhere(s, dir, lit(true)),
+        EmbeddingSearch.rangeSearchIvfPersisted(s, dir, sizedKmeansIndexDirFor(dir)))),
     // FILTERED range search (predicate × radius — "every τ-neighbor within
     // this tenant"): the sound pruned serve over the filter's survivors;
     // filtered radii only tighten the triangle bound, so the result equals
     // the exact filtered τ-set and the oracle is the filtered brute replay
     "embed_range_filtered" -> ((s, dir) =>
       EmbeddingSearch.rangeSearchPrunedWhere(s, dir, sizedKmeansIndexDirFor(dir),
-        org.apache.spark.sql.functions.col("label") === 3)),
+        registeredFilter)),
     // FILTERED MIPS (predicate × inner product — the last filter × score
     // cell): the same count-gated branch as embed_knn_filtered with IP
     // scoring; recall twin reads 1.0 on the brute branch by construction.
@@ -1435,12 +1461,16 @@ object SparkEntry {
     // predicate, same branch variable for a sized build — one oracle);
     // the per-call form keeps an explicit name
     "embed_knn_mips_filtered" -> ((s, dir) =>
-      EmbeddingSearch.mipsFilteredStandingServe(s, dir, standingIvfIndexDirFor(dir))),
+      EmbeddingSearch.mipsFilteredStandingServe(s, dir, standingIvfIndexDirFor(dir),
+        registeredFilter)),
     "embed_knn_mips_filtered_percall" -> ((s, dir) =>
-      EmbeddingSearch.mipsTopKFiltered(s, dir, sizedKmeansIndexDirFor(dir))),
+      EmbeddingSearch.mipsTopKFilteredWhere(s, dir, sizedKmeansIndexDirFor(dir),
+        registeredFilter)),
     // measured through the REGISTERED standing plan (r14)
-    "embed_mips_filtered_recall" -> ((s, dir) =>
-      EmbeddingSearch.mipsFilteredRecallStanding(s, dir, standingIvfIndexDirFor(dir))),
+    "embed_mips_filtered_recall" -> ((s, dir) => EmbeddingSearch.recallOf(
+      EmbeddingSearch.exactTopK(s, dir, EmbeddingSearch.Ip, registeredFilter),
+      EmbeddingSearch.mipsFilteredStandingServe(s, dir, standingIvfIndexDirFor(dir),
+        registeredFilter))),
     // cluster-balanced corpus sampling: cap every semantic cluster at its
     // q most central members — served from the SAME persisted quantizer as
     // embed_knn_kmeans (same kmeansIndexDirFor derivation at the same
@@ -1859,11 +1889,6 @@ object SparkEntry {
     (seed +: refine).mkString(",\n")
   }
 
-  /** BM25 oracle body, factored so the hybrid-retrieval oracle replays
-    * the IDENTICAL lexical ranking it fuses: the CTE chain (tok→sc) and
-    * the per-doc rollup, shared verbatim by `text_bm25_topk` and
-    * `text_hybrid_topk`.
-    */
   /** The corpus-side BM25 base CTEs (tokenize → tf → doc lengths →
     * corpus stats) — the ONE copy both the single-query and the
     * multi-query lexical replays build on.
@@ -1883,6 +1908,11 @@ object SparkEntry {
       |         / (tf::DOUBLE + 1.2 * ((1.0 - 0.75)
       |            + 0.75 * dl::DOUBLE / (len_sum::DOUBLE / n::DOUBLE)))""".stripMargin
 
+  /** BM25 oracle body, factored so the hybrid-retrieval oracle replays
+    * the IDENTICAL lexical ranking it fuses: the CTE chain (tok→sc) and
+    * the per-doc rollup, shared verbatim by `text_bm25_topk` and
+    * `text_hybrid_topk`.
+    */
   private def bm25CtesSqlFrom(docsRel: String): String =
     s"""${bm25BaseCtesFrom(docsRel)},
       |q AS (SELECT DISTINCT term FROM tf WHERE doc_id = 0),
@@ -1918,14 +1948,6 @@ object SparkEntry {
        |$bm25RollupSql
        |ORDER BY score DESC, doc_id ASC LIMIT 20""".stripMargin
 
-  /** Hybrid-retrieval oracle: the SAME BM25 rollup (shared CTEs) ranked,
-    * the exact cosine top-20 of vec 0 ranked, full-outer fused by RRF —
-    * pure integer-rank arithmetic after the two retrievals
-    * (1.0/(60+rank) is the same IEEE division of the same integers in
-    * both engines, summed lexical-then-semantic, one round(6)). Shared
-    * by the in-DAG entry and the artifact-only serve
-    * (`text_hybrid_serve`).
-    */
   /** The single-query hybrid oracle's shared frame: the ranked lexical
     * CTEs (bm/bmr) and, after the caller's `semall` CTE, the fusion tail
     * (sem top-20 → ranks → RRF full-outer → top-10) — the ONE copy the
@@ -1950,6 +1972,14 @@ object SparkEntry {
        |    (ORDER BY rrf DESC, doc_id ASC))::BIGINT AS rank FROM f)
        |WHERE rank <= 10""".stripMargin
 
+  /** Hybrid-retrieval oracle: the SAME BM25 rollup (shared CTEs) ranked,
+    * the exact cosine top-20 of vec 0 ranked, full-outer fused by RRF —
+    * pure integer-rank arithmetic after the two retrievals
+    * (1.0/(60+rank) is the same IEEE division of the same integers in
+    * both engines, summed lexical-then-semantic, one round(6)). Shared
+    * by the in-DAG entry and the artifact-only serve
+    * (`text_hybrid_serve`).
+    */
   private def hybridTopSqlFrom(docsRel: String, embRel: String): String =
     s"""WITH ${bm25CtesSqlFrom(docsRel)},
        |$bm25RankedCtes,
@@ -2288,10 +2318,6 @@ object SparkEntry {
        |SELECT doc_id, chunk_seq, sub_seq, n_tokens, start_pos, end_pos,
        |  ${duckHash("ct")} AS chunk_hash FROM ch""".stripMargin
 
-  /** Truncation-recall oracle: one branch per d' — the brute top-k replay
-    * over list_slice'd prefix vectors, hits counted against the full-dim
-    * exact set; UNION ALL of the per-d' aggregates.
-    */
   /** Full bit-replay of the trained quality classifier
     * (TextAnalysis.qualityClassifierWeights): hashed-frequency features +
     * bias, then `iters` unrolled full-batch GD rounds — z in fixed
@@ -2334,6 +2360,16 @@ object SparkEntry {
     s"WITH $base,\n$steps"
   }
 
+  /** The trained merge TABLE replayed as SQL — shared verbatim by the
+    * chain, kernel, and evolving trainer entries, which are spec-pinned
+    * merge-identical (editing one trainer's oracle must edit all). */
+  private lazy val bpeMergeTableSql: String =
+    s"""${bpeCtes(8)}
+       |${(1 to 8).map(t =>
+           s"SELECT $t::BIGINT AS merge_round, a AS lhs, b AS rhs, " +
+             s"a||b AS merged, cnt AS pair_count FROM m$t")
+         .mkString("\nUNION ALL\n")}""".stripMargin
+
   /** BPE-trainer replay: the word-frequency base (`t0` carries the
     * bracketed char encoding) plus `rounds` unrolled merge rounds — each
     * round counts adjacent pairs from the current tokenization, takes the
@@ -2347,16 +2383,6 @@ object SparkEntry {
     * join against the empty merge would silently empty every later CTE
     * and fail the hash gate with zero rows.
     */
-  /** The trained merge TABLE replayed as SQL — shared verbatim by the
-    * chain, kernel, and evolving trainer entries, which are spec-pinned
-    * merge-identical (editing one trainer's oracle must edit all). */
-  private lazy val bpeMergeTableSql: String =
-    s"""${bpeCtes(8)}
-       |${(1 to 8).map(t =>
-           s"SELECT $t::BIGINT AS merge_round, a AS lhs, b AS rhs, " +
-             s"a||b AS merged, cnt AS pair_count FROM m$t")
-         .mkString("\nUNION ALL\n")}""".stripMargin
-
   private def bpeCtes(rounds: Int): String = {
     val base =
       """wrd AS (SELECT w, count(*)::BIGINT AS c
@@ -2377,6 +2403,10 @@ object SparkEntry {
     s"WITH $base,\n$steps"
   }
 
+  /** Truncation-recall oracle: one branch per d' — the brute top-k replay
+    * over list_slice'd prefix vectors, hits counted against the full-dim
+    * exact set; UNION ALL of the per-d' aggregates.
+    */
   private def truncRecallSql(dPrimes: Seq[Int]): String =
     dPrimes.map { dp =>
       s"""(WITH t AS (SELECT vec_id,
@@ -2534,14 +2564,6 @@ object SparkEntry {
        |      (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC))::BIGINT AS rank FROM s)
        |SELECT query_id, vec_id, cosine, rank FROM r WHERE rank <= 5""".stripMargin
 
-  /** Replays the deterministic spherical k-means training (seeds = first 8
-    * training vectors by vec_id, 2 Lloyd rounds, decimal means, empty cells
-    * keep their centroid), then the nprobe=2 probe + exact re-rank. With
-    * `samplePct`, the TRAINING set is the affine-hash sample of vec_id —
-    * exactly the engine's [[graft.operators.EmbeddingSearch]] portable
-    * sample — while the final inverted file (`af`) and re-rank still cover
-    * every vector, mirroring the train-on-a-sample/serve-everything split.
-    */
   /** One Lloyd-round assignment CTE body shared by the whole-vector k-means
     * oracles ([[kmeansKnnSql]], the `dedup_semantic` replay); the PQ oracle keeps its
     * per-subspace variant. */
@@ -2583,13 +2605,6 @@ object SparkEntry {
        |af AS (${kmAssignCte("e", "c2")})""".stripMargin
   }
 
-  /** The IVF probe + exact-re-rank serve TAIL (q → pd → pr → probe → s →
-    * r → final top-5) — the ONE copy both the fixed-k and the sized
-    * quantizer oracles rank with; expects CTEs `e`, `c2` (trained
-    * centroids) and `af` (full assignment) from the training prefix. A
-    * forked copy would let the hash-gated pair silently serve different
-    * ranking rules.
-    */
   /** The probe PROLOGUE of that tail (q → pd → pr → probe) on its own —
     * rank trained cells per query, keep the width `probeCond` allows
     * (`probeFrom` supplies an extra FROM table when the width is a
@@ -2619,26 +2634,29 @@ object SparkEntry {
        |  (PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC))::BIGINT AS rank FROM s)
        |SELECT query_id, vec_id, cosine, rank FROM r WHERE rank <= 5""".stripMargin
 
+  /** The IVF probe + exact-re-rank serve TAIL (q → pd → pr → probe → s →
+    * r → final top-5) — the ONE copy both the fixed-k and the sized
+    * quantizer oracles rank with; expects CTEs `e`, `c2` (trained
+    * centroids) and `af` (full assignment) from the training prefix. A
+    * forked copy would let the hash-gated pair silently serve different
+    * ranking rules.
+    */
   private val kmeansServeTailSql: String = kmeansServeTailOver("af", "rn <= 2")
 
+  /** Replays the deterministic spherical k-means training (seeds = first 8
+    * training vectors by vec_id, 2 Lloyd rounds, decimal means, empty cells
+    * keep their centroid), then the nprobe=2 probe + exact re-rank. With
+    * `samplePct`, the TRAINING set is the affine-hash sample of vec_id —
+    * exactly the engine's [[graft.operators.EmbeddingSearch]] portable
+    * sample — while the final inverted file (`af`) and re-rank still cover
+    * every vector, mirroring the train-on-a-sample/serve-everything split.
+    */
   private def kmeansKnnSql(samplePct: Option[Int],
       trainWhere: Option[String] = None): String = {
     s"""WITH ${kmTrainedAssignCtes(samplePct, trainWhere)},
        |$kmeansServeTailSql""".stripMargin
   }
 
-  /** [[kmeansKnnSql]] under the CORPUS-ADAPTIVE cell count: k = ⌈√N⌉
-    * clamped to [8, 65536], derived from count(*) exactly as
-    * `EmbeddingSearch.ivfCellCount` (IEEE sqrt — correctly rounded in
-    * both engines, exact on perfect squares); seeds = the first k
-    * vectors by vec_id (row_number ≤ k, mirroring the k-row
-    * TakeOrdered). Same two Lloyd rounds, same probe/re-rank tail.
-    */
-  /** The sized-quantizer TRAINING prefix (e → cntv → kk → c0 seeds → two
-    * Lloyd rounds to `c2`) — shared by the sized kNN serve oracle and
-    * the IVF-cell graph oracle, which both rank against the same trained
-    * centroids.
-    */
   /** The sized-quantizer training prefix, optionally GATED at the source
     * scan: `gate` is a scalar predicate on the corpus (constant per run)
     * ANDed into the `e` CTE, so a gated-off instance of this pipeline
@@ -2663,6 +2681,11 @@ object SparkEntry {
        |${kmUpdateCtes(2, "a2", "c1")}""".stripMargin
   }
 
+  /** The sized-quantizer TRAINING prefix (e → cntv → kk → c0 seeds → two
+    * Lloyd rounds to `c2`) — shared by the sized kNN serve oracle and
+    * the IVF-cell graph oracle, which both rank against the same trained
+    * centroids.
+    */
   private val kmSizedTrainCtes: String = kmSizedTrainCtesGatedBy("TRUE")
 
   /** The count-derived probe width — ONE copy of the npv formula
@@ -2679,6 +2702,13 @@ object SparkEntry {
 
   private val npvCte: String = npCteFrom("cntv", "npv")
 
+  /** [[kmeansKnnSql]] under the CORPUS-ADAPTIVE cell count: k = ⌈√N⌉
+    * clamped to [8, 65536], derived from count(*) exactly as
+    * `EmbeddingSearch.ivfCellCount` (IEEE sqrt — correctly rounded in
+    * both engines, exact on perfect squares); seeds = the first k
+    * vectors by vec_id (row_number ≤ k, mirroring the k-row
+    * TakeOrdered). Same two Lloyd rounds, same probe/re-rank tail.
+    */
   private val kmeansKnnSizedSql: String = {
     s"""WITH $kmSizedTrainCtes,
        |af AS (${kmAssignCte("e", "c2")}),
@@ -3053,12 +3083,6 @@ object SparkEntry {
        |SELECT * FROM (${knnJoinCellsSqlGatedBy(atOrAbove)})""".stripMargin
   }
 
-  /** Product-quantization oracle: per SUBSPACE, the same Lloyd replay as
-    * [[kmeansKnnSql]] (seeds, round(cosine,6) argmax assignment,
-    * DECIMAL(28,10) means, cluster-loss coalesce) over the dim slice,
-    * then the fixed-order LUT scoring — training, encoding, and the ADC
-    * estimate are ALL part of the checked contract.
-    */
   /** The PQ replay's reusable middle: per-subspace Lloyd training CTEs to
     * the encodings `af_$s`, the code joins, and the fixed-order LUT sum
     * fragments — shared by [[pqKnnSql]] and the IVF-PQ composition.
@@ -3104,6 +3128,12 @@ object SparkEntry {
     (subspaceCtes, codeJoins, pdSum, n2Sum)
   }
 
+  /** Product-quantization oracle: per SUBSPACE, the same Lloyd replay as
+    * [[kmeansKnnSql]] (seeds, round(cosine,6) argmax assignment,
+    * DECIMAL(28,10) means, cluster-loss coalesce) over the dim slice,
+    * then the fixed-order LUT scoring — training, encoding, and the ADC
+    * estimate are ALL part of the checked contract.
+    */
   private def pqKnnSql(m: Int = 4, ksub: Int = 4, iters: Int = 2,
       k: Int = 5, nQueries: Int = 10, dims: Int = 64,
       samplePct: Option[Int] = None): String = {

@@ -44,18 +44,41 @@ case class DotProduct(left: Expression, right: Expression)
   * and the bit-exact replica of Spark `round(x, 6)` on doubles.
   */
 object KmeansKernel {
-  /** Spark's `RoundBase` double path, replicated: NaN/Inf pass through;
-    * otherwise scala `BigDecimal(d)` (= java BigDecimal over
-    * `Double.toString(d)` — ≤17 significant digits, so the DECIMAL128
-    * MathContext never rounds) `.setScale(6, HALF_UP).toDouble`.
-    * [[KmeansBestCellSpec]] fuzzes this against the real `Round`
+  /** Spark's `RoundBase` double path (`round(x, 6)`), replicated: NaN/Inf
+    * pass through (Spark's Round special-cases them the same way;
+    * BigDecimal(NaN) would throw); otherwise java BigDecimal over
+    * `Double.toString(d)` (≤17 significant digits, so no MathContext
+    * rounding) `.setScale(6, HALF_UP)` back to double. The ONE copy for
+    * the kernels here and the operator-side scalar loops (the
+    * bucket-local top-k and pair verifies, driver-side probe ranking),
+    * which must reproduce the in-plan rounded score exactly.
+    * [[KmeansBestCellSpec]] fuzzes it against the real `Round`
     * expression over the cosine range including grid/boundary
-    * adversaries.
+    * adversaries; EmbeddingSpec pins the fast path to the decimal form.
+    *
+    * FAST PATH, because the bucket-local loops call this once per
+    * candidate pair (measured: the naive per-pair BigDecimal was 8.7 of
+    * 11 s at x16 — allocation + decimal-string parsing, not arithmetic):
+    * scale by 10⁶ and decide the half-up digit from the computed
+    * fraction. The computed y = d·10⁶ differs from the EXACT decimal
+    * value by ≤ ½ulp(10⁶) ≈ 6·10⁻¹¹, so whenever frac is more than 10⁻⁷
+    * away from the three decision boundaries (0, ½, 1) the fast decision
+    * provably equals the decimal one — integer-valued (f+δ) ≤ 10⁶ is
+    * exact in double and n/10⁶ by IEEE division is the correctly-rounded
+    * double of the same rational the BigDecimal conversion produces.
+    * Inside the boundary zones (measure-zero in practice) it falls back
+    * to the BigDecimal form.
     */
-  def round6(d: Double): Double =
-    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d
+  def round6(d: Double): Double = {
+    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) return d
+    val y = d * 1e6
+    val f = math.floor(y)
+    val frac = y - f
+    val safe = (frac > 1e-7 && frac < 0.4999999) || (frac > 0.5000001 && frac < 0.9999999)
+    if (safe) (f + (if (frac >= 0.5) 1.0 else 0.0)) / 1e6
     else new java.math.BigDecimal(java.lang.Double.toString(d))
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
 
   /** Centroid table decoded to primitives: flat row-major vectors plus
     * the cl/ncv columns, in the struct's (cl, cv, ncv) field order. */

@@ -138,7 +138,7 @@ object Dedup {
 
   /** MinHash ESTIMATION accuracy over the LSH candidate pairs — the
     * measurement loop that sizes `numHashes` in a deployment (the sketch
-    * twin of [[graft.operators.EmbeddingSearch.lshRecall]]): per candidate
+    * twin of [[graft.operators.EmbeddingSearch.recallVsExact]]): per candidate
     * pair, the signature-agreement estimate of Jaccard (matching slots, and
     * as an EXACT ppm integer — matches·10⁶ div numHashes, so the entry
     * stays hash-gated) next to the true shingle Jaccard. Costs one extra
@@ -322,33 +322,6 @@ object Dedup {
     done.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf()).exists(done)
   }
 
-  /** Close the incremental-ingest loop: APPEND a batch's accepted documents
-    * to an existing index, so tomorrow's batch dedups against corpus +
-    * today. Cost scales with the batch (three appends of batch-derived
-    * rows); the corpus tables are never rewritten. The `_DONE` marker is
-    * removed first and re-created after all three appends, so a crash
-    * mid-extend leaves an index [[dedupAgainst]] REFUSES to serve, never
-    * one that silently under-reports duplicates. REPAIR is re-running
-    * extend (this method requires the three COMMITTED tables — each dir's
-    * `_SUCCESS` — not the marker, so it accepts a crashed-EXTEND index
-    * while still refusing a crashed-REBUILD one, whose overwritten table
-    * lost its `_SUCCESS`): appends from the crashed attempt are then
-    * duplicated, which serving tolerates — every consumer of the index
-    * rows ends in min()/dropDuplicates, so duplicate index rows cost
-    * space, not correctness (a periodic rebuild compacts). The whole
-    * batch projection (hashes AND shingle sets) is eagerly checkpointed
-    * once before any write, so all three tables append rows derived from
-    * the SAME snapshot even if `newDocs` is non-deterministic (a live
-    * ingest directory) — and the batch is scanned and shingled once.
-    * Params are validated against the index's persisted `_PARAMS` tag —
-    * extending with different banding/shingle params (or a legacy-format
-    * index) is a loud error, not silent corruption. Callers pass the docs
-    * that SURVIVED their dedup decision (status == unique, or whatever
-    * retention policy applies) — indexing rejected duplicates too is
-    * harmless but wasteful.
-    * Spec-pinned: build(corpus) + extend(batch) serves identically to
-    * build(corpus ∪ batch).
-    */
   /** Right-to-be-forgotten propagation into the persisted index — the
     * compliance pass a 100 TB corpus must support: removing a document
     * from the corpus is NOT enough while derived artifacts still carry
@@ -509,6 +482,33 @@ object Dedup {
     cols.toSeq
   }
 
+  /** Close the incremental-ingest loop: APPEND a batch's accepted documents
+    * to an existing index, so tomorrow's batch dedups against corpus +
+    * today. Cost scales with the batch (three appends of batch-derived
+    * rows); the corpus tables are never rewritten. The `_DONE` marker is
+    * removed first and re-created after all three appends, so a crash
+    * mid-extend leaves an index [[dedupAgainst]] REFUSES to serve, never
+    * one that silently under-reports duplicates. REPAIR is re-running
+    * extend (this method requires the three COMMITTED tables — each dir's
+    * `_SUCCESS` — not the marker, so it accepts a crashed-EXTEND index
+    * while still refusing a crashed-REBUILD one, whose overwritten table
+    * lost its `_SUCCESS`): appends from the crashed attempt are then
+    * duplicated, which serving tolerates — every consumer of the index
+    * rows ends in min()/dropDuplicates, so duplicate index rows cost
+    * space, not correctness (a periodic rebuild compacts). The whole
+    * batch projection (hashes AND shingle sets) is eagerly checkpointed
+    * once before any write, so all three tables append rows derived from
+    * the SAME snapshot even if `newDocs` is non-deterministic (a live
+    * ingest directory) — and the batch is scanned and shingled once.
+    * Params are validated against the index's persisted `_PARAMS` tag —
+    * extending with different banding/shingle params (or a legacy-format
+    * index) is a loud error, not silent corruption. Callers pass the docs
+    * that SURVIVED their dedup decision (status == unique, or whatever
+    * retention policy applies) — indexing rejected duplicates too is
+    * harmless but wasteful.
+    * Spec-pinned: build(corpus) + extend(batch) serves identically to
+    * build(corpus ∪ batch).
+    */
   def extendDedupIndex(indexPath: String, newDocs: DataFrame,
       numHashes: Int = 64, bands: Int = 16, k: Int = 3): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")

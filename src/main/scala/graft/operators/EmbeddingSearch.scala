@@ -3,13 +3,14 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.expressions.KmeansKernel
 import graft.sources.Tables
 
 /** Similarity search over the embedding column (`embeddings.parquet`:
   * vec_id, embedding array<float> ×64, label).
   *
   * Two paths, per the scale mandate:
-  *   - [[bruteForceTopK]]: exact cosine top-k — the correctness baseline.
+  *   - [[exactTopK]]: exact top-k — the correctness baseline.
   *     Query set × corpus via broadcast of the (small) query side; per-pair
   *     cosine is a codegen'd HOF fold; top-k per query is a bounded window.
   *   - [[lshTopK]]: random-hyperplane LSH (SimHash for vectors, Charikar'02)
@@ -17,6 +18,12 @@ import graft.sources.Tables
   *     share a band key, then exact re-rank. At 100 TB the corpus-side work
   *     drops from |Q|·N cosines to |Q|·(bucket size), and the bucket join is
   *     a hash shuffle on short string keys instead of a cross join.
+  *
+  * Every kNN family is candidate generation over ONE shared core: a
+  * [[Metric]] (cosine or inner product) scores the candidates, one rank
+  * rule ([[rankTopK]]: rounded score desc, vec_id asc) keeps the top k,
+  * one probe rule ([[probeCells]]) picks the cells of every inverted-file
+  * serve, and [[recallVsExact]] measures any serve against the exact scan.
   *
   * The hyperplanes are a deterministic pseudo-random ±1 pattern
   * (parity of (p·2654435761 + d·40503) mod 65537) — engine-portable integer
@@ -66,23 +73,130 @@ object EmbeddingSearch {
     when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(d / (na * nb))
   }
 
-  /** Exact top-k neighbors by cosine for query vectors vec_id < nQueries.
-    * Output: (query_id, vec_id, cosine, rank). Rank on rounded score with
-    * vec_id tie-break → fully deterministic.
+  /** [[cosine]]'s scalar twin on plain arrays — the same fold
+    * ([[dotSeq]] ≡ the DotProduct expression), the same norms-then-
+    * divide order, the same zero-vector guard, so driver-side probe
+    * ranking can never diverge from the in-plan window's scores. */
+  private def cosineSeq(a: Array[Double], b: Array[Double]): Double = {
+    val d = dotSeq(a, b)
+    val na = math.sqrt(dotSeq(a, a))
+    val nb = math.sqrt(dotSeq(b, b))
+    if (na == 0.0 || nb == 0.0) 0.0 else d / (na * nb)
+  }
+
+  // ───── the shared candidate → score → rank core: every kNN family
+  // below keeps only its candidate generator and ends in these ─────
+
+  /** A similarity measure as the three things every scoring site needs
+    * together: the output column name, the Column kernel, and its scalar
+    * twin on plain arrays. One value, so no caller can rank in-plan by
+    * one kernel and pre-select probe cells driver-side by the other.
+    * Exactly two exist: [[Cos]] and [[Ip]].
     */
-  def bruteForceTopK(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val queries = broadcast(emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv")))
-    val scored = emb.crossJoin(queries)
-      .where(col("vec_id") =!= col("query_id"))
+  private[graft] sealed abstract class Metric(val name: String,
+      val score: (Column, Column) => Column,
+      val scoreSeq: (Array[Double], Array[Double]) => Double)
+
+  /** Cosine similarity, emitted as `cosine`. */
+  private[graft] case object Cos extends Metric("cosine", cosine, cosineSeq)
+
+  /** Inner product (MIPS — unnormalized, so a long on-topic vector can
+    * outrank a short one), emitted as `ip`. */
+  private[graft] case object Ip extends Metric("ip", dot, dotSeq)
+
+  /** (vec_id, v: array<double>) of any raw (vec_id, embedding) frame —
+    * exact float→double casts, so every fold downstream is bit-identical
+    * to the oracle's. */
+  private def vectorsOf(raw: DataFrame): DataFrame =
+    raw.select(col("vec_id"), toDouble(col("embedding")).as("v"))
+
+  /** The corpus scan: (vec_id, v) over the `embeddings.parquet` rows
+    * matching `pred` — a plain Column, so it pushes to the parquet scan
+    * (PushedFilters); `lit(true)` plans as no filter at all. */
+  private def vectors(spark: SparkSession, dir: String,
+      pred: Column = lit(true)): DataFrame =
+    vectorsOf(Tables.embeddings(spark, dir).where(pred))
+
+  /** The fixed query set as (query_id, qv): the rows of `vecs` with
+    * vec_id < nQueries. */
+  private def queriesOf(vecs: DataFrame, nQueries: Int): DataFrame =
+    vecs.where(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+
+  /** [[queriesOf]] the full corpus — queries never see a result filter
+    * (the searcher's filter constrains results, not the probe set). */
+  private def queries(spark: SparkSession, dir: String, nQueries: Int): DataFrame =
+    queriesOf(vectors(spark, dir), nQueries)
+
+  /** A raw (vec_id, embedding) query batch as (query_id: long, qv). */
+  private def batchQueries(batch: DataFrame): DataFrame =
+    batch.select(col("vec_id").cast("long").as("query_id"),
+      toDouble(col("embedding")).as("qv"))
+
+  /** Candidate (query_id, vec_id, v, qv) rows scored by `metric`: the
+    * self-match dropped, the score rounded to 6 dp under the metric's
+    * column name. The one scoring step of every top-k and range family. */
+  private def scoreCandidates(cand: DataFrame, metric: Metric): DataFrame =
+    cand.where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
+        round(metric.score(col("v"), col("qv")), 6).as(metric.name))
+
+  /** THE rank rule: per query, row_number by (`score` desc, vec_id asc)
+    * as a long `rank`, kept while ≤ k. Scores are 6-dp rounded, so equal
+    * scores break on vec_id and the ranking is fully deterministic — the
+    * order every oracle replays. */
+  private def rankBy(scored: DataFrame, score: String, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col(score).desc, col("vec_id").asc)
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
   }
+
+  /** Candidates (query_id, vec_id, v, qv) → (query_id, vec_id,
+    * <metric.name>, rank ≤ k): [[scoreCandidates]] then [[rankBy]]. */
+  private[graft] def rankTopK(cand: DataFrame, metric: Metric, k: Int): DataFrame =
+    rankBy(scoreCandidates(cand, metric), metric.name, k)
+
+  /** THE probe rule of every inverted-file serve: per query, rank the
+    * quantizer's cells by round(score(qv, cv), 6) desc, lowest `cell` id
+    * on ties, and keep the top `nprobe`. `cent` carries (`cell`, cv).
+    * Output: (query_id, qv, `cell`). [[probedCellIdsLocal]] is its
+    * driver-side twin. */
+  private[graft] def probeCells(q: DataFrame, cent: DataFrame, metric: Metric,
+      nprobe: Int, cell: String = "cl"): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("ps").desc, col(cell).asc)
+    q.crossJoin(broadcast(cent))
+      .select(col("query_id"), col("qv"), col(cell),
+        round(metric.score(col("qv"), col("cv")), 6).as("ps"))
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") <= nprobe)
+      .select(col("query_id"), col("qv"), col(cell))
+  }
+
+  /** Probe + exact re-rank, the serve every inverted-file family shares:
+    * [[probeCells]] by `metric`, then [[rankTopK]] of the probed cells'
+    * members by the same metric. `inverted` carries (cl, vec_id, v);
+    * extra columns ride along untouched. */
+  private def serveProbed(inverted: DataFrame, q: DataFrame, cent: DataFrame,
+      metric: Metric, k: Int, nprobe: Int): DataFrame =
+    rankTopK(inverted.join(broadcast(probeCells(q, cent, metric, nprobe)), Seq("cl")),
+      metric, k)
+
+  /** EXACT top-k by `metric` for the query vectors vec_id < nQueries over
+    * the corpus rows matching `pred`: corpus scan × broadcast query rows,
+    * one pass, then the shared rank rule. The correctness baseline of
+    * every family — cosine (`embed_knn_brute`), inner product
+    * (`embed_knn_mips_brute`, MIPS — the retrieval objective most
+    * embedding models are trained against), and the metadata-filtered
+    * form (FAISS `IDSelector`, the filtered search of Milvus/Qdrant/
+    * Vespa: "top-k within this tenant/language/source"). The filter runs
+    * BEFORE scoring and pushes to the parquet scan (PlanSpec-pinned);
+    * queries stay the full-corpus probe set. Output: (query_id, vec_id,
+    * <metric.name>, rank).
+    */
+  private[graft] def exactTopK(spark: SparkSession, dir: String, metric: Metric,
+      pred: Column = lit(true), k: Int = 5, nQueries: Int = 10): DataFrame =
+    rankTopK(vectors(spark, dir, pred)
+      .crossJoin(broadcast(queries(spark, dir, nQueries))), metric, k)
 
   /** MMR diversity re-rank (Carbonell & Goldstein '98 Maximal Marginal
     * Relevance at λ = ½): greedily pick k results from a relevance
@@ -90,7 +204,7 @@ object EmbeddingSearch {
     * ½·rel(q,c) − ½·max_{s∈S} cos(c,s) — the standard fix for a top-k
     * that returns k near-copies of the same document (RAG retrieval,
     * search diversification). Spark-first shape: the corpus is touched
-    * ONCE by the shortlist search ([[bruteForceTopK]] here; swap in any
+    * ONCE by the shortlist search ([[exactTopK]] here; swap in any
     * ANN searcher at scale), the |Q|·nCand shortlist is eagerly
     * checkpointed, and the k greedy rounds are unrolled lazy plans over
     * that metadata-scale frame (anti-join the selected, max-penalty join,
@@ -103,17 +217,14 @@ object EmbeddingSearch {
   def mmrTopK(spark: SparkSession, dir: String, k: Int = 5, nCand: Int = 20,
       nQueries: Int = 10): DataFrame = {
     require(k >= 1 && nCand >= k, "need nCand >= k >= 1")
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val cand = bruteForceTopK(spark, dir, nCand, nQueries)
+    val emb = vectors(spark, dir)
+    val cand = exactTopK(spark, dir, Cos, k = nCand, nQueries = nQueries)
       .select(col("query_id"), col("vec_id"), col("cosine").as("rel"))
       .join(emb, Seq("vec_id"))
       .select(col("query_id"), col("vec_id"), col("rel"), col("v"))
       .localCheckpoint()
     def pickTop(scored: DataFrame, scoreCol: String, pick: Int): DataFrame =
-      scored.withColumn("rn", row_number().over(
-          Window.partitionBy("query_id").orderBy(col(scoreCol).desc, col("vec_id").asc)))
-        .where(col("rn") === 1)
+      rankBy(scored, scoreCol, 1)
         .select(col("query_id"), col("vec_id"), col("v"), col("rel"),
           col(scoreCol).as("mmr_score"), lit(pick.toLong).as("pick"))
     // the accumulated selection is re-referenced three times per round
@@ -137,27 +248,6 @@ object EmbeddingSearch {
       col("rel").as("relevance"), col("mmr_score"))
   }
 
-  /** Exact top-k by INNER PRODUCT — MIPS, the retrieval objective most
-    * embedding models are actually trained against (unnormalized scores:
-    * a long on-topic document can outrank a short one, which cosine's
-    * normalization erases). Same shape as [[bruteForceTopK]]: corpus scan
-    * × broadcast query rows, one pass, rank on the rounded score with
-    * vec_id tie-break. Output: (query_id, vec_id, ip, rank).
-    */
-  def mipsTopK(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val queries = broadcast(emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv")))
-    val scored = emb.crossJoin(queries)
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("v"), col("qv")), 6).as("ip"))
-    val w = Window.partitionBy("query_id").orderBy(col("ip").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-  }
-
   /** IVF-accelerated MIPS — the DATA-ADAPTIVE scale path for inner-product
     * retrieval (the FAISS `IndexIVF` + `METRIC_INNER_PRODUCT` shape): rank
     * the ⌈√N⌉ trained cells per query by rounded INNER PRODUCT (not
@@ -177,62 +267,15 @@ object EmbeddingSearch {
     */
   def mipsTopKIvfPersisted(spark: SparkSession, dir: String, indexPath: String,
       k: Int = 5, nQueries: Int = 10, nprobe: Int = 0): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val n = emb.count()
     val cells = ivfCellCount(n)
-    mipsOverInverted(emb, ensureKmeansIndex(spark, dir, indexPath, cells, 2),
-      k, nQueries, if (nprobe > 0) nprobe else cellsNprobeFor(n, cells))
+    val cent = ensureKmeansIndex(spark, dir, indexPath, cells, 2)
+    serveProbed(kmeansAssign(withNorm(emb), cent), queriesOf(emb, nQueries), cent,
+      Ip, k, if (nprobe > 0) nprobe else cellsNprobeFor(n, cells))
   }
 
-  private def mipsOverInverted(emb: DataFrame, cent: DataFrame, k: Int,
-      nQueries: Int, nprobe: Int): DataFrame =
-    mipsServe(kmeansAssign(withNorm(emb), cent),
-      emb.where(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("v").as("qv")),
-      cent, k, nprobe)
-
-  /** The IP probe + exact-IP re-rank half every IVF MIPS serve shares —
-    * the [[knnOverInverted]] sibling with the inner product as both the
-    * cell-ranking and the final score. */
-  private def mipsServe(inverted: DataFrame, q: DataFrame, cent: DataFrame,
-      k: Int, nprobe: Int): DataFrame = {
-    val wProbe = Window.partitionBy("query_id").orderBy(col("pip").desc, col("cl").asc)
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("cl"),
-        round(dot(col("qv"), col("cv")), 6).as("pip"))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nprobe)
-      .select(col("query_id"), col("qv"), col("cl"))
-    val w = Window.partitionBy("query_id").orderBy(col("ip").desc, col("vec_id").asc)
-    inverted.join(broadcast(probes), Seq("cl"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("v"), col("qv")), 6).as("ip"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-  }
-
-  /** Exact MIPS restricted to a corpus predicate — the filter × inner-
-    * product cell of the matrix ([[filteredTopKWhere]]'s IP sibling);
-    * queries stay full-corpus. */
-  def mipsTopKWhere(spark: SparkSession, dir: String, pred: Column,
-      k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val embAll = Tables.embeddings(spark, dir)
-    val corpus = embAll.where(pred)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val queries = broadcast(embAll.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), toDouble(col("embedding")).as("qv")))
-    val scored = corpus.crossJoin(queries)
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("v"), col("qv")), 6).as("ip"))
-    val w = Window.partitionBy("query_id").orderBy(col("ip").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-  }
-
-  /** FILTERED MIPS under the count-gated branch — [[filteredTopKAuto]]'s
+  /** FILTERED MIPS under the count-gated branch — [[filteredTopKAutoWhere]]'s
     * inner-product sibling: exact filtered scan while the widened probe
     * width would clamp (survivors broadcast), the widened IVF-IP serve
     * past the crossover. Same shared quantizer, same branch variable
@@ -244,31 +287,14 @@ object EmbeddingSearch {
     val n = embAll.count()
     val matches = embAll.where(pred).count()
     require(matches > 0, s"filter '$pred' matches no vectors")
-    if (filteredNpRaw(n, matches) > 16) mipsTopKWhere(spark, dir, pred, k, nQueries)
+    if (filteredNpRaw(n, matches) > 16) exactTopK(spark, dir, Ip, pred, k, nQueries)
     else {
       val cells = ivfCellCount(n)
       val cent = ensureKmeansIndex(spark, dir, indexPath, cells, 2)
-      val corpus = embAll.where(pred)
-        .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      val q = embAll.where(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), toDouble(col("embedding")).as("qv"))
-      mipsServe(kmeansAssign(withNorm(corpus), cent), q, cent, k,
-        cellsNprobeFor(matches, cells))
+      serveProbed(kmeansAssign(withNorm(vectors(spark, dir, pred)), cent),
+        queries(spark, dir, nQueries), cent, Ip, k, cellsNprobeFor(matches, cells))
     }
   }
-
-  /** The registered labelEq form of [[mipsTopKFilteredWhere]]. */
-  def mipsTopKFiltered(spark: SparkSession, dir: String, indexPath: String,
-      k: Int = 5, nQueries: Int = 10, labelEq: Int = 3): DataFrame =
-    mipsTopKFilteredWhere(spark, dir, indexPath, col("label") === labelEq, k, nQueries)
-
-  /** Recall@k of the filtered-MIPS default vs the filtered exact scan —
-    * 1.0 on the brute branch by construction. */
-  def mipsFilteredRecallPersisted(spark: SparkSession, dir: String,
-      indexPath: String, k: Int = 5, nQueries: Int = 10,
-      labelEq: Int = 3): DataFrame =
-    recallOf(mipsTopKWhere(spark, dir, col("label") === labelEq, k, nQueries),
-      mipsTopKFiltered(spark, dir, indexPath, k, nQueries, labelEq))
 
   /** ALSH-accelerated MIPS (Shrivastava & Li NIPS'14 / Neyshabur & Srebro
     * ICML'15 Simple-LSH): inner product is NOT a metric (it violates the
@@ -285,14 +311,14 @@ object EmbeddingSearch {
     * directly. Index side: corpus bands (the at-scale shuffle key);
     * query side: broadcast. Exact dot re-rank of band-mates keeps every
     * returned score true — recall (not precision) is the LSH trade,
-    * measured by [[mipsRecall]]. M² is a 1-row aggregate broadcast back
-    * over the scan, the same scalar-exchange shape as the flagship's n.
+    * measured by the registered `embed_mips_fixed_recall`. M² is a 1-row
+    * aggregate broadcast back over the scan, the same scalar-exchange
+    * shape as the flagship's n.
     */
   def mipsTopKAlsh(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
       nPlanes: Int = 16, bands: Int = 4): DataFrame = {
     require(nPlanes % bands == 0, "bands must divide nPlanes")
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val m2 = emb.agg(max(dot(col("v"), col("v"))).as("m2"))
     val aug = emb.crossJoin(broadcast(m2))
       .select(col("vec_id"), col("v"),
@@ -307,11 +333,7 @@ object EmbeddingSearch {
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("v"), col("qv"))
       .distinct()
-    val scored = cand.select(col("query_id"), col("vec_id"),
-      round(dot(col("v"), col("qv")), 6).as("ip"))
-    val w = Window.partitionBy("query_id").orderBy(col("ip").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    rankTopK(cand, Ip, k)
   }
 
   /** [[mipsTopKAlsh]] under the CORPUS-ADAPTIVE band sizing — the same
@@ -328,17 +350,14 @@ object EmbeddingSearch {
     * signature kernel, banding format, and the exact-dot re-rank are
     * [[mipsTopKAlsh]] verbatim at the derived width (spec-pinned equal
     * to the explicit-width call).
-    */
-  /** [[mipsTopKAlsh]] under the corpus-adaptive occupancy width
-    * ([[lshRowsPerBand]]) — bounded candidates per query where the fixed
-    * layout's grow linearly with the corpus. NOTE the measured recall
-    * bound (SCALING.md r13): at ANY affordable banding, sign-LSH over
-    * the augmented vectors loses the heavy-norm moderate-angle MIPS
-    * answers as N grows (gated recall@5 0.36→0.08 across x1→x16; the
-    * fixed layout reads 0.52→0.36 at O(corpus) candidates). Prefer
-    * [[mipsTopKIvfPersisted]] — 0.94+ at every curve point from the
-    * shared sized quantizer; this form is the registered banding
-    * contrast.
+    *
+    * NOTE the measured recall bound (SCALING.md r13): at ANY affordable
+    * banding, sign-LSH over the augmented vectors loses the heavy-norm
+    * moderate-angle MIPS answers as N grows (gated recall@5 0.36→0.08
+    * across x1→x16; the fixed layout reads 0.52→0.36 at O(corpus)
+    * candidates). Prefer [[mipsTopKIvfPersisted]] — 0.94+ at every curve
+    * point from the shared sized quantizer; this form is the registered
+    * banding contrast.
     */
   def mipsTopKAlshScaled(spark: SparkSession, dir: String, k: Int = 5,
       nQueries: Int = 10, targetBucket: Int = 32, bands: Int = 8): DataFrame = {
@@ -346,31 +365,6 @@ object EmbeddingSearch {
     val rpb = lshRowsPerBand(n, targetBucket)
     mipsTopKAlsh(spark, dir, k, nQueries, nPlanes = bands * rpb, bands = bands)
   }
-
-  /** recall@k of the SCALED ALSH MIPS path against exact [[mipsTopK]] —
-    * [[mipsRecall]]'s shape over the occupancy-sized banding, so the
-    * width rule's recall cost stays measured next to the fixed layout's.
-    */
-  def mipsRecallScaled(spark: SparkSession, dir: String, k: Int = 5,
-      nQueries: Int = 10): DataFrame =
-    mipsRecallOf(spark, dir, mipsTopKAlshScaled(spark, dir, k, nQueries), k, nQueries)
-
-  /** recall@k of the ALSH MIPS path against exact [[mipsTopK]] — the same
-    * left-join shape as [[lshRecall]] so missed true neighbors count as
-    * misses. Output: (query_id, n_exact, n_hit, recall).
-    */
-  def mipsRecall(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame =
-    mipsRecallOf(spark, dir, mipsTopKAlsh(spark, dir, k, nQueries), k, nQueries)
-
-  /** The ONE MIPS recall rollup both ALSH layouts share — forked copies
-    * would let the fixed and sized rows silently measure different rules.
-    * The exact side is memoized per (dataset, ip, k, nQueries), like
-    * [[recallAgainstBrute]]'s.
-    */
-  private def mipsRecallOf(spark: SparkSession, dir: String, approxTopK: DataFrame,
-      k: Int, nQueries: Int): DataFrame =
-    recallOf(memoizedExactPairs(spark, dir, "ip", k, nQueries)(
-      mipsTopK(spark, dir, k, nQueries)), approxTopK)
 
   /** 16-bit hyperplane signature of a double vector (native kernel —
     * [[graft.functions.expressions.HyperplaneSignature]]; weights are the
@@ -455,50 +449,27 @@ object EmbeddingSearch {
             when(i === j, lit(1) - bit).otherwise(bit).cast("string")
           }))))))
 
-  /** [[lshTopK]] with multi-probe queries: identical index side, the query
-    * side explodes (1+rowsPerBand)·bands keys. Output shape unchanged.
-    */
-  def lshTopKMultiProbe(spark: SparkSession, dir: String, k: Int = 5,
-      nQueries: Int = 10): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val corpus = emb
-      .withColumn("bands", lshBandKeys(lshSignature(col("v"))))
-      .select(col("vec_id"), col("v"), explode(col("bands")).as("band"))
-    val queries = broadcast(emb.where(col("vec_id") < nQueries)
-      .withColumn("bands", lshMultiProbeKeys(lshSignature(col("v"))))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), explode(col("bands")).as("band")))
-    val cand = corpus.join(queries, "band")
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("v"), col("qv"))
-      .distinct()
-    val scored = cand.select(col("query_id"), col("vec_id"),
-      round(cosine(col("v"), col("qv")), 6).as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-  }
-
   /** ANN top-k: candidates share ≥1 of 4 LSH band keys with the query,
-    * re-ranked by exact cosine. Same output shape as [[bruteForceTopK]]
-    * (rank ≤ k within the candidate set).
+    * re-ranked by exact cosine. Same output shape as [[exactTopK]]
+    * (rank ≤ k within the candidate set). `multiProbe` (Lv et al.
+    * VLDB'07) swaps only the QUERY keys for [[lshMultiProbeKeys]]: the
+    * index side is unchanged, the query side explodes
+    * (1+rowsPerBand)·bands keys and also probes every Hamming-1 neighbor
+    * bucket.
     */
-  def lshTopK(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .withColumn("bands", lshBandKeys(lshSignature(col("v"))))
-    val corpus = emb.select(col("vec_id"), col("v"), explode(col("bands")).as("band"))
+  def lshTopK(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
+      multiProbe: Boolean = false): DataFrame = {
+    val emb = vectors(spark, dir)
+    val sig = lshSignature(col("v"))
+    val corpus = emb.select(col("vec_id"), col("v"), explode(lshBandKeys(sig)).as("band"))
+    val queryKeys = if (multiProbe) lshMultiProbeKeys(sig) else lshBandKeys(sig)
     val queries = broadcast(emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), explode(col("bands")).as("band")))
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), explode(queryKeys).as("band")))
     val cand = corpus.join(queries, "band")
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("v"), col("qv"))
       .distinct()
-    val scored = cand.select(col("query_id"), col("vec_id"),
-      round(cosine(col("v"), col("qv")), 6).as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    rankTopK(cand, Cos, k)
   }
 
   /** Two-sided k-NN JOIN — the kNN-graph constructor: EVERY vector gets its
@@ -532,8 +503,7 @@ object EmbeddingSearch {
   def knnJoin(spark: SparkSession, dir: String, k: Int = 3,
       nPlanes: Int = 16, bands: Int = 4, candidateCap: Int = 0): DataFrame = {
     require(nPlanes % bands == 0, "bands must divide nPlanes")
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val banded = emb.select(col("vec_id"),
       explode(lshBandKeys(lshSignature(col("v"), nPlanes), bands, nPlanes / bands)).as("band"))
     // DIRECTED candidate edges (a ≠ b, both orders): each side keeps only
@@ -574,37 +544,25 @@ object EmbeddingSearch {
     * only those cells' vectors are re-ranked exactly. At 100 TB: centroids
     * are one tiny broadcast; the corpus is scanned with a `label IN (...)`
     * semi-join instead of |Q|·N cosines — the classic inverted-file trade.
-    * Output shape matches [[bruteForceTopK]].
+    * Output shape matches [[exactTopK]].
     */
   def ivfTopK(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
       nprobe: Int = 2): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), toDouble(col("embedding")).as("v"))
-    // exact centroids: per-label mean of vectors rounded@6, via the
-    // scaled-long VectorMeanAggregator — ONE fixed-width aggregation
-    // (bit-identical to a per-dim decimal sum, reproducible under any
-    // partitioning; no posexplode row blowup, no reassembly shuffle)
-    val cent = emb
-      .select(col("label"), transform(col("v"), x => round(x, 6)).as("rv"))
+    rankTopK(emb.join(broadcast(probeCells(queriesOf(emb, nQueries),
+        labelCentroids(emb), Cos, nprobe, "label")), Seq("label")), Cos, k)
+  }
+
+  /** Exact per-label centroids (label, cv): the mean of the vectors
+    * rounded@6, via the scaled-long VectorMeanAggregator — ONE
+    * fixed-width aggregation (bit-identical to a per-dim decimal sum,
+    * reproducible under any partitioning; no posexplode row blowup, no
+    * reassembly shuffle). */
+  private def labelCentroids(emb: DataFrame): DataFrame =
+    emb.select(col("label"), transform(col("v"), x => round(x, 6)).as("rv"))
       .groupBy(col("label"))
       .agg(graft.functions.VectorMeanAggregator.vectorMean(col("rv")).as("cv"))
-    val q = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val wProbe = Window.partitionBy("query_id").orderBy(col("csim").desc, col("label").asc)
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("label"),
-        round(cosine(col("qv"), col("cv")), 6).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nprobe)
-      .select(col("query_id"), col("qv"), col("label"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    emb.join(broadcast(probes), Seq("label"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-  }
 
   /** Index-quality metrics for the IVF coarse quantizer — per cell: size,
     * mean and worst cosine-to-centroid (the spherical analogue of k-means
@@ -617,11 +575,7 @@ object EmbeddingSearch {
   def centroidQuality(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), toDouble(col("embedding")).as("v"))
-    val cent = emb
-      .select(col("label"), transform(col("v"), x => round(x, 6)).as("rv"))
-      .groupBy(col("label"))
-      .agg(graft.functions.VectorMeanAggregator.vectorMean(col("rv")).as("cv"))
-    emb.join(broadcast(cent), Seq("label"))
+    emb.join(broadcast(labelCentroids(emb)), Seq("label"))
       .select(col("label"), round(cosine(col("v"), col("cv")), 6).as("cos"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n"),
@@ -698,8 +652,7 @@ object EmbeddingSearch {
       indexPath: String, nprobe: Int = 0, iters: Int = 2,
       maxBucket: Int = 1 << 17): DataFrame = {
     requireSizedIters(iters)
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val n = Tables.embeddingsCount(spark, dir)
     val cells = ivfCellCount(n)
     val cent = ensureKmeansIndex(spark, dir, indexPath, cells, iters)
@@ -782,13 +735,12 @@ object EmbeddingSearch {
     * (vec_a < nProbes). Because pairs are normalized a < b, "either end
     * in the probe set" reduces to this one predicate. Brute cost is
     * |P|·N exact cosines via a broadcast of the ≤ nProbes probe rows —
-    * the bruteForceTopK discipline applied to the τ-set contract, so
+    * the exactTopK discipline applied to the τ-set contract, so
     * the ground truth stays bounded at any corpus scale.
     */
   def nearDupPairsBrute(spark: SparkSession, dir: String, tau: Double,
       nProbes: Int = 100): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val probes = emb.where(col("vec_id") < nProbes)
       .select(col("vec_id").as("vec_a"), col("v").as("va"))
     emb.join(broadcast(probes), col("vec_id") > col("vec_a"))
@@ -859,38 +811,6 @@ object EmbeddingSearch {
       .select(col("vec_id"), col("label"),
         coalesce(col("dup_of_found"), lit(-1L)).as("dup_of"),
         when(col("dup_of_found").isNotNull, lit("dropped")).otherwise(lit("kept")).as("status"))
-  }
-
-  /** Spark's Round on DoubleType, replicated for the bucket-local kernel:
-    * the selection key inside [[knnJoinBucketLocal]]'s per-bucket loop
-    * must be the SAME (rounded cosine, nbr id) total order the global
-    * window ranks by, or a rounding-tie at the local k boundary could
-    * drop a globally-top-k edge. Spec-pinned row-identical to the
-    * expression path (BigDecimal-on-toString, HALF_UP — what Spark's
-    * Round evaluates for doubles).
-    *
-    * FAST PATH, because this runs once per candidate pair (measured: the
-    * naive per-pair BigDecimal was 8.7 of 11 s at x16 — allocation +
-    * decimal-string parsing, not arithmetic): scale by 10⁶ and decide the
-    * half-up digit from the computed fraction. The computed y = x·10⁶
-    * differs from the EXACT decimal value by ≤ ½ulp(10⁶) ≈ 6·10⁻¹¹, so
-    * whenever frac is more than 10⁻⁷ away from the three decision
-    * boundaries (0, ½, 1) the fast decision provably equals the decimal
-    * one — integer-valued (f+δ) ≤ 10⁶ is exact in double and n/10⁶ by
-    * IEEE division is the correctly-rounded double of the same rational
-    * the BigDecimal conversion produces. Inside the boundary zones
-    * (measure-zero in practice) it falls back to the BigDecimal form.
-    */
-  private[graft] def round6(x: Double): Double = {
-    // NaN/Infinity pass through unchanged — Spark's Round special-cases
-    // them the same way; BigDecimal(NaN) would throw instead
-    if (x.isNaN || x.isInfinite) return x
-    val y = x * 1e6
-    val f = math.floor(y)
-    val frac = y - f
-    val safe = (frac > 1e-7 && frac < 0.4999999) || (frac > 0.5000001 && frac < 0.9999999)
-    if (safe) (f + (if (frac >= 0.5) 1.0 else 0.0)) / 1e6
-    else BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
   /** [[knnJoin]] re-ranked BUCKET-LOCALLY — identical rows, the shuffle
@@ -1001,7 +921,7 @@ object EmbeddingSearch {
                 (m(i)._6 || m(i)._5 != m(j)._5)) {
               val c =
                 if (norms(i) == 0.0 || norms(j) == 0.0) 0.0
-                else round6(dotSeq(m(i)._3, m(j)._3) / (norms(i) * norms(j)))
+                else KmeansKernel.round6(dotSeq(m(i)._3, m(j)._3) / (norms(i) * norms(j)))
               insert(i, c, m(j)._2)
               insert(j, c, m(i)._2)
             }
@@ -1032,6 +952,36 @@ object EmbeddingSearch {
     local.dropDuplicates("vec_id", "nbr_id")
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
+  }
+
+  /** Hamming-2 ring key fan-out per band at width `rpb`: base + 1-bit +
+    * 2-bit flips = 1 + r + r(r−1)/2 — QUADRATIC in the corpus-derived
+    * band width, the measured reason H2 is an opt-in (21× wall at x16).
+    */
+  def h2RingFanOut(rpb: Int): Int = 1 + rpb + rpb * (rpb - 1) / 2
+
+  /** The H2 opt-in's misuse guard (r11 verdict item 6): the ring's cost
+    * constant grows quadratically with the corpus-derived band width, and
+    * SCALING.md documents it — but a doc can be missed at call time. Past
+    * `H2WarnFanOut` keys/band the call warns loudly (the measured 21×-at-
+    * x16 regime, rpb=8 → 37 keys); past `H2MaxFanOut` it refuses — at
+    * rpb ≥ 11 (≥ 67 keys/band, ~10× the Hamming-1 ring the default pays)
+    * the unprobed tail of the shuffle dominates any recall gain and the
+    * scale answer is the NN-descent refinement or Hamming-1.
+    */
+  val H2WarnFanOut = 32
+  val H2MaxFanOut = 64
+  private[graft] def requireH2FanOut(rpb: Int): Unit = {
+    val fan = h2RingFanOut(rpb)
+    require(fan <= H2MaxFanOut,
+      s"probeHamming=2 at the corpus-derived band width rpb=$rpb explodes to " +
+        s"$fan probe keys per band (> $H2MaxFanOut): the ring's shuffle grows " +
+        "quadratically with the width (21x wall measured at x16) — use the " +
+        "NN-descent refinement (knnJoinDescent) or Hamming-1 at this scale")
+    if (fan > H2WarnFanOut)
+      System.err.println(s"[graft] WARN probeHamming=2 at rpb=$rpb fans out to " +
+        s"$fan probe keys per band — quadratic in the corpus-derived width; " +
+        "the scale path is knnJoinDescent (see SCALING.md)")
   }
 
   /** [[knnJoin]] under the same corpus-adaptive sizing (see
@@ -1068,36 +1018,6 @@ object EmbeddingSearch {
     * GRAPH should use [[knnJoinCells]] (0.993 recall@3 at x16 at lower
     * wall). This banded family remains the linear-total-work tool and
     * the high-cosine near-dup path. */
-  /** Hamming-2 ring key fan-out per band at width `rpb`: base + 1-bit +
-    * 2-bit flips = 1 + r + r(r−1)/2 — QUADRATIC in the corpus-derived
-    * band width, the measured reason H2 is an opt-in (21× wall at x16).
-    */
-  def h2RingFanOut(rpb: Int): Int = 1 + rpb + rpb * (rpb - 1) / 2
-
-  /** The H2 opt-in's misuse guard (r11 verdict item 6): the ring's cost
-    * constant grows quadratically with the corpus-derived band width, and
-    * SCALING.md documents it — but a doc can be missed at call time. Past
-    * `H2WarnFanOut` keys/band the call warns loudly (the measured 21×-at-
-    * x16 regime, rpb=8 → 37 keys); past `H2MaxFanOut` it refuses — at
-    * rpb ≥ 11 (≥ 67 keys/band, ~10× the Hamming-1 ring the default pays)
-    * the unprobed tail of the shuffle dominates any recall gain and the
-    * scale answer is the NN-descent refinement or Hamming-1.
-    */
-  val H2WarnFanOut = 32
-  val H2MaxFanOut = 64
-  private[graft] def requireH2FanOut(rpb: Int): Unit = {
-    val fan = h2RingFanOut(rpb)
-    require(fan <= H2MaxFanOut,
-      s"probeHamming=2 at the corpus-derived band width rpb=$rpb explodes to " +
-        s"$fan probe keys per band (> $H2MaxFanOut): the ring's shuffle grows " +
-        "quadratically with the width (21x wall measured at x16) — use the " +
-        "NN-descent refinement (knnJoinDescent) or Hamming-1 at this scale")
-    if (fan > H2WarnFanOut)
-      System.err.println(s"[graft] WARN probeHamming=2 at rpb=$rpb fans out to " +
-        s"$fan probe keys per band — quadratic in the corpus-derived width; " +
-        "the scale path is knnJoinDescent (see SCALING.md)")
-  }
-
   def knnJoinScaled(spark: SparkSession, dir: String, k: Int = 3,
       targetBucket: Int = 128, bands: Int = 8, candidateCap: Int = 0,
       multiProbe: Boolean = true, maxBucket: Int = 1 << 17,
@@ -1123,6 +1043,27 @@ object EmbeddingSearch {
         maxBucket = maxBucket, multiProbe = multiProbe,
         tileOversized = tileOversized, probeHamming = probeHamming)
   }
+
+  /** The most recent descent invocation's FINAL round checkpoint — the
+    * session-slot discipline for the descent's corpus-scale
+    * (N·kBuild-edge) frame: freed when the next descent runs, so a long
+    * session (ScaleBench min-of-2, repeated recall runs) pins ONE final
+    * graph, not one per call. localCheckpoint (not persist) is
+    * deliberate and MEASURED: each round's plan must TRUNCATE — with
+    * lineage-keeping persist the nested logical plans triple the wall
+    * (10.7 s vs 3.5 s at sf0.1: Catalyst re-analyzes/canonicalizes the
+    * exponentially-nested tree on every round's action and every cache
+    * lookup). The contract cost: a descent frame from a PREVIOUS
+    * invocation that is re-evaluated after a newer descent ran fails on
+    * released checkpoint blocks instead of recomputing — every in-repo
+    * caller evaluates its frame before the next descent (entries, bench
+    * loops, specs), matching the tiled kernel's pre-r12 contract. The
+    * same contract forbids COMPOSING two descent results in one plan
+    * (build a, build b, evaluate both: building b frees a's blocks) and
+    * concurrent descents from two threads — evaluate-then-build, always.
+    */
+  private val lastDescentCheckpoint =
+    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
   /** NN-DESCENT refinement of the banded kNN graph (Dong et al. WWW'11,
     * "Efficient k-nearest neighbor graph construction for generic
@@ -1158,27 +1099,6 @@ object EmbeddingSearch {
     * (0.993 at x16). Output: (vec_id, nbr_id, cosine, rank ≤ k) —
     * [[knnJoin]]'s shape.
     */
-  /** The most recent descent invocation's FINAL round checkpoint — the
-    * session-slot discipline for the descent's corpus-scale
-    * (N·kBuild-edge) frame: freed when the next descent runs, so a long
-    * session (ScaleBench min-of-2, repeated recall runs) pins ONE final
-    * graph, not one per call. localCheckpoint (not persist) is
-    * deliberate and MEASURED: each round's plan must TRUNCATE — with
-    * lineage-keeping persist the nested logical plans triple the wall
-    * (10.7 s vs 3.5 s at sf0.1: Catalyst re-analyzes/canonicalizes the
-    * exponentially-nested tree on every round's action and every cache
-    * lookup). The contract cost: a descent frame from a PREVIOUS
-    * invocation that is re-evaluated after a newer descent ran fails on
-    * released checkpoint blocks instead of recomputing — every in-repo
-    * caller evaluates its frame before the next descent (entries, bench
-    * loops, specs), matching the tiled kernel's pre-r12 contract. The
-    * same contract forbids COMPOSING two descent results in one plan
-    * (build a, build b, evaluate both: building b frees a's blocks) and
-    * concurrent descents from two threads — evaluate-then-build, always.
-    */
-  private val lastDescentCheckpoint =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   def knnJoinDescent(spark: SparkSession, dir: String, k: Int = 3,
       rounds: Int = 2, kBuild: Int = 10, targetBucket: Int = 128,
       bands: Int = 8, probeHamming: Int = 1): DataFrame = {
@@ -1200,12 +1120,6 @@ object EmbeddingSearch {
       k, rounds, kBuild)
   }
 
-  /** The descent LOOP over any seed graph (vec_id, nbr_id, cosine,
-    * top-kBuild per vertex) — shared by the banded-seeded default
-    * ([[knnJoinDescent]]) and any measured composition (e.g. the
-    * cells-graph seed of SCALING.md's round-12 cells+descent rows); one
-    * loop definition so the refinement rule can never fork across seeds.
-    */
   /** Fail-fast flag for the slot contract above: two CONCURRENT descents
     * would free each other's checkpoint blocks mid-build and surface as
     * missing-block failures far from the cause — refuse the second entry
@@ -1214,6 +1128,12 @@ object EmbeddingSearch {
     */
   private[graft] val descentInProgress = new java.util.concurrent.atomic.AtomicBoolean(false)
 
+  /** The descent LOOP over any seed graph (vec_id, nbr_id, cosine,
+    * top-kBuild per vertex) — shared by the banded-seeded default
+    * ([[knnJoinDescent]]) and any measured composition (e.g. the
+    * cells-graph seed of SCALING.md's round-12 cells+descent rows); one
+    * loop definition so the refinement rule can never fork across seeds.
+    */
   private[graft] def descentRefine(spark: SparkSession, dir: String,
       seed: DataFrame, k: Int, rounds: Int, kBuild: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 8, s"rounds in [1,8], got $rounds")
@@ -1233,8 +1153,7 @@ object EmbeddingSearch {
     // frame is read three times by the next round) AND truncates the
     // plan — see the slot doc above for why persist measured 3× slower
     def materialized(df: DataFrame): DataFrame = df.localCheckpoint()
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val e = vectors(spark, dir)
     val wTop = Window.partitionBy("vec_id")
       .orderBy(col("cosine").desc, col("nbr_id").asc)
     var g = materialized(seed.select(col("vec_id"), col("nbr_id"), col("cosine")))
@@ -1304,11 +1223,9 @@ object EmbeddingSearch {
     */
   private def graphRecallVsBrute(spark: SparkSession, dir: String,
       approxGraph: DataFrame, k: Int, nProbes: Int): DataFrame = {
-    // exact side memoized per (dataset, cos, k, |P|) (see
-    // recallAgainstBrute): the graph recall twins share one probe-set
-    // brute pass per session
-    val exTop = memoizedExactPairs(spark, dir, "cos", k, nProbes)(
-      bruteForceTopK(spark, dir, k, nQueries = nProbes))
+    // exact side memoized (see exactPairs): the graph recall twins share
+    // one probe-set brute pass per session
+    val exTop = exactPairs(spark, dir, Cos, k, nProbes)
       .select(col("query_id").as("vec_id"), col("vec_id").as("nbr_id"))
     recallOf(exTop, approxGraph.where(col("vec_id") < nProbes), "vec_id", "nbr_id")
   }
@@ -1347,8 +1264,7 @@ object EmbeddingSearch {
     */
   def knnJoinCells(spark: SparkSession, dir: String, k: Int = 3,
       nprobe: Int = 0, iters: Int = 2, maxBucket: Int = 1 << 17): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val n = emb.count()
     val cells = ivfCellCount(n)
     knnJoinCellsWith(emb, trainKmeansIndex(emb, cells, iters),
@@ -1392,8 +1308,7 @@ object EmbeddingSearch {
       k: Int = 3, nprobe: Int = 0, iters: Int = 2,
       maxBucket: Int = 1 << 17): DataFrame = {
     requireSizedIters(iters)
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val n = emb.count()
     val cells = ivfCellCount(n)
     knnJoinCellsWith(emb,
@@ -1535,8 +1450,7 @@ object EmbeddingSearch {
   def knnGraphServe(spark: SparkSession, dir: String, indexPath: String,
       k: Int = 5, nQueries: Int = 10, kBuild: Int = 10, beam: Int = 32,
       rounds: Int = 6, entries: Int = 8): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     // the navigable graph is a STANDING artifact (HNSW pays its build
     // once too): built from the shared persisted quantizer on first
     // serve, then every walk reads the edge table — the serve pays
@@ -1569,8 +1483,7 @@ object EmbeddingSearch {
         cellsNprobeFor(n, cells), kBuild, graphDir, n)
     }
     val graph = knnGraphEdges(spark, graphDir).select(col("vec_id"), col("nbr_id"))
-    val q = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+    val q = queriesOf(emb, nQueries)
     // deterministic entry points: the `entries` LOWEST-affine-hash
     // vertices (vec_id tie-break), replayed verbatim in the oracle. A
     // rank, not a modulus filter (ADVICE r15): the filter form's count
@@ -1583,11 +1496,8 @@ object EmbeddingSearch {
       .orderBy(((col("vec_id") * 1103515245L + 12345L) % 2147483647L).asc,
         col("vec_id").asc)
       .limit(entries)
-    val wBeam = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
     def ranked(cand: DataFrame, keep: Int): DataFrame =
-      cand.withColumn("rn", row_number().over(wBeam))
-        .where(col("rn") <= keep).drop("rn")
+      rankBy(cand, "cosine", keep).drop("rank")
     // r16 opt, two round-loop changes (results identical):
     //  - the frontier carries (query_id, vec_id, cosine) ONLY; the query
     //    vector re-attaches per round from the broadcast |Q|-row batch
@@ -1621,22 +1531,10 @@ object EmbeddingSearch {
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(cand)
       cand = next
     }
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    cand.where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    // the beam kept the query itself (an entry point may be it); the
+    // answer drops it and ranks by the shared rule
+    rankBy(cand.where(col("vec_id") =!= col("query_id")), "cosine", k)
   }
-
-  /** Recall twin of the graph serve — the gated evidence for the
-    * last-recall-points claim (reads 1.00/0.98/1.00 at x1/x4/x16 at
-    * the registered 6×32 config — the top recall measured at those
-    * points across the approximate serves). */
-  def knnGraphServeRecall(spark: SparkSession, dir: String,
-      indexPath: String, k: Int = 5, nQueries: Int = 10): DataFrame =
-    recallAgainstBrute(spark, dir,
-      knnGraphServe(spark, dir, indexPath, k, nQueries), k, nQueries)
 
   // ───── the navigable graph's ARTIFACT LIFECYCLE (r16, the r15
   // verdict's item 3 — the last standing artifact without one) ─────
@@ -1997,7 +1895,7 @@ object EmbeddingSearch {
     * key-building explodes instead of three full signature passes.
     */
   private def signedVectors(embeddings: DataFrame, nPlanes: Int): DataFrame =
-    embeddings.select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    vectorsOf(embeddings)
       .withColumn("sig", lshSignature(col("v"), nPlanes))
 
   private def bandedFromSigned(signed: DataFrame, nPlanes: Int, bands: Int,
@@ -2215,7 +2113,7 @@ object EmbeddingSearch {
                     (m(i)._6 || m(i)._5 != m(j)._5)) {
                   val c =
                     if (norms(i) == 0.0 || norms(j) == 0.0) 0.0
-                    else round6(dotSeq(m(i)._3, m(j)._3) / (norms(i) * norms(j)))
+                    else KmeansKernel.round6(dotSeq(m(i)._3, m(j)._3) / (norms(i) * norms(j)))
                   if (cosGeq(c, tau)) {
                     pending =
                       if (m(i)._2 < m(j)._2) (m(i)._2, m(j)._2, c)
@@ -2243,8 +2141,7 @@ object EmbeddingSearch {
   def cosineNearDupPairsFor(embeddings: DataFrame, tau: Double,
       nPlanes: Int = 16, bands: Int = 4): DataFrame = {
     require(nPlanes % bands == 0, "bands must divide nPlanes")
-    val emb = embeddings
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectorsOf(embeddings)
     val banded = emb
       .select(col("vec_id"),
         explode(lshBandKeys(lshSignature(col("v"), nPlanes), bands, nPlanes / bands)).as("band"))
@@ -2279,7 +2176,7 @@ object EmbeddingSearch {
     val done = new org.apache.hadoop.fs.Path(path, "_DONE")
     val fs = done.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
     fs.delete(done, false)
-    embeddings.select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    vectorsOf(embeddings)
       .write.mode("overwrite").parquet(s"$path/vecs")
     spark.read.parquet(s"$path/vecs")
       .select(col("vec_id"),
@@ -2330,7 +2227,7 @@ object EmbeddingSearch {
     requireVecIndexParams(fs, indexPath, nPlanes)
     Forget.requireNoCrashedForget(fs, indexPath)
     fs.delete(done, false)
-    val batch = newVecs.select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val batch = vectorsOf(newVecs)
       .localCheckpoint()
     try {
       batch.write.mode("append").parquet(s"$indexPath/vecs")
@@ -2371,7 +2268,7 @@ object EmbeddingSearch {
     requireVecIndexParams(fs, indexPath, nPlanes)
     val corpusBands = graft.sources.Tables.artifactParquet(spark, s"$indexPath/bands")
     val corpusVecs = graft.sources.Tables.artifactParquet(spark, s"$indexPath/vecs")
-    val batch = newVecs.select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val batch = vectorsOf(newVecs)
     val batchBands = batch
       .select(col("vec_id"), col("v"),
         explode(lshBandKeys(lshSignature(col("v"), nPlanes), 4, nPlanes / 4)).as("band"))
@@ -2407,12 +2304,11 @@ object EmbeddingSearch {
     * production shape is [[trainKmeansIndex]] → [[saveKmeansIndex]] once,
     * then [[loadKmeansIndex]] → [[kmeansTopKWithIndex]] per query (row-
     * identical results — asserted in EmbeddingSpec). Output matches
-    * [[bruteForceTopK]].
+    * [[exactTopK]].
     */
   def kmeansTopK(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
       nClusters: Int = 8, iters: Int = 2, nprobe: Int = 2, samplePct: Int = 100): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     kmeansTopKWithIndex(emb, trainKmeansIndex(emb, nClusters, iters, samplePct), k, nQueries, nprobe)
   }
 
@@ -2443,8 +2339,7 @@ object EmbeddingSearch {
     */
   def kmeansTopKSized(spark: SparkSession, dir: String, k: Int = 5,
       nQueries: Int = 10, nprobe: Int = 2, iters: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val cells = ivfCellCount(emb.count())
     kmeansTopKWithIndex(emb, trainKmeansIndex(emb, cells, iters), k, nQueries, nprobe)
   }
@@ -2458,8 +2353,7 @@ object EmbeddingSearch {
       indexPath: String, k: Int = 5, nQueries: Int = 10, nprobe: Int = 2,
       iters: Int = 2): DataFrame = {
     requireSizedIters(iters)
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     kmeansTopKWithIndex(emb,
       ensureKmeansIndex(spark, dir, indexPath, ivfCellCount(emb.count()), iters),
       k, nQueries, nprobe)
@@ -2485,14 +2379,6 @@ object EmbeddingSearch {
   private def withNorm(emb: DataFrame): DataFrame =
     emb.withColumn("nv", sqrt(dot(col("v"), col("v"))))
 
-  /** Zero-shuffle cell assignment: the k centroids ride along as ONE
-    * broadcast row (array<struct<cl,cv,ncv>>, sorted by cl so collect_list
-    * order can't leak into results) and the argmax is per-row HOF
-    * arithmetic — max of struct(csim, -cl) == highest csim, lowest cl.
-    * `keep` names extra input columns carried through unchanged (the
-    * metadata a filterable IVF build stores beside each vector) — the
-    * default output shape is untouched.
-    */
   /** The assignment winner struct(csim, ncl) by (round(cosine, 6) desc,
     * lowest cl) — the native [[graft.functions.expressions.KmeansBestCell]]
     * kernel. Selection, tie-break, and the rounded output are
@@ -2533,6 +2419,14 @@ object EmbeddingSearch {
       prepared.schema, rows.length, dim))
   }
 
+  /** Zero-shuffle cell assignment: the k centroids ride along as ONE
+    * broadcast row (array<struct<cl,cv,ncv>>, sorted by cl so collect_list
+    * order can't leak into results) and the argmax is per-row HOF
+    * arithmetic — max of struct(csim, -cl) == highest csim, lowest cl.
+    * `keep` names extra input columns carried through unchanged (the
+    * metadata a filterable IVF build stores beside each vector) — the
+    * default output shape is untouched.
+    */
   private def kmeansAssign(embN: DataFrame, cent: DataFrame,
       keep: Seq[String] = Nil): DataFrame =
     embN.withColumn("best",
@@ -2542,6 +2436,15 @@ object EmbeddingSearch {
         // is this vector in its cell" (balance rank, streaming routing)
         // must not recompute it with a second join
         col("best").getField("csim").as("centrality")) ++ keep.map(col): _*)
+
+  /** Deterministic portable sample predicate on vec_id — an affine hash mod
+    * 100, pure BIGINT arithmetic, so the DuckDB oracle (and any engine)
+    * replays EXACTLY which vectors trained. The engine-portable analogue of
+    * the text-side [[TextAnalysis.stratifiedSample]] discipline;
+    * rand()-based sampling would be irreproducible across runs and engines.
+    */
+  private def trainSamplePredicate(pct: Int): Column =
+    (col("vec_id") * 1103515245L + 12345L) % 2147483647L % 100L < pct
 
   /** Deterministic spherical k-means TRAINING over (vec_id, v:array<double>):
     * seeds = first `nClusters` vectors by vec_id; exactly `iters` Lloyd
@@ -2556,15 +2459,6 @@ object EmbeddingSearch {
     * 100 TB, training runs on a sample and every query after the first pays
     * only the probe + re-rank, never the training passes.
     */
-  /** Deterministic portable sample predicate on vec_id — an affine hash mod
-    * 100, pure BIGINT arithmetic, so the DuckDB oracle (and any engine)
-    * replays EXACTLY which vectors trained. The engine-portable analogue of
-    * the text-side [[TextAnalysis.stratifiedSample]] discipline;
-    * rand()-based sampling would be irreproducible across runs and engines.
-    */
-  private def trainSamplePredicate(pct: Int): Column =
-    (col("vec_id") * 1103515245L + 12345L) % 2147483647L % 100L < pct
-
   def trainKmeansIndex(emb: DataFrame, nClusters: Int = 8, iters: Int = 2,
       samplePct: Int = 100): DataFrame = {
     require(samplePct >= 1 && samplePct <= 100, s"samplePct in [1,100], got $samplePct")
@@ -2635,38 +2529,14 @@ object EmbeddingSearch {
     * re-rank against an already-trained quantizer (cl, cv) — from
     * [[trainKmeansIndex]] directly or [[loadKmeansIndex]]. No training
     * passes; the corpus is scanned once for cell assignment and only probed
-    * cells are re-ranked. Output matches [[bruteForceTopK]].
+    * cells are re-ranked ([[serveProbed]] by cosine). Output matches
+    * [[exactTopK]].
     */
   def kmeansTopKWithIndex(emb: DataFrame, cent: DataFrame, k: Int = 5,
-      nQueries: Int = 10, nprobe: Int = 2): DataFrame = {
-    val inverted = kmeansAssign(withNorm(emb), cent) // the inverted file: vectors by cell
-    val q = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    knnOverInverted(inverted, q, cent, k, nprobe)
-  }
-
-  /** The probe + exact-re-rank half every IVF-shaped serve shares: rank
-    * centroids per query, keep `nprobe` cells, re-rank probed cells'
-    * members by exact rounded cosine. `inverted` must carry (cl, vec_id,
-    * v); extra columns ride along untouched.
-    */
-  private def knnOverInverted(inverted: DataFrame, q: DataFrame, cent: DataFrame,
-      k: Int, nprobe: Int): DataFrame = {
-    val wProbe = Window.partitionBy("query_id").orderBy(col("csim").desc, col("cl").asc)
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("cl"),
-        round(cosine(col("qv"), col("cv")), 6).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nprobe)
-      .select(col("query_id"), col("qv"), col("cl"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    inverted.join(broadcast(probes), Seq("cl"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-  }
+      nQueries: Int = 10, nprobe: Int = 2): DataFrame =
+    // the inverted file: vectors by cell
+    serveProbed(kmeansAssign(withNorm(emb), cent), queriesOf(emb, nQueries), cent,
+      Cos, k, nprobe)
 
   /** One (s, vec_id, v_s, nv) frame carrying every subspace slice — the
     * joint frame PQ training/encoding runs over in single corpus passes.
@@ -2700,16 +2570,16 @@ object EmbeddingSearch {
       .select(col("s"), col("vec_id"), col("v"), (-col("best").getField("ncl")).as("cl"))
   }
 
+  /** PQ-codebook trainings this JVM has run — the spec hook for the
+    * train-once discipline (the [[kmeansTrainings]] twin). */
+  private[graft] val pqTrainings = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** Joint Lloyd over all m subspaces: seeds, assignment, and the
     * decimal-exact mean update are [[trainKmeansIndex]]'s rules applied per
     * (s, cl) group — each round is ONE pass over the joint sliced frame
     * instead of m passes over m frames. Returns (s, cl, cv), m·ksub rows,
     * eagerly checkpointed per round.
     */
-  /** PQ-codebook trainings this JVM has run — the spec hook for the
-    * train-once discipline (the [[kmeansTrainings]] twin). */
-  private[graft] val pqTrainings = new java.util.concurrent.atomic.AtomicLong(0)
-
   private[operators] def trainPqCodebooks(emb: DataFrame, m: Int, sub: Int,
       ksub: Int, iters: Int, samplePct: Int = 100): DataFrame = {
     require(samplePct >= 1 && samplePct <= 100, s"samplePct in [1,100], got $samplePct")
@@ -2758,8 +2628,7 @@ object EmbeddingSearch {
     */
   def pqTopK(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
       m: Int = 4, ksub: Int = 4, iters: Int = 2, samplePct: Int = 100): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val dims = 64 // driver testdata contract (embeddings.parquet)
     require(dims % m == 0, s"m=$m must divide dims=$dims")
     val sub = dims / m
@@ -2810,20 +2679,18 @@ object EmbeddingSearch {
         .drop(s"qid$s")
     val adcDot = (0 until m).map(s => col(s"pd$s")).reduce(_ + _)
     val xn = sqrt((0 until m).map(s => col(s"n2_$s")).reduce(_ + _))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_cosine").desc, col("vec_id").asc)
     // an IVF restriction (allowed (query_id, vec_id) pairs from the coarse
     // probe) applies BEFORE the rank: at scale the codes frame would be
     // partitioned by cell so only probed cells are ever scored — the
     // semi-join here is that cell pruning expressed declaratively
     val restricted = restrict.fold(scored)(pairs =>
       scored.join(pairs, Seq("query_id", "vec_id"), "left_semi"))
-    restricted
+    rankBy(restricted
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(when(col("nq") === 0.0 || xn === 0.0, lit(0.0))
-          .otherwise(adcDot / (col("nq") * xn)), 6).as("adc_cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+          .otherwise(adcDot / (col("nq") * xn)), 6).as("adc_cosine")),
+      "adc_cosine", k)
   }
 
   /** IVF-PQ — the composed production ANN index (Jégou et al. '11 as
@@ -2844,8 +2711,7 @@ object EmbeddingSearch {
   def ivfPqTopK(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
       nClusters: Int = 8, nprobe: Int = 2, m: Int = 4, ksub: Int = 4,
       iters: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val dims = 64 // driver testdata contract (embeddings.parquet)
     val sub = dims / m
     ivfPqServe(emb, trainKmeansIndex(emb, nClusters, iters),
@@ -2858,17 +2724,9 @@ object EmbeddingSearch {
   private def ivfPqServe(emb: DataFrame, cent: DataFrame, cents: DataFrame,
       k: Int, nQueries: Int, nprobe: Int, m: Int, sub: Int): DataFrame = {
     val cells = kmeansAssign(withNorm(emb), cent).select(col("vec_id"), col("cl"))
-    // probe: per query the nprobe best coarse cells — the kmeansTopK rule,
-    // through the one shared cosine kernel (a second hand-rolled probe
-    // would silently fork the rule on any future edit)
-    val q = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val wProbe = Window.partitionBy("query_id").orderBy(col("csim").desc, col("cl").asc)
-    val probe = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("cl"),
-        round(cosine(col("qv"), col("cv")), 6).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nprobe)
+    // probe: per query the nprobe best coarse cells — the one shared
+    // probe rule (a second hand-rolled probe would silently fork it)
+    val probe = probeCells(queriesOf(emb, nQueries), cent, Cos, nprobe)
       .select(col("query_id"), col("cl"))
     val allowed = probe.join(cells, Seq("cl")).select(col("query_id"), col("vec_id"))
     pqTopKWithCodebooks(emb, cents, k, nQueries, m, sub, restrict = Some(allowed))
@@ -2887,8 +2745,7 @@ object EmbeddingSearch {
   def ivfPqTopKPersisted(spark: SparkSession, dir: String, indexPath: String,
       k: Int = 5, nQueries: Int = 10, nClusters: Int = 8, nprobe: Int = 2,
       m: Int = 4, ksub: Int = 4, iters: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val dims = 64
     val sub = dims / m
     val done = new org.apache.hadoop.fs.Path(indexPath, "_DONE")
@@ -2901,17 +2758,6 @@ object EmbeddingSearch {
     ivfPqServe(emb, loadKmeansIndex(spark, s"$indexPath/coarse"),
       loadPqIndex(spark, s"$indexPath/pq"), k, nQueries, nprobe, m, sub)
   }
-
-  /** ANN quality evaluation — recall@k of the LSH path against the exact
-    * brute-force top-k, per query: the measurement loop an ANN deployment
-    * runs after every index/parameter change, expressed as the same two
-    * pipelines joined. n_hit counts exact-top-k members the LSH candidates
-    * recovered. Scale: both sides are |Q|·k rows after their own top-k
-    * pruning — the join and rollup are negligible next to the searches.
-    * Output: (query_id, n_exact, n_hit, recall).
-    */
-  def lshRecall(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame =
-    recallOf(bruteForceTopK(spark, dir, k, nQueries), lshTopK(spark, dir, k, nQueries))
 
   /** Recall@k of the kNN-graph path ([[knnJoinScaled]]) against the
     * exact graph, on a fixed probe set (`vec_id < nProbes`) — the
@@ -2932,15 +2778,6 @@ object EmbeddingSearch {
       knnJoinScaled(spark, dir, k, targetBucket, bands, candidateCap,
         multiProbe = multiProbe, probeHamming = probeHamming),
       k, nProbes)
-
-  /** Recall@k of the multi-probe LSH path vs exact — measured beside
-    * [[lshRecall]], this quantifies what Hamming-1 probing buys at fixed
-    * index layout. Output: (query_id, n_exact, n_hit, recall).
-    */
-  def multiProbeRecall(spark: SparkSession, dir: String, k: Int = 5,
-      nQueries: Int = 10): DataFrame =
-    recallOf(bruteForceTopK(spark, dir, k, nQueries),
-      lshTopKMultiProbe(spark, dir, k, nQueries))
 
   /** Persist / load the PQ codebooks — [[saveKmeansIndex]]'s discipline
     * for the compressed-search index: m·ksub rows of (s, cl, cv),
@@ -2978,8 +2815,7 @@ object EmbeddingSearch {
     if (fs.exists(marker) && !fs.exists(paramsPath))
       fs.delete(new org.apache.hadoop.fs.Path(indexPath), true)
     if (!fs.exists(marker) || !fs.exists(paramsPath)) {
-      val emb = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+      val emb = vectors(spark, dir)
       savePqIndex(trainPqCodebooks(emb, m, 64 / m, ksub, iters, samplePct), indexPath)
       val out = fs.create(paramsPath, true)
       try out.write(want.getBytes("UTF-8")) finally out.close()
@@ -3002,8 +2838,7 @@ object EmbeddingSearch {
   def pqTopKPersisted(spark: SparkSession, dir: String, indexPath: String,
       k: Int = 5, nQueries: Int = 10, m: Int = 4, ksub: Int = 4,
       iters: Int = 2, samplePct: Int = 100): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     pqTopKWithCodebooks(emb,
       ensurePqIndex(spark, dir, indexPath, m, ksub, iters, samplePct),
       k, nQueries, m, 64 / m)
@@ -3019,19 +2854,6 @@ object EmbeddingSearch {
     pqRefineWith(spark, dir,
       ensurePqIndex(spark, dir, indexPath, m, ksub, iters),
       k, nQueries, m, shortlist)
-
-  /** Recall twin served from the same persisted codebooks. */
-  def pqRecallPersisted(spark: SparkSession, dir: String, indexPath: String,
-      k: Int = 5, nQueries: Int = 10, m: Int = 4, ksub: Int = 4,
-      iters: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    recallAgainstBrute(spark, dir,
-      pqTopKWithCodebooks(emb,
-        ensurePqIndex(spark, dir, indexPath, m, ksub, iters),
-        k, nQueries, m, 64 / m),
-      k, nQueries)
-  }
 
   /** PQ SHORTLIST + EXACT RE-RANK — the standard two-stage ANN serve shape
     * (Jégou et al. '11 §IV-C: ADC selects candidates, true distances order
@@ -3049,8 +2871,7 @@ object EmbeddingSearch {
   def pqTopKRefined(spark: SparkSession, dir: String, k: Int = 5,
       nQueries: Int = 10, m: Int = 4, ksub: Int = 4, iters: Int = 2,
       shortlist: Int = 20): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     pqRefineWith(spark, dir, trainPqCodebooks(emb, m, 64 / m, ksub, iters),
       k, nQueries, m, shortlist)
   }
@@ -3059,33 +2880,13 @@ object EmbeddingSearch {
     * one copy so the persisted twin can never drift from the inline one. */
   private def pqRefineWith(spark: SparkSession, dir: String, cents: DataFrame,
       k: Int, nQueries: Int, m: Int, shortlist: Int): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val short = pqTopKWithCodebooks(emb, cents, shortlist, nQueries, m, 64 / m)
       .select(col("query_id"), col("vec_id"))
-    val q = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    broadcast(short)
+    rankTopK(broadcast(short)
       .join(emb, "vec_id")
-      .join(broadcast(q), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+      .join(broadcast(queriesOf(emb, nQueries)), "query_id"), Cos, k)
   }
-
-  /** Recall@k of the composed IVF-PQ index against the exact top-k — the
-    * knob-tuning loop (nprobe × m × ksub) an IVF-PQ deployment runs —
-    * over the PERSISTED composed index, the recall twin of the registered
-    * serve sharing its one-training-per-dataset artifact (r16 opt; rows
-    * identical, the serve is deterministic). Output:
-    * (query_id, n_exact, n_hit, recall).
-    */
-  def ivfPqRecallPersisted(spark: SparkSession, dir: String, indexPath: String,
-      k: Int = 5, nQueries: Int = 10): DataFrame =
-    recallAgainstBrute(spark, dir,
-      ivfPqTopKPersisted(spark, dir, indexPath, k, nQueries), k, nQueries)
 
   /** One collected ground-truth pair set per memo `key` (r14, the r13
     * verdict's item 5 — the bpeModelMemo discipline applied to the recall
@@ -3130,10 +2931,27 @@ object EmbeddingSearch {
     memoizedPairs(spark, (dir, metric, k, nQueries), java.lang.Long.toHexString(
       Tables.datasetFingerprint(s"$dir/embeddings.parquet")))(compute)
 
-  private def recallAgainstBrute(spark: SparkSession, dir: String,
-      approxTopK: DataFrame, k: Int, nQueries: Int): DataFrame =
-    recallOf(memoizedExactPairs(spark, dir, "cos", k, nQueries)(
-      bruteForceTopK(spark, dir, k, nQueries)), approxTopK)
+  /** The exact top-k (query_id, vec_id) pairs by `metric`, memoized per
+    * (dataset, metric, k, nQueries) — every recall twin against the same
+    * exact side shares one brute pass per session. */
+  private def exactPairs(spark: SparkSession, dir: String, metric: Metric,
+      k: Int, nQueries: Int): DataFrame =
+    memoizedExactPairs(spark, dir, metric.name, k, nQueries)(
+      exactTopK(spark, dir, metric, k = k, nQueries = nQueries))
+
+  /** Recall@k of an approximate top-k against the exact one under the
+    * same `metric` — the measurement loop an ANN deployment runs after
+    * every index/parameter change, as the two pipelines joined
+    * ([[recallOf]] over the memoized [[exactPairs]]). The registered
+    * `*_recall` entries compose it with the serve they measure. Both
+    * sides are |Q|·k rows after their own top-k, so the join and rollup
+    * are negligible next to the searches. Output: (query_id, n_exact,
+    * n_hit, recall).
+    */
+  private[graft] def recallVsExact(spark: SparkSession, dir: String,
+      metric: Metric, approx: DataFrame, k: Int = 5,
+      nQueries: Int = 10): DataFrame =
+    recallOf(exactPairs(spark, dir, metric, k, nQueries), approx)
 
   /** THE recall rollup every recall twin shares: per `key`, how many of
     * the exact side's (key, item) pairs the approximate side also holds.
@@ -3153,14 +2971,6 @@ object EmbeddingSearch {
         round(col("n_hit").cast("double") / col("n_exact").cast("double"), 6).as("recall"))
   }
 
-  /** Train-once/serve-many as one call: if no quantizer exists at
-    * `indexPath`, train and persist it; then serve the query from the
-    * PERSISTED index. The first invocation pays training; every later one
-    * (same session or a new JVM) only loads k rows and runs probe +
-    * re-rank. Existence goes through the Hadoop FileSystem API with the
-    * session's configuration, so the index path can live on any cluster
-    * filesystem (HDFS/object store), not just local disk.
-    */
   /** Load the quantizer at `indexPath`, TRAINING AND PERSISTING it first
     * if absent — the one train-or-load prologue every persisted-quantizer
     * surface shares (kNN serve, cluster balance; a divergent copy would
@@ -3171,67 +2981,35 @@ object EmbeddingSearch {
     val marker = new org.apache.hadoop.fs.Path(indexPath, "_SUCCESS")
     val fs = marker.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
     if (!fs.exists(marker)) {
-      val emb = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+      val emb = vectors(spark, dir)
       saveKmeansIndex(trainKmeansIndex(emb, nClusters, iters, samplePct), indexPath)
     }
     loadKmeansIndex(spark, indexPath)
   }
 
+  /** Train-once/serve-many as one call: if no quantizer exists at
+    * `indexPath`, train and persist it; then serve the query from the
+    * PERSISTED index. The first invocation pays training; every later one
+    * (same session or a new JVM) only loads k rows and runs probe +
+    * re-rank. Existence goes through the Hadoop FileSystem API with the
+    * session's configuration, so the index path can live on any cluster
+    * filesystem (HDFS/object store), not just local disk.
+    */
   def kmeansTopKPersisted(spark: SparkSession, dir: String, indexPath: String,
       k: Int = 5, nQueries: Int = 10, nClusters: Int = 8, iters: Int = 2,
       nprobe: Int = 2, samplePct: Int = 100): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     kmeansTopKWithIndex(emb,
       ensureKmeansIndex(spark, dir, indexPath, nClusters, iters, samplePct),
       k, nQueries, nprobe)
   }
 
-  /** FILTERED kNN, exact baseline: cosine top-k restricted to corpus
-    * vectors whose `label` matches the predicate — the metadata-filter +
-    * vector-search op every vector store serves (FAISS `IDSelector`,
-    * the filtered search of Milvus/Qdrant/Vespa; a RAG stack's "top-k
-    * within this tenant/language/source"). The corpus side filters
-    * BEFORE scoring — the predicate is a plain Column so it pushes to
-    * the parquet scan (PushedFilters), and at 100 TB a label-partitioned
-    * or z-ordered layout prunes it at plan time; queries stay the fixed
-    * `vec_id < nQueries` probe set from the FULL corpus (the searcher's
-    * filter constrains results, never the query). Scoring and ranking
-    * are [[bruteForceTopK]] verbatim over the survivors. Output:
-    * (query_id, vec_id, cosine, rank).
-    */
-  def filteredTopK(spark: SparkSession, dir: String, k: Int = 5,
-      nQueries: Int = 10, labelEq: Int = 3): DataFrame =
-    filteredTopKWhere(spark, dir, col("label") === labelEq, k, nQueries)
-
-  /** [[filteredTopK]] over an ARBITRARY corpus predicate — the general
-    * API (composite filters: `label.isin(...) && source === ...`); the
-    * registered entry pins the single-equality form the oracle replays,
-    * but a user's filter is whatever Column they hand in (and pushes to
-    * the scan exactly the same way, PlanSpec-pinned for the equality).
-    */
-  def filteredTopKWhere(spark: SparkSession, dir: String, pred: Column,
-      k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val embAll = Tables.embeddings(spark, dir)
-    val corpus = embAll.where(pred)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val queries = broadcast(embAll.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), toDouble(col("embedding")).as("qv")))
-    val scored = corpus.crossJoin(queries)
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-  }
-
-  /** [[filteredTopK]] served from the PERSISTED sized quantizer — the
-    * scale path. The quantizer is trained on (and shared with) the FULL
-    * corpus — one index serves every filter, the production shape; only
-    * the INVERTED FILE is built over the filter's survivors, so the
-    * probed-cell scan reads matching vectors only.
+  /** FILTERED kNN served from the PERSISTED sized quantizer — the
+    * scale path of [[exactTopK]] under a corpus predicate. The quantizer
+    * is trained on (and shared with) the FULL corpus — one index serves
+    * every filter, the production shape; only the INVERTED FILE is built
+    * over the filter's survivors, so the probed-cell scan reads matching
+    * vectors only.
     *
     * The probe width is where filtered ANN earns its keep: probing the
     * UNFILTERED width under a selective filter is the classic filtered-
@@ -3253,14 +3031,6 @@ object EmbeddingSearch {
     * cl=-partitioned persisted IVF layout ([[buildIvfIndex]]) where the
     * probe is a plan-time partition prune.
     */
-  def filteredTopKIvfPersisted(spark: SparkSession, dir: String,
-      indexPath: String, k: Int = 5, nQueries: Int = 10, labelEq: Int = 3,
-      iters: Int = 2): DataFrame =
-    filteredTopKIvfWhere(spark, dir, indexPath, col("label") === labelEq,
-      k, nQueries, iters)
-
-  /** [[filteredTopKIvfPersisted]] over an arbitrary corpus predicate —
-    * the general API twin of [[filteredTopKWhere]]. */
   def filteredTopKIvfWhere(spark: SparkSession, dir: String,
       indexPath: String, pred: Column, k: Int = 5, nQueries: Int = 10,
       iters: Int = 2): DataFrame = {
@@ -3278,21 +3048,15 @@ object EmbeddingSearch {
       nQueries: Int, iters: Int): DataFrame = {
     requireSizedIters(iters)
     require(matches > 0, s"filter '$pred' matches no vectors")
-    val embAll = Tables.embeddings(spark, dir)
-    val emb = embAll.select(col("vec_id"), toDouble(col("embedding")).as("v"))
     val cells = ivfCellCount(n)
     val cent = ensureKmeansIndex(spark, dir, indexPath, cells, iters)
-    val corpus = embAll.where(pred)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val inverted = kmeansAssign(withNorm(corpus), cent)
-    val q = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    knnOverInverted(inverted, q, cent, k, cellsNprobeFor(matches, cells))
+    serveProbed(kmeansAssign(withNorm(vectors(spark, dir, pred)), cent),
+      queries(spark, dir, nQueries), cent, Cos, k, cellsNprobeFor(matches, cells))
   }
 
   /** The UNCLAMPED selectivity-widened probe width — [[cellsNprobeFor]]'s
     * integer half-up fed the filtered count, before the [2,16] clamp.
-    * This is the branch variable of [[filteredTopKAuto]]: when it
+    * This is the branch variable of [[filteredTopKAutoWhere]]: when it
     * exceeds the clamp ceiling, the width rule is saying "the filter is
     * selective enough that holding the candidate target needs most of
     * the quantizer" — at which point the survivors themselves are
@@ -3327,13 +3091,6 @@ object EmbeddingSearch {
     * selection spec-pinned on both sides via the trainings counter
     * (the brute arm never touches the quantizer).
     */
-  def filteredTopKAuto(spark: SparkSession, dir: String, indexPath: String,
-      k: Int = 5, nQueries: Int = 10, labelEq: Int = 3): DataFrame =
-    filteredTopKAutoWhere(spark, dir, indexPath, col("label") === labelEq,
-      k, nQueries)
-
-  /** [[filteredTopKAuto]] over an arbitrary corpus predicate — the
-    * general API: the same count-gated branch, any Column filter. */
   def filteredTopKAutoWhere(spark: SparkSession, dir: String,
       indexPath: String, pred: Column, k: Int = 5,
       nQueries: Int = 10): DataFrame = {
@@ -3342,66 +3099,45 @@ object EmbeddingSearch {
     val matches = embAll.where(pred).count()
     require(matches > 0, s"filter '$pred' matches no vectors")
     if (filteredNpRaw(n, matches) > 16)
-      filteredTopKWhere(spark, dir, pred, k, nQueries)
+      exactTopK(spark, dir, Cos, pred, k, nQueries)
     else filteredTopKIvfCounted(spark, dir, indexPath, n, matches, pred, k,
       nQueries, iters = 2)
   }
 
-  /** Recall@k of the filtered default vs the filtered exact baseline —
-    * 1.0 on the brute branch by construction; past the branch point it
-    * measures the selectivity-widened probe rule. */
-  def filteredRecallPersisted(spark: SparkSession, dir: String,
-      indexPath: String, k: Int = 5, nQueries: Int = 10,
-      labelEq: Int = 3): DataFrame =
-    recallOf(filteredTopK(spark, dir, k, nQueries, labelEq),
-      filteredTopKAuto(spark, dir, indexPath, k, nQueries, labelEq))
-
-  /** Recall@k of the UNCONDITIONAL widened-IVF serve — the explicit
-    * `_ivf` form's number, measured below the branch point too (where
-    * the clamp binds and the auto default escapes to brute). */
-  def filteredRecallIvfPersisted(spark: SparkSession, dir: String,
-      indexPath: String, k: Int = 5, nQueries: Int = 10,
-      labelEq: Int = 3): DataFrame =
-    recallOf(filteredTopK(spark, dir, k, nQueries, labelEq),
-      filteredTopKIvfPersisted(spark, dir, indexPath, k, nQueries, labelEq))
+  /** Candidates (query_id, vec_id, v, qv) → (query_id, vec_id, cosine)
+    * with the rounded cosine ≥ τ: [[scoreCandidates]] under a radius
+    * instead of a rank — the one verify step of every range family. */
+  private def withinTau(cand: DataFrame, tau: Double): DataFrame =
+    scoreCandidates(cand, Cos).where(col("cosine") >= tau)
 
   /** RANGE SEARCH, exact baseline (FAISS `range_search`): ALL corpus
-    * vectors within cosine ≥ τ of each query — the radius twin of top-k
-    * (dedup audits, "everything this similar to the probe", recall-set
-    * construction). Result size is data-dependent, so there is no rank
-    * column; the (query_id, vec_id) set plus the rounded score is fully
-    * deterministic. Exact cost is the |Q|·N broadcast scan — the same
-    * linear control [[bruteForceTopK]] is for top-k.
+    * vectors matching `pred` within cosine ≥ τ of each query — the
+    * radius twin of top-k (dedup audits, "everything this similar to the
+    * probe", recall-set construction); `pred` is the filter × radius
+    * composition ("every τ-neighbor within this tenant/source"),
+    * `lit(true)` the unfiltered form. Result size is data-dependent, so
+    * there is no rank column; the (query_id, vec_id) set plus the
+    * rounded score is fully deterministic. Exact cost is the |Q|·N
+    * broadcast scan — the same linear control [[exactTopK]] is for top-k.
     */
-  def rangeSearch(spark: SparkSession, dir: String, tau: Double = 0.3,
-      nQueries: Int = 10): DataFrame =
-    rangeSearchWhere(spark, dir, lit(true), tau, nQueries)
-
-  /** [[rangeSearch]] with the corpus side restricted to `pred` — the
-    * filter × radius composition ("every τ-neighbor within this
-    * tenant/source"); `lit(true)` is the unfiltered form. */
   def rangeSearchWhere(spark: SparkSession, dir: String, pred: Column,
-      tau: Double = 0.3, nQueries: Int = 10): DataFrame = {
-    val embAll = Tables.embeddings(spark, dir)
-    val emb = embAll.where(pred)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val queries = broadcast(embAll.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), toDouble(col("embedding")).as("qv")))
-    emb.crossJoin(queries)
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cosine"))
-      .where(col("cosine") >= tau)
-  }
+      tau: Double = 0.3, nQueries: Int = 10): DataFrame =
+    withinTau(vectors(spark, dir, pred)
+      .crossJoin(broadcast(queries(spark, dir, nQueries))), tau)
 
-  /** [[rangeSearch]] from the PERSISTED sized quantizer: rank cells per
+  /** Range search from the PERSISTED sized quantizer: rank cells per
     * query, probe the count-derived width, keep probed-cell members with
     * exact cosine ≥ τ — bounded serve cost (nprobe·N/cells candidates
     * per query) in place of the |Q|·N scan, the FAISS IVF range_search
     * shape. Same recall trade as every probed serve (a τ-neighbor in an
-    * unprobed cell is missed), measured by [[rangeRecallPersisted]];
-    * every RETURNED row carries a true exact ≥ τ cosine, so precision
-    * is 1 by construction (spec-pinned subset soundness). The per-call
+    * unprobed cell is missed), measured by the registered
+    * `embed_range_probed_recall`: that recall COLLAPSES with scale
+    * (0.91 → 0.69 → 0.51 across x1/x4/x16, SCALING.md r13) — a τ-set
+    * grows ~linearly with the corpus while rank-probing holds candidates
+    * at the fixed target, so this is the bounded-cost OPT-IN, not the
+    * default; [[rangeSearchPrunedWhere]] is the sound default. Every
+    * RETURNED row carries a true exact ≥ τ cosine, so precision is 1 by
+    * construction (spec-pinned subset soundness). The per-call
     * assignment scan is the sized family's linear term; a standing
     * deployment probes the cl=-partitioned persisted IVF layout
     * ([[buildIvfIndex]]) instead.
@@ -3410,39 +3146,13 @@ object EmbeddingSearch {
       indexPath: String, tau: Double = 0.3, nQueries: Int = 10,
       iters: Int = 2): DataFrame = {
     requireSizedIters(iters)
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val n = emb.count()
     val cells = ivfCellCount(n)
     val cent = ensureKmeansIndex(spark, dir, indexPath, cells, iters)
-    val inverted = kmeansAssign(withNorm(emb), cent)
-    val q = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val wProbe = Window.partitionBy("query_id").orderBy(col("csim").desc, col("cl").asc)
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("cl"),
-        round(cosine(col("qv"), col("cv")), 6).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= cellsNprobeFor(n, cells))
-      .select(col("query_id"), col("qv"), col("cl"))
-    inverted.join(broadcast(probes), Seq("cl"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cosine"))
-      .where(col("cosine") >= tau)
+    val probes = probeCells(queriesOf(emb, nQueries), cent, Cos, cellsNprobeFor(n, cells))
+    withinTau(kmeansAssign(withNorm(emb), cent).join(broadcast(probes), Seq("cl")), tau)
   }
-
-  /** Per-query recall of the rank-probed range serve vs the exact τ-set
-    * (queries whose exact τ-set is empty carry no row). The measured
-    * story (SCALING.md r13): this recall COLLAPSES with scale
-    * (0.91 → 0.69 → 0.51 across x1/x4/x16) — a τ-set grows ~linearly
-    * with the corpus while rank-probing holds candidates at the fixed
-    * target, so the probed form is the bounded-cost OPT-IN, not the
-    * default; [[rangeSearchPruned]] is the sound default. */
-  def rangeRecallPersisted(spark: SparkSession, dir: String,
-      indexPath: String, tau: Double = 0.3, nQueries: Int = 10): DataFrame =
-    recallOf(rangeSearch(spark, dir, tau, nQueries),
-      rangeSearchIvfPersisted(spark, dir, indexPath, tau, nQueries))
 
   /** SOUND range search from the persisted quantizer — the default: probe
     * every cell whose angular cap can intersect the query's τ-ball and
@@ -3465,60 +3175,49 @@ object EmbeddingSearch {
     * toward the exact scan it equals. The rank-probed
     * [[rangeSearchIvfPersisted]] stays registered as the fixed-budget
     * contrast whose recall trade is measured, not silent.
-    */
-  def rangeSearchPruned(spark: SparkSession, dir: String,
-      indexPath: String, tau: Double = 0.3, nQueries: Int = 10,
-      iters: Int = 2): DataFrame =
-    rangeSearchPrunedWhere(spark, dir, indexPath, lit(true), tau, nQueries, iters)
-
-  /** [[rangeSearchPruned]] over a FILTERED corpus — still sound: the
-    * inverted file and the per-cell radii are both built over the
-    * filter's survivors (pushed predicate), so every searched member's
-    * angle is covered by its cell's radius and the triangle bound
-    * probes every cell that can hold a filtered τ-neighbor. Filtered
-    * radii are ≤ the unfiltered ones — the filter can only TIGHTEN the
-    * pruning. The quantizer stays the shared full-corpus training (one
-    * index serves every filter). Result = the exact filtered τ-set.
+    *
+    * Under a `pred` filter it is still sound: the inverted file and the
+    * per-cell radii are both built over the filter's survivors (pushed
+    * predicate), so every searched member's angle is covered by its
+    * cell's radius and the triangle bound probes every cell that can
+    * hold a filtered τ-neighbor. Filtered radii are ≤ the unfiltered
+    * ones — the filter can only TIGHTEN the pruning. The quantizer stays
+    * the shared full-corpus training (one index serves every filter).
+    * Result = the exact (filtered) τ-set.
     */
   def rangeSearchPrunedWhere(spark: SparkSession, dir: String,
       indexPath: String, pred: Column, tau: Double = 0.3,
       nQueries: Int = 10, iters: Int = 2): DataFrame = {
     requireSizedIters(iters)
-    val embAll = Tables.embeddings(spark, dir)
-    val emb = embAll.where(pred)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
     val cent = ensureKmeansIndex(spark, dir, indexPath,
-      ivfCellCount(embAll.count()), iters)
-    val inverted = kmeansAssign(withNorm(emb), cent)
-    // angular radius per cell from the assignment's winning cosine; the
-    // clamp guards FP spill past ±1 before acos
-    val clamp1 = (c: Column) => least(greatest(c, lit(-1.0)), lit(1.0))
+      ivfCellCount(Tables.embeddings(spark, dir).count()), iters)
+    val inverted = kmeansAssign(withNorm(vectors(spark, dir, pred)), cent)
+    // angular radius per cell from the assignment's winning cosine
     val radii = inverted.groupBy(col("cl"))
       .agg(acos(clamp1(min(col("centrality")))).as("rad"))
-    // queries come from the FULL corpus — the filter constrains results,
-    // never the probe set (the filteredTopK convention)
-    val q = embAll.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), toDouble(col("embedding")).as("qv"))
-    val thetaTau = math.acos(tau)
-    val eps = 0.01 // rad; covers 6dp cosine rounding through acos' steep edge
-    val probes = q.crossJoin(broadcast(cent.join(radii, Seq("cl"))))
-      .where(acos(clamp1(round(cosine(col("qv"), col("cv")), 6)))
-        <= lit(thetaTau) + col("rad") + lit(eps))
-      .select(col("query_id"), col("qv"), col("cl"))
-    inverted.join(broadcast(probes), Seq("cl"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cosine"))
-      .where(col("cosine") >= tau)
+    val probes = soundProbes(queries(spark, dir, nQueries),
+      cent.join(radii, Seq("cl")), col("rad"), tau)
+    withinTau(inverted.join(broadcast(probes), Seq("cl")), tau)
   }
 
-  /** Recall of the SOUND range default vs the exact τ-set — reads 1.0
-    * everywhere (the completeness invariant, gated at every ScaleBench
-    * curve point so an unsound pruning change regresses as a diff). */
-  def rangePrunedRecallPersisted(spark: SparkSession, dir: String,
-      indexPath: String, tau: Double = 0.3, nQueries: Int = 10): DataFrame =
-    recallOf(rangeSearch(spark, dir, tau, nQueries),
-      rangeSearchPruned(spark, dir, indexPath, tau, nQueries))
+  /** Clamp to [-1, 1] — guards FP spill past ±1 before acos. */
+  private def clamp1(c: Column): Column = least(greatest(c, lit(-1.0)), lit(1.0))
+
+  /** Angular slack of the sound range probe, in radians: covers the 6dp
+    * rounding of both cosines through acos' steep edge. */
+  private val RangeProbeEps = 0.01
+
+  /** THE sound range probe rule (the triangle bound of
+    * [[rangeSearchPrunedWhere]]): every (query, cell) with
+    * acos(round(cosine(qv, cv), 6)) ≤ θ_τ + `rad` + ε, where `centRadii`
+    * carries (cl, cv) and `rad` is the cell's angular radius. Output:
+    * (query_id, qv, cl). */
+  private def soundProbes(q: DataFrame, centRadii: DataFrame, rad: Column,
+      tau: Double): DataFrame =
+    q.crossJoin(broadcast(centRadii))
+      .where(acos(clamp1(round(cosine(col("qv"), col("cv")), 6)))
+        <= lit(math.acos(tau)) + rad + lit(RangeProbeEps))
+      .select(col("query_id"), col("qv"), col("cl"))
 
   /** CLUSTER-BALANCED corpus sampling: keep each semantic cluster's `q`
     * most CENTRAL members (cosine to the assigned trained centroid desc,
@@ -3565,7 +3264,7 @@ object EmbeddingSearch {
     */
   def assignWithIndex(embeddings: DataFrame, cent: DataFrame): DataFrame =
     centralityScored(
-      embeddings.select(col("vec_id"), toDouble(col("embedding")).as("v")), cent)
+      vectorsOf(embeddings), cent)
 
   /** [[clusterBalanceWithIndex]] against a PERSISTED quantizer, training it
     * if absent — same train-once discipline (and, at the default params,
@@ -3574,8 +3273,7 @@ object EmbeddingSearch {
     */
   def clusterBalancePersisted(spark: SparkSession, dir: String, indexPath: String,
       q: Int = 20, nClusters: Int = 8, iters: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     clusterBalanceWithIndex(emb,
       ensureKmeansIndex(spark, dir, indexPath, nClusters, iters), q)
   }
@@ -3774,7 +3472,7 @@ object EmbeddingSearch {
   // ≤ k probed ids), so they memoize under the same commit-state /
   // fingerprint keys as the row counts, and the probe-cell RANKING
   // itself runs driver-side over the cached arrays with the
-  // spec-pinned bit-identical scalar kernels ([[dotSeq]], [[round6]])
+  // spec-pinned bit-identical scalar kernels ([[dotSeq]], [[KmeansKernel.round6]])
   // — leaving exactly ONE Spark job per standing serve: the pruned
   // read of the probed cl= dirs. ------------------------------------
 
@@ -3873,54 +3571,40 @@ object EmbeddingSearch {
       rows.map { case (id, v) => (id, v.map(_.toDouble)) })
   }
 
-  /** [[cosine]]'s scalar twin on plain arrays — the same fold
-    * ([[dotSeq]] ≡ the DotProduct expression), the same norms-then-
-    * divide order, the same zero-vector guard, so driver-side probe
-    * ranking can never diverge from the in-plan window's scores. */
-  private def cosineSeq(a: Array[Double], b: Array[Double]): Double = {
-    val d = dotSeq(a, b)
-    val na = math.sqrt(dotSeq(a, a))
-    val nb = math.sqrt(dotSeq(b, b))
-    if (na == 0.0 || nb == 0.0) 0.0 else d / (na * nb)
-  }
-
-  /** Driver-side probed-cell selection over the CACHED arrays — ONE
-    * copy of the rank-by-score rule (round6(score) desc, cl asc,
-    * rn ≤ np) shared with [[probedCellIds]], evaluated with the
-    * spec-pinned scalar kernels instead of a Spark job. nQueries × k
-    * scores — trivial at any corpus size (k ≈ √N quantizer rows is the
-    * bound the collected-ids design already accepted). */
-  private def probedCellIdsLocal(qRows: Array[(Long, Array[Double])],
-      centRows: Array[(Int, Array[Double])], np: Int,
-      score: (Array[Double], Array[Double]) => Double): Array[Int] = {
+  /** Driver-side probed-cell selection over the CACHED arrays — the
+    * [[probeCells]] rule (round6(score) desc, cl asc, rn ≤ np) evaluated
+    * with the metric's spec-pinned scalar kernel instead of a Spark job,
+    * so it picks exactly the cells [[probedCellIds]] would collect.
+    * nQueries × k scores — trivial at any corpus size (k ≈ √N quantizer
+    * rows is the bound the collected-ids design already accepted). */
+  private[graft] def probedCellIdsLocal(qRows: Array[(Long, Array[Double])],
+      centRows: Array[(Int, Array[Double])], np: Int, metric: Metric): Array[Int] = {
     val ord: Ordering[(Double, Int)] =
       Ordering.Tuple2(Ordering[Double].reverse, Ordering[Int])
     qRows.flatMap { case (_, qv) =>
-      centRows.map { case (cl, cv) => (round6(score(qv, cv)), cl) }
+      centRows.map { case (cl, cv) => (KmeansKernel.round6(metric.scoreSeq(qv, cv)), cl) }
         .sortBy(identity)(ord)
         .take(np).map(_._2)
     }.distinct
   }
 
-  /** Read ONLY the probed `cl=` dirs of the index's vector table (r15 —
-    * measured at the 1M-vector wall probe): `spark.read.parquet(ivf)`
-    * lists EVERY partition dir at plan time before pruning, so a
-    * √N-celled index pays a per-serve listing that grows with the
-    * CELL count — ~1,000 dirs ≈ +0.7 s at 1M vectors locally, and a
-    * genuine metadata storm at 100 TB (65,536 dirs per serve for a
-    * ~20-dir probe). Listing the probed dirs through `basePath` keeps
-    * the partition column and row content identical (the dir name IS
-    * the cl value either way) at probe-set metadata cost. Cells the
+  /** Read ONLY the named partition dirs of an int-partitioned artifact
+    * table (the IVF index's `ivf/` cells, the graph's verts/edges) via
+    * `basePath` (r15 — measured at the 1M-vector wall probe):
+    * `spark.read.parquet(ivf)` lists EVERY partition dir at plan time
+    * before pruning, so a √N-celled index pays a per-serve listing that
+    * grows with the CELL count — ~1,000 dirs ≈ +0.7 s at 1M vectors
+    * locally, and a genuine metadata storm at 100 TB (65,536 dirs per
+    * serve for a ~20-dir probe). Listing the probed dirs keeps the
+    * partition column and row content identical (the dir name IS the
+    * key value either way) at probe-set metadata cost. Cells the
     * quantizer ranks but no vector ever joined have no dir — they hold
     * nothing to read, so skipping them is result-invariant (the radii
-    * inner-join argument); `where(cl isin probed)` stays on top as the
+    * inner-join argument); `where(key isin values)` stays on top as the
     * semantic guard. Falls back to the full-listing read when every
-    * probed dir is absent (schema must still come from somewhere; only
-    * an empty serve reaches this).
+    * named dir is absent (schema must still come from somewhere; only an
+    * empty serve reaches this).
     */
-  /** [[probedIvfRead]] generalized to any int-partitioned artifact table
-    * (the graph's verts/edges) — read ONLY the named partition dirs via
-    * `basePath`, so plan-time listing never touches the unprobed ones. */
   private def probedPartitionRead(spark: SparkSession, tbl: String,
       key: String, values: Seq[Int]): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(tbl)
@@ -3933,17 +3617,10 @@ object EmbeddingSearch {
     df.where(col(key).isin(values.map(Integer.valueOf): _*))
   }
 
+  /** The probed `cl=` cells of an IVF index's vector table. */
   private def probedIvfRead(spark: SparkSession, indexPath: String,
-      cells: Array[Int]): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
-    val paths = cells.sorted
-      .map(c => s"$indexPath/ivf/cl=$c")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    val df = if (paths.isEmpty) graft.sources.Tables.artifactParquet(spark, s"$indexPath/ivf")
-      else graft.sources.Tables.artifactPartitionedParquet(spark, s"$indexPath/ivf", paths)
-    df.where(col("cl").isin(cells.map(Integer.valueOf): _*))
-  }
+      cells: Array[Int]): DataFrame =
+    probedPartitionRead(spark, s"$indexPath/ivf", "cl", cells.toSeq)
 
   /** The sized-quantizer STALENESS RULE (r12 verdict item 4): an index
     * grown by [[extendIvfIndex]] keeps its training-time cell count while
@@ -4072,8 +3749,7 @@ object EmbeddingSearch {
     // ensureBm25Index doclens discipline)
     val v2 = new org.apache.hadoop.fs.Path(indexPath, "idmap/_SUCCESS")
     if (!fs.exists(done) || !fs.exists(v2))
-      buildIvfIndex(Tables.embeddings(spark, dir)
-        .select(col("vec_id"), toDouble(col("embedding")).as("v")),
+      buildIvfIndex(vectors(spark, dir),
         indexPath, nClusters, iters)
   }
 
@@ -4092,8 +3768,7 @@ object EmbeddingSearch {
   def knnIncremental(spark: SparkSession, dir: String, indexPath: String,
       k: Int = 5, nQueries: Int = 10, nprobe: Int = 2,
       nClusters: Int = 8, iters: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val split = emb.count() * 4 / 5
     // queries come from corpusIvf (vec_id < nQueries), which only holds the
     // indexed 4/5: a query set reaching past the split would silently drop
@@ -4110,10 +3785,19 @@ object EmbeddingSearch {
     val corpusIvf = graft.sources.Tables.artifactParquet(spark, s"$indexPath/ivf")
     val batchIvf = kmeansAssign(withNorm(emb.where(col("vec_id") >= split)), cent)
       .select(col("cl"), col("vec_id"), col("v"))
-    val q = corpusIvf.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    knnOverInverted(corpusIvf.unionByName(batchIvf), q, cent, k, nprobe)
+    serveProbed(corpusIvf.unionByName(batchIvf), queriesOf(corpusIvf, nQueries), cent,
+      Cos, k, nprobe)
   }
+
+  /** THE data-file predicate every index layout/commit/compaction guard
+    * shares (a regular file that is not a `_marker` or `.hidden`) —
+    * single-sourced (r14 review) so a future change to what counts as
+    * data cannot leave the extend guards, the compaction census, and
+    * the empty-table allowances silently disagreeing.
+    */
+  private[operators] def isDataFile(e: org.apache.hadoop.fs.FileStatus): Boolean =
+    e.isFile && !e.getPath.getName.startsWith("_") &&
+      !e.getPath.getName.startsWith(".")
 
   /** Append a NEW vector batch to a committed IVF index ON DISK — the
     * add-without-rebuild maintenance pass that completes the
@@ -4135,16 +3819,6 @@ object EmbeddingSearch {
     * The current forget rewrite preserves the layout, so
     * extend-after-forget is legal.
     */
-  /** THE data-file predicate every index layout/commit/compaction guard
-    * shares (a regular file that is not a `_marker` or `.hidden`) —
-    * single-sourced (r14 review) so a future change to what counts as
-    * data cannot leave the extend guards, the compaction census, and
-    * the empty-table allowances silently disagreeing.
-    */
-  private[operators] def isDataFile(e: org.apache.hadoop.fs.FileStatus): Boolean =
-    e.isFile && !e.getPath.getName.startsWith("_") &&
-      !e.getPath.getName.startsWith(".")
-
   def extendIvfIndex(indexPath: String, newVecs: DataFrame,
       autoCompact: Boolean = true, idempotenceToken: Option[String] = None): Unit = {
     val done = new org.apache.hadoop.fs.Path(indexPath, "_DONE")
@@ -4369,11 +4043,10 @@ object EmbeddingSearch {
     * branch all fail as row diffs).
     */
   def filteredIndexServe(spark: SparkSession, dir: String, indexPath: String,
-      k: Int = 5, nQueries: Int = 10, labelEq: Int = 3): DataFrame = {
+      pred: Column, k: Int = 5, nQueries: Int = 10): DataFrame = {
     ensureStandingIvfIndex(spark, dir, indexPath)
     val (batch, qRows) = standingBatchWithLocal(spark, dir, nQueries)
-    filteredKnnBatchAgainstIvfIndex(batch,
-      indexPath, col("label") === labelEq, k, localQ = Some(qRows))
+    filteredKnnBatchAgainstIvfIndex(batch, indexPath, pred, k, localQ = Some(qRows))
   }
 
   /** Build-if-missing of THE standing vector-store artifact (r14, the
@@ -4433,18 +4106,10 @@ object EmbeddingSearch {
     knnBatchAgainstIvfIndex(batch, indexPath, k, nprobe, localQ = Some(qRows))
   }
 
-  /** Recall twin of the standing sized-kNN default — measures exactly
-    * the registered plan (row-identical to the per-call twin, so the
-    * gated number is unchanged by the promotion). */
-  def kmeansRecallSizedStanding(spark: SparkSession, dir: String,
-      indexPath: String, k: Int = 5, nQueries: Int = 10): DataFrame =
-    recallAgainstBrute(spark, dir,
-      kmeansSizedStandingServe(spark, dir, indexPath, k, nQueries), k, nQueries)
-
   /** The REGISTERED sound-range default (r14): the triangle-bound serve
     * from the standing index's stored radii table
     * ([[rangeBatchAgainstIvfIndex]]) instead of re-assigning the corpus
-    * and re-deriving floors per call ([[rangeSearchPruned]], still the
+    * and re-deriving floors per call ([[rangeSearchPrunedWhere]], still the
     * per-call kernel under the filtered composition). Result = the
     * exact τ-set (sound by construction), so the oracle stays the brute
     * replay verbatim.
@@ -4457,8 +4122,8 @@ object EmbeddingSearch {
   }
 
   /** Completeness invariant of the standing range default (reads 1.0
-    * everywhere — the [[rangePrunedRecallPersisted]] gate moved onto
-    * the registered standing plan). The exact τ-set ground truth is
+    * everywhere — the per-call pruned serve's completeness gate moved
+    * onto the registered standing plan). The exact τ-set ground truth is
     * memoized per dataset fingerprint (r15 — the [[memoizedExactPairs]]
     * discipline on the range family: the exact arm's brute τ-scan was
     * the one non-memoized ground-truth pass left in the recall
@@ -4466,7 +4131,7 @@ object EmbeddingSearch {
   def rangeStandingRecall(spark: SparkSession, dir: String,
       indexPath: String, tau: Double = 0.3, nQueries: Int = 10): DataFrame =
     recallOf(memoizedExactPairs(spark, dir, s"range_tau$tau", 0, nQueries)(
-      rangeSearch(spark, dir, tau, nQueries)),
+      rangeSearchWhere(spark, dir, lit(true), tau, nQueries)),
       rangeStandingServe(spark, dir, indexPath, tau, nQueries))
 
   /** The MIPS IVF serve from the STANDING index's stored cell files
@@ -4475,7 +4140,7 @@ object EmbeddingSearch {
     * count) — the at-scale arm of [[mipsTopKAuto]] and the registered
     * `embed_knn_mips_ivf` form; row-identical to the per-call
     * [[mipsTopKIvfPersisted]] (same quantizer, same assignments, same
-    * [[mipsServe]] scoring), so the IVF MIPS oracle applies verbatim.
+    * [[serveProbed]] scoring), so the IVF MIPS oracle applies verbatim.
     */
   def mipsStandingServe(spark: SparkSession, dir: String,
       indexPath: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
@@ -4528,7 +4193,7 @@ object EmbeddingSearch {
 
   /** The DATA-DERIVED MIPS default (r14): count(*) below
     * [[mipsCellsCrossover]] serves the exact inner-product scan
-    * ([[mipsTopK]] — recall 1, the honest small-corpus plan), at or
+    * ([[exactTopK]] by [[Ip]] — recall 1, the honest small-corpus plan), at or
     * past it the standing IVF-IP serve ([[mipsStandingServe]] — the
     * measured scale recommendation). One parquet-metadata count picks
     * the branch; both arms keep their explicit names
@@ -4540,26 +4205,9 @@ object EmbeddingSearch {
       k: Int = 5, nQueries: Int = 10): DataFrame = {
     // gate count memoized per dataset fingerprint (r15)
     val n = Tables.embeddingsCount(spark, dir)
-    if (n < mipsCellsCrossover) mipsTopK(spark, dir, k, nQueries)
+    if (n < mipsCellsCrossover) exactTopK(spark, dir, Ip, k = k, nQueries = nQueries)
     else mipsStandingServe(spark, dir, indexPath, k, nQueries)
   }
-
-  /** Recall@k of the MIPS auto default vs the exact scan — 1.0 below
-    * the crossover by construction, the IVF serve's measured 0.94+
-    * past it; gated at every BENCH_SCALE curve point so the branch
-    * must read ≥ max(arms) wherever it binds. */
-  def mipsAutoRecall(spark: SparkSession, dir: String, indexPath: String,
-      k: Int = 5, nQueries: Int = 10): DataFrame =
-    mipsRecallOf(spark, dir,
-      mipsTopKAuto(spark, dir, indexPath, k, nQueries), k, nQueries)
-
-  /** Recall twin of the STANDING IVF MIPS serve — the registered
-    * `embed_knn_mips_ivf` form's gated evidence (row-identical to the
-    * per-call twin, so the measured number is unchanged). */
-  def mipsRecallStanding(spark: SparkSession, dir: String,
-      indexPath: String, k: Int = 5, nQueries: Int = 10): DataFrame =
-    mipsRecallOf(spark, dir,
-      mipsStandingServe(spark, dir, indexPath, k, nQueries), k, nQueries)
 
   /** Compact the IVF index's per-record tables IN PLACE — the
     * small-file maintenance pass an extend-grown index needs: every
@@ -4641,8 +4289,7 @@ object EmbeddingSearch {
   def knnIncrementalExtend(spark: SparkSession, dir: String, indexPath: String,
       k: Int = 5, nQueries: Int = 10, nprobe: Int = 2,
       nClusters: Int = 8, iters: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val split = emb.count() * 4 / 5
     require(nQueries <= split,
       s"nQueries=$nQueries exceeds the indexed corpus split ($split rows) — " +
@@ -4660,9 +4307,7 @@ object EmbeddingSearch {
     warnIfStale(spark, indexPath, "serve")
     val cent = loadKmeansIndex(spark, s"$indexPath/cent")
     val inverted = graft.sources.Tables.artifactParquet(spark, s"$indexPath/ivf")
-    val q = inverted.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    knnOverInverted(inverted, q, cent, k, nprobe)
+    serveProbed(inverted, queriesOf(inverted, nQueries), cent, Cos, k, nprobe)
   }
 
   /** SOUND range search served from the DISK-EXTENDED index — the
@@ -4682,8 +4327,7 @@ object EmbeddingSearch {
     */
   def rangeExtendServe(spark: SparkSession, dir: String, indexPath: String,
       tau: Double = 0.3, nQueries: Int = 10): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val n = emb.count()
     val split = n * 4 / 5
     require(nQueries <= split,
@@ -4707,13 +4351,13 @@ object EmbeddingSearch {
     * kernel — defined here so the streaming tier and any batch caller
     * share one rule): rank the k-row quantizer per batch vector, keep
     * `nprobe` cells, then re-rank the probed cells' members by exact
-    * cosine ([[knnOverInverted]] verbatim). The batch's probed cell ids
+    * cosine ([[serveProbed]] verbatim). The batch's probed cell ids
     * are collected driver-side FIRST — a list bounded by the quantizer
     * size (k rows), never the batch or corpus — and pushed into the ivf
     * read as a literal IN, so the cl= partition dirs prune at PLAN time
     * (the hybridTopKServed discipline) and per-batch cost is
     * probed-cells bytes plus the batch scan, never a corpus-wide read.
-    * Pruning is result-invariant: [[knnOverInverted]] only ever joins
+    * Pruning is result-invariant: [[serveProbed]] only ever joins
     * probed cells. Output: (query_id, vec_id, cosine, rank ≤ k).
     */
   def knnBatchAgainstIvfIndex(batch: DataFrame, indexPath: String,
@@ -4725,39 +4369,39 @@ object EmbeddingSearch {
     // it; one metadata count per micro-batch keeps the staleness rule
     // audible here too
     warnIfStale(spark, indexPath, "stream-serve")
-    val cent = cachedCentDf(spark, indexPath)
-    val q = batch.select(col("vec_id").cast("long").as("query_id"),
-      toDouble(col("embedding")).as("qv"))
-    // `localQ` (the standing serves' cached batch) selects probed cells
-    // driver-side with the bit-identical scalar kernels — no
-    // pre-collection job; an arbitrary batch (streaming tier) keeps the
-    // in-plan collection
-    val cells = localQ match {
-      case Some(qRows) => probedCellIdsLocal(qRows, cachedCentRows(spark, indexPath),
-        nprobe, cosineSeq)
-      case None => probedCellIds(q, cent, nprobe, cosine)
-    }
-    knnOverInverted(probedIvfRead(spark, indexPath, cells), q, cent, k, nprobe)
+    probedBatchServe(batchQueries(batch), indexPath, Cos, k, nprobe, lit(true), localQ)
   }
 
   /** The batch's probed cell ids, collected driver-side (bounded by the
-    * k-row quantizer) for PLAN-time cl= pruning — ONE copy of the
-    * rank-by-score rule (round(score,6) desc, cl asc, rn ≤ np) shared
-    * by the standing kNN/filtered/MIPS serves, so the pre-collection
-    * can never drift from the serving kernel's own ranking (a drifted
-    * copy would silently exclude cells the kernel ranks, dropping
-    * neighbors instead of failing). `score` is [[cosine]] for the
-    * angular serves and [[dot]] for MIPS.
+    * k-row quantizer) for PLAN-time cl= pruning — [[probeCells]] itself,
+    * so the pre-collection can never drift from the serving kernel's own
+    * ranking (a drifted copy would silently exclude cells the kernel
+    * ranks, dropping neighbors instead of failing).
     */
   private def probedCellIds(q: DataFrame, cent: DataFrame, np: Int,
-      score: (Column, Column) => Column): Array[Int] = {
-    val wProbe = Window.partitionBy("query_id").orderBy(col("s").desc, col("cl").asc)
-    q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("cl"),
-        round(score(col("qv"), col("cv")), 6).as("s"))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= np)
-      .select(col("cl")).distinct().collect().map(_.getInt(0))
+      metric: Metric): Array[Int] =
+    probeCells(q, cent, metric, np).select(col("cl")).distinct()
+      .collect().map(_.getInt(0))
+
+  /** The probed arm of every standing-index serve: the batch's probed
+    * cell ids — driver-side from `localQ` (the standing serves' cached
+    * batch, bit-identical scalar kernels, no pre-collection job) or one
+    * k-row-bounded collect for an arbitrary batch (streaming tier) — then
+    * the plan-time-pruned cell read under `pred` and [[serveProbed]] by
+    * `metric`. Pruning is result-invariant: the serve only ever joins
+    * probed cells.
+    */
+  private def probedBatchServe(q: DataFrame, indexPath: String, metric: Metric,
+      k: Int, np: Int, pred: Column,
+      localQ: Option[Array[(Long, Array[Double])]]): DataFrame = {
+    val spark = q.sparkSession
+    val cent = cachedCentDf(spark, indexPath)
+    val cells = localQ match {
+      case Some(qRows) =>
+        probedCellIdsLocal(qRows, cachedCentRows(spark, indexPath), np, metric)
+      case None => probedCellIds(q, cent, np, metric)
+    }
+    serveProbed(probedIvfRead(spark, indexPath, cells).where(pred), q, cent, metric, k, np)
   }
 
   /** One micro-batch of the FILTERED kNN serve against a persisted
@@ -4770,7 +4414,7 @@ object EmbeddingSearch {
     * probed-cells bytes of MATCHING rows per batch and never touches the
     * source table.
     *
-    * Branch = the [[filteredTopKAuto]] rule computed from the index's
+    * Branch = the [[filteredTopKAutoWhere]] rule computed from the index's
     * OWN trained cell count (equal to [[filteredNpRaw]] when the index
     * was built sized): survivors selective enough to clamp the widened
     * width ⇒ the exact scan of the filter's survivors (predicate pushed
@@ -4791,52 +4435,29 @@ object EmbeddingSearch {
       pred: Column, k: Int = 5, matches: Long = -1L,
       localQ: Option[Array[(Long, Array[Double])]] = None): DataFrame =
     filteredBatchAgainstIvfIndex(batch, indexPath, pred, k, matches,
-      "filtered-serve", cosine, "cosine", knnOverInverted, cosineSeq, localQ)
+      "filtered-serve", Cos, localQ)
 
-  /** The ONE filtered standing-serve kernel both score families run —
-    * branch computation, zero-match refusal, brute arm, and probed arm
-    * parameterized only by the scoring rule ([[cosine]]/"cosine"/
-    * [[knnOverInverted]] vs [[dot]]/"ip"/[[mipsServe]]). A forked copy
-    * would let a future branch-rule or brute-arm fix silently diverge
-    * the two (the probedCellIds single-copy argument, one level up).
+  /** The ONE filtered standing-serve kernel both metrics run — branch
+    * computation, zero-match refusal, brute arm, and probed arm
+    * parameterized only by the [[Metric]]. A forked copy would let a
+    * future branch-rule or brute-arm fix silently diverge the two.
     */
   private def filteredBatchAgainstIvfIndex(batch: DataFrame, indexPath: String,
-      pred: Column, k: Int, matches: Long, surface: String,
-      score: (Column, Column) => Column, scoreCol: String,
-      serve: (DataFrame, DataFrame, DataFrame, Int, Int) => DataFrame,
-      scoreSeq: (Array[Double], Array[Double]) => Double,
+      pred: Column, k: Int, matches: Long, surface: String, metric: Metric,
       localQ: Option[Array[(Long, Array[Double])]]): DataFrame = {
     val spark = batch.sparkSession
     warnIfStale(spark, indexPath, surface)
-    val ivf = graft.sources.Tables.artifactParquet(spark, s"$indexPath/ivf")
     val m = if (matches >= 0) matches else storedIvfMatches(spark, indexPath, pred)
     require(m > 0, s"filter '$pred' matches no indexed vectors")
-    val q = batch.select(col("vec_id").cast("long").as("query_id"),
-      toDouble(col("embedding")).as("qv"))
-    val centRows = cachedCentRows(spark, indexPath)
-    val cent = cachedCentDf(spark, indexPath)
-    val cells = centRows.length
+    val q = batchQueries(batch)
+    val cells = cachedCentRows(spark, indexPath).length
     // the unclamped widened width from the index's ACTUAL trained cell
     // count ([[npRawFor]] — equal to filteredNpRaw for a sized build)
-    val raw = npRawFor(cells, m)
-    if (raw > 16) {
-      val w = Window.partitionBy("query_id").orderBy(col(scoreCol).desc, col("vec_id").asc)
-      ivf.where(pred).select(col("vec_id"), col("v"))
-        .crossJoin(broadcast(q))
-        .where(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          round(score(col("v"), col("qv")), 6).as(scoreCol))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= k)
-    } else {
-      val np = cellsNprobeFor(m, cells)
-      val probedCells = localQ match {
-        case Some(qRows) => probedCellIdsLocal(qRows, centRows, np, scoreSeq)
-        case None => probedCellIds(q, cent, np, score)
-      }
-      serve(probedIvfRead(spark, indexPath, probedCells).where(pred),
-        q, cent, k, np)
-    }
+    if (npRawFor(cells, m) > 16)
+      rankTopK(graft.sources.Tables.artifactParquet(spark, s"$indexPath/ivf")
+        .where(pred).select(col("vec_id"), col("v"))
+        .crossJoin(broadcast(q)), metric, k)
+    else probedBatchServe(q, indexPath, metric, k, cellsNprobeFor(m, cells), pred, localQ)
   }
 
   /** One micro-batch of the FILTERED MIPS serve against a persisted
@@ -4854,27 +4475,18 @@ object EmbeddingSearch {
       pred: Column, k: Int = 5, matches: Long = -1L,
       localQ: Option[Array[(Long, Array[Double])]] = None): DataFrame =
     filteredBatchAgainstIvfIndex(batch, indexPath, pred, k, matches,
-      "filtered-mips-serve", dot, "ip", mipsServe, dotSeq, localQ)
+      "filtered-mips-serve", Ip, localQ)
 
   /** The REGISTERED standing filtered-MIPS serve (r14): build-once
     * payload index, then the count-gated filtered IP top-k from the
     * stored cell files — [[filteredIndexServe]]'s IP sibling. */
   def mipsFilteredStandingServe(spark: SparkSession, dir: String,
-      indexPath: String, k: Int = 5, nQueries: Int = 10,
-      labelEq: Int = 3): DataFrame = {
+      indexPath: String, pred: Column, k: Int = 5,
+      nQueries: Int = 10): DataFrame = {
     ensureStandingIvfIndex(spark, dir, indexPath)
     val (batch, qRows) = standingBatchWithLocal(spark, dir, nQueries)
-    filteredMipsBatchAgainstIvfIndex(batch,
-      indexPath, col("label") === labelEq, k, localQ = Some(qRows))
+    filteredMipsBatchAgainstIvfIndex(batch, indexPath, pred, k, localQ = Some(qRows))
   }
-
-  /** Recall twin of the standing filtered-MIPS default — measures the
-    * registered plan (1.0 on the brute branch by construction). */
-  def mipsFilteredRecallStanding(spark: SparkSession, dir: String,
-      indexPath: String, k: Int = 5, nQueries: Int = 10,
-      labelEq: Int = 3): DataFrame =
-    recallOf(mipsTopKWhere(spark, dir, col("label") === labelEq, k, nQueries),
-      mipsFilteredStandingServe(spark, dir, indexPath, k, nQueries, labelEq))
 
   /** One micro-batch of the MIPS serve against a persisted IVF index —
     * [[knnBatchAgainstIvfIndex]] with the INNER PRODUCT as both the
@@ -4886,7 +4498,7 @@ object EmbeddingSearch {
     * right direction must win — cosine ranking would lose it), the
     * batch's probed cell ids collect driver-side (bounded by the k-row
     * quantizer) for PLAN-time cl= pruning, and the exact-IP re-rank
-    * runs on probed members only ([[mipsServe]] verbatim — one scoring
+    * runs on probed members only ([[serveProbed]] verbatim — one scoring
     * rule for the per-call and standing tiers). `nprobe <= 0` derives
     * the count rule from the index itself ([[cellsNprobeFor]] fed the
     * stored row count — one parquet-metadata count); the streaming
@@ -4898,24 +4510,16 @@ object EmbeddingSearch {
       localQ: Option[Array[(Long, Array[Double])]] = None): DataFrame = {
     val spark = batch.sparkSession
     warnIfStale(spark, indexPath, "mips-serve")
-    val centRows = cachedCentRows(spark, indexPath)
-    val cent = cachedCentDf(spark, indexPath)
     // cell count from the cached quantizer — the per-call cent.count()
     // job this replaces was the k-row table's second read per serve
-    val cells = centRows.length
     val np = if (nprobe > 0) nprobe
-      else cellsNprobeFor(storedIvfRows(spark, indexPath), cells)
-    val q = batch.select(col("vec_id").cast("long").as("query_id"),
-      toDouble(col("embedding")).as("qv"))
-    val probed = localQ match {
-      case Some(qRows) => probedCellIdsLocal(qRows, centRows, np, dotSeq)
-      case None => probedCellIds(q, cent, np, dot)
-    }
-    mipsServe(probedIvfRead(spark, indexPath, probed), q, cent, k, np)
+      else cellsNprobeFor(storedIvfRows(spark, indexPath),
+        cachedCentRows(spark, indexPath).length)
+    probedBatchServe(batchQueries(batch), indexPath, Ip, k, np, lit(true), localQ)
   }
 
   /** One micro-batch of the SOUND range serve against a persisted IVF
-    * index — [[rangeSearchPruned]]'s spherical-triangle pruning lifted
+    * index — [[rangeSearchPrunedWhere]]'s spherical-triangle pruning lifted
     * to the STANDING index: the per-cell angular floors come from the
     * index's `radii` table (written at build, MERGED at every extend —
     * an appended vector can only widen its cell, and forget only
@@ -4959,8 +4563,6 @@ object EmbeddingSearch {
     require(fs.exists(marker),
       s"IVF index at $indexPath has no radii table (pre-radii layout) — " +
         "rebuild with buildIvfIndex to serve sound range search")
-    val thetaTau = math.acos(tau)
-    val eps = 0.01 // rad; covers 6dp cosine rounding through acos' steep edge
     // cells with no stored members have no radii row (inner join) and are
     // correctly never probed — nothing there to miss; an extend that
     // populates one adds its row in the same commit as its vectors.
@@ -4979,29 +4581,20 @@ object EmbeddingSearch {
           (qid, qv) <- qRows.toSeq
           (cl, cv) <- cachedCentRows(spark, indexPath)
           mincos <- radiiMap.get(cl)
-          if math.acos(clamp1s(round6(cosineSeq(qv, cv)))) <=
-            thetaTau + math.acos(clamp1s(mincos)) + eps
+          if math.acos(clamp1s(KmeansKernel.round6(cosineSeq(qv, cv)))) <=
+            math.acos(tau) + math.acos(clamp1s(mincos)) + RangeProbeEps
         } yield (qid, qv.toSeq, cl)
         (pairs.toDF("query_id", "qv", "cl"), pairs.map(_._3).distinct.toArray)
       case None =>
         val cent = loadKmeansIndex(spark, s"$indexPath/cent")
         val radii = graft.sources.Tables.artifactParquet(spark, s"$indexPath/radii")
-        val q = batch.select(col("vec_id").cast("long").as("query_id"),
-          toDouble(col("embedding")).as("qv"))
-        val clamp1 = (c: Column) => least(greatest(c, lit(-1.0)), lit(1.0))
-        val p = q.crossJoin(broadcast(cent.join(radii, Seq("cl"))))
-          .where(acos(clamp1(round(cosine(col("qv"), col("cv")), 6)))
-            <= lit(thetaTau) + acos(clamp1(col("mincos"))) + lit(eps))
-          .select(col("query_id"), col("qv"), col("cl"))
+        val p = soundProbes(batchQueries(batch), cent.join(radii, Seq("cl")),
+          acos(clamp1(col("mincos"))), tau)
         (p, p.select(col("cl")).distinct().collect().map(_.getInt(0)))
     }
-    probedIvfRead(spark, indexPath, probedIds)
+    withinTau(probedIvfRead(spark, indexPath, probedIds)
       .where(pred)
-      .join(broadcast(probes), Seq("cl"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("v"), col("qv")), 6).as("cosine"))
-      .where(col("cosine") >= tau)
+      .join(broadcast(probes), Seq("cl")), tau)
   }
 
   /** Embedding-norm HYGIENE profile per label — the vector-quality check
@@ -5080,30 +4673,27 @@ object EmbeddingSearch {
   def sq8TopK(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10,
       samplePct: Int = 100): DataFrame = {
     require(samplePct >= 1 && samplePct <= 100, s"samplePct in [1,100], got $samplePct")
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     // min/max train on the deterministic sample when samplePct < 100 (the
     // same portable predicate as k-means/PQ); encoding clamps the rare
     // out-of-sample-range value to the byte edges
     val train = if (samplePct >= 100) emb else emb.where(trainSamplePredicate(samplePct))
-    val queries = broadcast(emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv")))
-    val scored = sq8Encoded(emb, sq8Params(train)).crossJoin(queries)
+    rankBy(sq8Encoded(emb, sq8Params(train))
+      .crossJoin(broadcast(queriesOf(emb, nQueries)))
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        round(cosine(col("vhat"), col("qv")), 6).as("sq_cosine"))
-    val w = Window.partitionBy("query_id").orderBy(col("sq_cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+        round(cosine(col("vhat"), col("qv")), 6).as("sq_cosine")),
+      "sq_cosine", k)
   }
 
   /** Recall@k of the SQ8 ADC path against exact brute force — the same
-    * evaluation loop as [[lshRecall]], measuring what the 4× compression
+    * evaluation loop as [[recallVsExact]], measuring what the 4× compression
     * costs in ranking quality (here: distortion only, since the small-SF
     * serve is exhaustive — candidate recall is 1).
     */
   def sq8Recall(spark: SparkSession, dir: String, k: Int = 5, nQueries: Int = 10): DataFrame =
-    recallOf(bruteForceTopK(spark, dir, k, nQueries), sq8TopK(spark, dir, k, nQueries))
+    recallOf(exactTopK(spark, dir, Cos, k = k, nQueries = nQueries),
+      sq8TopK(spark, dir, k, nQueries))
 
   /** Dimension-TRUNCATION recall curve — the Matryoshka question: how much
     * ranking quality do the first d' dimensions alone buy? For each d' the
@@ -5114,7 +4704,7 @@ object EmbeddingSearch {
     * embeddings are MRL-trained — compression with zero re-encoding, and
     * it composes multiplicatively with SQ8's 4× and the IVF layout).
     * Exhaustive scan per d' is the small-SF verification shape; each branch
-    * is the [[bruteForceTopK]] plan (1-row query broadcast, per-query
+    * is the [[exactTopK]] plan (1-row query broadcast, per-query
     * window) — nothing here shuffles the corpus. Output:
     * (d_prime, n_exact, n_hit, recall), one row per d'.
     */
@@ -5132,7 +4722,7 @@ object EmbeddingSearch {
     * d' = O(log n / ε²); this measures exactly how much ranking quality
     * each d' buys on THIS corpus. Projection is a per-row fixed-order fold
     * (d' × dims FMAs, zero shuffles); each d' branch is the
-    * [[bruteForceTopK]] plan. Output: (d_prime, n_exact, n_hit, recall).
+    * [[exactTopK]] plan. Output: (d_prime, n_exact, n_hit, recall).
     */
   def rpRecall(spark: SparkSession, dir: String, dPrimes: Seq[Int] = Seq(8, 16, 32),
       k: Int = 5, nQueries: Int = 10, dims: Int = 64): DataFrame =
@@ -5148,20 +4738,12 @@ object EmbeddingSearch {
     * hits against the full-dimension exact top-k — one row per d'. */
   private def projectedRecall(spark: SparkSession, dir: String, dPrimes: Seq[Int],
       k: Int, nQueries: Int, project: (Column, Int) => Column): DataFrame = {
-    val exact = bruteForceTopK(spark, dir, k, nQueries)
+    val exact = exactTopK(spark, dir, Cos, k = k, nQueries = nQueries)
       .select(col("query_id"), col("vec_id"))
     val perD = dPrimes.map { dp =>
-      val emb = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), project(toDouble(col("embedding")), dp).as("v"))
-      val queries = broadcast(emb.where(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("v").as("qv")))
-      val approx = emb.crossJoin(queries)
-        .where(col("vec_id") =!= col("query_id"))
-        .select(col("query_id").as("q2"), col("vec_id").as("v2"),
-          round(cosine(col("v"), col("qv")), 6).as("tcos"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("q2").orderBy(col("tcos").desc, col("v2").asc)))
-        .where(col("rank") <= k)
+      val emb = vectors(spark, dir).select(col("vec_id"), project(col("v"), dp).as("v"))
+      val approx = rankTopK(emb.crossJoin(broadcast(queriesOf(emb, nQueries))), Cos, k)
+        .select(col("query_id").as("q2"), col("vec_id").as("v2"))
       exact.join(approx,
           exact("query_id") === approx("q2") && exact("vec_id") === approx("v2"), "left")
         .groupBy()
@@ -5193,11 +4775,7 @@ object EmbeddingSearch {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label").cast("long").as("label"),
         toDouble(col("embedding")).as("v"))
-    val cent = emb
-      .select(col("label"), transform(col("v"), x => round(x, 6)).as("rv"))
-      .groupBy(col("label"))
-      .agg(graft.functions.VectorMeanAggregator.vectorMean(col("rv")).as("cv"))
-    val dists = emb.join(broadcast(cent), Seq("label"))
+    val dists = emb.join(broadcast(labelCentroids(emb)), Seq("label"))
       .withColumn("dv", zip_with(col("v"), col("cv"), (x, m) => x - m))
       .select(col("vec_id"), col("label"), round(sqrt(dot(col("dv"), col("dv"))), 6).as("dist"))
     val mom = dists.groupBy(col("label"))
@@ -5255,8 +4833,7 @@ object EmbeddingSearch {
     */
   def semDedup(spark: SparkSession, dir: String, tau: Double = 0.9,
       nClusters: Int = 8, iters: Int = 2, samplePct: Int = 100): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     semDedupWith(emb, trainKmeansIndex(emb, nClusters, iters, samplePct), tau)
   }
 
@@ -5274,8 +4851,7 @@ object EmbeddingSearch {
   def semDedupPersisted(spark: SparkSession, dir: String, indexPath: String,
       tau: Double = 0.35, iters: Int = 2): DataFrame = {
     requireSizedIters(iters)
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+    val emb = vectors(spark, dir)
     val cent = ensureKmeansIndex(spark, dir, indexPath,
       ivfCellCount(emb.count()), iters)
     semDedupWith(emb, cent, tau)

@@ -215,24 +215,6 @@ object TextAnalysis {
           col("epoch").cast("string"))).as("order_key"))
   }
 
-  /** CCNet-style LINE-level boilerplate removal: a "line" that appears in
-    * `minDf`+ distinct documents (headers, footers, nav chrome, license
-    * blurbs) is dropped from EVERY document; survivors are reassembled in
-    * original order. The line unit is injectable — real corpora split on
-    * `\n`; the fixture corpus has no newlines, so the registered query uses
-    * fixed `lineTokens`-token chunks (the operator is identical either way:
-    * it consumes the (doc_id, line_no, line) exploded form).
-    *
-    * Scale shape: all df machinery and the boilerplate join run on the
-    * 62-bit line hash — fixed 8 bytes per line through both exchanges, the
-    * line TEXT never shuffles (it stays co-partitioned with its document
-    * through the final per-doc rollup). Boilerplate table is
-    * line-vocabulary-sized after the df floor (Zipf-small: almost all lines
-    * are unique) → size-gated broadcast. 3 shuffles total: distinct
-    * (doc,line) pairs, df count, per-doc reassembly — the canonical CCNet
-    * dedup pass, linear in corpus tokens at any scale.
-    * Output: (doc_id, n_lines, n_kept, clean_text).
-    */
   /** The per-doc line split shared by the in-corpus pass and the
     * index-serve path: (doc_id, line_no, line, h62). */
   private def docLines(docs: DataFrame, lineTokens: Int): DataFrame =
@@ -268,6 +250,24 @@ object TextAnalysis {
             s => s.getField("line")),
           "\n").as("clean_text"))
 
+  /** CCNet-style LINE-level boilerplate removal: a "line" that appears in
+    * `minDf`+ distinct documents (headers, footers, nav chrome, license
+    * blurbs) is dropped from EVERY document; survivors are reassembled in
+    * original order. The line unit is injectable — real corpora split on
+    * `\n`; the fixture corpus has no newlines, so the registered query uses
+    * fixed `lineTokens`-token chunks (the operator is identical either way:
+    * it consumes the (doc_id, line_no, line) exploded form).
+    *
+    * Scale shape: all df machinery and the boilerplate join run on the
+    * 62-bit line hash — fixed 8 bytes per line through both exchanges, the
+    * line TEXT never shuffles (it stays co-partitioned with its document
+    * through the final per-doc rollup). Boilerplate table is
+    * line-vocabulary-sized after the df floor (Zipf-small: almost all lines
+    * are unique) → size-gated broadcast. 3 shuffles total: distinct
+    * (doc,line) pairs, df count, per-doc reassembly — the canonical CCNet
+    * dedup pass, linear in corpus tokens at any scale.
+    * Output: (doc_id, n_lines, n_kept, clean_text).
+    */
   def lineDedup(docs: DataFrame, lineTokens: Int = 10, minDf: Long = 2): DataFrame = {
     require(lineTokens >= 1 && minDf >= 2, "lineTokens >= 1, minDf >= 2")
     lineDedupAgainst(docs, boilerplateLines(docs, lineTokens, minDf), lineTokens)
@@ -410,16 +410,6 @@ object TextAnalysis {
   val PhonePattern = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
   val UrlPattern = "https?://[^ ]+"
 
-  /** PII scrubbing — the redaction hygiene pass every shipped training
-    * corpus runs: count and replace emails, phone numbers, and URLs with
-    * typed placeholder tokens. Pure map-side projection (zero shuffles,
-    * linear in corpus bytes); counts are taken on the ORIGINAL text, then
-    * the three replacements apply in email→phone→URL order (the patterns
-    * are mutually non-overlapping, and no placeholder re-matches a later
-    * pattern, so the order is semantics-free — fixed anyway so both engines
-    * rewrite identically). Output: (doc_id, n_email, n_phone, n_url,
-    * clean_text).
-    */
   /** Deterministic PII splice for the registered entry: the fixture corpus
     * is PII-free, so (multimodal-family discipline) the query synthesizes
     * doc_id-derived emails/phones/URLs in-band — one of each per doc, plus
@@ -437,6 +427,16 @@ object TextAnalysis {
         when(pmod(col("doc_id"), lit(3L)) === 0, lit(" admin@example.org"))
           .otherwise(lit(""))))
 
+  /** PII scrubbing — the redaction hygiene pass every shipped training
+    * corpus runs: count and replace emails, phone numbers, and URLs with
+    * typed placeholder tokens. Pure map-side projection (zero shuffles,
+    * linear in corpus bytes); counts are taken on the ORIGINAL text, then
+    * the three replacements apply in email→phone→URL order (the patterns
+    * are mutually non-overlapping, and no placeholder re-matches a later
+    * pattern, so the order is semantics-free — fixed anyway so both engines
+    * rewrite identically). Output: (doc_id, n_email, n_phone, n_url,
+    * clean_text).
+    */
   def piiScrub(docs: DataFrame): DataFrame = {
     val t = col("text")
     docs.select(
@@ -464,19 +464,6 @@ object TextAnalysis {
         (portableHash31(col("text")) % cap).as("bucket"))
       .where(col("bucket") < col("n_tokens"))
 
-  /** Top-k adjacent-bigram collocations by PMI — word2vec-style phrase
-    * detection with EXACT arithmetic: since the corpus-size factors of
-    * pmi = log(c_ab·N²/(N_bi·c_a·c_b)) are constant across bigrams,
-    * ranking by c_ab/(c_a·c_b) is rank-equivalent, and the score ships as
-    * the integer c_ab·10⁹ div (c_a·c_b) (ppb) so ordering and hashing are
-    * bit-exact across engines (at trillion-token scale the product
-    * c_a·c_b approaches 2⁶³ — there the score becomes a double, which
-    * ranking tolerates; the oracle-exact integer form is the registered
-    * entry). Three aggregations (unigram, bigram, top-k heap): the
-    * unigram table is vocabulary-sized and joins size-gated; top-k is
-    * TakeOrdered, never a global sort.
-    * Output: (bigram, c_ab, c_a, c_b, score_ppb).
-    */
   /** Per-document language-model score — the CCNet/perplexity-style
     * quality signal: an add-one-smoothed bigram LM is trained on the
     * corpus itself (unigram + bigram count tables), and every document is
@@ -617,6 +604,19 @@ object TextAnalysis {
           / count(lit(1)).cast("double"), 6).as("mean_lp"))
   }
 
+  /** Top-k adjacent-bigram collocations by PMI — word2vec-style phrase
+    * detection with EXACT arithmetic: since the corpus-size factors of
+    * pmi = log(c_ab·N²/(N_bi·c_a·c_b)) are constant across bigrams,
+    * ranking by c_ab/(c_a·c_b) is rank-equivalent, and the score ships as
+    * the integer c_ab·10⁹ div (c_a·c_b) (ppb) so ordering and hashing are
+    * bit-exact across engines (at trillion-token scale the product
+    * c_a·c_b approaches 2⁶³ — there the score becomes a double, which
+    * ranking tolerates; the oracle-exact integer form is the registered
+    * entry). Three aggregations (unigram, bigram, top-k heap): the
+    * unigram table is vocabulary-sized and joins size-gated; top-k is
+    * TakeOrdered, never a global sort.
+    * Output: (bigram, c_ab, c_a, c_b, score_ppb).
+    */
   def pmiTopBigrams(docs: DataFrame, minCount: Long = 5, kTop: Int = 20): DataFrame = {
     val toks = docs.select(tokenize(col("text")).as("w"))
     val uni = toks.select(explode(col("w")).as("t"))
@@ -1418,6 +1418,13 @@ object TextAnalysis {
 
   // ———— persisted BM25 inverted index (the lexical serving artifact) ————
 
+  /** Term-hash bucket count for the postings layout. 64 keeps the
+    * directory fan-out trivial while bounding any query's footprint at
+    * |query terms| directories (a term's rows all live in ONE bucket, so
+    * per-term df/tf are exact under pruning).
+    */
+  val Bm25IndexBuckets = 64
+
   /** Persist the corpus's LEXICAL serving artifact: the `postings` table
     * (doc_id, term, tf; term-hash-bucketed directories) — the inverted
     * index every BM25 serve ranks from without re-tokenizing the corpus
@@ -1433,13 +1440,6 @@ object TextAnalysis {
     * `path/postings` + `path/doclens` + `_DONE` commit marker (a crashed
     * build leaves no marker and is rebuilt, never served).
     */
-  /** Term-hash bucket count for the postings layout. 64 keeps the
-    * directory fan-out trivial while bounding any query's footprint at
-    * |query terms| directories (a term's rows all live in ONE bucket, so
-    * per-term df/tf are exact under pruning).
-    */
-  val Bm25IndexBuckets = 64
-
   def buildBm25Index(docs: DataFrame, path: String): Unit = {
     val done = new org.apache.hadoop.fs.Path(path, "_DONE")
     val fs = done.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
@@ -1803,27 +1803,6 @@ object TextAnalysis {
       semRanks(embeddings.select(col("vec_id"), transform(col("embedding"),
         _.cast("double")).as("v")), queryId, kEach), kTop, rrfK)
 
-  /** [[hybridTopK]] SERVED FROM ARTIFACTS ONLY — the production RAG query
-    * path: the lexical side ranks from the persisted BM25 postings
-    * ([[buildBm25Index]]; the fully-pruned [[bm25TopDocsWithIndex]] plan,
-    * zero corpus re-tokenization), the semantic side scores the vectors
-    * the persisted IVF index already stores ([[graft.operators
-    * .EmbeddingSearch.buildIvfIndex]] `ivf` table). Neither base table is
-    * touched: the query document's terms and vector both come OUT of the
-    * indexes. `nprobe <= 0` (default): a flat exact scan — the
-    * full-recall tier, output ≡ [[hybridTopK]], so the entry shares its
-    * oracle verbatim. `nprobe > 0`: the SCALE tier — the query's vector
-    * resolves through the id-hash-bucketed `idmap` (one narrow bucket →
-    * its cell → one cell directory), then the query probes its nprobe
-    * nearest trained cells (round(cosine,6) desc, lowest-cl ties — the
-    * kmeansAssign discipline) and the cell-partitioned `ivf` table is
-    * PARTITION-PRUNED to them at plan time — the semantic footprint is
-    * one idmap bucket + (1+nprobe) cells of bytes, never the corpus; the
-    * recall trade is the standard IVF one, measured by the fused-rank
-    * recall entry (`text_hybrid_probed_recall`), and the probed serve
-    * carries its own oracle (the trained-quantizer Lloyd replay +
-    * probed-cell cosine).
-    */
   /** The hybrid serve's flat↔probed crossover (r14, the r13 verdict's
     * item 4 — the count-gated auto discipline on the RAG serve): below
     * it the exact flat semantic scan is both full-recall and the FASTER
@@ -1876,6 +1855,27 @@ object TextAnalysis {
       nprobe = if (n < hybridProbeCrossover) 0 else nprobe)
   }
 
+  /** [[hybridTopK]] SERVED FROM ARTIFACTS ONLY — the production RAG query
+    * path: the lexical side ranks from the persisted BM25 postings
+    * ([[buildBm25Index]]; the fully-pruned [[bm25TopDocsWithIndex]] plan,
+    * zero corpus re-tokenization), the semantic side scores the vectors
+    * the persisted IVF index already stores ([[graft.operators
+    * .EmbeddingSearch.buildIvfIndex]] `ivf` table). Neither base table is
+    * touched: the query document's terms and vector both come OUT of the
+    * indexes. `nprobe <= 0` (default): a flat exact scan — the
+    * full-recall tier, output ≡ [[hybridTopK]], so the entry shares its
+    * oracle verbatim. `nprobe > 0`: the SCALE tier — the query's vector
+    * resolves through the id-hash-bucketed `idmap` (one narrow bucket →
+    * its cell → one cell directory), then the query probes its nprobe
+    * nearest trained cells (round(cosine,6) desc, lowest-cl ties — the
+    * kmeansAssign discipline) and the cell-partitioned `ivf` table is
+    * PARTITION-PRUNED to them at plan time — the semantic footprint is
+    * one idmap bucket + (1+nprobe) cells of bytes, never the corpus; the
+    * recall trade is the standard IVF one, measured by the fused-rank
+    * recall entry (`text_hybrid_probed_recall`), and the probed serve
+    * carries its own oracle (the trained-quantizer Lloyd replay +
+    * probed-cell cosine).
+    */
   def hybridTopKServed(spark: org.apache.spark.sql.SparkSession,
       bm25IndexPath: String, ivfIndexPath: String, queryId: Long = 0L,
       kEach: Int = 20, kTop: Int = 10, rrfK: Int = 60,

@@ -295,20 +295,28 @@ object Tables {
     tbl
   }
 
-  /** Parity source with the reference's ingestion (BookQuery.java:44-61):
-    * one row per text file in `dir`, doc_id = basename without extension,
-    * lines joined by a single space (the reference concatenates lines with
-    * " ", BookQuery.java:57-61 — here the whole file arrives as one string
-    * and we just normalize the line breaks).
-    */
-  /** Export (doc_id, text) as one UTF-8 `<doc_id>.txt` per document — the
-    * fixture generator for exercising the reference's real ingestion shape
-    * (a directory of text files, BookQuery.java:216-226). Writes happen
-    * executor-side to a path all executors share (local mode / shared FS);
-    * this is parity/test tooling, not a production sink. Idempotent via a
-    * `_SUCCESS` marker (which the wholetext reader ignores, like any
-    * underscore-prefixed file).
-    */
+  private val embCountMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, Long)]()
+
+  /** The embeddings table's row count, memoized per dataset fingerprint
+    * (r15): every count-gated auto default (MIPS/hybrid/kNN-join) pays
+    * one metadata count() per call to pick its branch — correct but a
+    * fixed ~0.15 s job on serves that now cost ~0.4 s total. The
+    * fingerprint walk is a listing (cheaper than the count job), and a
+    * regenerated table re-prices the branch exactly like the eval
+    * memos. Compute runs outside the map lock (the memoizedExactPairs
+    * discipline). */
+  def embeddingsCount(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
+    val fp = datasetFingerprint(s"$dir/embeddings.parquet")
+    val cached = embCountMemo.get(dir)
+    if (cached != null && cached._1 == fp) cached._2
+    else {
+      val n = embeddings(spark, dir).count()
+      embCountMemo.put(dir, (fp, n))
+      n
+    }
+  }
+
   /** Fingerprint of a parquet table's files (sorted names + sizes) — keys
     * exported fixture dirs and the in-memory ground-truth memos so
     * REGENERATED source data can never be served from a stale export.
@@ -341,28 +349,6 @@ object Tables {
     * copied/restored tree re-reads its tails once, finds the same
     * bytes, and keeps its fingerprint (pinned in ArtifactKeySpec).
     */
-  /** The embeddings table's row count, memoized per dataset fingerprint
-    * (r15): every count-gated auto default (MIPS/hybrid/kNN-join) pays
-    * one metadata count() per call to pick its branch — correct but a
-    * fixed ~0.15 s job on serves that now cost ~0.4 s total. The
-    * fingerprint walk is a listing (cheaper than the count job), and a
-    * regenerated table re-prices the branch exactly like the eval
-    * memos. Compute runs outside the map lock (the memoizedExactPairs
-    * discipline). */
-  private val embCountMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Long)]()
-
-  def embeddingsCount(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
-    val fp = datasetFingerprint(s"$dir/embeddings.parquet")
-    val cached = embCountMemo.get(dir)
-    if (cached != null && cached._1 == fp) cached._2
-    else {
-      val n = embeddings(spark, dir).count()
-      embCountMemo.put(dir, (fp, n))
-      n
-    }
-  }
-
   def datasetFingerprint(path: String): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(
@@ -454,7 +440,15 @@ object Tables {
       .foreach(st => fs.delete(st.getPath, true))
   }
 
-  /** Export a documents DataFrame as a doc-per-file text corpus, once per
+  /** Export (doc_id, text) as one UTF-8 `<doc_id>.txt` per document — the
+    * fixture generator for exercising the reference's real ingestion shape
+    * (a directory of text files, BookQuery.java:216-226). Writes happen
+    * executor-side to a path all executors share (local mode / shared FS);
+    * this is parity/test tooling, not a production sink. Idempotent via a
+    * `_SUCCESS` marker (which the wholetext reader ignores, like any
+    * underscore-prefixed file).
+    *
+    * Export a documents DataFrame as a doc-per-file text corpus, once per
     * fixture dir (`_SUCCESS`-keyed). Delegates to the `graft-text` DSv2
     * sink — the engine's ONE file-per-doc writer (task-commit parallel
     * publish, atomic per-document renames, `_SUCCESS` on job commit) —
@@ -483,6 +477,12 @@ object Tables {
     out
   }
 
+  /** Parity source with the reference's ingestion (BookQuery.java:44-61):
+    * one row per text file in `dir`, doc_id = basename without extension,
+    * lines joined by a single space (the reference concatenates lines with
+    * " ", BookQuery.java:57-61 — here the whole file arrives as one string
+    * and we just normalize the line breaks).
+    */
   def wholeTextDocuments(spark: SparkSession, dir: String): DataFrame =
     spark.read.option("wholetext", "true").text(dir)
       .select(

@@ -253,8 +253,8 @@ object ScaleBench {
     // recall twins, gated at every curve point — the H2 lesson (a knob
     // whose constant depends on an adaptive width must be measured where
     // it binds, not just at fixture scale)
-    "embed_knn_mips_alsh" -> ((s, d) => graft.operators.EmbeddingSearch
-      .mipsRecallScaled(s, d)),
+    "embed_knn_mips_alsh" -> ((s, d) =>
+      graft.SparkEntry.queries("embed_mips_recall")(s, d)),
     "embed_knn_kmeans_sized" -> ((s, d) =>
       graft.SparkEntry.queries("embed_kmeans_sized_recall")(s, d)),
     // r13: the two MIPS contrasts next to the sized-ALSH row above — the
@@ -262,8 +262,8 @@ object ScaleBench {
     // rule was applied) and the IVF serve (the method that actually
     // holds MIPS recall at scale); all three gated so the frontier that
     // justified the recommendation regresses as an artifact diff
-    "embed_knn_mips_alsh_fixed" -> ((s, d) => graft.operators.EmbeddingSearch
-      .mipsRecall(s, d)),
+    "embed_knn_mips_alsh_fixed" -> ((s, d) =>
+      graft.SparkEntry.queries("embed_mips_fixed_recall")(s, d)),
     "embed_knn_mips_ivf" -> ((s, d) =>
       graft.SparkEntry.queries("embed_mips_ivf_recall")(s, d)),
     // r14/r15: the registered MIPS default is the count-gated auto
@@ -280,8 +280,12 @@ object ScaleBench {
     // rank-probed range contrast (the measured collapse)
     "embed_knn_filtered" -> ((s, d) =>
       graft.SparkEntry.queries("embed_filtered_recall")(s, d)),
-    "embed_knn_filtered_ivf" -> ((s, d) => graft.operators.EmbeddingSearch
-      .filteredRecallIvfPersisted(s, d, graft.SparkEntry.sizedKmeansIndexDirFor(d))),
+    "embed_knn_filtered_ivf" -> ((s, d) => {
+      import graft.operators.EmbeddingSearch._
+      recallOf(exactTopK(s, d, Cos, graft.SparkEntry.registeredFilter),
+        filteredTopKIvfWhere(s, d, graft.SparkEntry.sizedKmeansIndexDirFor(d),
+          graft.SparkEntry.registeredFilter))
+    }),
     "embed_range_search" -> ((s, d) =>
       graft.SparkEntry.queries("embed_range_recall")(s, d)),
     "embed_range_search_probed" -> ((s, d) =>

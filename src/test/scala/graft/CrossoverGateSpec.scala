@@ -27,7 +27,7 @@ class CrossoverGateSpec extends AnyFunSuite {
   test("MIPS auto serves the brute arm below, the standing IVF arm at/past the boundary") {
     val n = graft.sources.Tables.embeddings(spark, dir).count()
     val idx = SparkEntry.standingIvfIndexDirFor(dir)
-    val brute = rowsOf(EmbeddingSearch.mipsTopK(spark, dir))
+    val brute = rowsOf(EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Ip))
     val standing = rowsOf(EmbeddingSearch.mipsStandingServe(spark, dir, idx))
     val saved = EmbeddingSearch.mipsCellsCrossoverOverride
     try {

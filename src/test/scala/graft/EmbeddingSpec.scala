@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.expressions.KmeansKernel
 import graft.operators.{EmbeddingSearch, Forget}
 
 /** Embedding fixtures (FIXTURES.md §B.6): unit vectors at known angles and
@@ -39,7 +40,7 @@ class EmbeddingSpec extends AnyFunSuite {
 
   test("IVF top-k ranks candidates consistently with brute force") {
     val dir = "/root/testdata/sf0.001"
-    val brute = EmbeddingSearch.bruteForceTopK(spark, dir, k = 5, nQueries = 3)
+    val brute = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, k = 5, nQueries = 3)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect()
       .map { case (q, v, r) => (q, v) -> r }.toMap
     val ivf = EmbeddingSearch.ivfTopK(spark, dir, k = 5, nQueries = 3)
@@ -82,7 +83,7 @@ class EmbeddingSpec extends AnyFunSuite {
     // every reported neighbor's cosine matches the exact brute computation:
     // rank-1 edges for vectors that are also brute queries must agree with
     // the brute top-k scores when present there
-    val brute = EmbeddingSearch.bruteForceTopK(spark, dir, k = 5, nQueries = 10)
+    val brute = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, k = 5, nQueries = 10)
       .select("query_id", "vec_id", "cosine").as[(Long, Long, Double)].collect()
       .map { case (q, v, c) => (q, v) -> c }.toMap
     g.filter(e => brute.contains((e._1, e._2))).foreach { e =>
@@ -161,7 +162,9 @@ class EmbeddingSpec extends AnyFunSuite {
 
   test("LSH recall is in (0, 1] and n_hit counts true top-k recoveries") {
     val dir = "/root/testdata/sf0.001"
-    val rows = EmbeddingSearch.lshRecall(spark, dir, k = 5, nQueries = 3)
+    val rows = EmbeddingSearch.recallOf(
+      EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, k = 5, nQueries = 3),
+      EmbeddingSearch.lshTopK(spark, dir, k = 5, nQueries = 3))
       .select("query_id", "n_exact", "n_hit", "recall")
       .as[(Long, Long, Long, Double)].collect()
     assert(rows.length == 3)
@@ -175,7 +178,7 @@ class EmbeddingSpec extends AnyFunSuite {
 
   test("brute-force and LSH top-k agree on the real table at sf0.001") {
     val dir = "/root/testdata/sf0.001"
-    val brute = EmbeddingSearch.bruteForceTopK(spark, dir, k = 5, nQueries = 3)
+    val brute = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, k = 5, nQueries = 3)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect().toSet
     val lsh = EmbeddingSearch.lshTopK(spark, dir, k = 5, nQueries = 3)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect().toSet
@@ -249,9 +252,13 @@ class EmbeddingSpec extends AnyFunSuite {
 
   test("multi-probe LSH: recall dominates single-probe at every query") {
     val dir = "/root/testdata/sf0.001"
-    val single = EmbeddingSearch.lshRecall(spark, dir, k = 5, nQueries = 5)
+    val single = EmbeddingSearch.recallOf(
+      EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, k = 5, nQueries = 5),
+      EmbeddingSearch.lshTopK(spark, dir, k = 5, nQueries = 5))
       .select("query_id", "recall").as[(Long, Double)].collect().toMap
-    val multi = EmbeddingSearch.multiProbeRecall(spark, dir, k = 5, nQueries = 5)
+    val multi = EmbeddingSearch.recallOf(
+      EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, k = 5, nQueries = 5),
+      EmbeddingSearch.lshTopK(spark, dir, k = 5, nQueries = 5, multiProbe = true))
       .select("query_id", "recall").as[(Long, Double)].collect().toMap
     assert(multi.keySet == single.keySet && multi.nonEmpty)
     multi.foreach { case (q, r) =>
@@ -1018,7 +1025,7 @@ class EmbeddingSpec extends AnyFunSuite {
     val byCell = verdicts.groupBy(_._2)
     for ((_, members) <- byCell; (id, _, kept) <- members) {
       val hasEarlierDup = members.exists { case (other, _, _) =>
-        other < id && EmbeddingSearch.round6(cosOf(vec(other), vec(id))) >= tau
+        other < id && KmeansKernel.round6(cosOf(vec(other), vec(id))) >= tau
       }
       assert(kept == !hasEarlierDup,
         s"vector $id kept=$kept but lower-id-dup-exists=$hasEarlierDup")
@@ -1062,7 +1069,7 @@ class EmbeddingSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     (1 to 200000).foreach { _ =>
       val x = rnd.nextDouble() * 2 - 1 // the cosine range
-      assert(EmbeddingSearch.round6(x) == slow(x), s"fast/slow disagree at $x")
+      assert(KmeansKernel.round6(x) == slow(x), s"fast/slow disagree at $x")
     }
     // crafted boundary cases: exact .5 half-ups (both signs), exact
     // 6-dp values, values within ulps of a boundary
@@ -1070,13 +1077,13 @@ class EmbeddingSpec extends AnyFunSuite {
       -0.999999, 1.0, -1.0, 0.9999995, -0.9999995, 0.1234564999999999,
       0.1234565000000001, 4.9999999999e-7, 5.0000000001e-7, 0.0, -0.0)
     edges.foreach { x =>
-      assert(EmbeddingSearch.round6(x) == slow(x), s"fast/slow disagree at boundary $x")
+      assert(KmeansKernel.round6(x) == slow(x), s"fast/slow disagree at boundary $x")
     }
     // non-finite inputs pass through (Spark's Round semantics) instead of
     // the NumberFormatException BigDecimal(NaN) would throw
-    assert(EmbeddingSearch.round6(Double.NaN).isNaN)
-    assert(EmbeddingSearch.round6(Double.PositiveInfinity) == Double.PositiveInfinity)
-    assert(EmbeddingSearch.round6(Double.NegativeInfinity) == Double.NegativeInfinity)
+    assert(KmeansKernel.round6(Double.NaN).isNaN)
+    assert(KmeansKernel.round6(Double.PositiveInfinity) == Double.PositiveInfinity)
+    assert(KmeansKernel.round6(Double.NegativeInfinity) == Double.NegativeInfinity)
   }
 
   test("kNN-graph recall: well-formed per probe; cap's recall cost is measured, not hidden") {
@@ -1212,7 +1219,7 @@ class EmbeddingSpec extends AnyFunSuite {
     }
     // the refine stage computes EXACT cosines: spot-check against brute
     // force where the pairs coincide
-    val brute = EmbeddingSearch.bruteForceTopK(spark, dir, k, nQ)
+    val brute = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, k = k, nQueries = nQ)
       .select("query_id", "vec_id", "cosine")
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val checked = refined.count { case (q, v, c, _) =>
@@ -1282,7 +1289,7 @@ class EmbeddingSpec extends AnyFunSuite {
         .take(5).zipWithIndex
         .map { case ((id, s), r) => (q, id, s, (r + 1).toLong) }
     }.toSet
-    val got = EmbeddingSearch.mipsTopK(spark, dir, k = 5, nQueries = 3)
+    val got = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Ip, k = 5, nQueries = 3)
       .select($"query_id", $"vec_id", $"ip", $"rank")
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(got == expected)
@@ -1290,7 +1297,7 @@ class EmbeddingSpec extends AnyFunSuite {
 
   test("ALSH MIPS: subset-rank consistent with brute; max-norm aligned clone always top-1") {
     val dir = "/root/testdata/sf0.001"
-    val brute = EmbeddingSearch.mipsTopK(spark, dir, k = 5, nQueries = 3)
+    val brute = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Ip, k = 5, nQueries = 3)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect()
     val alsh = EmbeddingSearch.mipsTopKAlsh(spark, dir, k = 5, nQueries = 3)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)].collect()
@@ -1593,7 +1600,7 @@ class EmbeddingSpec extends AnyFunSuite {
       .select(col("vec_id"), col("label")).as[(Long, Int)].collect().toMap
     // exact baseline: every result satisfies the predicate, ranks contiguous,
     // no self-matches, and it equals a from-scratch brute restricted by label
-    val brute = EmbeddingSearch.filteredTopK(spark, dir)
+    val brute = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, col("label") === 3)
       .as[(Long, Long, Double, Long)].collect()
     assert(brute.nonEmpty)
     assert(brute.forall(r => labels(r._2) == 3), "brute result violated the filter")
@@ -1605,13 +1612,13 @@ class EmbeddingSpec extends AnyFunSuite {
     // IVF serve: predicate containment holds through the probed path; the
     // first call trains the shared sized quantizer, the second serves
     val before = EmbeddingSearch.kmeansTrainings.get()
-    val ivf = EmbeddingSearch.filteredTopKIvfPersisted(spark, dir, idx)
+    val ivf = EmbeddingSearch.filteredTopKIvfWhere(spark, dir, idx, col("label") === 3)
       .as[(Long, Long, Double, Long)].collect()
     val trained = EmbeddingSearch.kmeansTrainings.get() - before
     assert(trained <= 1, "filtered serve trained more than once")
     assert(ivf.nonEmpty && ivf.forall(r => labels(r._2) == 3),
       "IVF result violated the filter")
-    val again = EmbeddingSearch.filteredTopKIvfPersisted(spark, dir, idx)
+    val again = EmbeddingSearch.filteredTopKIvfWhere(spark, dir, idx, col("label") === 3)
       .as[(Long, Long, Double, Long)].collect()
     assert(EmbeddingSearch.kmeansTrainings.get() == before + trained,
       "second filtered serve retrained the quantizer")
@@ -1626,7 +1633,9 @@ class EmbeddingSpec extends AnyFunSuite {
     assert(cellsNprobeFor(8000L, 283) > cellsNprobeFor(80000L, 283))
     // recall twin: well-formed rows, and the widened width keeps fixture
     // recall high (16 of 23 cells probed here)
-    val rec = EmbeddingSearch.filteredRecallIvfPersisted(spark, dir, idx)
+    val rec = EmbeddingSearch.recallOf(
+        EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, col("label") === 3),
+        EmbeddingSearch.filteredTopKIvfWhere(spark, dir, idx, col("label") === 3))
       .as[(Long, Long, Long, Double)].collect()
     assert(rec.nonEmpty && rec.forall(r => r._3 <= r._2 && r._4 >= 0.0 && r._4 <= 1.0))
     val avgRecall = rec.map(_._4).sum / rec.length
@@ -1646,13 +1655,13 @@ class EmbeddingSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val idx = java.nio.file.Files.createTempDirectory("graft_fauto_idx").toString
     val beforeBrute = EmbeddingSearch.kmeansTrainings.get()
-    val auto = EmbeddingSearch.filteredTopKAuto(spark, dir, idx)
+    val auto = EmbeddingSearch.filteredTopKAutoWhere(spark, dir, idx, col("label") === 3)
       .as[(Long, Long, Double, Long)].collect().toSet
     // the arm pin: the brute arm never touches the quantizer (idx is
     // fresh — an IVF serve would have had to train into it)
     assert(EmbeddingSearch.kmeansTrainings.get() == beforeBrute,
       "selective-filter default trained a quantizer — it took the IVF arm")
-    val brute = EmbeddingSearch.filteredTopK(spark, dir)
+    val brute = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, col("label") === 3)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(auto == brute, "below the branch point the default must equal the exact scan")
     // IVF side: a synthetic corpus where the filter keeps everything
@@ -1665,12 +1674,12 @@ class EmbeddingSpec extends AnyFunSuite {
       "CAST(7 AS INT) AS label")
       .write.mode("overwrite").parquet(s"$synth/embeddings.parquet")
     val beforeIvf = EmbeddingSearch.kmeansTrainings.get()
-    val autoIvf = EmbeddingSearch.filteredTopKAuto(spark, synth, sidx, labelEq = 7)
+    val autoIvf = EmbeddingSearch.filteredTopKAutoWhere(spark, synth, sidx, col("label") === 7)
       .as[(Long, Long, Double, Long)].collect().toSet
     // the arm pin: the IVF arm trains the fresh sidx quantizer exactly once
     assert(EmbeddingSearch.kmeansTrainings.get() == beforeIvf + 1,
       "wide-filter default did not train — it took the brute arm")
-    val explicitIvf = EmbeddingSearch.filteredTopKIvfPersisted(spark, synth, sidx, labelEq = 7)
+    val explicitIvf = EmbeddingSearch.filteredTopKIvfWhere(spark, synth, sidx, col("label") === 7)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(autoIvf == explicitIvf, "past the branch point the default must equal the IVF form")
   }
@@ -1683,7 +1692,7 @@ class EmbeddingSpec extends AnyFunSuite {
       .where(pred).select(col("vec_id")).as[Long].collect().toSet
     assert(keep.nonEmpty && keep.size < 400, "composite predicate is degenerate")
     // the general exact form honors the composite filter...
-    val brute = EmbeddingSearch.filteredTopKWhere(spark, dir, pred)
+    val brute = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, pred)
       .as[(Long, Long, Double, Long)].collect()
     assert(brute.nonEmpty && brute.forall(r => keep(r._2)),
       "exact result violated the composite filter")
@@ -1696,10 +1705,10 @@ class EmbeddingSpec extends AnyFunSuite {
       .as[(Long, Long, Double, Long)].collect()
     assert(ivf.nonEmpty && ivf.forall(r => keep(r._2)),
       "IVF result violated the composite filter")
-    // and the labelEq forms are exactly the Where forms at the equality
-    assert(EmbeddingSearch.filteredTopK(spark, dir)
+    // and two spellings of the same equality filter serve the same rows
+    assert(EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, col("label").isin(3))
         .as[(Long, Long, Double, Long)].collect().toSet ==
-      EmbeddingSearch.filteredTopKWhere(spark, dir, col("label") === 3)
+      EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, col("label") === 3)
         .as[(Long, Long, Double, Long)].collect().toSet)
   }
 
@@ -1711,17 +1720,17 @@ class EmbeddingSpec extends AnyFunSuite {
     // sf0.001's ~9% filter sits on the brute side (filteredNpRaw 193 > 16):
     // the default equals the exact filtered IP scan and never trains
     val before = EmbeddingSearch.kmeansTrainings.get()
-    val auto = EmbeddingSearch.mipsTopKFiltered(spark, dir, idx)
+    val auto = EmbeddingSearch.mipsTopKFilteredWhere(spark, dir, idx, col("label") === 3)
       .as[(Long, Long, Double, Long)].collect()
     assert(EmbeddingSearch.kmeansTrainings.get() == before,
       "selective-filter MIPS default trained a quantizer — it took the IVF arm")
     assert(auto.nonEmpty && auto.forall(r => labels(r._2) == 3),
       "filtered MIPS result violated the filter")
-    val brute = EmbeddingSearch.mipsTopKWhere(spark, dir, col("label") === 3)
+    val brute = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Ip, col("label") === 3)
       .as[(Long, Long, Double, Long)].collect()
     assert(auto.toSet == brute.toSet,
       "below the branch point the MIPS default must equal the exact filtered scan")
-    // IVF arm on the all-kept synthetic corpus (the filteredTopKAuto
+    // IVF arm on the all-kept synthetic corpus (the filteredTopKAutoWhere
     // fixture's shape): trains once, honors the filter
     val synth = java.nio.file.Files.createTempDirectory("graft_fmips_data").toString
     val sidx = java.nio.file.Files.createTempDirectory("graft_fmips_sidx").toString
@@ -1736,7 +1745,9 @@ class EmbeddingSpec extends AnyFunSuite {
       "wide-filter MIPS default did not train — it took the brute arm")
     assert(ivf.nonEmpty && ivf.forall(_._4 <= 5))
     // recall twin: 1.0 on the brute branch by construction
-    val rec = EmbeddingSearch.mipsFilteredRecallPersisted(spark, dir, idx)
+    val rec = EmbeddingSearch.recallOf(
+        EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Ip, col("label") === 3),
+        EmbeddingSearch.mipsTopKFilteredWhere(spark, dir, idx, col("label") === 3))
       .as[(Long, Long, Long, Double)].collect()
     assert(rec.nonEmpty && rec.forall(_._4 == 1.0),
       "brute-branch filtered-MIPS recall must read 1.0")
@@ -1779,7 +1790,7 @@ class EmbeddingSpec extends AnyFunSuite {
     val served = servedDf.as[(Long, Long, Double, Long)].collect().toSet
     assert(EmbeddingSearch.kmeansTrainings.get() == before,
       "the standing-index filtered serve trained a quantizer")
-    val want = EmbeddingSearch.filteredTopKWhere(spark, dir, col("label") === 3)
+    val want = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, col("label") === 3)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(served == want,
       "standing-index filtered serve diverged from the exact filtered scan")
@@ -2237,7 +2248,7 @@ class EmbeddingSpec extends AnyFunSuite {
     assert(second == first, "range extend-serve is not deterministic")
     // and the served set IS the exact tau-set (the oracle's claim,
     // asserted here too so the spec fails near the code)
-    val exact = EmbeddingSearch.rangeSearch(spark, dir)
+    val exact = EmbeddingSearch.rangeSearchWhere(spark, dir, lit(true))
       .as[(Long, Long, Double)].collect().toSet
     assert(second == exact,
       "extend-served range result diverged from the exact tau-set")
@@ -2246,14 +2257,16 @@ class EmbeddingSpec extends AnyFunSuite {
   test("sound range search equals the exact tau-set; pruned recall pinned at 1.0") {
     val dir = "/root/testdata/sf0.001"
     val idx = java.nio.file.Files.createTempDirectory("graft_rsound_idx").toString
-    val exact = EmbeddingSearch.rangeSearch(spark, dir)
+    val exact = EmbeddingSearch.rangeSearchWhere(spark, dir, lit(true))
       .as[(Long, Long, Double)].collect().toSet
-    val pruned = EmbeddingSearch.rangeSearchPruned(spark, dir, idx)
+    val pruned = EmbeddingSearch.rangeSearchPrunedWhere(spark, dir, idx, lit(true))
       .as[(Long, Long, Double)].collect().toSet
     assert(exact.nonEmpty, "fixture tau-set is empty — the soundness pin is vacuous")
     assert(pruned == exact,
       "triangle-pruned range serve diverged from the exact tau-set")
-    val rec = EmbeddingSearch.rangePrunedRecallPersisted(spark, dir, idx)
+    val rec = EmbeddingSearch.recallOf(
+        EmbeddingSearch.rangeSearchWhere(spark, dir, lit(true)),
+        EmbeddingSearch.rangeSearchPrunedWhere(spark, dir, idx, lit(true)))
       .as[(Long, Long, Long, Double)].collect()
     assert(rec.nonEmpty && rec.forall(_._4 == 1.0),
       "sound range recall must read 1.0 for every query with a nonempty tau-set")
@@ -2290,7 +2303,7 @@ class EmbeddingSpec extends AnyFunSuite {
       q <- vecs.keys.toSeq.filter(_ < 10); (v, arr) <- vecs.toSeq if v != q
       c = cosD(vecs(q), arr) if c >= 0.3
     } yield (q, v)).toSet
-    val brute = EmbeddingSearch.rangeSearch(spark, dir)
+    val brute = EmbeddingSearch.rangeSearchWhere(spark, dir, lit(true))
       .as[(Long, Long, Double)].collect()
     assert(brute.map(r => (r._1, r._2)).toSet == exp,
       "exact range search diverged from the driver recompute")
@@ -2304,7 +2317,9 @@ class EmbeddingSpec extends AnyFunSuite {
     assert(probedSet.subsetOf(exp), "probed range serve returned a sub-tau pair")
     assert(probed.forall(_._3 >= 0.3))
     // recall twin well-formed; the 16-of-23-cell fixture probe keeps most
-    val rec = EmbeddingSearch.rangeRecallPersisted(spark, dir, idx)
+    val rec = EmbeddingSearch.recallOf(
+        EmbeddingSearch.rangeSearchWhere(spark, dir, lit(true)),
+        EmbeddingSearch.rangeSearchIvfPersisted(spark, dir, idx))
       .as[(Long, Long, Long, Double)].collect()
     assert(rec.nonEmpty && rec.forall(r => r._3 <= r._2 && r._4 >= 0.0 && r._4 <= 1.0))
     // serve-many: second call never retrains (shared quantizer discipline)
@@ -2336,7 +2351,7 @@ class EmbeddingSpec extends AnyFunSuite {
     assert(served.nonEmpty && served.forall(r => r._4 <= 3))
     // served cosines are exact: each returned (query, vec) pair's cosine
     // matches the brute value (the exact-re-rank contract)
-    val brute = EmbeddingSearch.bruteForceTopK(spark, dir, k = n.toInt, nQueries = 10)
+    val brute = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, k = n.toInt, nQueries = 10)
       .select($"query_id", $"vec_id", $"cosine")
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap

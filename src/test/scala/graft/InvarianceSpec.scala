@@ -113,7 +113,7 @@ class InvarianceSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     "book_query_batch" ->
       ((s, d) => graft.operators.BookQuery.referenceScoresBatch(Tables.documents(s, d))),
     "embed_knn_multiprobe" ->
-      ((s, d) => EmbeddingSearch.lshTopKMultiProbe(s, d, nQueries = 3)),
+      ((s, d) => EmbeddingSearch.lshTopK(s, d, nQueries = 3, multiProbe = true)),
     // this session's additions: the recursive-CTE spread (checkpointed
     // edges + loop), the BM25 fold order, the percentile day-delta rollup,
     // the packing prefix sums, and the HLL sketch merge must all be
@@ -186,11 +186,13 @@ class InvarianceSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // identical probe sets and τ-rows at any layout; fresh index dir so
     // the sized training also runs at both partitionings
     "embed_range_search_pruned" -> ((s, d) =>
-      EmbeddingSearch.rangeSearchPruned(s, d, tempDir("graft_inv_range"))),
+      EmbeddingSearch.rangeSearchPrunedWhere(s, d, tempDir("graft_inv_range"),
+        org.apache.spark.sql.functions.lit(true))),
     // round-13: the filtered IVF serve (pushed-filter assignment + the
     // widened count-derived probe) must be partition-stable end-to-end
     "embed_knn_filtered_ivf" -> ((s, d) =>
-      EmbeddingSearch.filteredTopKIvfPersisted(s, d, tempDir("graft_inv_filt"))))
+      EmbeddingSearch.filteredTopKIvfWhere(s, d, tempDir("graft_inv_filt"),
+        SparkEntry.registeredFilter)))
 
   private def runAt(parts: Int, fn: (SparkSession, String) => DataFrame): Seq[String] = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")

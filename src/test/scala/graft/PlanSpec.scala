@@ -338,7 +338,8 @@ class PlanSpec extends AnyFunSuite {
     // label equality must reach the reader (row-group stats pruning; a
     // label-partitioned layout prunes at plan time), not run as a
     // post-scan Filter over the full corpus
-    val plan = graft.operators.EmbeddingSearch.filteredTopK(spark, dir)
+    val plan = graft.operators.EmbeddingSearch.exactTopK(spark, dir,
+      graft.operators.EmbeddingSearch.Cos, graft.SparkEntry.registeredFilter)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("label"),
       s"no pushed label filter:\n$plan")

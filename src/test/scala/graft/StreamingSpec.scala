@@ -1689,7 +1689,7 @@ class StreamingSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_fknn_stream").toString
     EmbeddingSearch.buildIvfIndex(embL, root, EmbeddingSearch.ivfCellCount(n),
       meta = Seq("label"))
-    val want = EmbeddingSearch.filteredTopKWhere(spark, dir,
+    val want = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos,
         org.apache.spark.sql.functions.col("label") === 3)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(want.nonEmpty)
@@ -1753,7 +1753,7 @@ class StreamingSpec extends AnyFunSuite {
     EmbeddingSearch.buildIvfIndex(embL, root,
       EmbeddingSearch.ivfCellCount(embL.count()), meta = Seq("label"))
     val pred = org.apache.spark.sql.functions.col("label") === 3
-    val want = EmbeddingSearch.mipsTopKWhere(spark, dir, pred)
+    val want = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Ip, pred)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(want.nonEmpty)
     val queryVecs = graft.sources.Tables.embeddings(spark, dir)

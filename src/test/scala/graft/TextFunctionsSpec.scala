@@ -967,7 +967,7 @@ class TextFunctionsSpec extends AnyFunSuite {
       .select($"doc_id", $"score").as[(Long, Double)].collect()
       .sortBy { case (id, sc) => (-sc, id) }
       .zipWithIndex.map { case ((id, _), i) => id -> (i + 1L) }.toMap
-    val sem = EmbeddingSearch.bruteForceTopK(spark, dir, k = 20, nQueries = 1)
+    val sem = EmbeddingSearch.exactTopK(spark, dir, EmbeddingSearch.Cos, k = 20, nQueries = 1)
       .select($"vec_id", $"rank").as[(Long, Long)].collect().toMap
     assert(lex.nonEmpty && sem.nonEmpty, "a retrieval list is empty — fusion pin is vacuous")
     // plain-Scala RRF over the union, fixed lexical-then-semantic order
