@@ -1698,7 +1698,7 @@ object EmbeddingSearch {
       // lists every cl= dir at plan time — at 100 TB that is the
       // quantizer's full cell count per extend, for a batch that touches
       // a handful
-      val stored = probedPartitionRead(spark, s"$graphPath/verts", "cl", touched)
+      val stored = Tables.probedPartitionRead(spark, s"$graphPath/verts", "cl", touched)
         .select(col("cl").cast("int").as("cl"), col("vec_id"), col("v"),
           col("is_base"))
       val members = stored.withColumn("fb", lit(false))
@@ -1733,7 +1733,7 @@ object EmbeddingSearch {
           try {
             val touchedHc = aff.select(col("hc")).distinct()
               .collect().map(_.getInt(0)).toSeq
-            val live = probedPartitionRead(spark, s"$graphPath/edges",
+            val live = Tables.probedPartitionRead(spark, s"$graphPath/edges",
                 "hc", touchedHc)
               .select(col("vec_id"), col("nbr_id"), col("cosine"),
                 col("hc").cast("int").as("hc"))
@@ -3476,27 +3476,30 @@ object EmbeddingSearch {
   // — leaving exactly ONE Spark job per standing serve: the pruned
   // read of the probed cl= dirs. ------------------------------------
 
-  /** Quantizer rows (cl, cv) collected once per index commit state —
-    * k rows, the same bound the probed-id collection already accepted
-    * driver-side. Sorted by cl so the rehydrated LocalRelation is
-    * deterministic. */
+  /** Quantizer rows (cl, cv) collected once per state of the `cent/`
+    * table — k rows, the same bound the probed-id collection already
+    * accepted driver-side. Sorted by cl so the rehydrated LocalRelation is
+    * deterministic. Keyed on `cent/`'s own fingerprint, not the index's
+    * commit token: only [[buildIvfIndex]] (and so [[retrainIvfIndex]])
+    * writes `cent/`, while extend, compact and forget recommit `_DONE`
+    * without touching it ([[Forget.ivfTarget]] covers `ivf` and `idmap`
+    * only), so those commits keep the memo. */
   private val centRowsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, ((String, String, Long), Array[(Int, Array[Double])])]()
+    String, (Long, Array[(Int, Array[Double])])]()
 
   private[graft] def cachedCentRows(spark: SparkSession,
       indexPath: String): Array[(Int, Array[Double])] = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
-    val key = ivfCommitKey(fs, indexPath)
+    val centPath = s"$indexPath/cent"
+    val fp = Tables.datasetFingerprint(centPath)
     val cached = centRowsMemo.get(indexPath)
-    if (cached != null && cached._1 == key) cached._2
+    if (cached != null && cached._1 == fp) cached._2
     else {
-      val rows = spark.read.parquet(s"$indexPath/cent")
+      val rows = Tables.artifactParquet(spark, centPath)
         .select(col("cl").cast("int"), col("cv"))
         .collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1)
-      centRowsMemo.put(indexPath, (key, rows))
+      centRowsMemo.put(indexPath, (fp, rows))
       rows
     }
   }
@@ -3506,7 +3509,7 @@ object EmbeddingSearch {
     * roundtrips doubles bit-exactly, the collect changes nothing), so
     * every kernel consuming it is row-identical; only the per-call
     * parquet listing/read disappears. */
-  private def cachedCentDf(spark: SparkSession, indexPath: String): DataFrame = {
+  private[graft] def cachedCentDf(spark: SparkSession, indexPath: String): DataFrame = {
     import spark.implicits._
     cachedCentRows(spark, indexPath).toSeq.toDF("cl", "cv")
   }
@@ -3571,10 +3574,61 @@ object EmbeddingSearch {
       rows.map { case (id, v) => (id, v.map(_.toDouble)) })
   }
 
+  /** Most query rows a serve pulls to the driver to plan its probe and
+    * prune lists there: the driver then holds at most cap × d doubles per
+    * batch. Larger batches (a big streaming micro-batch) keep the in-plan
+    * path, which returns the same rows. */
+  private[graft] val LocalBatchCap = 1024
+
+  /** The rows of a small query batch on the driver, or None past
+    * [[LocalBatchCap]]. A frame whose optimized plan is a LocalRelation is
+    * read with no Spark job; any other plan costs one bounded
+    * `limit(cap + 1)` collect. */
+  private def smallBatchRows(batch: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
+    val rows = if (org.apache.spark.sql.GraftShim.isLocalRelation(batch)) batch.collect()
+      else batch.limit(LocalBatchCap + 1).collect()
+    if (rows.length > LocalBatchCap) None else Some(rows)
+  }
+
+  /** `rows` (collected from `like`) as a LocalRelation frame with `like`'s
+    * schema — the batch the serve plans over instead of re-reading its
+    * source. */
+  private[graft] def rehydrate(like: DataFrame, rows: Array[org.apache.spark.sql.Row]): DataFrame =
+    like.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), like.schema)
+
+  /** An array<numeric> value as doubles — the same widening the in-plan
+    * `toDouble` cast runs. None for a null array or a null element. */
+  private def doublesOf(v: Any): Option[Array[Double]] = v match {
+    case xs: scala.collection.Seq[_] if xs.forall(_ != null) =>
+      Some(xs.iterator.map(_.asInstanceOf[Number].doubleValue).toArray)
+    case _ => None
+  }
+
+  /** A small query batch on the driver: its rows ([[smallBatchRows]])
+    * and each row's vector (column `vecIdx`) as doubles. None past
+    * [[LocalBatchCap]] or when a vector is null or holds a null: the
+    * scalar twins cannot mirror null arithmetic, so such a batch keeps
+    * the in-plan path. */
+  private[graft] def driverBatch(batch: DataFrame,
+      vecIdx: Int): Option[(Array[org.apache.spark.sql.Row], Array[Array[Double]])] =
+    smallBatchRows(batch).flatMap { rows =>
+      val vs = rows.map(r => doublesOf(r.get(vecIdx)))
+      if (vs.exists(_.isEmpty)) None else Some((rows, vs.map(_.get)))
+    }
+
+  /** A (query_id: long, qv) batch planned on the driver: the rehydrated
+    * frame plus its rows for [[probedCellIdsLocal]]. None when
+    * [[driverBatch]] declines or an id is null. */
+  private def driverQueries(
+      q: DataFrame): Option[(DataFrame, Array[(Long, Array[Double])])] =
+    driverBatch(q, 1).collect { case (rows, vs) if !rows.exists(_.isNullAt(0)) =>
+      (rehydrate(q, rows), rows.map(_.getLong(0)).zip(vs))
+    }
+
   /** Driver-side probed-cell selection over the CACHED arrays — the
     * [[probeCells]] rule (round6(score) desc, cl asc, rn ≤ np) evaluated
     * with the metric's spec-pinned scalar kernel instead of a Spark job,
-    * so it picks exactly the cells [[probedCellIds]] would collect.
+    * so it picks exactly the cells the in-plan probe would collect.
     * nQueries × k scores — trivial at any corpus size (k ≈ √N quantizer
     * rows is the bound the collected-ids design already accepted). */
   private[graft] def probedCellIdsLocal(qRows: Array[(Long, Array[Double])],
@@ -3588,39 +3642,29 @@ object EmbeddingSearch {
     }.distinct
   }
 
-  /** Read ONLY the named partition dirs of an int-partitioned artifact
-    * table (the IVF index's `ivf/` cells, the graph's verts/edges) via
-    * `basePath` (r15 — measured at the 1M-vector wall probe):
-    * `spark.read.parquet(ivf)` lists EVERY partition dir at plan time
-    * before pruning, so a √N-celled index pays a per-serve listing that
-    * grows with the CELL count — ~1,000 dirs ≈ +0.7 s at 1M vectors
-    * locally, and a genuine metadata storm at 100 TB (65,536 dirs per
-    * serve for a ~20-dir probe). Listing the probed dirs keeps the
-    * partition column and row content identical (the dir name IS the
-    * key value either way) at probe-set metadata cost. Cells the
-    * quantizer ranks but no vector ever joined have no dir — they hold
-    * nothing to read, so skipping them is result-invariant (the radii
-    * inner-join argument); `where(key isin values)` stays on top as the
-    * semantic guard. Falls back to the full-listing read when every
-    * named dir is absent (schema must still come from somewhere; only an
-    * empty serve reaches this).
-    */
-  private def probedPartitionRead(spark: SparkSession, tbl: String,
-      key: String, values: Seq[Int]): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(tbl)
-      .getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
-    val paths = values.sorted
-      .map(v => s"$tbl/$key=$v")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    val df = if (paths.isEmpty) graft.sources.Tables.artifactParquet(spark, tbl)
-      else graft.sources.Tables.artifactPartitionedParquet(spark, tbl, paths)
-    df.where(col(key).isin(values.map(Integer.valueOf): _*))
+  /** The hybrid serve's per-query probe on the driver: per query id,
+    * the `np` best cells by round6(cosine(qv, cv)), ranked by
+    * [[graft.functions.TopKByScoreAggregator]] itself (NaN above every
+    * number, lowest cl on ties), so the (query_id, cl) pairs equal the
+    * in-plan `groupBy(query_id).agg(topKByScore(np)(csim, cl))`. Rows
+    * sharing a query id pool their scores, as the grouping does. Query
+    * ids keep first-seen order. */
+  private[graft] def probedPairsLocal(qRows: Seq[(Any, Array[Double])],
+      centRows: Array[(Int, Array[Double])], np: Int): Seq[(Any, Int)] = {
+    val agg = new graft.functions.TopKByScoreAggregator(np)
+    val groups = scala.collection.mutable.LinkedHashMap
+      .empty[Any, graft.functions.TopKByScoreAggregator.Buf]
+    for ((qid, qv) <- qRows; (cl, cv) <- centRows)
+      groups(qid) = agg.reduce(groups.getOrElse(qid, agg.zero),
+        (KmeansKernel.round6(cosineSeq(qv, cv)), cl.toLong))
+    groups.toSeq.flatMap { case (qid, buf) =>
+      agg.finish(buf).map { case (_, cl) => (qid, cl.toInt) } }
   }
 
   /** The probed `cl=` cells of an IVF index's vector table. */
   private def probedIvfRead(spark: SparkSession, indexPath: String,
       cells: Array[Int]): DataFrame =
-    probedPartitionRead(spark, s"$indexPath/ivf", "cl", cells.toSeq)
+    Tables.probedPartitionRead(spark, s"$indexPath/ivf", "cl", cells.toSeq)
 
   /** The sized-quantizer STALENESS RULE (r12 verdict item 4): an index
     * grown by [[extendIvfIndex]] keeps its training-time cell count while
@@ -3789,16 +3833,6 @@ object EmbeddingSearch {
       Cos, k, nprobe)
   }
 
-  /** THE data-file predicate every index layout/commit/compaction guard
-    * shares (a regular file that is not a `_marker` or `.hidden`) —
-    * single-sourced (r14 review) so a future change to what counts as
-    * data cannot leave the extend guards, the compaction census, and
-    * the empty-table allowances silently disagreeing.
-    */
-  private[operators] def isDataFile(e: org.apache.hadoop.fs.FileStatus): Boolean =
-    e.isFile && !e.getPath.getName.startsWith("_") &&
-      !e.getPath.getName.startsWith(".")
-
   /** Append a NEW vector batch to a committed IVF index ON DISK — the
     * add-without-rebuild maintenance pass that completes the
     * build/extend/forget matrix for the vector artifact (the
@@ -3860,7 +3894,7 @@ object EmbeddingSearch {
     for ((t, pk) <- Seq("ivf" -> "cl=", "idmap" -> "ib=")) {
       val entries = fs.listStatus(new org.apache.hadoop.fs.Path(indexPath, t))
       val hasPartDirs = entries.exists(_.getPath.getName.startsWith(pk))
-      val hasDataFiles = entries.exists(isDataFile)
+      val hasDataFiles = entries.exists(Tables.isDataFile)
       // wrong-key partition dirs are a mixed-layout hazard too and must
       // not slip through the empty-table allowance (extendBm25Index
       // guard discipline)
@@ -4010,7 +4044,7 @@ object EmbeddingSearch {
     val root = new org.apache.hadoop.fs.Path(indexPath, table)
     if (!fs.exists(root)) 0
     else fs.listStatus(root).filter(e => !e.isFile && e.getPath.getName.contains("="))
-      .map(d => fs.listStatus(d.getPath).count(isDataFile))
+      .map(d => fs.listStatus(d.getPath).count(Tables.isDataFile))
       .foldLeft(0)(math.max)
   }
 
@@ -4248,7 +4282,7 @@ object EmbeddingSearch {
     val partitioned = for ((t, pk) <- Seq("ivf" -> "cl", "idmap" -> "ib")) yield {
       val entries = fs.listStatus(new org.apache.hadoop.fs.Path(indexPath, t))
       val hasPartDirs = entries.exists(_.getPath.getName.startsWith(s"$pk="))
-      val hasDataFiles = entries.exists(isDataFile)
+      val hasDataFiles = entries.exists(Tables.isDataFile)
       require(hasPartDirs || !hasDataFiles,
         s"IVF table '$t' at $indexPath is FLAT (pre-partitioned layout) — " +
           "rebuild with buildIvfIndex before compacting")
@@ -4351,14 +4385,16 @@ object EmbeddingSearch {
     * kernel — defined here so the streaming tier and any batch caller
     * share one rule): rank the k-row quantizer per batch vector, keep
     * `nprobe` cells, then re-rank the probed cells' members by exact
-    * cosine ([[serveProbed]] verbatim). The batch's probed cell ids
-    * are collected driver-side FIRST — a list bounded by the quantizer
-    * size (k rows), never the batch or corpus — and pushed into the ivf
-    * read as a literal IN, so the cl= partition dirs prune at PLAN time
-    * (the hybridTopKServed discipline) and per-batch cost is
-    * probed-cells bytes plus the batch scan, never a corpus-wide read.
-    * Pruning is result-invariant: [[serveProbed]] only ever joins
-    * probed cells. Output: (query_id, vec_id, cosine, rank ≤ k).
+    * cosine ([[serveProbed]] verbatim). DRIVER-PLANNED: a batch of up to
+    * [[LocalBatchCap]] rows comes to the driver (no job for a
+    * LocalRelation, else one bounded collect), its probed cell ids are
+    * picked there over the memoized quantizer ([[probedCellIdsLocal]]),
+    * and only those `cl=` dirs are listed and read, so building the frame
+    * runs at most that one job on a warm index and per-batch cost is
+    * probed-cells bytes, never a corpus-wide read. A larger batch keeps
+    * the in-plan probe plus one k-row-bounded cell-id collect. Pruning
+    * is result-invariant: [[serveProbed]] only ever joins probed cells.
+    * Output: (query_id, vec_id, cosine, rank ≤ k).
     */
   def knnBatchAgainstIvfIndex(batch: DataFrame, indexPath: String,
       k: Int = 3, nprobe: Int = 2,
@@ -4372,22 +4408,14 @@ object EmbeddingSearch {
     probedBatchServe(batchQueries(batch), indexPath, Cos, k, nprobe, lit(true), localQ)
   }
 
-  /** The batch's probed cell ids, collected driver-side (bounded by the
-    * k-row quantizer) for PLAN-time cl= pruning — [[probeCells]] itself,
-    * so the pre-collection can never drift from the serving kernel's own
-    * ranking (a drifted copy would silently exclude cells the kernel
-    * ranks, dropping neighbors instead of failing).
-    */
-  private def probedCellIds(q: DataFrame, cent: DataFrame, np: Int,
-      metric: Metric): Array[Int] =
-    probeCells(q, cent, metric, np).select(col("cl")).distinct()
-      .collect().map(_.getInt(0))
-
-  /** The probed arm of every standing-index serve: the batch's probed
-    * cell ids — driver-side from `localQ` (the standing serves' cached
-    * batch, bit-identical scalar kernels, no pre-collection job) or one
-    * k-row-bounded collect for an arbitrary batch (streaming tier) — then
-    * the plan-time-pruned cell read under `pred` and [[serveProbed]] by
+  /** The probed arm of every standing-index serve, planned on the
+    * driver: the batch's rows — `localQ` (the standing serves' cached
+    * batch) or [[driverQueries]] (any batch up to [[LocalBatchCap]]) —
+    * pick the probed cell ids with the bit-identical scalar kernels
+    * ([[probedCellIdsLocal]] over the cached quantizer), and the serve
+    * reads the rehydrated batch. A batch past the cap keeps the in-plan
+    * probe and one k-row-bounded collect of its cell ids. Then the
+    * plan-time-pruned cell read under `pred` and [[serveProbed]] by
     * `metric`. Pruning is result-invariant: the serve only ever joins
     * probed cells.
     */
@@ -4396,12 +4424,14 @@ object EmbeddingSearch {
       localQ: Option[Array[(Long, Array[Double])]]): DataFrame = {
     val spark = q.sparkSession
     val cent = cachedCentDf(spark, indexPath)
-    val cells = localQ match {
-      case Some(qRows) =>
-        probedCellIdsLocal(qRows, cachedCentRows(spark, indexPath), np, metric)
-      case None => probedCellIds(q, cent, np, metric)
+    val (qPlan, cells) = localQ.map(r => (q, r)).orElse(driverQueries(q)) match {
+      case Some((ql, qRows)) =>
+        (ql, probedCellIdsLocal(qRows, cachedCentRows(spark, indexPath), np, metric))
+      case None =>
+        (q, probeCells(q, cent, metric, np).select(col("cl")).distinct()
+          .collect().map(_.getInt(0)))
     }
-    serveProbed(probedIvfRead(spark, indexPath, cells).where(pred), q, cent, metric, k, np)
+    serveProbed(probedIvfRead(spark, indexPath, cells).where(pred), qPlan, cent, metric, k, np)
   }
 
   /** One micro-batch of the FILTERED kNN serve against a persisted

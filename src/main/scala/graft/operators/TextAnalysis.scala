@@ -1553,7 +1553,7 @@ object TextAnalysis {
     for ((t, pk) <- Seq("postings" -> "bucket=", "fwd" -> "db=")) {
       val entries = fs.listStatus(new org.apache.hadoop.fs.Path(indexPath, t))
       val hasPartDirs = entries.exists(_.getPath.getName.startsWith(pk))
-      val hasDataFiles = entries.exists(graft.operators.EmbeddingSearch.isDataFile)
+      val hasDataFiles = entries.exists(Tables.isDataFile)
       // a table partitioned by the WRONG key (some other col=value dirs)
       // is just as much a mixed-layout hazard as a flat one — and it has
       // neither data files nor the right dirs, so it must be refused
@@ -1631,7 +1631,7 @@ object TextAnalysis {
     val partitioned = for ((t, pk) <- Seq("postings" -> "bucket", "fwd" -> "db")) yield {
       val entries = fs.listStatus(new org.apache.hadoop.fs.Path(indexPath, t))
       val hasPartDirs = entries.exists(_.getPath.getName.startsWith(s"$pk="))
-      val hasDataFiles = entries.exists(graft.operators.EmbeddingSearch.isDataFile)
+      val hasDataFiles = entries.exists(Tables.isDataFile)
       require(hasPartDirs || !hasDataFiles,
         s"BM25 table '$t' at $indexPath is FLAT (pre-partitioned layout) — " +
           "rebuild with buildBm25Index before compacting")
@@ -1644,7 +1644,7 @@ object TextAnalysis {
     // allowance, checked pre-flight like every other refusal)
     val doclensHasData = fs
       .listStatus(new org.apache.hadoop.fs.Path(indexPath, "doclens"))
-      .exists(graft.operators.EmbeddingSearch.isDataFile)
+      .exists(Tables.isDataFile)
     fs.delete(done, false)
     def swap(t: String)(write: org.apache.hadoop.fs.Path => Unit): Unit = {
       val live = new org.apache.hadoop.fs.Path(indexPath, t)
@@ -1681,7 +1681,7 @@ object TextAnalysis {
     def flatFiles(t: String): Int = {
       val p = new org.apache.hadoop.fs.Path(indexPath, t)
       if (!fs.exists(p)) 0
-      else fs.listStatus(p).count(graft.operators.EmbeddingSearch.isDataFile)
+      else fs.listStatus(p).count(Tables.isDataFile)
     }
     val worst = Seq(
       graft.operators.EmbeddingSearch.ivfMaxFilesPerDir(fs, indexPath, "postings"),
@@ -1708,43 +1708,98 @@ object TextAnalysis {
       buildBm25Index(Tables.documents(spark, dir), indexPath)
   }
 
-  /** Serve [[bm25TopDocs]] from the PERSISTED index — FULLY PRUNED: the
-    * query document's terms resolve from ONE fwd bucket (doc-id-hash
-    * pruning, the lexical twin of the IVF idmap lookup), their hash
-    * buckets become a ≤[[Bm25IndexBuckets]]-int driver list that
-    * PARTITION-PRUNES the postings scan at plan time, and corpus stats
-    * (N, avgdl, candidate dl) come from the narrow doclens table — so
-    * the serve's footprint is 1 fwd bucket + the query terms' postings
-    * buckets + doclens, never the index. df stays EXACT under pruning (a
-    * term's rows all live in one bucket). Rows are identical to the
-    * historical full-scan plan (df/dl/N/avgdl take the same values from
-    * the derived tables — the build asserts they can never disagree), so
-    * the oracle is unchanged. Refuses an uncommitted index (no `_DONE`):
-    * a half-built or half-extended table set would silently rank against
-    * a partial corpus.
+  /** The postings layout's term→bucket rule as a driver-side scalar twin
+    * of `pmod(portableHash31(term), Bm25IndexBuckets)`: the same
+    * [[graft.functions.expressions.TextPrimitives.hash31]] fold the
+    * expression runs, and floorMod, never Scala's sign-preserving `%`. */
+  private[graft] def termBucketOf(term: String): Int =
+    java.lang.Math.floorMod(graft.functions.expressions.TextPrimitives.hash31(
+      org.apache.spark.unsafe.types.UTF8String.fromString(term)),
+      Bm25IndexBuckets.toLong).toInt
+
+  /** One query text's terms on the driver — the scalar twin of
+    * `explode(array_distinct(tokenize(text))) where term != ""`: the same
+    * tokenizer kernel, distinct in first-seen order, empty tokens
+    * dropped, and no terms for null text. */
+  private[graft] def queryTermsOf(text: String): Seq[String] =
+    if (text == null) Nil
+    else graft.functions.expressions.TextPrimitives.tokenize(
+      org.apache.spark.unsafe.types.UTF8String.fromString(text))
+      .distinct.filter(_.nonEmpty).toSeq
+
+  /** The narrow (doc_id, dl) table of a BM25 index, read with no Spark
+    * job at construct time. */
+  private def doclensOf(spark: org.apache.spark.sql.SparkSession,
+      indexPath: String): DataFrame =
+    Tables.artifactPartitionedParquet(spark, s"$indexPath/doclens",
+      Seq(s"$indexPath/doclens"))
+
+  /** Corpus stats (N = docs, Σdl = total length) per BM25 index path,
+    * memoized under the `_DONE` commit token ([[Markers.token]]): every
+    * build, extend, compact and forget recommits `_DONE` with a fresh
+    * token, so the value is valid exactly while the index is unchanged.
+    * One aggregation job per commit instead of one per serve. The row
+    * keeps the aggregate's own schema: (`__n` long, `__len_sum` long —
+    * null on an empty index). */
+  private val bm25StatsMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, (org.apache.spark.sql.Row, org.apache.spark.sql.types.StructType))]()
+
+  /** [[bm25StatsMemo]]'s value as the 1-row broadcast the scoring tail
+    * cross-joins — a LocalRelation, so no job at construct or exec. */
+  private def bm25Stats(spark: org.apache.spark.sql.SparkSession,
+      indexPath: String): DataFrame = {
+    val fs = new org.apache.hadoop.fs.Path(indexPath)
+      .getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
+    val token = Markers.token(fs, new org.apache.hadoop.fs.Path(indexPath, "_DONE"))
+    val cached = bm25StatsMemo.get(indexPath)
+    val (row, schema) =
+      if (cached != null && cached._1 == token) cached._2
+      else {
+        val agg = doclensOf(spark, indexPath)
+          .agg(count(lit(1)).as("__n"), sum(col("dl")).as("__len_sum"))
+        val v = (agg.head(), agg.schema)
+        bm25StatsMemo.put(indexPath, (token, v))
+        v
+      }
+    broadcast(spark.createDataFrame(java.util.List.of(row), schema))
+  }
+
+  /** Serve [[bm25TopDocs]] from the PERSISTED index — FULLY PRUNED and
+    * DRIVER-PLANNED: building the frame runs ONE Spark job on a warm
+    * index, the collect of the query document's terms from its ONE fwd
+    * bucket (`db=` dir, doc-id-hash pruning — the lexical twin of the
+    * IVF idmap lookup). Everything else small is computed on the
+    * driver: the terms' postings buckets ([[termBucketOf]]), which list
+    * and read only those `bucket=` dirs; the terms themselves, passed to
+    * the plan as a LocalRelation; and the corpus stats (N, Σdl) from the
+    * per-commit [[bm25Stats]] memo (one job after each commit). The
+    * candidates' dl comes from the narrow doclens table. So the serve's
+    * footprint is 1 fwd bucket + the query terms' postings buckets +
+    * doclens, never the index. df stays EXACT under pruning (a term's
+    * rows all live in one bucket). Rows are identical to the historical
+    * full-scan plan (df/dl/N/avgdl take the same values from the derived
+    * tables — the build asserts they can never disagree), so the oracle
+    * is unchanged. Refuses an uncommitted index (no `_DONE`): a
+    * half-built or half-extended table set would silently rank against a
+    * partial corpus.
     */
   def bm25TopDocsWithIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, queryDocId: Long = 0L, k1: Double = 1.2,
       b: Double = 0.75, kTop: Int = 20): DataFrame = {
+    import spark.implicits._
     val done = new org.apache.hadoop.fs.Path(indexPath, "_DONE")
     val fs = done.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
     require(fs.exists(done),
       s"BM25 index at $indexPath is uncommitted (no _DONE) — build/extend first")
-    val lens = graft.sources.Tables.artifactParquet(spark, s"$indexPath/doclens")
-    val stats = broadcast(lens.agg(
-      count(lit(1)).as("__n"), sum(col("dl")).as("__len_sum")))
-    val qTerms = Scale.maybeBroadcast(graft.sources.Tables.artifactParquet(spark, s"$indexPath/fwd")
-      .where(col("db") === lit(fwdBucketOf(queryDocId)) &&
-        col("doc_id") === queryDocId)
-      .select(col("term")).distinct())
-    // the bounded-day-list collect discipline: ≤64 ints
-    val buckets = qTerms.select(pmod(portableHash31(col("term")),
-        lit(Bm25IndexBuckets)).cast("int").as("bucket"))
-      .distinct().collect().map(_.getInt(0)).toIndexedSeq
-    val tfAll = graft.sources.Tables.artifactParquet(spark, s"$indexPath/postings")
-    val tf = if (buckets.length >= Bm25IndexBuckets) tfAll
-      else tfAll.where(col("bucket").isin(buckets: _*))
-    bm25ScoreTail(tf, lens, stats, qTerms, queryDocId, k1, b, kTop)
+    val stats = bm25Stats(spark, indexPath)
+    val terms = Tables.probedPartitionRead(spark, s"$indexPath/fwd", "db",
+        Seq(fwdBucketOf(queryDocId)))
+      .where(col("doc_id") === queryDocId)
+      .select(col("term")).collect().map(_.getString(0)).distinct
+    val tf = Tables.probedPartitionRead(spark, s"$indexPath/postings", "bucket",
+      terms.map(termBucketOf).distinct.toSeq)
+    bm25ScoreTail(tf, doclensOf(spark, indexPath), stats,
+      Scale.maybeBroadcast(terms.toSeq.toDF("term")), queryDocId, k1, b, kTop)
   }
 
   /** INCREMENTAL lexical retrieval — [[Dedup.dedupIncremental]]'s shape
@@ -2001,43 +2056,65 @@ object TextAnalysis {
     *
     * Scale shape: the lexical scan is PARTITION-PRUNED to the batch
     * terms' hash buckets (≤ [[Bm25IndexBuckets]] directories; corpus
-    * stats come from the narrow doclens table), and with `nprobe > 0`
-    * the semantic scan is pruned to the probed cells of the
-    * cell-partitioned IVF table — so per-batch cost is batch-vocabulary
-    * buckets + probed cells + doclens, never the full index pair. The
-    * two driver-side prune lists are bounded by the layout constants
-    * (64 buckets / quantizer k), not by data volume. Output:
+    * stats come from the per-commit [[bm25Stats]] memo, candidate
+    * lengths from the narrow doclens table), and with `nprobe > 0` the
+    * semantic scan is pruned to the probed cells of the cell-partitioned
+    * IVF table — so per-batch cost is batch-vocabulary buckets + probed
+    * cells + doclens, never the full index pair.
+    *
+    * DRIVER-PLANNED: a batch of up to
+    * [[EmbeddingSearch.driverBatch]]'s cap comes to the driver (no job
+    * for a LocalRelation batch, else one bounded collect), and the small
+    * values the plan needs are computed there with bit-identical scalar
+    * twins: the query terms ([[queryTermsOf]]) and their buckets
+    * ([[termBucketOf]]), and each query's probed cells
+    * ([[EmbeddingSearch.probedPairsLocal]] over the memoized quantizer).
+    * Terms, (query_id, cl) pairs and the rehydrated batch enter the plan
+    * as LocalRelations, so a LocalRelation batch on a warm index builds
+    * its frame with NO Spark job. A larger batch, or one with a null
+    * vector, keeps the in-plan path: in-plan terms and probe plus two
+    * collects of the prune lists, each bounded by the layout constants
+    * (64 buckets / quantizer k). Both paths return the same rows. Output:
     * (query_id, doc_id, lex_rank, sem_rank, rrf, rank).
     */
   def hybridServeBatch(queries: DataFrame, bm25IndexPath: String,
       ivfIndexPath: String, kEach: Int = 20, kTop: Int = 10, rrfK: Int = 60,
       k1: Double = 1.2, b: Double = 0.75, nprobe: Int = 0): DataFrame = {
     import graft.functions.TopKByScoreAggregator.topKByScore
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
     val spark = queries.sparkSession
-    // N and avgdl from the narrow doclens table — the pruned postings
-    // scan below holds only query-term rows, so corpus stats can't come
-    // from it (and a full postings scan per batch is exactly what the
-    // layout exists to avoid)
-    val lens = graft.sources.Tables.artifactParquet(spark, s"$bm25IndexPath/doclens")
-    val stats = broadcast(lens.agg(
-      count(lit(1)).as("__n"), sum(col("dl")).as("__len_sum")))
+    val batch = queries.select(col("query_id"), col("text"), col("embedding"))
+    val local = EmbeddingSearch.driverBatch(batch, 2)
+    val q = local.fold(batch) { case (rows, _) => EmbeddingSearch.rehydrate(batch, rows) }
+    val qid = batch.schema("query_id")
+    val lens = doclensOf(spark, bm25IndexPath)
+    val stats = bm25Stats(spark, bm25IndexPath)
+    // the batch's (query_id, term) rows and their term-hash buckets: a
+    // bucket list bounded by Bm25IndexBuckets (64 ints) that becomes
+    // PLAN-time partition pruning — the serve's postings footprint is the
+    // query buckets' directories, not the index; a term's rows all live
+    // in one bucket, so per-term df/tf stay exact under the pruned scan
+    val (qTermsRaw, buckets) = local match {
+      case Some((rows, _)) =>
+        val pairs = rows.toSeq.flatMap(r =>
+          queryTermsOf(r.getString(1)).map(t => Row(r.get(0), t)))
+        (spark.createDataFrame(pairs.asJava,
+            StructType(Seq(qid, StructField("term", StringType, nullable = false)))),
+          pairs.map(p => termBucketOf(p.getString(1))).distinct)
+      case None =>
+        val t = q.select(col("query_id"),
+            explode(array_distinct(tokenize(col("text")))).as("term"))
+          .where(col("term") =!= "")
+        (t, t.select(pmod(portableHash31(col("term")),
+            lit(Bm25IndexBuckets)).cast("int").as("bucket"))
+          .distinct().collect().map(_.getInt(0)).toSeq)
+    }
     // batch-derived sides are size-gated broadcasts: a batch is
     // structurally small next to the index, but nothing enforces it
-    val qTerms = Scale.maybeBroadcast(queries.select(col("query_id"),
-      explode(array_distinct(tokenize(col("text")))).as("term"))
-      .where(col("term") =!= ""))
-    // PLAN-time partition pruning: the batch's term-hash buckets — a
-    // driver list bounded by Bm25IndexBuckets (64 ints), metadata-scale
-    // by construction (the bounded-day-list collect discipline). The
-    // serve's postings footprint is the query buckets' directories, not
-    // the index; a term's rows all live in one bucket, so per-term df/tf
-    // stay exact under the pruned scan.
-    val buckets = qTerms.select(pmod(portableHash31(col("term")),
-        lit(Bm25IndexBuckets)).cast("int").as("bucket"))
-      .distinct().collect().map(_.getInt(0)).toIndexedSeq
-    val tfAll = graft.sources.Tables.artifactParquet(spark, s"$bm25IndexPath/postings")
-    val tf = if (buckets.length >= Bm25IndexBuckets) tfAll
-      else tfAll.where(col("bucket").isin(buckets: _*))
+    val qTerms = Scale.maybeBroadcast(qTermsRaw)
+    val tf = Tables.probedPartitionRead(spark, s"$bm25IndexPath/postings", "bucket", buckets)
     val dfT = tf.join(qTerms.select(col("term")).distinct(), Seq("term"), "left_semi")
       .groupBy("term").agg(count(lit(1)).as("df"))
     val perTerm = tf.join(qTerms, Seq("term"))
@@ -2062,31 +2139,38 @@ object TextAnalysis {
       .select(col("query_id"), posexplode(col("top")).as(Seq("i", "t")))
       .select(col("query_id"), col("t._2").as("id"),
         (col("i") + 1).cast("long").as("lex_rank"))
-    val qVecs = Scale.maybeBroadcast(queries.select(col("query_id"),
+    val qVecs = Scale.maybeBroadcast(q.select(col("query_id"),
       transform(col("embedding"), _.cast("double")).as("qv")))
-    val vecsAll = graft.sources.Tables.artifactParquet(spark, s"$ivfIndexPath/ivf")
     // nprobe <= 0: exact flat scan (full recall — the oracle-shaped tier).
     // nprobe > 0: each query probes its nprobe nearest trained cells
     // (round(cosine,6) desc, lowest-cl ties — the kmeansAssign
-    // discipline) and scores ONLY their vectors; the probed-cell union is
-    // a driver list bounded by the quantizer's k (metadata-scale), so the
-    // cell-partitioned ivf table is PARTITION-PRUNED at plan time. The
-    // recall trade is the standard IVF one; nprobe >= k is row-identical
-    // to the exact scan (spec-pinned).
+    // discipline) and scores ONLY their vectors; the probed-cell union
+    // (bounded by the quantizer's k) lists and reads only those cl= dirs.
+    // The recall trade is the standard IVF one; nprobe >= k is
+    // row-identical to the exact scan (spec-pinned).
     val semCands =
-      if (nprobe <= 0) vecsAll.select(col("vec_id"), col("v")).crossJoin(qVecs)
+      if (nprobe <= 0)
+        Tables.artifactParquet(spark, s"$ivfIndexPath/ivf")
+          .select(col("vec_id"), col("v")).crossJoin(qVecs)
       else {
-        val cent = graft.sources.Tables.artifactParquet(spark, s"$ivfIndexPath/cent")
-        val probePairs = qVecs.crossJoin(broadcast(cent))
-          .select(col("query_id"), col("cl").cast("long").as("cl_l"),
-            round(EmbeddingSearch.cosine(col("qv"), col("cv")), 6).as("csim"))
-          .groupBy(col("query_id"))
-          .agg(topKByScore(nprobe)(col("csim"), col("cl_l")).as("top"))
-          .select(col("query_id"), explode(col("top")).as("t"))
-          .select(col("query_id"), col("t._2").cast("int").as("cl"))
-        val cells = probePairs.select(col("cl")).distinct()
-          .collect().map(_.getInt(0)).toIndexedSeq
-        vecsAll.where(col("cl").isin(cells: _*))
+        val (probePairs, cells) = local match {
+          case Some((rows, vs)) =>
+            val pairs = EmbeddingSearch.probedPairsLocal(rows.toSeq.map(_.get(0)).zip(vs),
+              EmbeddingSearch.cachedCentRows(spark, ivfIndexPath), nprobe)
+            (spark.createDataFrame(pairs.map { case (id, cl) => Row(id, cl) }.asJava,
+                StructType(Seq(qid, StructField("cl", IntegerType, nullable = false)))),
+              pairs.map(_._2).distinct)
+          case None =>
+            val p = qVecs.crossJoin(broadcast(EmbeddingSearch.cachedCentDf(spark, ivfIndexPath)))
+              .select(col("query_id"), col("cl").cast("long").as("cl_l"),
+                round(EmbeddingSearch.cosine(col("qv"), col("cv")), 6).as("csim"))
+              .groupBy(col("query_id"))
+              .agg(topKByScore(nprobe)(col("csim"), col("cl_l")).as("top"))
+              .select(col("query_id"), explode(col("top")).as("t"))
+              .select(col("query_id"), col("t._2").cast("int").as("cl"))
+            (p, p.select(col("cl")).distinct().collect().map(_.getInt(0)).toSeq)
+        }
+        Tables.probedPartitionRead(spark, s"$ivfIndexPath/ivf", "cl", cells)
           .select(col("cl"), col("vec_id"), col("v"))
           .join(Scale.maybeBroadcast(probePairs), Seq("cl"))
           .join(qVecs, Seq("query_id"))

@@ -207,36 +207,98 @@ object Tables {
     spark.read.schema(schema).parquet(path)
   }
 
-  /** [[artifactParquet]] for a PARTITION-PRUNED read (explicit `key=v`
-    * subdirectories under `basePath`): the schema — partition column
-    * included, courtesy of basePath — is inferred from the FIRST probed
-    * subset and memoized per base path, so later serves skip both the
-    * footer inference and any full-dir listing (the probedIvfRead
-    * discipline kept; this only removes its per-call inference).
-    * Validation (r17): fingerprinting the FULL basePath per call would
-    * reintroduce the full-dir listing the probed read exists to avoid, so
-    * this memo validates against the fingerprint of the FIRST PROBED
-    * subdirectory's files only — enough to catch an in-place rebuild
-    * (every rewrite touches all cells' files), without walking unprobed
-    * cells. Both call sites are the fingerprintedDir-versioned IVF
-    * serves, so the name-versioning invariant holds here regardless.
+  /** THE data-file predicate every index layout/commit/compaction guard
+    * and the driver-side schema read share (a regular file that is not a
+    * `_marker` or `.hidden`) — single-sourced (r14 review) so a future
+    * change to what counts as data cannot leave the extend guards, the
+    * compaction census, and the empty-table allowances silently
+    * disagreeing.
     */
-  private val partitionedSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (Long, org.apache.spark.sql.types.StructType)]()
+  private[graft] def isDataFile(e: org.apache.hadoop.fs.FileStatus): Boolean =
+    e.isFile && !e.getPath.getName.startsWith("_") &&
+      !e.getPath.getName.startsWith(".")
 
-  def artifactPartitionedParquet(spark: SparkSession, basePath: String,
-      paths: Seq[String]): DataFrame = {
-    val key = (basePath, paths.head)
-    val fp = datasetFingerprint(paths.head)
-    val cached = partitionedSchemaMemo.get(key)
-    val schema =
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        val s = spark.read.option("basePath", basePath).parquet(paths: _*).schema
-        partitionedSchemaMemo.put(key, (fp, s))
+  /** Data schema of ONE artifact directory (a `key=v` partition dir or a
+    * flat table), read on the DRIVER from the footer of its first data
+    * file — the same footer→schema conversion Spark's inference runs, but
+    * without the one-file Spark job that inference launches. Memoized
+    * per directory and validated by that directory's own fingerprint, so
+    * a rewritten directory re-reads its footer and an untouched one
+    * costs a listing. None for a directory without data files.
+    */
+  private val dirSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, org.apache.spark.sql.types.StructType)]()
+
+  private def dirSchema(spark: SparkSession,
+      dir: String): Option[org.apache.spark.sql.types.StructType] = {
+    val fp = datasetFingerprint(dir)
+    val cached = dirSchemaMemo.get(dir)
+    if (cached != null && cached._1 == fp) Some(cached._2)
+    else {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val fs = hadoopFs(p)
+      val first = if (!fs.exists(p)) None
+        else fs.listStatus(p).filter(isDataFile).sortBy(_.getPath.getName).headOption
+      first.flatMap(org.apache.spark.sql.execution.datasources.parquet
+        .GraftParquetShim.footerSchema(spark, _)).map { s =>
+        dirSchemaMemo.put(dir, (fp, s))
         s
       }
-    spark.read.schema(schema).option("basePath", basePath).parquet(paths: _*)
+    }
+  }
+
+  /** [[artifactParquet]] for a PARTITION-PRUNED read: only the named
+    * directories under `basePath` (`key=v` subdirectories, or the table
+    * itself for a flat table) are listed, and the read constructs with NO
+    * Spark job.
+    *   - Schema: each named directory's data schema comes from
+    *     [[dirSchema]] (driver-side footer read, validated per directory),
+    *     merged in path order; the partition column is inferred from the
+    *     directory names as usual. Every probed path's fingerprint takes
+    *     part in the validation, so a partial rewrite of some directories
+    *     is seen on the next read, and unprobed directories are never
+    *     walked.
+    *   - Listing: Spark lists more than
+    *     `spark.sql.sources.parallelPartitionDiscovery.threshold` root
+    *     paths with a Spark job, so the paths are read in groups of at
+    *     most that many and unioned — the files read are the same.
+    */
+  def artifactPartitionedParquet(spark: SparkSession, basePath: String,
+      paths: Seq[String]): DataFrame = {
+    val schema = paths.flatMap(dirSchema(spark, _))
+      .reduceOption(org.apache.spark.sql.GraftShim.mergeSchemas)
+    val group = math.max(1, spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt)
+    paths.grouped(group).map { g =>
+      schema.fold(spark.read)(spark.read.schema(_))
+        .option("basePath", basePath).parquet(g: _*)
+    }.reduce(_ union _)
+  }
+
+  /** Read ONLY the named `key=v` partition dirs of an int-partitioned
+    * artifact table (the IVF index's `cl=` cells, the BM25 index's
+    * `bucket=`/`db=` buckets, the graph's verts/edges) through
+    * [[artifactPartitionedParquet]]: `spark.read.parquet(table)` lists
+    * EVERY partition dir at construct time before pruning — with a Spark
+    * job past the discovery threshold (64 BM25 buckets), and a metadata
+    * storm at 100 TB (65,536 cells listed per serve for a ~20-cell
+    * probe). Listing the named dirs keeps the partition column and row
+    * content identical (the dir name IS the key value either way) at
+    * probe-set metadata cost. A named value with no dir holds nothing to
+    * read, so skipping it is result-invariant; `where(key isin values)`
+    * stays on top as the semantic guard. Falls back to the full-listing
+    * read when every named dir is absent (the schema must still come from
+    * somewhere; only an empty serve reaches this).
+    */
+  def probedPartitionRead(spark: SparkSession, tbl: String,
+      key: String, values: Seq[Int]): DataFrame = {
+    val fs = hadoopFs(new org.apache.hadoop.fs.Path(tbl))
+    val paths = values.distinct.sorted
+      .map(v => s"$tbl/$key=$v")
+      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    val df = if (paths.isEmpty) artifactParquet(spark, tbl)
+      else artifactPartitionedParquet(spark, tbl, paths)
+    df.where(col(key).isin(values.map(Integer.valueOf): _*))
   }
 
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")

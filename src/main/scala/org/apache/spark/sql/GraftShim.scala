@@ -17,6 +17,18 @@ object GraftShim {
   def estimatedSizeInBytes(df: Dataset[_]): BigInt =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan.stats.sizeInBytes
 
+  /** True when the frame's optimized plan is a LocalRelation: its rows
+    * already sit in driver memory, and collecting them runs no Spark job.
+    */
+  def isLocalRelation(df: Dataset[_]): Boolean =
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan
+      .isInstanceOf[catalyst.plans.logical.LocalRelation]
+
+  /** Spark's own schema merge (new fields appended in order; conflicting
+    * types fail loudly). */
+  def mergeSchemas(a: types.StructType, b: types.StructType): types.StructType =
+    a.merge(b)
+
   /** The session's autoBroadcastJoinThreshold in bytes (-1 = disabled). */
   def broadcastThreshold(df: Dataset[_]): Long =
     df.asInstanceOf[classic.Dataset[_]].sparkSession.sessionState.conf.autoBroadcastJoinThreshold

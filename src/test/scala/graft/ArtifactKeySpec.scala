@@ -150,4 +150,41 @@ class ArtifactKeySpec extends AnyFunSuite {
     assert(t3.columns.toSet == Set("doc_id", "text", "lang"),
       "regenerated schema must re-infer, not serve the memoized one")
   }
+
+  test("a pruned partitioned read picks up rewritten partition dirs, whichever dirs it probes first") {
+    // the schema memo of the pruned read validates EVERY probed dir: rewrite
+    // bucket=1 and bucket=2 with a new column and new rows, leave bucket=0
+    // (the first probed dir) alone, and the next read must see the new
+    // column, the new rows, and nulls for the untouched dir
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_partschema").toString
+    val tbl = s"$root/postings"
+    Seq((1L, "a", 0), (2L, "b", 1), (3L, "c", 2)).toDF("id", "x", "bucket")
+      .write.partitionBy("bucket").parquet(tbl)
+    def read(): org.apache.spark.sql.DataFrame =
+      Tables.probedPartitionRead(spark, tbl, "bucket", Seq(0, 1, 2))
+    assert(read().columns.toSeq == Seq("id", "x", "bucket"))
+    assert(read().count() == 3)
+    // the driver-side footer schema is the one Spark's own inference gives
+    val dirs = Seq(0, 1, 2).map(b => s"$tbl/bucket=$b")
+    assert(Tables.artifactPartitionedParquet(spark, tbl, dirs).schema ==
+      spark.read.option("basePath", tbl).parquet(dirs: _*).schema)
+    val staged = s"$root/staged"
+    Seq((20L, "bb", 7L, 1), (30L, "cc", 8L, 2)).toDF("id", "x", "y", "bucket")
+      .write.partitionBy("bucket").parquet(staged)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
+    for (b <- Seq(1, 2)) {
+      val live = new org.apache.hadoop.fs.Path(tbl, s"bucket=$b")
+      assert(fs.delete(live, true))
+      assert(fs.rename(new org.apache.hadoop.fs.Path(staged, s"bucket=$b"), live))
+    }
+    val after = read()
+    assert(after.columns.toSeq == Seq("id", "x", "y", "bucket"),
+      "the rewritten dirs' new column must be visible")
+    val rows = after.select($"id", $"x", $"y", $"bucket")
+      .as[(Long, String, Option[Long], Int)].collect().toSet
+    assert(rows == Set((1L, "a", None, 0), (20L, "bb", Some(7L), 1), (30L, "cc", Some(8L), 2)))
+  }
 }

@@ -1,0 +1,68 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.{EmbeddingSearch, TextAnalysis}
+import graft.sources.Tables
+
+/** The standing-index reads build their frames from driver-side values:
+  * on a warm, committed index, constructing the frame runs at most the
+  * Spark jobs counted here. A change that brings back a directory
+  * listing, a schema inference or a prune-list collect at construct time
+  * fails this spec.
+  */
+class ConstructJobsSpec extends AnyFunSuite {
+  private val spark = TestSpark.spark
+  private val dir = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `construct` builds (but does not run) a frame. */
+  private def constructJobs(construct: => DataFrame): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftTestBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      construct
+      GraftTestBus.drain(sc)
+    } finally sc.removeSparkListener(l)
+    jobs.get()
+  }
+
+  test("warm standing-index reads construct with ≤ 1 / 0 / ≤ 1 Spark jobs (lexical / hybrid / vector)") {
+    val root = java.nio.file.Files.createTempDirectory("graft_construct").toString
+    val (bm, ivf) = (s"$root/bm", s"$root/ivf")
+    val emb = Tables.embeddings(spark, dir)
+    TextAnalysis.buildBm25Index(Tables.documents(spark, dir), bm)
+    EmbeddingSearch.buildIvfIndex(
+      emb.select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v")), ivf)
+    val qv = emb.where(col("vec_id") === 5).select(col("embedding")).head().getSeq[Float](0)
+    // the hybrid batch is a LocalRelation; the vector batch is not
+    val hybridBatch = spark.createDataFrame(
+      java.util.List.of(Row(5L, "spark join order window", qv)),
+      StructType(Seq(StructField("query_id", LongType), StructField("text", StringType),
+        StructField("embedding", ArrayType(FloatType)))))
+    val vecBatch = spark.createDataFrame(spark.sparkContext.parallelize(
+        (0L until 8L).map(i => Row(i, qv)), 1),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType)))))
+    val reads = Seq[(String, Int, () => DataFrame)](
+      ("bm25TopDocsWithIndex", 1, () => TextAnalysis.bm25TopDocsWithIndex(spark, bm, 5L)),
+      ("hybridServeBatch nprobe 2", 0, () => TextAnalysis.hybridServeBatch(hybridBatch, bm, ivf, nprobe = 2)),
+      ("hybridServeBatch nprobe 0", 0, () => TextAnalysis.hybridServeBatch(hybridBatch, bm, ivf)),
+      ("knnBatchAgainstIvfIndex", 1, () => EmbeddingSearch.knnBatchAgainstIvfIndex(vecBatch, ivf, k = 10)))
+    // warm: the first read after a commit fills the per-commit memos
+    reads.foreach { case (_, _, read) => assert(read().collect().nonEmpty) }
+    reads.foreach { case (name, bound, read) =>
+      val n = constructJobs(read())
+      assert(n <= bound, s"$name ran $n Spark jobs while building its frame (bound $bound)")
+    }
+  }
+}

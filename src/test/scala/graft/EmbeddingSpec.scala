@@ -969,6 +969,10 @@ class EmbeddingSpec extends AnyFunSuite {
     // the pin is steady-state sharing (zero trainings once every artifact
     // is current), not "no lifecycle repair ever"
     assert(graft.SparkEntry.queries("embed_knn_mips_ivf")(spark, dir).count() > 0)
+    // the shared sized quantizer is an artifact too: on an empty artifact
+    // root nothing has trained it yet, so warm it the same way
+    EmbeddingSearch.ensureKmeansIndex(spark, dir, graft.SparkEntry.sizedKmeansIndexDirFor(dir),
+      EmbeddingSearch.ivfCellCount(graft.sources.Tables.embeddings(spark, dir).count()))
     val before = EmbeddingSearch.kmeansTrainings.get()
     val persisted = graft.SparkEntry.queries("embed_knn_join_cells")(spark, dir)
       .as[(Long, Long, Double, Long)].collect().toSet
