@@ -4381,12 +4381,13 @@ object EmbeddingSearch {
   }
 
   /** One micro-batch of the STREAMING kNN serve against a persisted IVF
-    * index (the [[graft.streaming.StreamingOps.knnAgainstIvfIndex]]
-    * kernel — defined here so the streaming tier and any batch caller
-    * share one rule): rank the k-row quantizer per batch vector, keep
-    * `nprobe` cells, then re-rank the probed cells' members by exact
-    * cosine ([[serveProbed]] verbatim). DRIVER-PLANNED: a batch of up to
-    * [[LocalBatchCap]] rows comes to the driver (no job for a
+    * index (the kernel the streaming tier runs through
+    * [[graft.streaming.StreamingOps.eachBatch]] — defined here so the
+    * streaming tier and any batch caller share one rule): rank the k-row
+    * quantizer per batch vector, keep `nprobe` cells, then re-rank the
+    * probed cells' members by exact cosine ([[serveProbed]] verbatim).
+    * DRIVER-PLANNED: a batch of up to [[LocalBatchCap]] rows comes to the
+    * driver (no job for a
     * LocalRelation, else one bounded collect), its probed cell ids are
     * picked there over the memoized quantizer ([[probedCellIdsLocal]]),
     * and only those `cl=` dirs are listed and read, so building the frame
@@ -4458,7 +4459,7 @@ object EmbeddingSearch {
     * `matches` < 0 is computed here (one pushed-predicate count over
     * the index); the streaming tier pays it once per query lifetime —
     * the index is static between extends, and a restart reprices the
-    * branch (the classifyAgainstModel contract at plan granularity).
+    * branch ([[graft.streaming.StreamingOps.filteredKnnAgainstIvfIndex]]).
     * Output: (query_id, vec_id, cosine, rank ≤ k).
     */
   def filteredKnnBatchAgainstIvfIndex(batch: DataFrame, indexPath: String,

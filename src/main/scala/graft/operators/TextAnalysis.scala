@@ -2038,8 +2038,8 @@ object TextAnalysis {
         col("rrf"), col("rank"))
 
   /** MULTI-QUERY hybrid serve over EXTERNAL query texts+vectors — the
-    * micro-batch kernel of the streaming RAG tier ([[graft.streaming
-    * .StreamingOps.hybridAgainstIndexes]]): a batch of
+    * micro-batch kernel of the streaming RAG tier (run per micro-batch
+    * through [[graft.streaming.StreamingOps.eachBatch]]): a batch of
     * (query_id, text, embedding) rows is ranked against the persisted
     * postings (lexical; query terms tokenized from the BATCH text, so
     * per-batch cost scales with batch vocabulary) and the persisted IVF

@@ -1,16 +1,18 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftShim, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.{Dedup, EmbeddingSearch, Multimodal, TextAnalysis}
 
 /** Structured Streaming surface. The reference is strictly batch
   * (SURVEY.md §2.2 — two synchronous MR jobs); these are the streaming
   * equivalents of the batch Events operators, built the Spark-native way:
   * readStream → event-time windows + watermarks → writeStream, and
   * flatMapGroupsWithState for the custom session state the windowed API
-  * can't express.
+  * can't express. Serves of the batch kernels against persisted
+  * artifacts run per micro-batch through the one adapter, [[eachBatch]].
   *
   * At scale: state is partitioned by the grouping key across executors
   * (RocksDB/HDFS-backed state store on a real cluster), watermarks bound
@@ -18,6 +20,76 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * standard unbounded-input design.
   */
 object StreamingOps {
+
+  /** THE micro-batch loop of the streaming tier: each micro-batch of
+    * `stream` runs through the batch `kernel` and the result goes to
+    * `sink` with the batch id. foreachBatch, not a stream-static join,
+    * because the per-row answer of a serve is an aggregation over
+    * stream-static joins (per-doc rollups, per-query top-k) that append
+    * mode cannot express without unbounded state; each micro-batch gets
+    * the REAL batch plan (size-gated broadcasts, partition-pruned index
+    * reads) with streaming's checkpointed batch ids on top, and no state
+    * store. The per-batch contract, for every loop built on it:
+    *   - artifacts are re-read per batch (a fresh parquet listing), so an
+    *     extend, rebuild or retrain takes effect on the NEXT batch with
+    *     no restart; only what a def prices at wiring (the filtered and
+    *     MIPS vector serves) waits for a restart;
+    *   - delivery is at-least-once: a restart replays the last batch the
+    *     checkpoint did not commit, so `sink` must be idempotent by
+    *     `batchId`;
+    *   - per-batch cost is the batch plus the kernel's index reads, never
+    *     stream history.
+    * Serving a persisted artifact is this adapter over its kernel, e.g.
+    * `eachBatch(docs)(TextAnalysis.lmScoreWithModel(_, idx))(sink)`; the
+    * spec drives the LM, line-dedup, classifier (literal and wide), BPE,
+    * quantizer, kNN, range and hybrid kernels this way.
+    */
+  def eachBatch(stream: DataFrame)(kernel: DataFrame => DataFrame)(
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    // the typed parameters select the Scala-function overload of foreachBatch
+    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      sink(kernel(batch), batchId)
+    }
+
+  /** The serve-then-extend loop behind the self-extending dedup and ingest
+    * tiers, on [[eachBatch]]: the micro-batch is materialized ONCE (its
+    * scan feeds the serve and the extend), `serve` annotates it, the sink
+    * receives the annotations, and only then `extend(batch, served,
+    * batchId)` runs — so a failing sink never extends. With `holdServed`
+    * the served frame is materialized too, before the extend: the dedup
+    * loops' verdicts read the very index their extend rewrites. The ingest
+    * loops' extends read only the batch, so they pass `false` and pay no
+    * second materialization. Both checkpoints are released on every path,
+    * a throwing sink or extend included.
+    */
+  private def serveThenExtend(stream: DataFrame, holdServed: Boolean)(
+      serve: DataFrame => DataFrame)(extend: (DataFrame, DataFrame, Long) => Unit)(
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    eachBatch(stream)(identity) { (batch, batchId) =>
+      val b = batch.localCheckpoint()
+      try {
+        val served = if (holdServed) serve(b).localCheckpoint() else serve(b)
+        try {
+          sink(served, batchId)
+          extend(b, served, batchId)
+        } finally if (holdServed) GraftShim.unpersistCheckpoint(served)
+      } finally GraftShim.unpersistCheckpoint(b)
+    }
+
+  /** [[serveThenExtend]] for the dedup-vs-index tiers: the served frame is
+    * the batch annotated with a `status`, and with `extendIndex` the
+    * batch's "unique" rows (input columns only) go to `extend` — so batch
+    * N+1 dedups against corpus + batches 1..N. Crash-replay re-appends a
+    * batch's survivors; duplicate index rows are serving-tolerated by
+    * design, so the loop is idempotent-at-the-index.
+    */
+  private def dedupLoop(stream: DataFrame, extendIndex: Boolean)(
+      annotate: DataFrame => DataFrame)(extend: DataFrame => Unit)(
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    serveThenExtend(stream, holdServed = true)(annotate) { (b, annotated, _) =>
+      if (extendIndex)
+        extend(annotated.where(col("status") === "unique").select(b.columns.map(col): _*))
+    }(sink)
 
   /** Normalize a stream's event-time column for watermarking, loudly:
     * TIMESTAMP passes through; TIMESTAMP_NTZ casts — the identity on the
@@ -75,22 +147,12 @@ object StreamingOps {
     * contract as the batch `Events.events`).
     */
   def attributeClicks(clicks: DataFrame, purchases: DataFrame,
-      window: String = "24 hours", delay: String = "1 hour"): DataFrame = {
-    val c = clicks.select(col("user_id").as("c_user_id"),
-        col("event_id").as("click_id"), eventTimeCol(clicks, "ts").as("click_ts"))
-      .withWatermark("click_ts", delay)
-    val p = purchases.select(col("user_id"),
-        col("event_id").as("purchase_id"), eventTimeCol(purchases, "ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", delay)
-    p.join(c,
-        col("user_id") === col("c_user_id") &&
-          col("click_ts") <= col("purchase_ts") &&
-          col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $window"))
+      window: String = "24 hours", delay: String = "1 hour"): DataFrame =
+    clickPurchaseJoin(clicks, purchases, window, delay, "inner")
       .select(col("user_id"), col("purchase_id"), col("click_id"),
         unix_micros(col("purchase_ts")).as("purchase_us"),
         unix_micros(col("click_ts")).as("click_us"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts"))).as("us_before"))
-  }
 
   /** [[attributeClicks]] as a LEFT OUTER stream-stream join — the audit
     * shape: every purchase emits, attributed or not. Outer results CANNOT
@@ -101,7 +163,22 @@ object StreamingOps {
     * are identical to the inner join.
     */
   def attributeClicksOuter(clicks: DataFrame, purchases: DataFrame,
-      window: String = "24 hours", delay: String = "1 hour"): DataFrame = {
+      window: String = "24 hours", delay: String = "1 hour"): DataFrame =
+    clickPurchaseJoin(clicks, purchases, window, delay, "left_outer")
+      .select(col("user_id"), col("purchase_id"), col("click_id"),
+        unix_micros(col("purchase_ts")).as("purchase_us"),
+        unix_micros(col("click_ts")).as("click_us"))
+
+  /** The one watermarked interval join behind the click-attribution
+    * streams ([[attributeClicks]], [[attributeClicksOuter]],
+    * [[clickAttribution]]): purchases (user_id, purchase_id, purchase_ts)
+    * join clicks (c_user_id, click_id, click_ts) on the same user with
+    * `click_ts ∈ [purchase_ts − window, purchase_ts]`, each side
+    * watermarked by `delay` after [[eventTimeCol]] normalizes its `ts`.
+    * The range condition plus the two watermarks are what bound state.
+    */
+  private def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame,
+      window: String, delay: String, joinType: String): DataFrame = {
     val c = clicks.select(col("user_id").as("c_user_id"),
         col("event_id").as("click_id"), eventTimeCol(clicks, "ts").as("click_ts"))
       .withWatermark("click_ts", delay)
@@ -109,13 +186,10 @@ object StreamingOps {
         col("event_id").as("purchase_id"), eventTimeCol(purchases, "ts").as("purchase_ts"))
       .withWatermark("purchase_ts", delay)
     p.join(c,
-        col("user_id") === col("c_user_id") &&
-          col("click_ts") <= col("purchase_ts") &&
-          col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $window"),
-        "left_outer")
-      .select(col("user_id"), col("purchase_id"), col("click_id"),
-        unix_micros(col("purchase_ts")).as("purchase_us"),
-        unix_micros(col("click_ts")).as("click_us"))
+      col("user_id") === col("c_user_id") &&
+        col("click_ts") <= col("purchase_ts") &&
+        col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $window"),
+      joinType)
   }
 
   /** Streaming exact dedup — the ingestion-time twin of Dedup.exactGroups:
@@ -140,10 +214,8 @@ object StreamingOps {
     * event-time column `tsCol`.
     */
   def dedupExactWithinWatermark(docs: DataFrame, tsCol: String, delay: String): DataFrame =
-    docs.withColumn("text_hash", md5(col("text")))
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("text_hash")
-      .drop("text_hash")
+    dedupWithinWatermark(docs.withColumn("text_hash", md5(col("text"))),
+      "text_hash", tsCol, delay).drop("text_hash")
 
   /** Streaming NEAR-dup dedup at ingest: keep the first document per 48-bit
     * SimHash of its shingle set (the same portable fingerprint as the batch
@@ -214,7 +286,7 @@ object StreamingOps {
     */
   def dedupAgainstIndex(docs: DataFrame, indexPath: String): DataFrame = {
     val spark = docs.sparkSession
-    require(graft.operators.Dedup.dedupIndexExists(spark, indexPath),
+    require(Dedup.dedupIndexExists(spark, indexPath),
       s"no complete dedup index at $indexPath — run buildDedupIndex first")
     val corpusHashes = spark.read.parquet(s"$indexPath/exact")
       .select(col("text_hash"))
@@ -247,7 +319,6 @@ object StreamingOps {
       numHashes: Int = 64, bands: Int = 16, k: Int = 3): DataFrame = {
     import graft.functions.TextFunctions.shingleSet
     import graft.functions.HashFunctions.{hashSet, minhashBandKeys, minhashFromHashes}
-    import graft.operators.Dedup
     val spark = docs.sparkSession
     require(Dedup.dedupIndexExists(spark, indexPath),
       s"no complete dedup index at $indexPath — run buildDedupIndex first")
@@ -282,55 +353,29 @@ object StreamingOps {
   /** The NEAR-dup-vs-corpus serve tier — the streaming twin of the full
     * two-tier batch [[graft.operators.Dedup.dedupAgainst]] (exact md5 join,
     * then MinHash band join against the persisted `bands/` table with the
-    * 62-bit merge-scan Jaccard verify), run per MICRO-BATCH through
-    * `foreachBatch`. Why foreachBatch and not a stream-static join: the
-    * per-document verdict ("does ANY corpus doc clear tau?") is an
-    * aggregation of the band-join candidates per stream doc, and the only
-    * streaming-legal aggregations would either hold unbounded state or
-    * force a non-equi nested-loop join against the corpus-sized static
-    * side; foreachBatch is Structured Streaming's designed escape hatch for
-    * exactly this shape — each micro-batch gets the REAL batch plan
-    * (size-gated batch-side broadcasts, corpus index never reshuffled),
-    * with streaming's checkpointed exactly-once batch ids on top.
-    *
-    * Each batch re-reads the index (a fresh parquet listing), so an
-    * [[graft.operators.Dedup.extendDedupIndex]] takes effect on the NEXT
-    * MICRO-BATCH — no query bounce needed (the exact-tier stream-static
-    * transform above only picks extends up on restart; spec-asserted both
-    * ways). With `extendIndex = true` the loop closes itself: each batch's
-    * unique survivors are appended to the index before the next batch runs,
-    * so batch N+1 near-dedups against corpus + batches 1..N — the
-    * continuous-crawl ingest shape. Crash-replay of a batch re-appends its
-    * survivors; duplicate index rows are serving-tolerated by design (see
-    * extendDedupIndex), so the loop is idempotent-at-the-index. The sink
-    * callback receives the batch's documents annotated with
-    * (exact_keeper, near_keeper, status) and must be idempotent by batchId —
-    * the standard foreachBatch contract. Within-batch duplicates are the
-    * upstream stages' job (compose [[dedupExact]]/[[dedupNearSimhash]]
-    * before this, as [[ingestPipeline]] does).
+    * 62-bit merge-scan Jaccard verify), run per micro-batch through
+    * [[dedupLoop]]. Not a stream-static join: the per-document verdict
+    * ("does ANY corpus doc clear tau?") aggregates the band-join candidates
+    * per stream doc, and the only streaming-legal aggregations would hold
+    * unbounded state or force a non-equi nested-loop join against the
+    * corpus-sized static side. An [[graft.operators.Dedup.extendDedupIndex]]
+    * takes effect on the NEXT micro-batch ([[eachBatch]]'s contract; the
+    * exact-tier stream-static [[dedupAgainstIndex]] only picks extends up
+    * on restart — spec-asserted both ways). With `extendIndex = true` the
+    * loop closes itself: batch N+1 near-dedups against corpus + batches
+    * 1..N — the continuous-crawl ingest shape. The sink receives the
+    * batch's documents annotated with (exact_keeper, near_keeper, status).
+    * Within-batch duplicates are the upstream stages' job (compose
+    * [[dedupExact]]/[[dedupNearSimhash]] before this, as [[ingestPipeline]]
+    * does).
     */
   def dedupAgainstIndexNear(docs: DataFrame, indexPath: String, tau: Double,
       numHashes: Int = 64, bands: Int = 16, k: Int = 3,
       extendIndex: Boolean = false)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      // one scan of the micro-batch feeds verdicts + annotate + extend
-      val b = batch.localCheckpoint()
-      try {
-        val verdicts = graft.operators.Dedup.dedupAgainst(
-          indexPath, b, tau, numHashes, bands, k)
-        val annotated = b.join(verdicts, Seq("doc_id")).localCheckpoint()
-        try {
-          sink(annotated, batchId)
-          if (extendIndex) {
-            val survivors = annotated.where(col("status") === "unique")
-              .select(b.columns.map(col): _*)
-            graft.operators.Dedup.extendDedupIndex(
-              indexPath, survivors, numHashes, bands, k)
-          }
-        } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(annotated)
-      } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(b)
-    }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    dedupLoop(docs, extendIndex)(b =>
+      b.join(Dedup.dedupAgainst(indexPath, b, tau, numHashes, bands, k), Seq("doc_id"))
+    )(Dedup.extendDedupIndex(indexPath, _, numHashes, bands, k))(sink)
 
   /** Streaming MAINTENANCE of the mergeable daily-aggregate table
     * ([[graft.operators.Events.dailyAggregates]]' schema): each micro-batch
@@ -353,9 +398,8 @@ object StreamingOps {
     * Input contract: streaming frame with (ts: timestamp, event_type,
     * value: double).
     */
-  def maintainDailyAggregates(events: DataFrame, tablePath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+  def maintainDailyAggregates(events: DataFrame, tablePath: String): DataStreamWriter[Row] =
+    events.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
       val sp = batch.sparkSession
       val partials = batch
         .groupBy(expr("unix_micros(ts) div 86400000000").as("event_day"), col("event_type"))
@@ -371,8 +415,7 @@ object StreamingOps {
         // Hadoop-FS probe (r16): the sink table may live on any
         // filesystem, like the artifact store
         val tp = new org.apache.hadoop.fs.Path(tablePath)
-        val exists = tp.getFileSystem(
-          org.apache.spark.sql.GraftShim.sessionHadoopConf()).exists(tp)
+        val exists = tp.getFileSystem(GraftShim.sessionHadoopConf()).exists(tp)
         val merged = if (!exists) partials else
           sp.read.parquet(tablePath)
             .where(col("event_day").isin(days: _*))
@@ -391,39 +434,25 @@ object StreamingOps {
           .option("partitionOverwriteMode", "dynamic")
           .mode("overwrite")
           .parquet(tablePath)
-        finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(out)
-      } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(partials)
+        finally GraftShim.unpersistCheckpoint(out)
+      } finally GraftShim.unpersistCheckpoint(partials)
     }
 
   /** The EMBEDDING-modality twin of [[dedupAgainstIndexNear]]: each
     * micro-batch of (vec_id, embedding) rows runs the full batch
     * [[graft.operators.EmbeddingSearch.vecDedupAgainst]] (hyperplane-LSH
     * band join against the persisted vector index, exact-cosine verify)
-    * through foreachBatch — same re-read-per-batch extend visibility, same
-    * idempotent-sink contract. The sink receives the batch annotated with
+    * through [[dedupLoop]]. The sink receives the batch annotated with
     * (near_keeper, status); with `extendIndex = true` each batch's unique
     * survivors join the index before the next batch
     * ([[graft.operators.EmbeddingSearch.extendVecDedupIndex]]).
     */
   def vecDedupAgainstIndexNear(vecs: DataFrame, indexPath: String, tau: Double,
       nPlanes: Int = 16, extendIndex: Boolean = false)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val b = batch.localCheckpoint()
-      try {
-        val verdicts = graft.operators.EmbeddingSearch.vecDedupAgainst(
-          indexPath, b, tau, nPlanes)
-        val annotated = b.join(verdicts, Seq("vec_id")).localCheckpoint()
-        try {
-          sink(annotated, batchId)
-          if (extendIndex) {
-            val survivors = annotated.where(col("status") === "unique")
-              .select(b.columns.map(col): _*)
-            graft.operators.EmbeddingSearch.extendVecDedupIndex(indexPath, survivors, nPlanes)
-          }
-        } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(annotated)
-      } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(b)
-    }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    dedupLoop(vecs, extendIndex)(b =>
+      b.join(EmbeddingSearch.vecDedupAgainst(indexPath, b, tau, nPlanes), Seq("vec_id"))
+    )(EmbeddingSearch.extendVecDedupIndex(indexPath, _, nPlanes))(sink)
 
   /** STATELESS in-stream image near-dup match against the persisted phash
     * index ([[graft.operators.Multimodal.buildPhashIndex]]) — the image
@@ -471,7 +500,7 @@ object StreamingOps {
     import graft.functions.HashFunctions.{simhashShardedChunkKeys, hamming}
     require(maxDist <= 3, "4-chunk index is only lossless for Hamming <= 3")
     val spark = stream.sparkSession
-    require(graft.operators.Multimodal.fpIndexExistsAt(indexPath),
+    require(Multimodal.fpIndexExistsAt(indexPath),
       s"no complete fingerprint index at $indexPath — $buildHint")
     val corpus = spark.read.parquet(s"$indexPath/$table")
       .select(col("doc_id").as("corpus_match"), col(fpCol).as("__c_fp"),
@@ -487,106 +516,77 @@ object StreamingOps {
         hamming(col(fpCol), col("__c_fp")).as("hamming"))
   }
 
-  /** Watermark-BOUNDED within-stream image dedup — the image twin of
-    * [[dedupExactWithinWatermark]], completing the modality-parity story:
-    * keep the FIRST image per 48-bit dHash fingerprint, with state for
-    * fingerprints older than the event-time watermark dropped by the engine
-    * instead of growing forever (8 B of state per distinct live image). The
-    * trade is the same as the text tier's and explicit: a duplicate image
-    * arriving more than `delay` after its original is RE-ADMITTED —
-    * downstream the periodic batch [[graft.operators.Multimodal.phashNearDupPairs]]
-    * sweep catches it, the standard two-tier design. Equal-fingerprint
-    * collapse covers exact dups and the re-encode/resize variants dHash is
-    * invariant to; Hamming 1–3 neighbors are the batch sweep's job (a
-    * single-key streaming dedup cannot express them losslessly). Input
-    * carries (doc_id, phash, `tsCol`) — fingerprints from the upstream
-    * decode map stage, never rasters.
+  /** Watermark-BOUNDED within-stream dedup on one key column — the form
+    * behind [[dedupExactWithinWatermark]] and the modality-parity tiers:
+    * keep the FIRST row per `keyCol` value, with state for keys older than
+    * the event-time watermark dropped by the engine instead of growing
+    * forever (one key of state per distinct live item). The trade is
+    * explicit: a duplicate arriving more than `delay` after its original
+    * is RE-ADMITTED, and a periodic batch sweep catches it — the standard
+    * two-tier design. Image streams pass `keyCol = "phash"` (48-bit dHash;
+    * the batch sweep is [[graft.operators.Multimodal.phashNearDupPairs]]),
+    * audio streams `"afp"` ([[graft.operators.Multimodal.audioNearDupPairs]]).
+    * Equal-fingerprint collapse covers exact dups and the re-encode/resize
+    * variants the fingerprint is invariant to; Hamming 1–3 neighbors are
+    * the batch sweep's job (a single-key streaming dedup cannot express
+    * them losslessly). Input carries (doc_id, `keyCol`, `tsCol`) —
+    * fingerprints from the upstream decode map stage, never raw media.
     */
-  def dedupPhashWithinWatermark(images: DataFrame, tsCol: String, delay: String): DataFrame =
-    images.withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("phash")
-
-  /** The AUDIO twin of [[dedupPhashWithinWatermark]]: keep the FIRST clip
-    * per 48-bit audio fingerprint within the event-time watermark — 8 B of
-    * state per distinct live clip, state older than `delay` evicted by the
-    * engine. Same explicit trade: a duplicate arriving later than `delay`
-    * is re-admitted and the periodic batch
-    * [[graft.operators.Multimodal.audioNearDupPairs]] sweep catches it.
-    * Input carries (doc_id, afp, `tsCol`) — fingerprints from the upstream
-    * decode map stage, never waveforms.
-    */
-  def dedupAudioFpWithinWatermark(audio: DataFrame, tsCol: String, delay: String): DataFrame =
-    audio.withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("afp")
+  def dedupWithinWatermark(stream: DataFrame, keyCol: String, tsCol: String,
+      delay: String): DataFrame =
+    stream.withWatermark(tsCol, delay).dropDuplicatesWithinWatermark(keyCol)
 
   /** Per-micro-batch image dedup-vs-index with per-image VERDICTS — the
     * image twin of [[dedupAgainstIndexNear]]: each micro-batch of
     * (doc_id, phash) fingerprints runs the batch
     * [[graft.operators.Multimodal.phashDedupAgainst]] (4×12-bit pigeonhole
     * chunk join against the persisted index, exact Hamming verify) through
-    * foreachBatch, and the sink receives the batch annotated with
+    * [[dedupLoop]], and the sink receives the batch annotated with
     * (dup_of, hamming, status) — status "dup" with the closest corpus
-    * match (min Hamming, ties to the lowest doc_id) or "unique". Same
-    * re-read-per-batch extend visibility and idempotent-by-batchId sink
-    * contract as the text/vector twins; with `extendIndex = true` each
-    * batch's unique fingerprints join the index before the next batch runs
-    * (crash-replay re-appends — duplicate index rows are serving-tolerated
-    * by design, so the loop is idempotent-at-the-index).
+    * match (min Hamming, ties to the lowest doc_id) or "unique". With
+    * `extendIndex = true` each batch's unique fingerprints join the index
+    * before the next batch runs.
     */
   def phashDedupAgainstIndexNear(images: DataFrame, indexPath: String,
       maxDist: Int = 3, extendIndex: Boolean = false)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     fpDedupAgainstIndexNearImpl(images, indexPath, "phashes", "phash",
       maxDist, extendIndex)(sink)
 
   /** The AUDIO twin of [[phashDedupAgainstIndexNear]]: per-micro-batch
     * verdicts (dup_of, hamming, status) for a stream of audio fingerprints
     * against the persisted audio index, with the same self-extending-loop
-    * option and idempotent-by-batchId sink contract.
+    * option.
     */
   def audioDedupAgainstIndexNear(audio: DataFrame, indexPath: String,
       maxDist: Int = 3, extendIndex: Boolean = false)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     fpDedupAgainstIndexNearImpl(audio, indexPath, "afps", "afp",
       maxDist, extendIndex)(sink)
 
-  /** The one kernel behind the modality serve tiers: each micro-batch
-    * runs the batch fingerprint-vs-index join
-    * ([[graft.operators.Multimodal.fpDedupAgainstAt]]), collapses matches
-    * to one verdict per item (closest corpus match; ties to the lowest
-    * doc_id), and hands the annotated batch to the sink; with
-    * `extendIndex` the batch's unique fingerprints join the index before
-    * the next batch (crash-replay re-appends — duplicate index rows are
-    * serving-tolerated, the loop is idempotent-at-the-index).
+  /** The one serve behind the modality dedup tiers: the batch
+    * fingerprint-vs-index join ([[graft.operators.Multimodal.fpDedupAgainstAt]])
+    * collapsed to one verdict per item (closest corpus match; ties to the
+    * lowest doc_id), run through [[dedupLoop]]; the extend appends the
+    * batch's unique (doc_id, fingerprint) rows to the `$table` table.
     */
   private def fpDedupAgainstIndexNearImpl(stream: DataFrame, indexPath: String,
       table: String, fpCol: String, maxDist: Int, extendIndex: Boolean)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      import graft.operators.Multimodal
-      val b = batch.localCheckpoint()
-      try {
-        val matches = Multimodal.fpDedupAgainstAt(indexPath,
-          b.select(col("doc_id"), col(fpCol)), table, fpCol, maxDist)
-        // one verdict per item: the closest corpus match wins
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("doc_id")).orderBy(col("hamming").asc, col("dup_of").asc)
-        val verdicts = matches
-          .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-          .select(col("doc_id"), col("dup_of"), col("hamming"))
-        val annotated = b.join(verdicts, Seq("doc_id"), "left")
-          .withColumn("status", when(col("dup_of").isNotNull, lit("dup")).otherwise(lit("unique")))
-          .localCheckpoint()
-        try {
-          sink(annotated, batchId)
-          if (extendIndex) {
-            val survivors = annotated.where(col("status") === "unique")
-              .select(col("doc_id"), col(fpCol))
-            Multimodal.extendFpIndexAt(indexPath, survivors, table)
-          }
-        } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(annotated)
-      } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(b)
-    }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    dedupLoop(stream, extendIndex) { b =>
+      val matches = Multimodal.fpDedupAgainstAt(indexPath,
+        b.select(col("doc_id"), col(fpCol)), table, fpCol, maxDist)
+      // one verdict per item: the closest corpus match wins
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("doc_id")).orderBy(col("hamming").asc, col("dup_of").asc)
+      val verdicts = matches
+        .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
+        .select(col("doc_id"), col("dup_of"), col("hamming"))
+      b.join(verdicts, Seq("doc_id"), "left")
+        .withColumn("status", when(col("dup_of").isNotNull, lit("dup")).otherwise(lit("unique")))
+    } { survivors =>
+      Multimodal.extendFpIndexAt(indexPath, survivors.select(col("doc_id"), col(fpCol)), table)
+    }(sink)
 
   /** Streaming PII scrub — the ingestion-time twin of
     * [[graft.operators.TextAnalysis.piiScrub]]: the same three
@@ -603,138 +603,6 @@ object StreamingOps {
       regexp_replace(regexp_replace(regexp_replace(col("text"),
         EmailPattern, "<EMAIL>"), PhonePattern, "<PHONE>"), UrlPattern, "<URL>"))
   }
-
-  /** Streaming LM quality scoring against a PERSISTED model
-    * ([[graft.operators.TextAnalysis.buildLmIndex]]) — the serve half of
-    * the CCNet perplexity filter: the model trains once on the curated
-    * corpus, every ingest batch scores against it. foreachBatch for the
-    * same reason as [[dedupAgainstIndexNear]]: the per-document score is
-    * an aggregation over the batch's exploded token stream (illegal as an
-    * append-mode streaming agg), and each micro-batch should get the real
-    * batch plan — size-gated broadcasts of the count tables, per-doc
-    * rollup, checkpointed exactly-once batch ids on top. A re-trained
-    * model takes effect on the NEXT micro-batch (fresh parquet listing per
-    * batch). Sink receives (doc_id, n_tokens, avg_logprob) per batch.
-    */
-  def lmScoreAgainstModel(docs: DataFrame, indexPath: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.TextAnalysis.lmScoreWithModel(batch, indexPath), batchId)
-    }
-
-  /** Streaming line-level boilerplate dedup against the PERSISTED
-    * boilerplate table ([[graft.operators.TextAnalysis
-    * .buildBoilerplateIndex]]) — the line df is corpus-global, so the
-    * stream loads it instead of computing it (the same
-    * persisted-index treatment as the near-dup tier). foreachBatch because
-    * the per-document reassembly is an aggregation over the batch's
-    * exploded lines; the boilerplate side is an 8-byte-hash table joined
-    * size-gated. Sink receives (doc_id, n_lines, n_kept, clean_text).
-    */
-  def lineDedupAgainstIndex(docs: DataFrame, indexPath: String,
-      lineTokens: Int = 10, minDf: Long = 2)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.TextAnalysis.lineDedupFromIndex(
-        batch, indexPath, lineTokens, minDf), batchId)
-    }
-
-  /** Streaming quality-classifier serve: each micro-batch scored against
-    * the PERSISTED weight table (the serve half of
-    * [[graft.operators.TextAnalysis.qualityClassifierPersisted]]) — the
-    * model is corpus-trained, so the stream LOADS it instead of computing
-    * it (the lmScoreAgainstModel discipline). Zero training shuffles per
-    * batch; a re-trained model takes effect next batch because the
-    * 17-row weight table re-loads per batch. Sink receives
-    * (doc_id, score, predicted).
-    */
-  def classifyAgainstModel(docs: DataFrame, modelPath: String, dims: Int = 16)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.TextAnalysis.scoreWithClassifier(batch,
-        graft.operators.TextAnalysis.loadClassifierModel(
-          batch.sparkSession, modelPath), dims), batchId)
-    }
-
-  /** [[classifyAgainstModel]] at PRODUCTION MODEL WIDTH: the wide
-    * table-join serve ([[graft.operators.TextAnalysis
-    * .scoreWithClassifierWide]]) behind the same foreachBatch contract —
-    * the weight TABLE is joined size-gated instead of inlined as a
-    * dims-sized literal plan, so the streaming tier works at the same
-    * 100k-dim widths the batch wide serve does (row-identical to the
-    * literal path at any width — spec-pinned). The table re-loads per
-    * batch; zero training shuffles on the serve path. Sink receives
-    * (doc_id, score, predicted).
-    */
-  def classifyWideAgainstModel(docs: DataFrame, modelPath: String, dims: Int = 16)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.TextAnalysis.scoreWithClassifierWide(batch,
-        graft.operators.TextAnalysis.loadClassifierModel(
-          batch.sparkSession, modelPath), dims), batchId)
-    }
-
-  /** Streaming token budgeting: per-batch post-BPE token counts from the
-    * PERSISTED merge table (the serve half of
-    * [[graft.operators.TextAnalysis.bpeTokenCountsPersisted]]) — the
-    * ≤rounds-row model re-loads per batch; counting broadcasts the BATCH's
-    * own distinct-word tokenization, so per-batch cost scales with the
-    * batch vocabulary, never the training corpus. Sink receives
-    * (doc_id, n_words, n_chars, n_bpe_tokens).
-    */
-  def bpeTokensAgainstModel(docs: DataFrame, modelPath: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.TextAnalysis.bpeTokenCountsWith(batch,
-        graft.operators.TextAnalysis.loadBpeMerges(
-          batch.sparkSession, modelPath)), batchId)
-    }
-
-  /** Streaming cell routing against the PERSISTED k-means quantizer
-    * ([[graft.operators.EmbeddingSearch.saveKmeansIndex]]) — the VECTOR
-    * twin of [[classifyAgainstModel]], completing the trained-artifact
-    * serve matrix (LM, boilerplate, classifier, BPE, quantizer): each
-    * micro-batch of (vec_id, embedding) is routed to its trained cell
-    * (argmax rounded cosine, lowest-cl tie-break) with its centrality —
-    * what an online embedding ingest runs to grow an IVF index cell-wise
-    * or watch cluster balance drift. The k-row quantizer re-loads per
-    * batch (a re-trained model takes effect on the NEXT batch); the
-    * assignment is the zero-shuffle broadcast-centroid map pass, so
-    * per-batch cost is the batch scan, never the corpus. Sink receives
-    * (cl, vec_id, centrality).
-    */
-  def assignAgainstKmeansIndex(vecs: DataFrame, indexPath: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.EmbeddingSearch.assignWithIndex(batch,
-        graft.operators.EmbeddingSearch.loadKmeansIndex(
-          batch.sparkSession, indexPath)), batchId)
-    }
-
-  /** Streaming kNN serve against the persisted IVF index — the
-    * NEIGHBOR-GRAPH tier of the trained-artifact serve matrix (the r12
-    * verdict's stretch item, next to [[assignAgainstKmeansIndex]]'s
-    * cell-routing tier): each micro-batch of (vec_id, embedding) vectors
-    * gets its top-k exact-cosine neighbors from the probed cells of the
-    * persisted index ([[graft.operators.EmbeddingSearch
-    * .knnBatchAgainstIvfIndex]] — ONE kernel for the batch and streaming
-    * shapes, so the tiers cannot drift). What an online embedding ingest
-    * runs to attach arriving vectors to the corpus kNN graph without
-    * retraining the quantizer or rescanning indexed vectors. foreachBatch
-    * (stream-static join + per-batch rank aggregation); the index
-    * re-loads per batch, so an extended/retrained index takes effect on
-    * the NEXT batch (the classifyAgainstModel contract). Per-batch cost =
-    * the batch scan + the probed cells' partition-pruned bytes — never
-    * the corpus, never stream history; no state store. Sink receives
-    * (query_id, vec_id, cosine, rank).
-    */
-  def knnAgainstIvfIndex(vecs: DataFrame, indexPath: String, k: Int = 3,
-      nprobe: Int = 2)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.EmbeddingSearch.knnBatchAgainstIvfIndex(
-        batch, indexPath, k, nprobe), batchId)
-    }
 
   /** The VECTOR-INDEX ingest loop (r15, the r14 verdict's item 5 —
     * [[dedupAgainstIndexNear]]'s closed maintenance loop mirrored onto
@@ -769,23 +637,17 @@ object StreamingOps {
     */
   def knnIngestAgainstIvfIndex(vecs: DataFrame, indexPath: String,
       k: Int = 3, nprobe: Int = 2, extendIndex: Boolean = false)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val b = batch.localCheckpoint()
-      try {
-        sink(graft.operators.EmbeddingSearch.knnBatchAgainstIvfIndex(
-          b, indexPath, k, nprobe), batchId)
-        if (extendIndex) {
-          val others = b.columns.filterNot(Set("vec_id", "embedding")).map(col)
-          graft.operators.EmbeddingSearch.extendIvfIndex(indexPath,
-            b.select(Seq(col("vec_id"),
-              transform(col("embedding"), x => x.cast("double")).as("v")) ++ others: _*),
-            idempotenceToken = Some(s"batch_$batchId"))
-          graft.operators.EmbeddingSearch.ensureFreshIvfIndex(
-            b.sparkSession, indexPath)
-        }
-      } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(b)
-    }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    serveThenExtend(vecs, holdServed = false)(
+        EmbeddingSearch.knnBatchAgainstIvfIndex(_, indexPath, k, nprobe)) { (b, _, batchId) =>
+      if (extendIndex) {
+        val others = b.columns.filterNot(Set("vec_id", "embedding")).map(col)
+        EmbeddingSearch.extendIvfIndex(indexPath,
+          b.select(Seq(col("vec_id"), embeddingAsV) ++ others: _*),
+          idempotenceToken = Some(s"batch_$batchId"))
+        EmbeddingSearch.ensureFreshIvfIndex(b.sparkSession, indexPath)
+      }
+    }(sink)
 
   /** The BM25-INDEX ingest loop — [[knnIngestAgainstIvfIndex]]'s lexical
     * sibling: each micro-batch of (doc_id, text) rows is appended to the
@@ -793,7 +655,8 @@ object StreamingOps {
     * ([[graft.operators.TextAnalysis.extendBm25Index]] — postings/doclens/
     * fwd appended in one commit, `_DONE` recommitted with a fresh token,
     * auto-compaction at the >16-files/dir threshold), so the serve tiers
-    * ([[hybridAgainstIndexes]], the BM25 entries) see corpus + batches
+    * ([[graft.operators.TextAnalysis.hybridServeBatch]], the BM25
+    * entries) see corpus + batches
     * 1..N on their next index read. The sink receives the batch
     * annotated with `n_tokens` — the SAME `\\W+` tokenizer count the
     * appended doclens row stores, so a sink-side audit can reconcile
@@ -806,17 +669,12 @@ object StreamingOps {
     * single ingest stream per index assumed, as for any extend).
     */
   def bm25IngestExtendIndex(docs: DataFrame, indexPath: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val b = batch.localCheckpoint()
-      try {
-        val annotated = b.withColumn("n_tokens",
-          size(graft.functions.TextFunctions.tokenize(col("text"))))
-        sink(annotated, batchId)
-        graft.operators.TextAnalysis.extendBm25Index(indexPath, b,
-          idempotenceToken = Some(s"batch_$batchId"))
-      } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(b)
-    }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    serveThenExtend(docs, holdServed = false)(
+        _.withColumn("n_tokens", size(graft.functions.TextFunctions.tokenize(col("text"))))) {
+      (b, _, batchId) =>
+        TextAnalysis.extendBm25Index(indexPath, b, idempotenceToken = Some(s"batch_$batchId"))
+    }(sink)
 
   /** The kNN-GRAPH ingest loop (r16 — [[knnIngestAgainstIvfIndex]]'s
     * sibling for the navigable-graph artifact, completing the
@@ -829,7 +687,7 @@ object StreamingOps {
     * graph walk reaches batches 1..N through merged edges. The sink
     * receives the batch annotated with each vector's assigned home
     * cell (`cl`, from the artifact's own stored quantizer — the
-    * assignAgainstKmeansIndex routing tier, so a sink-side audit can
+    * [[graft.operators.EmbeddingSearch.assignWithIndex]] routing, so a sink-side audit can
     * reconcile cell balance without reading the artifact back).
     * foreachBatch replay is idempotent via the `_BATCH` batch token
     * (the extendIvfIndex contract); one ingest stream per graph, as
@@ -837,21 +695,18 @@ object StreamingOps {
     * batch refuses loudly with the rebuild remedy.
     */
   def knnGraphIngestExtend(vecs: DataFrame, graphPath: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val b = batch.localCheckpoint()
-      try {
-        val asV = b.select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-        sink(graft.operators.EmbeddingSearch.assignWithIndex(b,
-          graft.operators.EmbeddingSearch.loadKmeansIndex(
-            b.sparkSession, s"$graphPath/cent")), batchId)
-        graft.operators.EmbeddingSearch.extendKnnGraph(graphPath, asV,
-          idempotenceToken = Some(s"batch_$batchId"))
-      } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(b)
-    }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    serveThenExtend(vecs, holdServed = false)(b => EmbeddingSearch.assignWithIndex(b,
+        EmbeddingSearch.loadKmeansIndex(b.sparkSession, s"$graphPath/cent"))) { (b, _, batchId) =>
+      EmbeddingSearch.extendKnnGraph(graphPath, b.select(col("vec_id"), embeddingAsV),
+        idempotenceToken = Some(s"batch_$batchId"))
+    }(sink)
 
-  /** Streaming FILTERED kNN serve — [[knnAgainstIvfIndex]] under a corpus
+  /** The stream's float `embedding` as the `v` doubles the IVF and graph
+    * extends store. */
+  private def embeddingAsV: Column = transform(col("embedding"), _.cast("double")).as("v")
+
+  /** Streaming FILTERED kNN serve — the kNN serve under a corpus
     * predicate, against a METADATA-CARRYING persisted index
     * ([[graft.operators.EmbeddingSearch.buildIvfIndex]] with `meta`):
     * each micro-batch of (vec_id, embedding) queries gets its top-k
@@ -863,19 +718,15 @@ object StreamingOps {
     * batch — the index is static between extends, so per-batch cost
     * stays at the probed partitions' matching rows plus the batch scan,
     * never a per-batch corpus count; an extend's new selectivity takes
-    * effect on RESTART (the classifyAgainstModel contract at plan
-    * granularity — the kernel itself re-reads the index per batch, so
-    * appended VECTORS are searched immediately; only the branch/width
+    * effect on RESTART (the kernel itself re-reads the index per batch,
+    * so appended VECTORS are searched immediately; only the branch/width
     * pricing waits). Sink receives (query_id, vec_id, cosine, rank).
     */
-  def filteredKnnAgainstIvfIndex(vecs: DataFrame, indexPath: String,
-      pred: org.apache.spark.sql.Column, k: Int = 5)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+  def filteredKnnAgainstIvfIndex(vecs: DataFrame, indexPath: String, pred: Column, k: Int = 5)(
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val matches = pricedFilterMatches(vecs, indexPath, pred)
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.EmbeddingSearch.filteredKnnBatchAgainstIvfIndex(
-        batch, indexPath, pred, k, matches), batchId)
-    }
+    eachBatch(vecs)(
+      EmbeddingSearch.filteredKnnBatchAgainstIvfIndex(_, indexPath, pred, k, matches))(sink)
   }
 
   /** The ONE wiring-time pricing both filtered streaming tiers share:
@@ -887,10 +738,8 @@ object StreamingOps {
     * kernel's require inside the first micro-batch's foreachBatch,
     * terminating the started streaming query (ADVICE r13).
     */
-  private def pricedFilterMatches(vecs: DataFrame, indexPath: String,
-      pred: org.apache.spark.sql.Column): Long = {
-    val matches = graft.operators.EmbeddingSearch
-      .storedIvfMatches(vecs.sparkSession, indexPath, pred)
+  private def pricedFilterMatches(vecs: DataFrame, indexPath: String, pred: Column): Long = {
+    val matches = EmbeddingSearch.storedIvfMatches(vecs.sparkSession, indexPath, pred)
     require(matches > 0,
       s"filter '$pred' matches no vectors in the index at $indexPath — " +
         "refusing to wire a streaming serve that would fail its first batch")
@@ -900,94 +749,40 @@ object StreamingOps {
   /** Streaming FILTERED MIPS serve — the [[filteredKnnAgainstIvfIndex]]
     * sibling with inner-product scoring (one kernel,
     * [[graft.operators.EmbeddingSearch.filteredMipsBatchAgainstIvfIndex]],
-    * for the batch and streaming shapes — r14, completing the streaming
-    * standing-serve matrix). Branch input priced once at wiring with the
-    * zero-match refusal AT wiring (the filteredKnnAgainstIvfIndex
-    * contract); per-batch cost = the probed partitions' matching rows +
-    * the batch scan. Sink receives (query_id, vec_id, ip, rank).
+    * for the batch and streaming shapes). Branch input priced once at
+    * wiring with the zero-match refusal AT wiring (the
+    * filteredKnnAgainstIvfIndex contract); per-batch cost = the probed
+    * partitions' matching rows + the batch scan. Sink receives
+    * (query_id, vec_id, ip, rank).
     */
-  def filteredMipsAgainstIvfIndex(vecs: DataFrame, indexPath: String,
-      pred: org.apache.spark.sql.Column, k: Int = 5)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+  def filteredMipsAgainstIvfIndex(vecs: DataFrame, indexPath: String, pred: Column, k: Int = 5)(
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val matches = pricedFilterMatches(vecs, indexPath, pred)
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.EmbeddingSearch.filteredMipsBatchAgainstIvfIndex(
-        batch, indexPath, pred, k, matches), batchId)
-    }
+    eachBatch(vecs)(
+      EmbeddingSearch.filteredMipsBatchAgainstIvfIndex(_, indexPath, pred, k, matches))(sink)
   }
 
-  /** Streaming MIPS serve against a persisted IVF index — the
-    * inner-product twin of [[knnAgainstIvfIndex]] (one kernel,
+  /** Streaming MIPS serve against a persisted IVF index (one kernel,
     * [[graft.operators.EmbeddingSearch.mipsBatchAgainstIvfIndex]], for
     * the batch and streaming shapes): each micro-batch of
     * (vec_id, embedding) queries gets its top-k by EXACT inner product
     * from the IP-ranked probed cells of the stored index. The
-    * count-derived probe width is priced once at wiring (one
-    * parquet-metadata count — the index is static between extends; a
-    * restart reprices, the classifyAgainstModel contract); per-batch
-    * cost is the probed cl= partitions' bytes plus the batch scan,
-    * never the corpus. Sink receives (query_id, vec_id, ip, rank).
+    * count-derived probe width is priced once at wiring, by the same
+    * count rule the kernel applies per call: the stored row count and the
+    * quantizer size, both from the commit-state memos (no job against an
+    * unchanged index). The index is static between extends; a restart
+    * reprices. Per-batch cost is the probed cl= partitions' bytes plus
+    * the batch scan, never the corpus. Sink receives
+    * (query_id, vec_id, ip, rank).
     */
-  def mipsAgainstIvfIndex(vecs: DataFrame, indexPath: String, k: Int = 5,
-      nprobe: Int = 0)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+  def mipsAgainstIvfIndex(vecs: DataFrame, indexPath: String, k: Int = 5, nprobe: Int = 0)(
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val spark = vecs.sparkSession
     val np = if (nprobe > 0) nprobe
-      else graft.operators.EmbeddingSearch.cellsNprobeFor(
-        spark.read.parquet(s"$indexPath/ivf").count(),
-        spark.read.parquet(s"$indexPath/cent").count().toInt)
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.EmbeddingSearch.mipsBatchAgainstIvfIndex(
-        batch, indexPath, k, np), batchId)
-    }
+      else EmbeddingSearch.cellsNprobeFor(EmbeddingSearch.storedIvfRows(spark, indexPath),
+        EmbeddingSearch.cachedCentRows(spark, indexPath).length)
+    eachBatch(vecs)(EmbeddingSearch.mipsBatchAgainstIvfIndex(_, indexPath, k, np))(sink)
   }
-
-  /** Streaming SOUND range serve against a persisted IVF index — the
-    * radius twin of [[knnAgainstIvfIndex]] (one kernel,
-    * [[graft.operators.EmbeddingSearch.rangeBatchAgainstIvfIndex]], for
-    * the batch and streaming shapes): each micro-batch of
-    * (vec_id, embedding) queries gets EVERY indexed vector within
-    * cosine ≥ τ, exactly — the triangle bound probes from the index's
-    * extend-merged radii table, so completeness holds across the
-    * index's whole lifecycle without a corpus scan per batch. `pred`
-    * composes the metadata filter (payload-carrying index). Per-batch
-    * cost = the probed cl= partitions' (matching) bytes + the batch
-    * scan. Sink receives (query_id, vec_id, cosine).
-    */
-  def rangeAgainstIvfIndex(vecs: DataFrame, indexPath: String,
-      tau: Double = 0.3,
-      pred: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(true))(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.EmbeddingSearch.rangeBatchAgainstIvfIndex(
-        batch, indexPath, tau, pred), batchId)
-    }
-
-  /** Streaming HYBRID retrieval serve — the online RAG query tier over
-    * BOTH persisted retrieval artifacts at once: each micro-batch of
-    * (query_id, text, embedding) queries is ranked lexically against the
-    * persisted BM25 postings ([[graft.operators.TextAnalysis
-    * .buildBm25Index]]) and semantically against the persisted IVF vector
-    * table ([[graft.operators.EmbeddingSearch.buildIvfIndex]]), fused
-    * per query with reciprocal-rank fusion ([[graft.operators
-    * .TextAnalysis.hybridServeBatch]] — one definition for the batch and
-    * streaming shapes, so the tiers cannot drift). foreachBatch because
-    * both sides are per-batch aggregations over stream-static joins;
-    * the indexes re-load per batch, so a rebuilt/extended index takes
-    * effect on the NEXT batch (the classifyAgainstModel contract).
-    * Per-batch cost scales with the batch's vocabulary and the postings/
-    * vector scans — never with stream history; no state store at all.
-    * Sink receives (query_id, doc_id, lex_rank, sem_rank, rrf, rank).
-    */
-  def hybridAgainstIndexes(queries: DataFrame, bm25IndexPath: String,
-      ivfIndexPath: String, kEach: Int = 20, kTop: Int = 10, rrfK: Int = 60,
-      nprobe: Int = 0)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      sink(graft.operators.TextAnalysis.hybridServeBatch(
-        batch, bm25IndexPath, ivfIndexPath, kEach, kTop, rrfK,
-        nprobe = nprobe), batchId)
-    }
 
   /** The COMPOSED ingest chain a 100 TB training-data stream runs, ordered
     * cheapest-first so each stage sheds volume before the next pays for it:
@@ -998,9 +793,7 @@ object StreamingOps {
     * stage. Input/output schema: (doc_id, text, ...) — preserved.
     */
   def ingestPipeline(docs: DataFrame, evalGramHashes: DataFrame): DataFrame =
-    dedupNearSimhash(dedupExact(decontaminate(
-      docs.where(graft.operators.TextAnalysis.qualityPredicate(col("text"))),
-      evalGramHashes)))
+    ingestChain(docs, evalGramHashes)
 
   /** [[ingestPipeline]] with the round-6 hygiene stage in place: the PII
     * scrub runs right after the quality gate (stateless, schema-
@@ -1009,22 +802,27 @@ object StreamingOps {
     * collapse as the duplicates they are.
     */
   def ingestPipelineHygiene(docs: DataFrame, evalGramHashes: DataFrame): DataFrame =
-    dedupNearSimhash(dedupExact(decontaminate(
-      scrubPii(docs.where(graft.operators.TextAnalysis.qualityPredicate(col("text")))),
-      evalGramHashes)))
+    ingestChain(docs, evalGramHashes, hygiene = scrubPii)
 
   /** [[ingestPipeline]] with the vs-CORPUS tier in place: after the
     * stateless quality/decontamination stages, documents already in the
     * persisted dedup index are dropped by the stateless stream-static anti
     * join ([[dedupAgainstIndex]]) BEFORE any within-stream dedup state is
     * paid for them — yesterday's corpus never occupies today's state store.
-    * Same cheapest-first ordering, one lazy streaming DAG.
     */
   def ingestPipelineWithIndex(docs: DataFrame, evalGramHashes: DataFrame,
       indexPath: String): DataFrame =
-    dedupNearSimhash(dedupExact(dedupAgainstIndex(decontaminate(
-      docs.where(graft.operators.TextAnalysis.qualityPredicate(col("text"))),
-      evalGramHashes), indexPath)))
+    ingestChain(docs, evalGramHashes, vsCorpus = dedupAgainstIndex(_, indexPath))
+
+  /** The cheapest-first stage order of the three ingest chains, stated
+    * once; `hygiene` and `vsCorpus` are the two stateless slots the
+    * variants fill (identity where a variant has no such stage).
+    */
+  private def ingestChain(docs: DataFrame, evalGramHashes: DataFrame,
+      hygiene: DataFrame => DataFrame = identity,
+      vsCorpus: DataFrame => DataFrame = identity): DataFrame =
+    dedupNearSimhash(dedupExact(vsCorpus(decontaminate(
+      hygiene(docs.where(TextAnalysis.qualityPredicate(col("text")))), evalGramHashes))))
 
   /** Terminate an ingest chain by PUBLISHING each micro-batch's survivors
     * as doc-per-file corpus files through the `graft-text` DSv2 sink
@@ -1038,9 +836,8 @@ object StreamingOps {
     * is one staged-commit write job; readers of the corpus dir never see
     * a half-published batch (staging is hidden from the listing rules).
     */
-  def publishCorpus(docs: DataFrame, corpusDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+  def publishCorpus(docs: DataFrame, corpusDir: String): DataStreamWriter[Row] =
+    docs.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
       batch.select(col("doc_id").cast("string").as("doc_id"), col("text"))
         .write.format("graft-text").mode("append").save(corpusDir)
     }
@@ -1059,22 +856,10 @@ object StreamingOps {
     * (user_id, purchase_id, purchase_ts, click_id, click_ts).
     */
   def clickAttribution(clicks: DataFrame, purchases: DataFrame,
-      lookbackHours: Int = 1, watermark: String = "2 hours"): DataFrame = {
-    val c = clicks
-      .select(col("user_id").as("c_user_id"), col("event_id").as("click_id"),
-        eventTimeCol(clicks, "ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
-    val p = purchases
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        eventTimeCol(purchases, "ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", watermark)
-    p.join(c,
-        col("c_user_id") === col("user_id") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $lookbackHours HOUR"))
+      lookbackHours: Int = 1, watermark: String = "2 hours"): DataFrame =
+    clickPurchaseJoin(clicks, purchases, s"$lookbackHours HOUR", watermark, "inner")
       .select(col("user_id"), col("purchase_id"), col("purchase_ts"),
         col("click_id"), col("click_ts"))
-  }
 
   case class Event(user_id: Long, ts: Timestamp, event_id: Long)
   case class SessionState(start: Long, end: Long, n: Long)

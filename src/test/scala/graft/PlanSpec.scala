@@ -370,44 +370,45 @@ class PlanSpec extends AnyFunSuite {
           .rangeStandingServe(spark, dir, idxDir))
       for ((name, df) <- serves) {
         df.collect()
-        // the plan STRING, not node collect: the range serve's query
-        // batch lives inside a dynamic-pruning SubqueryBroadcast (and
-        // the join side is a ReusedExchange), which node traversal
-        // cannot reach — the string renders every subquery's scans
-        val planStr = df.queryExecution.executedPlan.toString
+        // scan NODES, subqueries included: the range serve's query batch
+        // lives inside a dynamic-pruning SubqueryBroadcast (and the join
+        // side is a ReusedExchange), which a plain node collect cannot
+        // reach; and the plan string is no substitute, because Spark cuts
+        // a scan's Location at spark.sql.maxMetadataStringLength, so a
+        // long artifact root hides the index path
+        val plan = df.queryExecution.executedPlan
+        val fileScans = plan.collectWithSubqueries {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+        }
+        def scansUnder(part: String) =
+          fileScans.filter(_.relation.location.rootPaths.exists(_.toString.contains(part)))
         // r15 strengthened the pin: the standing serves touch the source
         // table ZERO times per call — the query batch is a LocalRelation
         // rehydrated from the fingerprint-keyed cache, probe ranking runs
         // driver-side, and the serve reads only probed cl= dirs. ANY
         // embeddings.parquet scan in the served plan means a per-call
         // corpus (or even batch) read crept back in.
-        val srcLines = planStr.linesIterator
-          .filter(_.contains("embeddings.parquet")).toSeq
+        val srcLines = plan.toString.linesIterator
+          .filter(_.contains("embeddings.parquet")).toSeq ++
+          scansUnder("embeddings.parquet").map(_.simpleString(200))
         assert(srcLines.isEmpty,
           s"$name: the standing serve scanned the source table — " +
             s"per-call reads crept back in:\n${srcLines.mkString("\n")}")
-        val ivfLines = planStr.linesIterator
-          .filter(l => l.contains(s"${new java.io.File(idxDir).getName}/ivf"))
-          .toSeq
-        assert(ivfLines.nonEmpty, s"$name: no index cell-file scan found")
+        val ivfScans = scansUnder(s"${new java.io.File(idxDir).getName}/ivf")
+        assert(ivfScans.nonEmpty, s"$name: no index cell-file scan found")
         // every index read prunes on the cl partition key at PLAN time
         // (the probed-cell IN list); how many dirs survive is
         // data-dependent for the wider probes (MIPS' count-derived
         // width, range's triangle bound), so the STRICT count pin runs
         // only where it is structurally guaranteed: kNN probes
         // nQueries·nprobe = 20 of the 23 fixture cells at most
-        ivfLines.foreach { l =>
-          assert(l.contains("PartitionFilters: [cl"),
+        ivfScans.foreach { f =>
+          assert(f.partitionFilters.headOption.exists(_.toString.startsWith("cl")),
             s"$name: index scan carries no cl partition filter — " +
-              s"the probed-cell pruning is gone: $l")
+              s"the probed-cell pruning is gone: ${f.simpleString(200)}")
         }
         if (name == "knn") {
-          val scans = df.queryExecution.executedPlan.collect {
-            case f: org.apache.spark.sql.execution.FileSourceScanExec
-                if f.relation.location.rootPaths
-                  .exists(_.toString.contains(s"${new java.io.File(idxDir).getName}/ivf")) =>
-              f.selectedPartitions.partitionCount.toLong
-          }
+          val scans = ivfScans.map(_.selectedPartitions.partitionCount.toLong)
           assert(scans.nonEmpty && scans.forall(_ < cellsTotal),
             s"$name: index read $scans of $cellsTotal cells — not pruned")
         }

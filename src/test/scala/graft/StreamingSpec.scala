@@ -430,6 +430,42 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("serve-then-extend loop: a throwing sink releases both checkpoints and never extends") {
+    // long-running ingest streams must not leak a materialized batch per
+    // failure: the adapter owns the batch and served-frame checkpoints, and
+    // the extend runs only after the sink returned
+    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.Dedup
+    def doc(seed: Int) = (1 to 30).map(i => s"w${seed}t$i").mkString(" ")
+    val idx = java.nio.file.Files.createTempDirectory("graft_failidx").toString
+    Dedup.buildDedupIndex(Seq((1L, doc(1)), (2L, doc(2))).toDF("doc_id", "text"), idx)
+    def indexRows(): Set[String] = Seq("exact", "sets", "bands").flatMap(t =>
+      spark.read.parquet(s"$idx/$t").collect().map(r => s"$t:$r")).toSet
+    val rowsBefore = indexRows()
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val input = MemoryStream[(Long, String)]
+    val q = StreamingOps.dedupAgainstIndexNear(
+        input.toDF().toDF("doc_id", "text"), idx, 0.7, extendIndex = true) {
+      (annotated, _) =>
+        assert(annotated.where($"status" === "unique").count() == 2L)
+        throw new IllegalStateException("sink down")
+    }.start()
+    try {
+      // two unique docs: a wrongly-run extend would append both
+      input.addData((10L, doc(5)), (11L, doc(6)))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage == "sink down"), s"unexpected failure: $e")
+    } finally q.stop()
+    assert(sc.getPersistentRDDs.keySet == persistedBefore,
+      "a failed batch left its checkpoints persisted")
+    val rowsAfter = indexRows()
+    assert(rowsAfter.size == rowsBefore.size && rowsAfter == rowsBefore,
+      s"the extend ran although the sink threw: ${(rowsAfter -- rowsBefore).size} rows added")
+  }
+
   test("vector serve tier: per-batch verdicts == batch vecDedupAgainst; self-extending loop") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.EmbeddingSearch
@@ -757,8 +793,8 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     val got = scala.collection.mutable.Map.empty[Long, (Long, Double)]
     val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.lmScoreAgainstModel(
-        input.toDF().toDF("doc_id", "text"), idx) { (scores, _) =>
+    val q = StreamingOps.eachBatch(input.toDF().toDF("doc_id", "text"))(
+        TextAnalysis.lmScoreWithModel(_, idx)) { (scores, _) =>
       scores.select($"doc_id", $"n_tokens", $"avg_logprob")
         .as[(Long, Long, Double)].collect()
         .foreach(r => got(r._1) = (r._2, r._3))
@@ -790,8 +826,9 @@ class StreamingSpec extends AnyFunSuite {
     val got = scala.collection.mutable.Map.empty[Long, (Double, Long)]
     val before = TextAnalysis.classifierTrainings.get()
     val input = MemoryStream[(Long, String, String)]
-    val q = StreamingOps.classifyAgainstModel(
-        input.toDF().toDF("doc_id", "text", "lang"), idx) { (scores, _) =>
+    val q = StreamingOps.eachBatch(input.toDF().toDF("doc_id", "text", "lang"))(b =>
+        TextAnalysis.scoreWithClassifier(b,
+          TextAnalysis.loadClassifierModel(b.sparkSession, idx))) { (scores, _) =>
       scores.select($"doc_id", $"score", $"predicted")
         .as[(Long, Double, Long)].collect().foreach(r => got(r._1) = (r._2, r._3))
     }.start()
@@ -821,8 +858,9 @@ class StreamingSpec extends AnyFunSuite {
     val got = scala.collection.mutable.Map.empty[Long, (Long, Long, Long)]
     val before = TextAnalysis.bpeTrainings.get()
     val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.bpeTokensAgainstModel(
-        input.toDF().toDF("doc_id", "text"), idx) { (counts, _) =>
+    val q = StreamingOps.eachBatch(input.toDF().toDF("doc_id", "text"))(b =>
+        TextAnalysis.bpeTokenCountsWith(b,
+          TextAnalysis.loadBpeMerges(b.sparkSession, idx))) { (counts, _) =>
       counts.select($"doc_id", $"n_words", $"n_chars", $"n_bpe_tokens")
         .as[(Long, Long, Long, Long)].collect()
         .foreach(r => got(r._1) = (r._2, r._3, r._4))
@@ -855,8 +893,9 @@ class StreamingSpec extends AnyFunSuite {
     val got = scala.collection.mutable.Map.empty[Long, (Int, Double)]
     val before = EmbeddingSearch.kmeansTrainings.get()
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingOps.assignAgainstKmeansIndex(
-        input.toDF().toDF("vec_id", "embedding"), idx) { (routed, _) =>
+    val q = StreamingOps.eachBatch(input.toDF().toDF("vec_id", "embedding"))(b =>
+        EmbeddingSearch.assignWithIndex(b,
+          EmbeddingSearch.loadKmeansIndex(b.sparkSession, idx))) { (routed, _) =>
       routed.select($"cl", $"vec_id", $"centrality")
         .as[(Int, Long, Double)].collect().foreach(r => got(r._2) = (r._1, r._3))
     }.start()
@@ -895,8 +934,10 @@ class StreamingSpec extends AnyFunSuite {
     StreamingSpec.clfRestartRows.clear()
     val before = TextAnalysis.classifierTrainings.get()
     batch1.write.mode("overwrite").parquet(srcDir)
-    def startQuery() = StreamingOps.classifyAgainstModel(
-        spark.readStream.schema(batch1.schema).parquet(srcDir), modelPath) { (scores, _) =>
+    def startQuery() = StreamingOps.eachBatch(
+        spark.readStream.schema(batch1.schema).parquet(srcDir))(b =>
+        TextAnalysis.scoreWithClassifier(b,
+          TextAnalysis.loadClassifierModel(b.sparkSession, modelPath))) { (scores, _) =>
       StreamingSpec.clfRestartRows ++= scores.select($"doc_id", $"score", $"predicted")
         .as[(Long, Double, Long)].collect()
       ()
@@ -946,8 +987,10 @@ class StreamingSpec extends AnyFunSuite {
     StreamingSpec.clfWideRestartRows.clear()
     val before = TextAnalysis.classifierTrainings.get()
     batch1.write.mode("overwrite").parquet(srcDir)
-    def startQuery() = StreamingOps.classifyWideAgainstModel(
-        spark.readStream.schema(batch1.schema).parquet(srcDir), modelPath, dims) { (scores, _) =>
+    def startQuery() = StreamingOps.eachBatch(
+        spark.readStream.schema(batch1.schema).parquet(srcDir))(b =>
+        TextAnalysis.scoreWithClassifierWide(b,
+          TextAnalysis.loadClassifierModel(b.sparkSession, modelPath), dims)) { (scores, _) =>
       StreamingSpec.clfWideRestartRows ++= scores.select($"doc_id", $"score", $"predicted")
         .as[(Long, Double, Long)].collect()
       ()
@@ -990,8 +1033,10 @@ class StreamingSpec extends AnyFunSuite {
     StreamingSpec.bpeRestartRows.clear()
     val before = TextAnalysis.bpeTrainings.get()
     batch1.write.mode("overwrite").parquet(srcDir)
-    def startQuery() = StreamingOps.bpeTokensAgainstModel(
-        spark.readStream.schema(batch1.schema).parquet(srcDir), modelPath) { (counts, _) =>
+    def startQuery() = StreamingOps.eachBatch(
+        spark.readStream.schema(batch1.schema).parquet(srcDir))(b =>
+        TextAnalysis.bpeTokenCountsWith(b,
+          TextAnalysis.loadBpeMerges(b.sparkSession, modelPath))) { (counts, _) =>
       StreamingSpec.bpeRestartRows ++=
         counts.select($"doc_id", $"n_words", $"n_chars", $"n_bpe_tokens")
           .as[(Long, Long, Long, Long)].collect()
@@ -1043,8 +1088,10 @@ class StreamingSpec extends AnyFunSuite {
     StreamingSpec.kmRestartRows.clear()
     val before = EmbeddingSearch.kmeansTrainings.get()
     batch1.write.mode("overwrite").parquet(srcDir)
-    def startQuery() = StreamingOps.assignAgainstKmeansIndex(
-        spark.readStream.schema(batch1.schema).parquet(srcDir), modelPath) { (routed, _) =>
+    def startQuery() = StreamingOps.eachBatch(
+        spark.readStream.schema(batch1.schema).parquet(srcDir))(b =>
+        EmbeddingSearch.assignWithIndex(b,
+          EmbeddingSearch.loadKmeansIndex(b.sparkSession, modelPath))) { (routed, _) =>
       StreamingSpec.kmRestartRows ++= routed.select($"cl", $"vec_id", $"centrality")
         .as[(Int, Long, Double)].collect()
       ()
@@ -1080,8 +1127,8 @@ class StreamingSpec extends AnyFunSuite {
     TextAnalysis.buildBoilerplateIndex(corpus, idx)
     val got = scala.collection.mutable.Map.empty[Long, (Long, Long, String)]
     val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.lineDedupAgainstIndex(
-        input.toDF().toDF("doc_id", "text"), idx) { (cleaned, _) =>
+    val q = StreamingOps.eachBatch(input.toDF().toDF("doc_id", "text"))(
+        TextAnalysis.lineDedupFromIndex(_, idx)) { (cleaned, _) =>
       cleaned.select($"doc_id", $"n_lines", $"n_kept", $"clean_text")
         .as[(Long, Long, Long, String)].collect()
         .foreach(r => got(r._1) = (r._2, r._3, r._4))
@@ -1188,8 +1235,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val A = 0x123456789ABL; val B = 0xF0F0F0F0F0F0L; val C = 0x0F0F0F0F0F0FL
     val input = MemoryStream[(Long, Timestamp, Long)]
-    val deduped = StreamingOps.dedupPhashWithinWatermark(
-      input.toDF().toDF("doc_id", "ts", "phash"), "ts", "1 hour")
+    val deduped = StreamingOps.dedupWithinWatermark(
+      input.toDF().toDF("doc_id", "ts", "phash"), "phash", "ts", "1 hour")
     val q = deduped.writeStream.format("memory").queryName("sphashwm")
       .outputMode("append").start()
     try {
@@ -1250,8 +1297,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val A = 0x123456789ABL; val B = 0xF0F0F0F0F0F0L; val C = 0x0F0F0F0F0F0FL
     val input = MemoryStream[(Long, Timestamp, Long)]
-    val deduped = StreamingOps.dedupAudioFpWithinWatermark(
-      input.toDF().toDF("doc_id", "ts", "afp"), "ts", "1 hour")
+    val deduped = StreamingOps.dedupWithinWatermark(
+      input.toDF().toDF("doc_id", "ts", "afp"), "afp", "ts", "1 hour")
     val q = deduped.writeStream.format("memory").queryName("saudiowm")
       .outputMode("append").start()
     try {
@@ -1479,8 +1526,9 @@ class StreamingSpec extends AnyFunSuite {
     StreamingSpec.hybridRestartRows.clear()
     val before = EmbeddingSearch.kmeansTrainings.get()
     batch1.write.mode("overwrite").parquet(srcDir)
-    def startQuery() = StreamingOps.hybridAgainstIndexes(
-        spark.readStream.schema(batch1.schema).parquet(srcDir), bmIdx, ivfIdx) { (fused, _) =>
+    def startQuery() = StreamingOps.eachBatch(
+        spark.readStream.schema(batch1.schema).parquet(srcDir))(
+        TextAnalysis.hybridServeBatch(_, bmIdx, ivfIdx)) { (fused, _) =>
       StreamingSpec.hybridRestartRows ++= fused
         .select($"query_id", $"doc_id", $"lex_rank", $"sem_rank", $"rrf", $"rank")
         .collect().map { r =>
@@ -1556,9 +1604,8 @@ class StreamingSpec extends AnyFunSuite {
     // defaults AQE off (the InvarianceSpec.runAt discipline)
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val q = StreamingOps.hybridAgainstIndexes(
-        input.toDF().toDF("query_id", "text", "embedding"),
-        s"$root/bm", s"$root/ivf", nprobe = 2) { (fused, batchId) =>
+    val q = StreamingOps.eachBatch(input.toDF().toDF("query_id", "text", "embedding"))(
+        TextAnalysis.hybridServeBatch(_, s"$root/bm", s"$root/ivf", nprobe = 2)) { (fused, batchId) =>
       got ++= rowsOf(fused)
       fused.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
@@ -1641,8 +1688,8 @@ class StreamingSpec extends AnyFunSuite {
       // instance 1: first half of the query set
       val in1 = MemoryStream[(Long, Seq[Float])]
       val q1 = EmbeddingSearch.synchronized {
-        graft.streaming.StreamingOps.knnAgainstIvfIndex(
-          in1.toDF().toDF("vec_id", "embedding"), root)(sinkWith("q1")).start()
+        graft.streaming.StreamingOps.eachBatch(in1.toDF().toDF("vec_id", "embedding"))(
+          EmbeddingSearch.knnBatchAgainstIvfIndex(_, root))(sinkWith("q1")).start()
       }
       in1.addData(queryVecs.take(5): _*)
       try q1.processAllAvailable() finally q1.stop()
@@ -1650,8 +1697,8 @@ class StreamingSpec extends AnyFunSuite {
       assert(StreamingSpec.knnRestartRows.map(_._1).toSet == Set(0L, 1L, 2L, 3L, 4L))
       // instance 2 (the restart): only the new batch is served
       val in2 = MemoryStream[(Long, Seq[Float])]
-      val q2 = graft.streaming.StreamingOps.knnAgainstIvfIndex(
-        in2.toDF().toDF("vec_id", "embedding"), root)(sinkWith("q2")).start()
+      val q2 = graft.streaming.StreamingOps.eachBatch(in2.toDF().toDF("vec_id", "embedding"))(
+        EmbeddingSearch.knnBatchAgainstIvfIndex(_, root))(sinkWith("q2")).start()
       in2.addData(queryVecs.drop(5): _*)
       try q2.processAllAvailable() finally q2.stop()
       assert(StreamingSpec.knnRestartRows.drop(afterQ1).map(_._1).toSet ==
@@ -1857,13 +1904,13 @@ class StreamingSpec extends AnyFunSuite {
       ()
     }
     val r1 = MemoryStream[(Long, Seq[Float])]
-    val rq1 = graft.streaming.StreamingOps.rangeAgainstIvfIndex(
-      r1.toDF().toDF("vec_id", "embedding"), root, tau = 0.3)(rangeSink).start()
+    val rq1 = graft.streaming.StreamingOps.eachBatch(r1.toDF().toDF("vec_id", "embedding"))(
+      EmbeddingSearch.rangeBatchAgainstIvfIndex(_, root, tau = 0.3))(rangeSink).start()
     r1.addData(queryVecs.take(5): _*)
     try rq1.processAllAvailable() finally rq1.stop()
     val r2 = MemoryStream[(Long, Seq[Float])]
-    val rq2 = graft.streaming.StreamingOps.rangeAgainstIvfIndex(
-      r2.toDF().toDF("vec_id", "embedding"), root, tau = 0.3)(rangeSink).start()
+    val rq2 = graft.streaming.StreamingOps.eachBatch(r2.toDF().toDF("vec_id", "embedding"))(
+      EmbeddingSearch.rangeBatchAgainstIvfIndex(_, root, tau = 0.3))(rangeSink).start()
     r2.addData(queryVecs.drop(5): _*)
     try rq2.processAllAvailable() finally rq2.stop()
     assert(StreamingSpec.rangeRestartRows.toSet == wantRange,
