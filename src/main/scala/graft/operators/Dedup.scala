@@ -350,111 +350,245 @@ object Dedup {
     * dedup index here; vector index via
     * [[graft.operators.EmbeddingSearch.forgetFromVecDedupIndex]];
     * image/audio/video fingerprint indexes via
-    * [[graft.operators.Multimodal]]'s forget wrappers): anti-join `ids`
-    * out of each `$indexPath/$table` with the staged-swap crash
-    * discipline. Gates on per-table `_SUCCESS`, NOT the `_DONE` marker it
-    * removes — rerunning after a crash must repair, not refuse (the
-    * extend discipline) — and RESUMES a swap whose staged table committed
-    * but whose live table was already dropped. A rerun MUST carry the
-    * same ids: a crash can leave some tables already filtered, and a
-    * different id set would apply inconsistently across tables — and that
-    * contract is now ENFORCED, not commented (r8 ADVICE): the pass writes
-    * an order-independent fingerprint of the id set to `_FORGET_IDS`
-    * (tmp + rename, so a torn write can't masquerade as a valid marker)
-    * before touching any table, a rerun that finds the marker must match
-    * it or fail loudly, and the marker is removed only after every table
-    * swapped — so a crashed pass can never be silently "finished" by a
-    * different forget request.
+    * [[graft.operators.Multimodal]]'s forget wrappers; the BM25 and IVF
+    * indexes via [[Forget.forgetEverywhere]]): anti-join `ids` out of each
+    * `$indexPath/$table` with the staged-swap crash discipline. */
+  private[operators] def forgetFromIndexTables(spark: org.apache.spark.sql.SparkSession,
+      indexPath: String, tables: Seq[String], keyCol: String, ids: DataFrame): Unit =
+    forgetFromIndexTables(spark, indexPath, tables, keyCol, Forget.Request(ids, Seq(keyCol)))
+
+  /** The forget kernel over a request whose ids were collected once
+    * ([[Forget.Request]]).
+    *
+    * REWRITE UNIT. A table partitioned into `key=v` dirs that
+    * [[Forget.route]] can route the request's keys to rewrites only those
+    * dirs: it reads them through [[graft.sources.Tables.probedPartitionRead]],
+    * drops the ids' rows ([[Forget.Request.removeFrom]]: a `NOT IN` filter
+    * over the collected keys) and writes each dir as one file (a
+    * `rebalance` on the partition key). Flat tables, requests over
+    * [[EmbeddingSearch.LocalBatchCap]] and tables the routing cannot place
+    * a key in are rewritten whole, the partition layout preserved.
+    *
+    * CRASH CONTRACT. `_DONE` drops FIRST (no serve ever sees a
+    * half-forgotten index) and returns only after every table swapped. An
+    * order-independent fingerprint of the id set is claimed in
+    * `_FORGET_IDS` (tmp + rename) before anything else changes, a rerun
+    * must match it or fail loudly, and it is removed only after every
+    * swap — so a crashed pass can never be silently "finished" by a
+    * different request, and "rerun the same request" is the whole resume
+    * contract. The pass runs in two phases:
+    *   1. STAGE every table, touching no live file: a whole-table rewrite
+    *      into `<table>__forgetting`, a routed one into
+    *      `<table>__forgetting_dirs/<key>=<v>` per rewritten dir, where a
+    *      dir the forget empties is recorded as an `_EMPTIED` marker. A
+    *      routed stage commits with `_STAGED` (holding the fingerprint).
+    *      The routing reads only live tables, none of which has changed,
+    *      so the tables stage side by side ([[Forget.inParallel]]).
+    *   2. SWAP. A whole table: marker-first delete of the live dir, then
+    *      rename (a half-deleted live dir reads as uncommitted and is
+    *      cleared before the resumed rename, never nested into). A routed
+    *      table: per staged dir, delete the live dir, then rename the
+    *      staged one into place (or drop the `_EMPTIED` record), so the
+    *      staging root holds exactly the dirs not yet swapped; it is
+    *      deleted after its last dir.
+    * A rerun resumes a committed routed stage (only its remaining dirs
+    * swap; nothing is routed again) and a committed whole stage whose
+    * live table is gone; any other table is staged afresh from its live
+    * state, which re-filtering leaves unchanged. The pass gates on
+    * per-table `_SUCCESS`, never on the `_DONE` it removes — rerunning
+    * after a crash must repair, not refuse.
     */
   private[operators] def forgetFromIndexTables(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, tables: Seq[String], keyCol: String, ids: DataFrame): Unit = {
-    val done = new org.apache.hadoop.fs.Path(indexPath, "_DONE")
+      indexPath: String, tables: Seq[String], keyCol: String, req: Forget.Request): Unit = {
+    import org.apache.hadoop.fs.Path
+    val done = new Path(indexPath, "_DONE")
     val fs = done.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
+    def committed(dir: Path): Boolean = fs.exists(new Path(dir, "_SUCCESS"))
     // PRE-FLIGHT before claiming the id-set marker: every table must be
     // repairable (committed live, or a resumable committed stage). A
     // crashed BUILD must fail BEFORE the marker is written — a marker
     // claimed on a refused pass would outlive the subsequent rebuild and
     // poison every future forget with a different id set
     tables.foreach { t =>
-      val liveOk = fs.exists(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(indexPath, t), "_SUCCESS"))
-      val stagedOk = fs.exists(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(indexPath, s"${t}__forgetting"), "_SUCCESS"))
-      require(liveOk || stagedOk,
+      require(committed(new Path(indexPath, t)) ||
+          committed(new Path(indexPath, s"${t}__forgetting")),
         s"index table $t at $indexPath is missing or uncommitted — " +
           "a crashed BUILD cannot be repaired by forget; rebuild the index")
     }
-    Forget.claimIdSet(fs, new org.apache.hadoop.fs.Path(indexPath, "_FORGET_IDS"),
-      Forget.idSetFingerprint(ids, keyCol))
+    val fp = req.fingerprint(keyCol)
+    Forget.claimIdSet(fs, new Path(indexPath, "_FORGET_IDS"), fp)
     fs.delete(done, false)
-    // size-gated like every other small-side hint: a routine forget request
-    // broadcasts, but a bulk GDPR batch (millions of ids) stays a shuffle
-    // join instead of pinning an unbounded frame into every executor
-    val forget = Scale.maybeBroadcast(ids.select(col(keyCol)))
-    for (t <- tables) {
-      val live = new org.apache.hadoop.fs.Path(indexPath, t)
-      val staged = new org.apache.hadoop.fs.Path(indexPath, s"${t}__forgetting")
-      val liveOk = fs.exists(new org.apache.hadoop.fs.Path(live, "_SUCCESS"))
-      val stagedOk = fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS"))
-      if (!liveOk && stagedOk) {
+    // every stage reads only live tables, so the stages run side by side
+    val swaps = Forget.inParallel(spark, tables.distinct.map { t => () =>
+      val live = new Path(indexPath, t)
+      val staged = new Path(indexPath, s"${t}__forgetting")
+      val dirStage = new Path(indexPath, s"${t}__forgetting_dirs")
+      val dirsStaged = new Path(dirStage, "_STAGED")
+      if (fs.exists(dirsStaged)) {
+        val prior = Markers.token(fs, dirsStaged)
+        require(prior == fp,
+          s"$dirStage holds dirs staged by a forget with a DIFFERENT id set " +
+            s"('$prior' != this request '$fp') — resume it with the original ids " +
+            "(or rebuild the index) before forgetting new ones")
+        () => swapDirs(fs, live, dirStage)
+      } else if (!committed(live) && committed(staged)) {
         // a previous forget crashed between delete(live) and the swap: the
-        // staged table is complete — finish the swap. A directory delete is
-        // NOT atomic, so the crash can leave a half-deleted live dir
-        // (_SUCCESS gone, part-files still there); renaming into an
-        // existing directory would NEST staged inside it and the recreated
-        // _DONE would then bless the stale unfiltered part-files — clear
-        // any leftover first, loudly.
-        if (fs.exists(live)) require(fs.delete(live, true),
-          s"could not clear half-deleted $t table before resuming the swap")
-        require(fs.rename(staged, live), s"resume-swap of forgotten $t table failed")
+        // staged table is complete — finish the swap
+        () => swapTable(fs, t, live, staged)
       } else {
-        require(liveOk,
+        require(committed(live),
           s"index table $t at $indexPath is missing or uncommitted — " +
             "a crashed BUILD cannot be repaired by forget (or the index " +
             "layout predates this table); rebuild the index")
-        fs.delete(staged, true) // stale staging (overwrite re-clears anyway)
-        // the staged rewrite PRESERVES the live table's hive-style
-        // partition layout (bucket=/db=/cl=/ib= directories): the pruned
-        // serves key their plan-time partition pruning on those dirs, and
-        // a flat rewrite silently degraded every post-forget serve to a
+        fs.delete(staged, true)
+        fs.delete(dirStage, true)
+        // the rewrite PRESERVES the live table's hive-style partition
+        // layout (bucket=/db=/cl=/ib= directories): the pruned serves key
+        // their plan-time partition pruning on those dirs, and a flat
+        // rewrite silently degraded every post-forget serve to a
         // corpus-wide scan (measured: the post-forget hybrid serve read
         // 1.9x at x16 vs its never-forgotten sibling's 1.2x) — and made
         // extend-after-forget illegal (appending partition dirs next to
         // flat files is an unreadable mixed layout)
         val partCols = partitionColsOf(fs, live)
-        val filtered = spark.read.parquet(live.toString)
-          .join(forget, Seq(keyCol), "left_anti")
-        val writer = filtered.write.mode("overwrite")
-        (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-          .parquet(staged.toString)
-        // a forget that removes EVERY row of a partitioned table writes
-        // no part-files at all (partitioned writers skip the empty-file
-        // schema fallback), leaving a directory parquet cannot infer a
-        // schema from — every later serve would crash on read. Rewrite
-        // the empty result FLAT: one schema-bearing empty file, reads as
-        // 0 rows; the partition key becomes a data column of an empty
-        // table, so no pruning is lost (and a later extend reads the dir
-        // as FLAT and prescribes the rebuild that repopulating an
-        // emptied index needs anyway).
-        if (partCols.nonEmpty && !fs.listStatus(staged).exists(e =>
-            e.getPath.getName != "_SUCCESS" && !e.getPath.getName.startsWith(".")))
-          filtered.limit(0).write.mode("overwrite").parquet(staged.toString)
-        // MARKER-FIRST delete: recursive delete is not atomic and child
-        // order is unspecified, so a crash mid-delete could otherwise
-        // leave part-files gone but _SUCCESS behind — a rerun would then
-        // read the truncated live table as committed and rebuild the
-        // index from it (silent data loss). Dropping the marker first
-        // makes every partially-deleted state read as uncommitted
-        // (liveOk=false), routing the rerun to the resume branch above.
-        fs.delete(new org.apache.hadoop.fs.Path(live, "_SUCCESS"), false)
-        require(fs.delete(live, true),
-          s"could not remove live $t table before the swap — aborting " +
-            "instead of nesting the staged table inside it")
-        require(fs.rename(staged, live), s"swap of forgotten $t table failed")
+        val routed = Forget.route(spark, indexPath, t, partCols, keyCol, req)
+          .exists(r => stageDirs(spark, fs, live, dirStage, partCols.head, keyCol, req, r, fp))
+        if (routed) () => swapDirs(fs, live, dirStage)
+        else {
+          stageTable(spark, fs, live, staged, partCols, keyCol, req)
+          () => swapTable(fs, t, live, staged)
+        }
       }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(indexPath, "_FORGET_IDS"), false)
+    })
+    swaps.foreach(_())
+    fs.delete(new Path(indexPath, "_FORGET_IDS"), false)
     Markers.commit(fs, done)
+  }
+
+  /** Whole-table stage of a forget: the live table minus the ids, in its
+    * own partition layout, committed by the writer's `_SUCCESS`. The
+    * write rebalances (on the partition columns, if any), so the rewrite
+    * also compacts the table — one file per dir at this scale, files of
+    * about the adaptive advisory size at scale: no other pass folds in
+    * the extend slivers of a flat table. */
+  private def stageTable(spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, live: org.apache.hadoop.fs.Path,
+      staged: org.apache.hadoop.fs.Path, partCols: Seq[String], keyCol: String,
+      req: Forget.Request): Unit = {
+    // a flat table's schema comes from a footer on the driver; a
+    // partitioned one is listed and inferred whole
+    val source = if (partCols.isEmpty)
+        graft.sources.Tables.artifactPartitionedParquet(spark, live.toString, Seq(live.toString))
+      else spark.read.parquet(live.toString)
+    val filtered = req.removeFrom(source, keyCol)
+    val writer = filtered.hint("rebalance", partCols: _*).write.mode("overwrite")
+    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
+      .parquet(staged.toString)
+    // a forget that removes EVERY row of a partitioned table writes
+    // no part-files at all (partitioned writers skip the empty-file
+    // schema fallback), leaving a directory parquet cannot infer a
+    // schema from — every later serve would crash on read. Rewrite
+    // the empty result FLAT: one schema-bearing empty file, reads as
+    // 0 rows; the partition key becomes a data column of an empty
+    // table, so no pruning is lost (and a later extend reads the dir
+    // as FLAT and prescribes the rebuild that repopulating an
+    // emptied index needs anyway).
+    if (partCols.nonEmpty && !fs.listStatus(staged).exists(e =>
+        e.getPath.getName != "_SUCCESS" && !e.getPath.getName.startsWith(".")))
+      filtered.limit(0).write.mode("overwrite").parquet(staged.toString)
+  }
+
+  /** Swap a whole staged table in. MARKER-FIRST delete: recursive delete
+    * is not atomic and child order is unspecified, so a crash mid-delete
+    * could otherwise leave part-files gone but `_SUCCESS` behind — a
+    * rerun would then read the truncated live table as committed and
+    * rebuild the index from it (silent data loss). Dropping the marker
+    * first makes every partially-deleted state read as uncommitted,
+    * routing the rerun to the resume branch, which clears any leftover
+    * before the rename: renaming into an existing directory would NEST
+    * the staged table inside it and the recreated `_DONE` would then
+    * bless the stale unfiltered part-files. */
+  private def swapTable(fs: org.apache.hadoop.fs.FileSystem, t: String,
+      live: org.apache.hadoop.fs.Path, staged: org.apache.hadoop.fs.Path): Unit = {
+    fs.delete(new org.apache.hadoop.fs.Path(live, "_SUCCESS"), false)
+    if (fs.exists(live)) require(fs.delete(live, true),
+      s"could not remove live $t table before the swap — aborting " +
+        "instead of nesting the staged table inside it")
+    require(fs.rename(staged, live), s"swap of forgotten $t table failed")
+  }
+
+  /** TEST-ONLY fault point of the routed swap: runs with each staged dir
+    * and its live target just before the swap, so a spec can crash a
+    * forget after k of n dir swaps. Never set in production. */
+  @volatile private[graft] var beforeDirSwap: (org.apache.hadoop.fs.Path,
+    org.apache.hadoop.fs.Path) => Unit = (_, _) => ()
+
+  /** Routed stage of a forget: the routed `pk=v` dirs of `live` minus the
+    * ids, one file per dir, written under `dirStage`; each routed dir the
+    * forget empties is recorded as `pk=v/_EMPTIED`, and `_STAGED`
+    * (holding the request fingerprint) commits the stage. The route's
+    * removed-rows check is observed by the write itself (no extra job).
+    * False — with the stage removed, for a whole-table rewrite instead —
+    * when that check fails, or its metric is missing (adaptive execution
+    * drops the observing node from the plan when the rewrite keeps no
+    * row at all), or when the rewrite would empty every dir of the table
+    * (the whole-table path writes the flat schema-bearing empty file a
+    * partitioned table then needs).
+    */
+  private def stageDirs(spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, live: org.apache.hadoop.fs.Path,
+      dirStage: org.apache.hadoop.fs.Path, pk: String, keyCol: String,
+      req: Forget.Request, route: Forget.Route, fp: String): Boolean = {
+    import org.apache.hadoop.fs.Path
+    val liveDirs = fs.listStatus(live).filter(_.isDirectory).map(_.getPath.getName).toSet
+    val dirs = route.dirs.distinct.sorted.filter(d => liveDirs(s"$pk=$d"))
+    val removed = org.apache.spark.sql.Observation()
+    if (dirs.nonEmpty) {
+      val rows = graft.sources.Tables.probedPartitionRead(spark, live.toString, pk, dirs)
+      val observed = route.removed.fold(rows) { case (weight, _) =>
+        rows.observe(removed, coalesce(sum(when(req.matches(keyCol), weight)), lit(0L)).as("w"))
+      }
+      req.removeFrom(observed, keyCol).hint("rebalance", pk)
+        .write.mode("overwrite").partitionBy(pk).parquet(dirStage.toString)
+    }
+    fs.mkdirs(dirStage)
+    val written = dirs.filter(d => fs.exists(new Path(dirStage, s"$pk=$d")))
+    val checked = route.removed.forall { case (_, want) =>
+      if (dirs.isEmpty) want == 0L
+      else org.apache.spark.sql.GraftShim.observedRow(removed)
+        .exists(r => r.length == 1 && r.getLong(0) == want)
+    }
+    val keepsADir = written.nonEmpty ||
+      (liveDirs.filter(_.startsWith(s"$pk=")) -- dirs.map(d => s"$pk=$d")).nonEmpty
+    val ok = checked && keepsADir
+    if (ok) {
+      dirs.filterNot(written.contains)
+        .foreach(d => fs.create(new Path(dirStage, s"$pk=$d/_EMPTIED"), true).close())
+      Markers.commitValue(fs, new Path(dirStage, "_STAGED"), fp)
+    } else fs.delete(dirStage, true)
+    ok
+  }
+
+  /** Swap a committed routed stage in, one dir at a time: delete the live
+    * dir (a half-deleted one is finished on the rerun), then rename the
+    * staged dir into place — or, for a staged dir without data files (an
+    * `_EMPTIED` record, or what a crash mid-delete leaves of one), drop
+    * it — so the staging root always holds exactly the dirs not yet
+    * swapped. */
+  private def swapDirs(fs: org.apache.hadoop.fs.FileSystem,
+      live: org.apache.hadoop.fs.Path, dirStage: org.apache.hadoop.fs.Path): Unit = {
+    import org.apache.hadoop.fs.Path
+    fs.listStatus(dirStage).filter(e => e.isDirectory && e.getPath.getName.contains("="))
+      .sortBy(_.getPath.getName).foreach { e =>
+        val target = new Path(live, e.getPath.getName)
+        beforeDirSwap(e.getPath, target)
+        if (fs.exists(target)) require(fs.delete(target, true),
+          s"could not remove live $target before the forget swap")
+        if (!fs.listStatus(e.getPath).exists(graft.sources.Tables.isDataFile))
+          fs.delete(e.getPath, true)
+        else require(fs.rename(e.getPath, target), s"forget swap of $target failed")
+      }
+    fs.delete(dirStage, true)
   }
 
   /** Partition columns of a committed parquet table, read off the

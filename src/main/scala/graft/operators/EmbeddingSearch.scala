@@ -3357,12 +3357,11 @@ object EmbeddingSearch {
       .select(col("cl"), round(cosine(col("v"), col("cv")), 6).as("c"))
       .groupBy(col("cl")).agg(min(col("c")).as("mincos"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/radii")
-    // record the TRAINING-time corpus size (a metadata-only count of the
-    // just-written table): the staleness rule compares what the sizing
+    // record the TRAINING-time corpus size (the just-written table's
+    // footer row counts): the staleness rule compares what the sizing
     // rule would derive NOW vs at training, so an extend-grown index can
     // report that its corpus has outgrown its quantizer
-    writeTrainRows(fs, path,
-      embV.sparkSession.read.parquet(s"$path/ivf").count())
+    writeTrainRows(fs, path, Tables.footerRows(embV.sparkSession, s"$path/ivf"))
     Forget.clearStaleForgetState(fs, path, Seq("cent", "ivf", "idmap"))
     Markers.commit(fs, done)
   }
@@ -3378,7 +3377,8 @@ object EmbeddingSearch {
   /** (training-time rows, current rows) of the IVF index at `indexPath`,
     * or None for a pre-marker index (built before the staleness rule
     * existed — it reports drift after its next build/retrain). Current
-    * rows is a parquet-metadata count; nothing corpus-scale runs.
+    * rows is a driver-side footer count ([[storedIvfRows]]); no Spark
+    * job runs.
     */
   def ivfIndexDrift(spark: SparkSession, indexPath: String): Option[(Long, Long)] = {
     val p = new org.apache.hadoop.fs.Path(indexPath, TrainRowsMarker)
@@ -3418,7 +3418,10 @@ object EmbeddingSearch {
     * probe width from this count, and re-listing a cl=-partitioned
     * table's footers per serve was the one non-probed cost left in the
     * standing tier (~0.3 s/serve at bench scale; at 100 TB the listing
-    * itself is a metadata storm). One count per index mutation instead.
+    * itself is a metadata storm). One count per index mutation instead,
+    * summed from the data files' parquet footers on the driver
+    * ([[Tables.footerRows]]) — no listing, inference or count job, which
+    * matters because every forget recommits the index.
     * The map is keyed by PATH with the commit state validating the
     * stored value (compute-and-replace — the bpeModelMemo discipline),
     * so a long-lived deployment that keeps extending holds ONE entry
@@ -3436,7 +3439,7 @@ object EmbeddingSearch {
     val cached = ivfRowsMemo.get(indexPath)
     if (cached != null && cached._1 == key) cached._2
     else {
-      val n = spark.read.parquet(s"$indexPath/ivf").count()
+      val n = Tables.footerRows(spark, s"$indexPath/ivf")
       ivfRowsMemo.put(indexPath, (key, n))
       n
     }
@@ -3584,7 +3587,7 @@ object EmbeddingSearch {
     * [[LocalBatchCap]]. A frame whose optimized plan is a LocalRelation is
     * read with no Spark job; any other plan costs one bounded
     * `limit(cap + 1)` collect. */
-  private def smallBatchRows(batch: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
+  private[graft] def smallBatchRows(batch: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
     val rows = if (org.apache.spark.sql.GraftShim.isLocalRelation(batch)) batch.collect()
       else batch.limit(LocalBatchCap + 1).collect()
     if (rows.length > LocalBatchCap) None else Some(rows)

@@ -1469,7 +1469,10 @@ object TextAnalysis {
     // scanning the term-bucketed postings by doc_id (the one per-query
     // touch term-bucket pruning cannot prune). Also DERIVED from the
     // persisted postings, so the three tables can never disagree.
-    fwdProjection(persisted)
+    // Rebalanced on db, so each db= dir is written by one task as one
+    // file: a forget rewrites only the dirs holding its docs, so the
+    // build's layout is what the untouched dirs keep.
+    fwdProjection(persisted).hint("rebalance", "db")
       .write.mode("overwrite").partitionBy("db").parquet(s"$path/fwd")
     Forget.clearStaleForgetState(fs, path, Seq("postings", "doclens", "fwd"))
     Markers.commit(fs, done)

@@ -218,6 +218,32 @@ object Tables {
     e.isFile && !e.getPath.getName.startsWith("_") &&
       !e.getPath.getName.startsWith(".")
 
+  /** Every data file of an artifact table (flat, or under its `key=v`
+    * dirs), walking the directories Spark's listing reads: a `_name`
+    * directory without `=` (a writer's `_temporary`) and a `.name` one
+    * are skipped, as Spark skips them. Empty for a missing path. */
+  private[graft] def dataFiles(path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = hadoopFs(root)
+    def walk(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap { e =>
+        val n = e.getPath.getName
+        if (e.isDirectory) {
+          if (n.startsWith(".") || (n.startsWith("_") && !n.contains("="))) Nil
+          else walk(e.getPath)
+        } else if (isDataFile(e)) Seq(e) else Nil
+      }
+    if (fs.exists(root)) walk(root) else Nil
+  }
+
+  /** Row count of artifact tables (or some of their `key=v` dirs) from
+    * their data files' parquet footers, read on the driver: the value
+    * `spark.read.parquet(path).count()` gives, with no Spark job. 0 for
+    * paths without data files. */
+  private[graft] def footerRows(spark: SparkSession, paths: String*): Long =
+    org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
+      .footerRows(spark, paths.flatMap(dataFiles))
+
   /** Data schema of ONE artifact directory (a `key=v` partition dir or a
     * flat table), read on the DRIVER from the footer of its first data
     * file — the same footer→schema conversion Spark's inference runs, but

@@ -29,6 +29,10 @@ object GraftShim {
   def mergeSchemas(a: types.StructType, b: types.StructType): types.StructType =
     a.merge(b)
 
+  /** An observation's metrics row once the observed action reported it,
+    * waiting at most 100 ms; None when the action reported none. */
+  def observedRow(o: Observation): Option[Row] = o.getRowOrEmpty
+
   /** The session's autoBroadcastJoinThreshold in bytes (-1 = disabled). */
   def broadcastThreshold(df: Dataset[_]): Long =
     df.asInstanceOf[classic.Dataset[_]].sparkSession.sessionState.conf.autoBroadcastJoinThreshold

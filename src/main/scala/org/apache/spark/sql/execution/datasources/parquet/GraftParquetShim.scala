@@ -19,4 +19,22 @@ object GraftParquetShim {
     ParquetFileFormat.readSchema(ParquetFileFormat.readParquetFootersInParallel(
       s.sessionState.newHadoopConf(), Seq(file), ignoreCorruptFiles = false), s)
   }
+
+  /** Total row count of parquet files, summed from their footers' row
+    * groups on the driver (read in parallel, as Spark reads footers for
+    * inference — which skips the row groups, so this reads them itself)
+    * — the count `spark.read.parquet(...).count()` returns for them,
+    * without its listing, inference and count jobs.
+    */
+  def footerRows(spark: SparkSession, files: Seq[org.apache.hadoop.fs.FileStatus]): Long =
+    if (files.isEmpty) 0L
+    else {
+      val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.newHadoopConf()
+      org.apache.spark.util.ThreadUtils.parmap(files, "graft-footer-rows", 8) { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    }
 }
