@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.functions.HashFunctions._
+import graft.sources.{ArtifactFs, Tables}
 
 /** Deduplication surface for a training-data pipeline (builder mandate; the
   * reference's set-semantics shingling, BookQuery.java:66-70, is the seed of
@@ -269,24 +270,22 @@ object Dedup {
     val done = new org.apache.hadoop.fs.Path(path, "_DONE")
     val fs = done.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
     fs.delete(done, false)
-    docs.select(col("doc_id"), md5(col("text")).as("text_hash"))
-      .write.mode("overwrite").parquet(s"$path/exact")
-    docs.select(col("doc_id"),
+    Tables.writeArtifact(docs.select(col("doc_id"), md5(col("text")).as("text_hash")),
+      s"$path/exact", "overwrite")
+    Tables.writeArtifact(docs.select(col("doc_id"),
         hashSet(shingleSet(col("text"), k)).as("hs31"),
         hashSet62(shingleSet(col("text"), k)).as("hs62"))
-      .where(size(col("hs31")) > 0)
-      .write.mode("overwrite").parquet(s"$path/sets")
-    graft.sources.Tables.artifactParquet(spark, s"$path/sets")
+      .where(size(col("hs31")) > 0), s"$path/sets", "overwrite")
+    Tables.writeArtifact(Tables.artifactParquet(spark, s"$path/sets")
       .select(col("doc_id"), explode(minhashBandKeys(
-        minhashFromHashes(col("hs31"), numHashes), bands, numHashes / bands)).as("band"))
-      .write.mode("overwrite").parquet(s"$path/bands")
+        minhashFromHashes(col("hs31"), numHashes), bands, numHashes / bands)).as("band")),
+      s"$path/bands", "overwrite")
     // the banding/shingle params and format generation are PART of the
     // index: an extend or serve under different params would mix
     // incompatible band keys / shingle granularities with no error, and a
     // pre-_PARAMS (v1-schema) index must be refused outright, not read
-    val meta = fs.create(new org.apache.hadoop.fs.Path(path, "_PARAMS"), true)
-    meta.write(paramsTag(numHashes, bands, k).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    meta.close()
+    ArtifactFs.writeFile(fs, new org.apache.hadoop.fs.Path(path, "_PARAMS"),
+      paramsTag(numHashes, bands, k).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     Forget.clearStaleForgetState(fs, path, Seq("exact", "sets", "bands"))
     Markers.commit(fs, done)
   }
@@ -364,8 +363,8 @@ object Dedup {
     * [[Forget.route]] can route the request's keys to rewrites only those
     * dirs: it reads them through [[graft.sources.Tables.probedPartitionRead]],
     * drops the ids' rows ([[Forget.Request.removeFrom]]: a `NOT IN` filter
-    * over the collected keys) and writes each dir as one file (a
-    * `rebalance` on the partition key). Flat tables, requests over
+    * over the collected keys) and writes each dir as one file
+    * ([[Tables.onePerDir]]). Flat tables, requests over
     * [[EmbeddingSearch.LocalBatchCap]] and tables the routing cannot place
     * a key in are rewritten whole, the partition layout preserved.
     *
@@ -383,7 +382,7 @@ object Dedup {
     *      dir the forget empties is recorded as an `_EMPTIED` marker. A
     *      routed stage commits with `_STAGED` (holding the fingerprint).
     *      The routing reads only live tables, none of which has changed,
-    *      so the tables stage side by side ([[Forget.inParallel]]).
+    *      so the tables stage side by side ([[Tables.inParallel]]).
     *   2. SWAP. A whole table: marker-first delete of the live dir, then
     *      rename (a half-deleted live dir reads as uncommitted and is
     *      cleared before the resumed rename, never nested into). A routed
@@ -419,7 +418,7 @@ object Dedup {
     Forget.claimIdSet(fs, new Path(indexPath, "_FORGET_IDS"), fp)
     fs.delete(done, false)
     // every stage reads only live tables, so the stages run side by side
-    val swaps = Forget.inParallel(spark, tables.distinct.map { t => () =>
+    val swaps = Tables.inParallel(spark, tables.distinct.map { t => () =>
       val live = new Path(indexPath, t)
       val staged = new Path(indexPath, s"${t}__forgetting")
       val dirStage = new Path(indexPath, s"${t}__forgetting_dirs")
@@ -481,9 +480,8 @@ object Dedup {
         graft.sources.Tables.artifactPartitionedParquet(spark, live.toString, Seq(live.toString))
       else spark.read.parquet(live.toString)
     val filtered = req.removeFrom(source, keyCol)
-    val writer = filtered.hint("rebalance", partCols: _*).write.mode("overwrite")
-    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-      .parquet(staged.toString)
+    Tables.writeArtifact(filtered.hint("rebalance", partCols: _*), staged.toString,
+      "overwrite", partCols)
     // a forget that removes EVERY row of a partitioned table writes
     // no part-files at all (partitioned writers skip the empty-file
     // schema fallback), leaving a directory parquet cannot infer a
@@ -495,7 +493,7 @@ object Dedup {
     // emptied index needs anyway).
     if (partCols.nonEmpty && !fs.listStatus(staged).exists(e =>
         e.getPath.getName != "_SUCCESS" && !e.getPath.getName.startsWith(".")))
-      filtered.limit(0).write.mode("overwrite").parquet(staged.toString)
+      Tables.writeArtifact(filtered.limit(0), staged.toString, "overwrite")
   }
 
   /** Swap a whole staged table in. MARKER-FIRST delete: recursive delete
@@ -524,8 +522,8 @@ object Dedup {
     org.apache.hadoop.fs.Path) => Unit = (_, _) => ()
 
   /** Routed stage of a forget: the routed `pk=v` dirs of `live` minus the
-    * ids, one file per dir, written under `dirStage`; each routed dir the
-    * forget empties is recorded as `pk=v/_EMPTIED`, and `_STAGED`
+    * ids, one file per dir (written on all cores), under `dirStage`; each
+    * routed dir the forget empties is recorded as `pk=v/_EMPTIED`, and `_STAGED`
     * (holding the request fingerprint) commits the stage. The route's
     * removed-rows check is observed by the write itself (no extra job).
     * False — with the stage removed, for a whole-table rewrite instead —
@@ -548,8 +546,8 @@ object Dedup {
       val observed = route.removed.fold(rows) { case (weight, _) =>
         rows.observe(removed, coalesce(sum(when(req.matches(keyCol), weight)), lit(0L)).as("w"))
       }
-      req.removeFrom(observed, keyCol).hint("rebalance", pk)
-        .write.mode("overwrite").partitionBy(pk).parquet(dirStage.toString)
+      Tables.writeArtifact(Tables.onePerDir(req.removeFrom(observed, keyCol), pk),
+        dirStage.toString, "overwrite", Seq(pk))
     }
     fs.mkdirs(dirStage)
     val written = dirs.filter(d => fs.exists(new Path(dirStage, s"$pk=$d")))
@@ -563,7 +561,7 @@ object Dedup {
     val ok = checked && keepsADir
     if (ok) {
       dirs.filterNot(written.contains)
-        .foreach(d => fs.create(new Path(dirStage, s"$pk=$d/_EMPTIED"), true).close())
+        .foreach(d => ArtifactFs.writeFile(fs, new Path(dirStage, s"$pk=$d/_EMPTIED"), Array.empty))
       Markers.commitValue(fs, new Path(dirStage, "_STAGED"), fp)
     } else fs.delete(dirStage, true)
     ok
@@ -672,14 +670,16 @@ object Dedup {
         hashSet62(shingleSet(col("text"), k)).as("hs62"))
       .localCheckpoint()
     try {
-      batch.select(col("doc_id"), col("text_hash"))
-        .write.mode("append").parquet(s"$indexPath/exact")
       val sets = batch.where(size(col("hs31")) > 0)
         .select(col("doc_id"), col("hs31"), col("hs62"))
-      sets.write.mode("append").parquet(s"$indexPath/sets")
-      sets.select(col("doc_id"), explode(minhashBandKeys(
-          minhashFromHashes(col("hs31"), numHashes), bands, numHashes / bands)).as("band"))
-        .write.mode("append").parquet(s"$indexPath/bands")
+      // the three appends read only the checkpoint: side by side
+      Tables.inParallel(newDocs.sparkSession, Seq(
+        () => Tables.writeArtifact(batch.select(col("doc_id"), col("text_hash")),
+          s"$indexPath/exact", "append"),
+        () => Tables.writeArtifact(sets, s"$indexPath/sets", "append"),
+        () => Tables.writeArtifact(sets.select(col("doc_id"), explode(minhashBandKeys(
+            minhashFromHashes(col("hs31"), numHashes), bands, numHashes / bands)).as("band")),
+          s"$indexPath/bands", "append")))
     } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(batch)
     Markers.commit(fs, done)
   }
@@ -717,9 +717,13 @@ object Dedup {
     val idxFs = new org.apache.hadoop.fs.Path(indexPath, "_PARAMS")
       .getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
     requireIndexParams(idxFs, indexPath, numHashes, bands, k)
-    val exact = graft.sources.Tables.artifactParquet(spark, s"$indexPath/exact")
-    val corpusBands = graft.sources.Tables.artifactParquet(spark, s"$indexPath/bands")
-    val corpusSets = graft.sources.Tables.artifactParquet(spark, s"$indexPath/sets")
+    // flat tables: schemas from a footer on the driver, so building the
+    // frame runs no Spark job even right after an extend or a forget
+    def flat(t: String) = Tables.artifactPartitionedParquet(spark, s"$indexPath/$t",
+      Seq(s"$indexPath/$t"))
+    val exact = flat("exact")
+    val corpusBands = flat("bands")
+    val corpusSets = flat("sets")
     val batch = newDocs.select(col("doc_id"), md5(col("text")).as("text_hash"),
       hashSet(shingleSet(col("text"), k)).as("hs31"),
       hashSet62(shingleSet(col("text"), k)).as("hs62"))

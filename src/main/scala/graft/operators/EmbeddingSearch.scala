@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.expressions.KmeansKernel
-import graft.sources.Tables
+import graft.sources.{ArtifactFs, Tables}
 
 /** Similarity search over the embedding column (`embeddings.parquet`:
   * vec_id, embedding array<float> ×64, label).
@@ -1593,19 +1593,17 @@ object EmbeddingSearch {
     val tagged = taggedWithCl(vecs, centCk, np).localCheckpoint()
     try {
       saveKmeansIndex(centCk, s"$graphPath/cent")
-      tagged.repartition(col("cl"))
-        .write.mode("overwrite").partitionBy("cl").parquet(s"$graphPath/verts")
+      Tables.writeArtifact(tagged.repartition(col("cl")), s"$graphPath/verts", "overwrite", Seq("cl"))
       val hc = tagged.where(col("is_base")).select(col("vec_id"), col("cl").as("hc"))
       val edges = localTopKRanked(
         localTopKKernel(kernelFrameOf(tagged), kBuild, maxBucket,
           "raise the cell count (ivfCellCount) or lower nprobe"), kBuild)
         .select(col("vec_id"), col("nbr_id"), col("cosine"))
-      edges.join(hc, "vec_id")
-        .repartition(col("hc"))
-        .write.mode("overwrite").partitionBy("hc").parquet(s"$graphPath/edges")
-      Seq((kBuild, np, trainedN, trainedN))
-        .toDF("k_build", "nprobe", "trained_n", "total_n")
-        .coalesce(1).write.mode("overwrite").parquet(s"$graphPath/params")
+      Tables.writeArtifact(edges.join(hc, "vec_id").repartition(col("hc")),
+        s"$graphPath/edges", "overwrite", Seq("hc"))
+      Tables.writeArtifact(Seq((kBuild, np, trainedN, trainedN))
+        .toDF("k_build", "nprobe", "trained_n", "total_n").coalesce(1),
+        s"$graphPath/params", "overwrite")
     } finally {
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(tagged)
       org.apache.spark.sql.GraftShim.unpersistCheckpoint(centCk)
@@ -1750,11 +1748,12 @@ object EmbeddingSearch {
               Seq("vec_id"), "left_anti")
             val staged = new org.apache.hadoop.fs.Path(graphPath, "edges__merging")
             fs.delete(staged, true)
-            untouchedSrcs.select(col("vec_id"), col("nbr_id"), col("cosine"), col("hc"))
-              .unionByName(merged.select(col("vec_id"), col("nbr_id"),
-                col("cosine"), col("hc")))
-              .repartition(col("hc"))
-              .write.mode("overwrite").partitionBy("hc").parquet(staged.toString)
+            Tables.writeArtifact(
+              untouchedSrcs.select(col("vec_id"), col("nbr_id"), col("cosine"), col("hc"))
+                .unionByName(merged.select(col("vec_id"), col("nbr_id"),
+                  col("cosine"), col("hc")))
+                .repartition(col("hc")),
+              staged.toString, "overwrite", Seq("hc"))
             for (h <- touchedHc) {
               val liveDir = new org.apache.hadoop.fs.Path(s"$graphPath/edges/hc=$h")
               val stagedDir = new org.apache.hadoop.fs.Path(s"$staged/hc=$h")
@@ -1774,15 +1773,14 @@ object EmbeddingSearch {
       // two leaves _DONE down either way (rebuild remedy), and this
       // order means a half-committed extend can never serve batch
       // vertices with un-merged edges
-      taggedB.repartition(col("cl"))
-        .write.mode("append").partitionBy("cl").parquet(s"$graphPath/verts")
+      Tables.writeArtifact(taggedB.repartition(col("cl")), s"$graphPath/verts", "append", Seq("cl"))
       // params: total_n grows; staged 1-row swap (the radii discipline)
       val newTotal = totalN + newVecs.count()
       val pStaged = new org.apache.hadoop.fs.Path(graphPath, "params__merging")
       fs.delete(pStaged, true)
-      Seq((kBuild, np, trainedN, newTotal))
-        .toDF("k_build", "nprobe", "trained_n", "total_n")
-        .coalesce(1).write.mode("overwrite").parquet(pStaged.toString)
+      Tables.writeArtifact(Seq((kBuild, np, trainedN, newTotal))
+        .toDF("k_build", "nprobe", "trained_n", "total_n").coalesce(1),
+        pStaged.toString, "overwrite")
       val pLive = new org.apache.hadoop.fs.Path(graphPath, "params")
       val pRetired = new org.apache.hadoop.fs.Path(graphPath, "params__old")
       fs.delete(pRetired, true)
@@ -1846,9 +1844,8 @@ object EmbeddingSearch {
       if (hasPartDirs) {
         val staged = new org.apache.hadoop.fs.Path(graphPath, s"${t}__compacting")
         fs.delete(staged, true)
-        spark.read.parquet(live.toString)
-          .repartition(col(pk))
-          .write.mode("overwrite").partitionBy(pk).parquet(staged.toString)
+        Tables.writeArtifact(spark.read.parquet(live.toString).repartition(col(pk)),
+          staged.toString, "overwrite", Seq(pk))
         fs.delete(new org.apache.hadoop.fs.Path(live, "_SUCCESS"), false)
         require(fs.delete(live, true),
           s"could not remove live $t table before the compaction swap")
@@ -2176,15 +2173,13 @@ object EmbeddingSearch {
     val done = new org.apache.hadoop.fs.Path(path, "_DONE")
     val fs = done.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
     fs.delete(done, false)
-    vectorsOf(embeddings)
-      .write.mode("overwrite").parquet(s"$path/vecs")
-    spark.read.parquet(s"$path/vecs")
+    Tables.writeArtifact(vectorsOf(embeddings), s"$path/vecs", "overwrite")
+    Tables.writeArtifact(spark.read.parquet(s"$path/vecs")
       .select(col("vec_id"),
-        explode(lshBandKeys(lshSignature(col("v"), nPlanes), 4, nPlanes / 4)).as("band"))
-      .write.mode("overwrite").parquet(s"$path/bands")
-    val meta = fs.create(new org.apache.hadoop.fs.Path(path, "_PARAMS"), true)
-    meta.write(s"v1p$nPlanes".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    meta.close()
+        explode(lshBandKeys(lshSignature(col("v"), nPlanes), 4, nPlanes / 4)).as("band")),
+      s"$path/bands", "overwrite")
+    ArtifactFs.writeFile(fs, new org.apache.hadoop.fs.Path(path, "_PARAMS"),
+      s"v1p$nPlanes".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     Forget.clearStaleForgetState(fs, path, Seq("vecs", "bands"))
     Markers.commit(fs, done)
   }
@@ -2230,10 +2225,10 @@ object EmbeddingSearch {
     val batch = vectorsOf(newVecs)
       .localCheckpoint()
     try {
-      batch.write.mode("append").parquet(s"$indexPath/vecs")
-      batch.select(col("vec_id"),
-          explode(lshBandKeys(lshSignature(col("v"), nPlanes), 4, nPlanes / 4)).as("band"))
-        .write.mode("append").parquet(s"$indexPath/bands")
+      Tables.writeArtifact(batch, s"$indexPath/vecs", "append")
+      Tables.writeArtifact(batch.select(col("vec_id"),
+          explode(lshBandKeys(lshSignature(col("v"), nPlanes), 4, nPlanes / 4)).as("band")),
+        s"$indexPath/bands", "append")
     } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(batch)
     Markers.commit(fs, done)
   }
@@ -2520,7 +2515,7 @@ object EmbeddingSearch {
     * EmbeddingSpec). k rows — coalesced to one file.
     */
   def saveKmeansIndex(cent: DataFrame, path: String): Unit =
-    cent.coalesce(1).write.mode("overwrite").parquet(path)
+    Tables.writeArtifact(cent.coalesce(1), path, "overwrite")
 
   def loadKmeansIndex(spark: SparkSession, path: String): DataFrame =
     graft.sources.Tables.artifactParquet(spark, path)
@@ -2788,7 +2783,7 @@ object EmbeddingSearch {
     * enough to run at serve time and stays plan-visible.
     */
   def savePqIndex(cents: DataFrame, path: String): Unit =
-    cents.coalesce(1).write.mode("overwrite").parquet(path)
+    Tables.writeArtifact(cents.coalesce(1), path, "overwrite")
 
   def loadPqIndex(spark: SparkSession, path: String): DataFrame =
     graft.sources.Tables.artifactParquet(spark, path)
@@ -2817,8 +2812,7 @@ object EmbeddingSearch {
     if (!fs.exists(marker) || !fs.exists(paramsPath)) {
       val emb = vectors(spark, dir)
       savePqIndex(trainPqCodebooks(emb, m, 64 / m, ksub, iters, samplePct), indexPath)
-      val out = fs.create(paramsPath, true)
-      try out.write(want.getBytes("UTF-8")) finally out.close()
+      ArtifactFs.writeFile(fs, paramsPath, want.getBytes("UTF-8"))
     } else {
       // shared-dir poisoning guard (the requireSizedIters discipline for
       // the PQ artifact): codebooks trained at other params would load
@@ -3310,7 +3304,7 @@ object EmbeddingSearch {
     // assignment and the written tables still cover every vector. The
     // registered entries keep 100 (their oracles replay full training).
     val cent = trainKmeansIndex(embV, nClusters, iters, trainSamplePct)
-    cent.coalesce(1).write.mode("overwrite").parquet(s"$path/cent")
+    saveKmeansIndex(cent, s"$path/cent")
     // assignments derive from the PERSISTED quantizer so the two tables
     // can never disagree (the buildVecDedupIndex discipline)
     val savedCent = loadKmeansIndex(embV.sparkSession, s"$path/cent")
@@ -3326,10 +3320,9 @@ object EmbeddingSearch {
     // serve pays ~6 s of per-file opens that the clustered layout's
     // 179 files serve in ~1 s — the compactIvfIndex argument, paid once
     // at build instead of deferred to maintenance)
-    kmeansAssign(withNorm(embV), savedCent, keep = meta)
+    Tables.writeArtifact(kmeansAssign(withNorm(embV), savedCent, keep = meta)
       .select(Seq(col("cl"), col("vec_id"), col("v")) ++ meta.map(col): _*)
-      .repartition(col("cl"))
-      .write.mode("overwrite").partitionBy("cl").parquet(s"$path/ivf")
+      .repartition(col("cl")), s"$path/ivf", "overwrite", Seq("cl"))
     // the id→cell map, DERIVED from the persisted ivf table (the
     // two-tables-can-never-disagree discipline) and id-hash-bucketed: a
     // by-id lookup (the single-query serve fetching its own query vector)
@@ -3337,9 +3330,8 @@ object EmbeddingSearch {
     // cl-partitioned vector table — without it, the one per-query touch
     // that cell probing cannot prune is a corpus-wide scan. 12 B/row, so
     // the map is ~2% of the vector table at 64 dims.
-    idmapProjection(embV.sparkSession.read.parquet(s"$path/ivf"))
-      .repartition(col("ib"))
-      .write.mode("overwrite").partitionBy("ib").parquet(s"$path/idmap")
+    Tables.writeArtifact(idmapProjection(embV.sparkSession.read.parquet(s"$path/ivf"))
+      .repartition(col("ib")), s"$path/idmap", "overwrite", Seq("ib"))
     // per-cell ANGULAR FLOOR (min winning cosine) for the SOUND standing
     // range serve ([[rangeBatchAgainstIvfIndex]]'s triangle bound) — k
     // rows, DERIVED from the persisted ivf table + quantizer (the
@@ -3352,11 +3344,11 @@ object EmbeddingSearch {
     // merges appended batches in (a grown cell only widens); a forget
     // pass only REMOVES vectors, so stored floors stay ≤-conservative
     // (≥-radius) and the serve stays sound without a rewrite.
-    embV.sparkSession.read.parquet(s"$path/ivf")
+    Tables.writeArtifact(embV.sparkSession.read.parquet(s"$path/ivf")
       .join(broadcast(savedCent), Seq("cl"))
       .select(col("cl"), round(cosine(col("v"), col("cv")), 6).as("c"))
       .groupBy(col("cl")).agg(min(col("c")).as("mincos"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/radii")
+      .coalesce(1), s"$path/radii", "overwrite")
     // record the TRAINING-time corpus size (the just-written table's
     // footer row counts): the staleness rule compares what the sizing
     // rule would derive NOW vs at training, so an extend-grown index can
@@ -3370,8 +3362,8 @@ object EmbeddingSearch {
 
   private def writeTrainRows(fs: org.apache.hadoop.fs.FileSystem,
       path: String, n: Long): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, TrainRowsMarker), true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
+    ArtifactFs.writeFile(fs, new org.apache.hadoop.fs.Path(path, TrainRowsMarker),
+      n.toString.getBytes("UTF-8"))
   }
 
   /** (training-time rows, current rows) of the IVF index at `indexPath`,
@@ -3836,6 +3828,26 @@ object EmbeddingSearch {
       Cos, k, nprobe)
   }
 
+  /** Per-cell minimum `centrality` of an assigned batch, as (cl, min)
+    * pairs with one pair per cell per partition: one Spark job, and the
+    * driver holds at most cells × partitions pairs whatever the batch
+    * size. The fold keeps Spark's `min` rules (nulls skipped, a NaN only
+    * where a partition's cell holds nothing else); callers take the min per cell
+    * over the pairs. */
+  private def cellMinima(assigned: DataFrame): Array[(Int, Double)] =
+    assigned.select(col("cl").cast("int"), col("centrality").cast("double")).rdd
+      .mapPartitions { rows =>
+        val m = scala.collection.mutable.HashMap.empty[Int, Double]
+        rows.filter(!_.isNullAt(1)).foreach { r =>
+          val (cl, c) = (r.getInt(0), r.getDouble(1))
+          m.get(cl) match {
+            case Some(cur) if !(c < cur || (cur.isNaN && !c.isNaN)) =>
+            case _ => m(cl) = c
+          }
+        }
+        m.iterator
+      }.collect()
+
   /** Append a NEW vector batch to a committed IVF index ON DISK — the
     * add-without-rebuild maintenance pass that completes the
     * build/extend/forget matrix for the vector artifact (the
@@ -3919,30 +3931,22 @@ object EmbeddingSearch {
     // filter silently drops — schema-fork refusal, loud like the
     // layout guards above)
     // (a committed-but-EMPTY table — legal per the guard above — has no
-    // readable schema: no files means no stored meta, Nil. The emptiness
-    // check is EXPLICIT — a blanket Try around the schema read would
-    // also swallow real read failures and silently disable this guard,
-    // appending a meta-less batch into a payload-carrying index)
-    def hasAnyDataFile(p: org.apache.hadoop.fs.Path): Boolean = {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val name = it.next().getPath.getName
-        found = !name.startsWith("_") && !name.startsWith(".")
-      }
-      found
-    }
-    val metaCols =
-      if (!hasAnyDataFile(new org.apache.hadoop.fs.Path(indexPath, "ivf"))) Nil
-      else newVecs.sparkSession.read.parquet(s"$indexPath/ivf")
-        .schema.map(_.name).filterNot(Set("cl", "vec_id", "v"))
+    // data file: no stored meta, Nil. Any data file's footer, read on the
+    // driver, carries the stored columns; a failed read fails the extend
+    // rather than disabling this guard)
+    val spark = newVecs.sparkSession
+    val metaCols = Tables.dataFiles(s"$indexPath/ivf").headOption.toSeq
+      .flatMap(org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
+        .footerSchema(spark, _)).flatMap(_.fieldNames).filterNot(Set("cl", "vec_id", "v"))
     val missing = metaCols.filterNot(newVecs.columns.contains)
     require(missing.isEmpty,
       s"IVF index at $indexPath stores metadata columns ${metaCols.mkString(",")} " +
         s"but the batch lacks ${missing.mkString(",")} — supply them or rebuild " +
         "without meta")
     fs.delete(done, false)
-    val cent = loadKmeansIndex(newVecs.sparkSession, s"$indexPath/cent")
+    // the quantizer memo (keyed on `cent/`'s fingerprint, which an extend
+    // never changes) instead of a parquet read of it
+    val cent = cachedCentDf(spark, indexPath)
     // both appended tables derive from ONE checkpointed assignment frame
     // (centrality rides along for the radii merge below, dropped from
     // the written tables)
@@ -3971,22 +3975,18 @@ object EmbeddingSearch {
       // indexes skip — the range serve refuses them with the rebuild
       // remedy, nothing here can go stale silently.
       if (fs.exists(new org.apache.hadoop.fs.Path(indexPath, "radii/_SUCCESS"))) {
-        val spark = newVecs.sparkSession
-        val old = spark.read.parquet(s"$indexPath/radii")
+        val radii = s"$indexPath/radii"
+        val old = Tables.artifactPartitionedParquet(spark, radii, Seq(radii))
           .collect().map(r => r.getInt(r.fieldIndex("cl")) ->
             r.getDouble(r.fieldIndex("mincos")))
-        val grown = batch.groupBy(col("cl"))
-          .agg(min(col("centrality")).as("mincos"))
-          .collect().map(r => r.getInt(r.fieldIndex("cl")) ->
-            r.getDouble(r.fieldIndex("mincos")))
+        val grown = cellMinima(batch)
         val merged = (old ++ grown).groupBy(_._1).toSeq
           .map { case (cl, vs) => (cl, vs.map(_._2).min) }.sortBy(_._1)
         import spark.implicits._
         val live = new org.apache.hadoop.fs.Path(indexPath, "radii")
         val staged = new org.apache.hadoop.fs.Path(indexPath, "radii__merging")
         fs.delete(staged, true)
-        merged.toDF("cl", "mincos").coalesce(1)
-          .write.mode("overwrite").parquet(staged.toString)
+        Tables.writeArtifact(merged.toDF("cl", "mincos").coalesce(1), staged.toString, "overwrite")
         val retired = new org.apache.hadoop.fs.Path(indexPath, "radii__old")
         fs.delete(retired, true)
         require(fs.rename(live, retired), s"radii swap: could not move $live aside")
@@ -3995,13 +3995,14 @@ object EmbeddingSearch {
       }
       // clustered appends (the buildIvfIndex write discipline): one file
       // per TOUCHED dir per extend, so fragmentation grows per-extend,
-      // not per-extend×tasks; compactIvfIndex remains the long-run pass
-      batch.select(Seq(col("cl"), col("vec_id"), col("v")) ++ metaCols.map(col): _*)
-        .repartition(col("cl"))
-        .write.mode("append").partitionBy("cl").parquet(s"$indexPath/ivf")
-      idmapProjection(batch)
-        .repartition(col("ib"))
-        .write.mode("append").partitionBy("ib").parquet(s"$indexPath/idmap")
+      // not per-extend×tasks; compactIvfIndex remains the long-run pass.
+      // Both read only the checkpoint, so they run side by side
+      Tables.inParallel(spark, Seq(
+        () => Tables.writeArtifact(Tables.onePerDir(batch.select(
+            Seq(col("cl"), col("vec_id"), col("v")) ++ metaCols.map(col): _*), "cl"),
+          s"$indexPath/ivf", "append", Seq("cl")),
+        () => Tables.writeArtifact(Tables.onePerDir(idmapProjection(batch), "ib"),
+          s"$indexPath/idmap", "append", Seq("ib"))))
     } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(batch)
     // the _BATCH record lands after every append and before the _DONE
     // recommit — see the idempotence note at entry for why this ordering
@@ -4010,7 +4011,7 @@ object EmbeddingSearch {
     Markers.commit(fs, done)
     // the staleness rule fires AFTER the append commits (the grown count
     // is what drifts) — extend stays legal, the warning names the remedy
-    warnIfStale(newVecs.sparkSession, indexPath, "extend")
+    warnIfStale(spark, indexPath, "extend")
     // AUTO-COMPACTION (r14, the r13 verdict's item 3): every extend
     // leaves one file set per touched cl=/ib= dir, so an extend-heavy
     // deployment fragments toward per-file-open-dominated serves (the
@@ -4297,9 +4298,8 @@ object EmbeddingSearch {
       if (hasPartDirs) {
         val staged = new org.apache.hadoop.fs.Path(indexPath, s"${t}__compacting")
         fs.delete(staged, true)
-        spark.read.parquet(live.toString)
-          .repartition(col(pk))
-          .write.mode("overwrite").partitionBy(pk).parquet(staged.toString)
+        Tables.writeArtifact(spark.read.parquet(live.toString).repartition(col(pk)),
+          staged.toString, "overwrite", Seq(pk))
         // marker-first delete, then swap (the forget-rewrite discipline:
         // a half-deleted live dir must never read as committed)
         fs.delete(new org.apache.hadoop.fs.Path(live, "_SUCCESS"), false)
@@ -4336,7 +4336,7 @@ object EmbeddingSearch {
     if (!fs.exists(ready)) {
       buildIvfIndex(emb.where(col("vec_id") < split), indexPath, nClusters, iters)
       extendIvfIndex(indexPath, emb.where(col("vec_id") >= split))
-      fs.create(ready, true).close()
+      ArtifactFs.writeFile(fs, ready, Array.empty)
     }
     // serve-side staleness check (the extend above warns at grow time;
     // a long-lived index extended by OTHER sessions drifts between
@@ -4375,7 +4375,7 @@ object EmbeddingSearch {
       // cells sized for the FINAL corpus (the extend is part of the plan)
       buildIvfIndex(emb.where(col("vec_id") < split), indexPath, ivfCellCount(n))
       extendIvfIndex(indexPath, emb.where(col("vec_id") >= split))
-      fs.create(ready, true).close()
+      ArtifactFs.writeFile(fs, ready, Array.empty)
     }
     rangeBatchAgainstIvfIndex(
       Tables.embeddings(spark, dir).where(col("vec_id") < nQueries)

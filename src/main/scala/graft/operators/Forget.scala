@@ -204,26 +204,6 @@ object Forget {
     }
   }
 
-  /** Run independent Spark actions from up to 4 driver threads, so one
-    * action's planning and scheduling overlap another's tasks (a forget
-    * stages several small tables, each a few-task job behind ~100 ms of
-    * driver work). Results keep `tasks`' order; every task finishes
-    * before the first failure is rethrown as itself. */
-  private[operators] def inParallel[T](spark: SparkSession, tasks: Seq[() => T]): Seq[T] =
-    if (tasks.size <= 1) tasks.map(_())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(tasks.size, 4))
-      try {
-        val futures = tasks.map(t => pool.submit(new java.util.concurrent.Callable[T] {
-          def call(): T = { SparkSession.setActiveSession(spark); t() }
-        }))
-        val results = futures.map(f => scala.util.Try(f.get()).recoverWith {
-          case e: java.util.concurrent.ExecutionException => scala.util.Failure(e.getCause)
-        })
-        results.map(_.get)
-      } finally pool.shutdown()
-    }
-
   /** Claim `marker` for this id-set fingerprint: absent → write it
     * (tmp + rename so a torn write can't read as valid); present → require
     * it matches, else fail loudly. The caller removes the marker after its
@@ -241,8 +221,7 @@ object Forget {
           "applying a different set mid-recovery would filter tables inconsistently")
     } else {
       val tmp = marker.suffix(".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(fp.getBytes("UTF-8")) finally out.close()
+      graft.sources.ArtifactFs.writeFile(fs, tmp, fp.getBytes("UTF-8"))
       require(fs.rename(tmp, marker), s"could not commit forget marker $marker")
     }
   }
@@ -307,7 +286,7 @@ object Forget {
     // what makes "resume = rerun the same request" the whole contract.
     // Passes over different indexes share no file, so they run side by
     // side; targets naming the same index run one after another
-    inParallel(spark, targets.groupBy(_.indexPath).values.toSeq.map(ts => () =>
+    Tables.inParallel(spark, targets.groupBy(_.indexPath).values.toSeq.map(ts => () =>
       ts.foreach(t => Dedup.forgetFromIndexTables(spark, t.indexPath, t.tables, t.keyCol, req))))
     fs.delete(manifest, false)
   }

@@ -53,8 +53,7 @@ object Markers {
       s"marker value '$value' collides with a reserved token range")
     val tmp = new Path(p.getParent,
       s".${p.getName}.${ctr.incrementAndGet()}_${System.nanoTime()}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(value.getBytes("UTF-8")) finally out.close()
+    graft.sources.ArtifactFs.writeFile(fs, tmp, value.getBytes("UTF-8"))
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
     fc.rename(fs.makeQualified(tmp), fs.makeQualified(p),
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)

@@ -284,7 +284,7 @@ object Multimodal {
     val done = new org.apache.hadoop.fs.Path(path, "_DONE")
     val fs = done.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
     fs.delete(done, false)
-    fps.write.mode("overwrite").parquet(s"$path/$table")
+    Tables.writeArtifact(fps, s"$path/$table", "overwrite")
     graft.operators.Forget.clearStaleForgetState(fs, path, Seq(table))
     Markers.commit(fs, done)
   }
@@ -310,7 +310,7 @@ object Multimodal {
         "a crashed build cannot be repaired by extend; rebuild the index")
     graft.operators.Forget.requireNoCrashedForget(fs, indexPath)
     fs.delete(done, false)
-    fps.write.mode("append").parquet(s"$indexPath/$table")
+    Tables.writeArtifact(fps, s"$indexPath/$table", "append")
     Markers.commit(fs, done)
   }
 

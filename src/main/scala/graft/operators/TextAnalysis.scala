@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.functions.HashFunctions._
-import graft.sources.Tables
+import graft.sources.{ArtifactFs, Tables}
 
 /** Text-analysis surface of the engine: per-document statistics, quality
   * scoring, language ID, token counting, fingerprinting, TF-IDF. All pure
@@ -287,11 +287,9 @@ object TextAnalysis {
     val done = new org.apache.hadoop.fs.Path(path, "_DONE")
     val fs = done.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
     fs.delete(done, false)
-    boilerplateLines(docs, lineTokens, minDf)
-      .write.mode("overwrite").parquet(s"$path/boiler")
-    val meta = fs.create(new org.apache.hadoop.fs.Path(path, "_PARAMS"), true)
-    meta.write(s"blv1lt${lineTokens}df$minDf".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    meta.close()
+    Tables.writeArtifact(boilerplateLines(docs, lineTokens, minDf), s"$path/boiler", "overwrite")
+    ArtifactFs.writeFile(fs, new org.apache.hadoop.fs.Path(path, "_PARAMS"),
+      s"blv1lt${lineTokens}df$minDf".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     Markers.commit(fs, done)
   }
 
@@ -557,12 +555,11 @@ object TextAnalysis {
     val fs = done.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
     fs.delete(done, false)
     val (uni, big, prm) = lmCounts(docs)
-    uni.write.mode("overwrite").parquet(s"$path/uni")
-    big.write.mode("overwrite").parquet(s"$path/bi")
-    prm.write.mode("overwrite").parquet(s"$path/prm")
-    val meta = fs.create(new org.apache.hadoop.fs.Path(path, "_PARAMS"), true)
-    meta.write("lmv1bigram".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    meta.close()
+    Tables.writeArtifact(uni, s"$path/uni", "overwrite")
+    Tables.writeArtifact(big, s"$path/bi", "overwrite")
+    Tables.writeArtifact(prm, s"$path/prm", "overwrite")
+    ArtifactFs.writeFile(fs, new org.apache.hadoop.fs.Path(path, "_PARAMS"),
+      "lmv1bigram".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     Markers.commit(fs, done)
   }
 
@@ -1450,19 +1447,18 @@ object TextAnalysis {
     // is its terms' buckets, never the index. The generic forget rewrite
     // preserves this layout (partition dirs re-derived from the live
     // table), so pruning survives forget passes.
-    docs.select(col("doc_id"), explode(tokenize(col("text"))).as("term"))
+    Tables.writeArtifact(docs.select(col("doc_id"), explode(tokenize(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       .withColumn("bucket",
-        pmod(portableHash31(col("term")), lit(Bm25IndexBuckets)).cast("int"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/postings")
+        pmod(portableHash31(col("term")), lit(Bm25IndexBuckets)).cast("int")),
+      s"$path/postings", "overwrite", Seq("bucket"))
     // doclens DERIVES FROM THE PERSISTED postings (the buildIvfIndex
     // two-tables-can-never-disagree discipline): dl per doc so a
     // bucket-pruned serve still sees candidates' FULL lengths (a pruned
     // postings scan only holds query-term rows), narrow (#docs × 2 cols)
-    val persisted = graft.sources.Tables.artifactParquet(docs.sparkSession, s"$path/postings")
-    persisted
-      .groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-      .write.mode("overwrite").parquet(s"$path/doclens")
+    val persisted = Tables.artifactParquet(docs.sparkSession, s"$path/postings")
+    Tables.writeArtifact(persisted.groupBy("doc_id").agg(sum(col("tf")).as("dl")),
+      s"$path/doclens", "overwrite")
     // the FORWARD index (doc → its terms), doc-id-hash-bucketed — the
     // lexical twin of the IVF idmap: a query-from-corpus serve resolves
     // its own terms from ONE of 64 narrow directories instead of
@@ -1472,8 +1468,8 @@ object TextAnalysis {
     // Rebalanced on db, so each db= dir is written by one task as one
     // file: a forget rewrites only the dirs holding its docs, so the
     // build's layout is what the untouched dirs keep.
-    fwdProjection(persisted).hint("rebalance", "db")
-      .write.mode("overwrite").partitionBy("db").parquet(s"$path/fwd")
+    Tables.writeArtifact(fwdProjection(persisted).hint("rebalance", "db"),
+      s"$path/fwd", "overwrite", Seq("db"))
     Forget.clearStaleForgetState(fs, path, Seq("postings", "doclens", "fwd"))
     Markers.commit(fs, done)
   }
@@ -1582,13 +1578,17 @@ object TextAnalysis {
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       .localCheckpoint()
     try {
-      batch.withColumn("bucket",
-          pmod(portableHash31(col("term")), lit(Bm25IndexBuckets)).cast("int"))
-        .write.mode("append").partitionBy("bucket").parquet(s"$indexPath/postings")
-      batch.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-        .write.mode("append").parquet(s"$indexPath/doclens")
-      fwdProjection(batch)
-        .write.mode("append").partitionBy("db").parquet(s"$indexPath/fwd")
+      // the three appends read only the checkpoint: side by side, each
+      // partitioned one on all cores with one file per touched dir
+      val postings = batch.withColumn("bucket",
+        pmod(portableHash31(col("term")), lit(Bm25IndexBuckets)).cast("int"))
+      Tables.inParallel(newDocs.sparkSession, Seq(
+        () => Tables.writeArtifact(Tables.onePerDir(postings, "bucket"),
+          s"$indexPath/postings", "append", Seq("bucket")),
+        () => Tables.writeArtifact(batch.groupBy("doc_id").agg(sum(col("tf")).as("dl")),
+          s"$indexPath/doclens", "append"),
+        () => Tables.writeArtifact(Tables.onePerDir(fwdProjection(batch), "db"),
+          s"$indexPath/fwd", "append", Seq("db"))))
     } finally org.apache.spark.sql.GraftShim.unpersistCheckpoint(batch)
     // _BATCH lands after every append, before the _DONE recommit (the
     // extendIvfIndex ordering — closes the replay window on both sides)
@@ -1661,13 +1661,12 @@ object TextAnalysis {
     }
     for ((t, pk, hasPartDirs) <- partitioned if hasPartDirs)
       swap(t) { staged =>
-        graft.sources.Tables.artifactParquet(spark, s"$indexPath/$t")
-          .repartition(col(pk))
-          .write.mode("overwrite").partitionBy(pk).parquet(staged.toString)
+        Tables.writeArtifact(Tables.artifactParquet(spark, s"$indexPath/$t").repartition(col(pk)),
+          staged.toString, "overwrite", Seq(pk))
       }
     if (doclensHasData) swap("doclens") { staged =>
-      graft.sources.Tables.artifactParquet(spark, s"$indexPath/doclens")
-        .coalesce(1).write.mode("overwrite").parquet(staged.toString)
+      Tables.writeArtifact(Tables.artifactParquet(spark, s"$indexPath/doclens").coalesce(1),
+        staged.toString, "overwrite")
     }
     Markers.commit(fs, done)
   }
@@ -1831,7 +1830,7 @@ object TextAnalysis {
       fs.delete(ready, false)
       buildBm25Index(docs.where(col("doc_id") < split), indexPath)
       extendBm25Index(indexPath, docs.where(col("doc_id") >= split))
-      fs.create(ready, true).close()
+      ArtifactFs.writeFile(fs, ready, Array.empty)
     }
     bm25TopDocsWithIndex(spark, indexPath, kTop = kTop)
   }
@@ -2552,7 +2551,7 @@ object TextAnalysis {
     classifierWeightsDf(docs.sparkSession, trainClassifierWide(docs, dims, iters, eta))
 
   def saveClassifierModel(weights: DataFrame, path: String): Unit =
-    weights.coalesce(1).write.mode("overwrite").parquet(path)
+    Tables.writeArtifact(weights.coalesce(1), path, "overwrite")
 
   def loadClassifierModel(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -2872,7 +2871,7 @@ object TextAnalysis {
       .select(col("lhs"), col("rhs")).collect()
       .map(r => (r.getString(0), r.getString(1))).toIndexedSeq
     new graft.functions.expressions.BpeMergeTable(ordered) // throws if unservable
-    merges.coalesce(1).write.mode("overwrite").parquet(path)
+    Tables.writeArtifact(merges.coalesce(1), path, "overwrite")
   }
 
   def loadBpeModel(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =

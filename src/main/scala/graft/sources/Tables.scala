@@ -3,7 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Readers for the engine's table surface.
+/** Readers for the engine's table surface, and the one write seam of its
+  * standing artifacts ([[Tables.writeArtifact]]).
   *
   * The reference engine's only source is "one whole text file = one document
   * over HDFS" (BookQuery.java:44-61 — a manifest of paths, each opened inside
@@ -206,6 +207,51 @@ object Tables {
       }
     spark.read.schema(schema).parquet(path)
   }
+
+  /** THE write seam of graft's standing artifacts — index builds,
+    * extends, compactions, forget rewrites, quantizers and models: one
+    * parquet write of `df` to `path`. On the local filesystem the write
+    * creates its files through [[ArtifactFs]] (named in this write's own
+    * options, so the session's conf and every read stay as they are);
+    * any other filesystem writes as a plain `df.write` would. The files
+    * written are the same either way.
+    */
+  def writeArtifact(df: DataFrame, path: String, mode: String,
+      partitionBy: Seq[String] = Nil): Unit = {
+    val w = df.write.options(ArtifactFs.writeOptions(hadoopFs(new org.apache.hadoop.fs.Path(path))))
+      .mode(mode)
+    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(path)
+  }
+
+  /** `df` hash-partitioned on `key` into `defaultParallelism` partitions,
+    * for a write partitioned by `key`: every `key=v` dir comes from one
+    * task, so it gets exactly one file, and the dirs are written on all
+    * cores. The count is explicit because adaptive execution coalesces a
+    * bare `repartition(col)` or `rebalance` of a batch-sized frame into
+    * one task, and never coalesces an explicit count. */
+  def onePerDir(df: DataFrame, key: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
+
+  /** Run independent Spark actions from up to 4 driver threads, so one
+    * action's planning, scheduling and commit overlap another's tasks
+    * (an extend writes several small tables, a forget stages several,
+    * each a few-task job behind ~100 ms of driver work). Results keep
+    * `tasks`' order; every task finishes before the first failure is
+    * rethrown as itself. */
+  def inParallel[T](spark: SparkSession, tasks: Seq[() => T]): Seq[T] =
+    if (tasks.size <= 1) tasks.map(_())
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(tasks.size, 4))
+      try {
+        val futures = tasks.map(t => pool.submit(new java.util.concurrent.Callable[T] {
+          def call(): T = { SparkSession.setActiveSession(spark); t() }
+        }))
+        val results = futures.map(f => scala.util.Try(f.get()).recoverWith {
+          case e: java.util.concurrent.ExecutionException => scala.util.Failure(e.getCause)
+        })
+        results.map(_.get)
+      } finally pool.shutdown()
+    }
 
   /** THE data-file predicate every index layout/commit/compaction guard
     * and the driver-side schema read share (a regular file that is not a

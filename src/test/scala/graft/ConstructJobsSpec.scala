@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{EmbeddingSearch, TextAnalysis}
+import graft.operators.{Dedup, EmbeddingSearch, TextAnalysis}
 import graft.sources.Tables
 
 /** The standing-index reads build their frames from driver-side values:
@@ -64,5 +64,18 @@ class ConstructJobsSpec extends AnyFunSuite {
       val n = constructJobs(read())
       assert(n <= bound, s"$name ran $n Spark jobs while building its frame (bound $bound)")
     }
+  }
+
+  test("dedupAgainst builds its frame with 0 Spark jobs, right after an extend") {
+    val root = java.nio.file.Files.createTempDirectory("graft_construct_dd").toString
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    Dedup.buildDedupIndex(docs.where(col("doc_id") < 300), root)
+    // the extend rewrites the tables' fingerprints, so no schema memo is warm
+    Dedup.extendDedupIndex(root, docs.where(col("doc_id") >= 300 && col("doc_id") < 340))
+    val batch = spark.createDataFrame(java.util.List.of(Row(9001L, "spark join order window")),
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    val n = constructJobs(Dedup.dedupAgainst(root, batch, 0.8))
+    assert(n == 0, s"dedupAgainst ran $n Spark jobs while building its frame")
+    assert(Dedup.dedupAgainst(root, batch, 0.8).collect().length == 1)
   }
 }
