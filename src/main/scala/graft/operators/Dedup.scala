@@ -769,9 +769,30 @@ object Dedup {
     * Near-dup clusters are shallow in practice (dup families), so rounds
     * stay in single digits; each round is one shuffle join + one aggregate,
     * nothing driver-side but the convergence counter.
+    *
+    * DRIVER-PLANNED when the dup graph is metadata-scale: a verified pairs
+    * set is a sliver of the corpus, and a graph of at most
+    * 2 × [[EmbeddingSearch.LocalBatchCap]] directed edges with integral,
+    * non-null ids comes to the driver in one bounded collect of the edge
+    * frame and runs [[labelsOnDriver]], the loop's scalar twin (same
+    * labels, same per-round `changed` counts, same non-convergence
+    * failure), instead of paying a join/aggregate/count job set per
+    * round. Larger graphs run the checkpointed loop over the edges that
+    * collect already materialized.
     */
   def dedupClusters(docs: DataFrame, pairs: DataFrame, maxIters: Int = 10,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame =
+    clustersOf(docs, pairs, maxIters, checkpointDir, driverTwin = true)
+
+  /** [[dedupClusters]] through the checkpointed Spark loop whatever the
+    * dup graph's size — the path graphs past the driver gate take,
+    * callable directly so small graphs keep it covered. */
+  private[graft] def dedupClustersDistributed(docs: DataFrame, pairs: DataFrame,
+      maxIters: Int = 10, checkpointDir: Option[String] = None): DataFrame =
+    clustersOf(docs, pairs, maxIters, checkpointDir, driverTwin = false)
+
+  private def clustersOf(docs: DataFrame, pairs: DataFrame, maxIters: Int,
+      checkpointDir: Option[String], driverTwin: Boolean): DataFrame = {
     require(maxIters >= 1, "dedupClusters needs at least one propagation round")
     // Per-round persistence mode: localCheckpoint (default) materializes to
     // executor block-manager storage — fast, right for local mode, but NOT
@@ -806,15 +827,67 @@ object Dedup {
       // Ordering is unchanged — prev-round blocks are only released AFTER
       // the count has materialized the new round.
     // Both edge directions from ONE pass over pairs (a unionAll of two
-    // selects would evaluate the upstream similarity join twice). The EAGER
+    // selects would evaluate the upstream similarity join twice). The
     // checkpoint materializes the (small) dup-edge set once and truncates
     // lineage — a cache() is only a hint, and any cache miss in the loop or
     // the final join silently re-runs the whole upstream similarity join.
+    // The driver gate's bounded collect is the first action on it, so a
+    // graph past the gate enters the loop with its edges already stored.
     val edges = persistRound(pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst")))
+    val labels = (if (driverTwin) localEdges(edges) else None) match {
+      case Some(es) =>
+        import org.apache.spark.sql.types.{LongType, StructField, StructType}
+        val rows = labelsOnDriver(es, maxIters).toSeq.sorted.map { case (v, l) =>
+          org.apache.spark.sql.Row(v, l)
+        }
+        org.apache.spark.sql.GraftShim.unpersistCheckpoint(edges)
+        // back to the edges' id type, so the final join's schema is the loop's
+        val idType = edges.schema("src").dataType
+        docs.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+            StructType(Seq(StructField("doc_id", LongType), StructField("label", LongType))))
+          .select(col("doc_id").cast(idType).as("doc_id"), col("label").cast(idType).as("label"))
+      case None => labelsDistributed(edges, maxIters, persistRound)
+    }
+    docs.select(col("doc_id"))
+      .join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("label"), col("doc_id")).as("keeper"),
+        (col("doc_id") === coalesce(col("label"), col("doc_id"))).as("kept"))
+  }
+
+  /** The directed (src, dst) edges on the driver, or None when the graph
+    * is past 2 × [[EmbeddingSearch.LocalBatchCap]] edges, its ids are not
+    * integral, or an endpoint is null (the scalar twin cannot mirror
+    * null join semantics). One bounded `limit(…+1)` collect. */
+  private def localEdges(edges: DataFrame): Option[Array[(Long, Long)]] = {
+    import org.apache.spark.sql.types._
+    val cap = 2 * EmbeddingSearch.LocalBatchCap
+    edges.schema("src").dataType match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        val rows = edges.limit(cap + 1).collect()
+        if (rows.length > cap || rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+        else Some(rows.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)))
+      case _ => None
+    }
+  }
+
+  private def logRound(it: Int, path: String, changed: Long): Unit =
+    System.err.println(s"[graft] dedupClusters round $it ($path): $changed labels changed")
+
+  // A silent non-convergence would return intermediate labels as keepers —
+  // wrong answers with no signal. Fail loudly instead; with halving,
+  // maxIters=10 covers component diameters up to ~2^10.
+  private def notConverged(maxIters: Int) = new IllegalStateException(
+    s"dedupClusters did not converge within $maxIters rounds — raise maxIters")
+
+  /** The checkpointed label loop over bidirectional `edges`: (doc_id, label)
+    * for every dup-graph vertex. Releases `edges` once it converges. */
+  private def labelsDistributed(edges: DataFrame, maxIters: Int,
+      persistRound: DataFrame => DataFrame): DataFrame = {
     // Iterate ONLY over the dup-graph vertices — at corpus scale the dup
     // graph is a sliver of the corpus; isolated docs are trivially their own
     // keeper and rejoin at the end. Round 1 is folded into initialization:
@@ -861,19 +934,37 @@ object Dedup {
       labels = next.select(col("doc_id"), col("label"))
       converged = changed == 0
       it += 1
-      System.err.println(s"[graft] dedupClusters round $it: $changed labels changed")
+      logRound(it, "distributed", changed)
     }
-    // A silent non-convergence would return intermediate labels as keepers —
-    // wrong answers with no signal. Fail loudly instead; with halving,
-    // maxIters=10 covers component diameters up to ~2^10.
-    if (!converged) throw new IllegalStateException(
-      s"dedupClusters did not converge within $maxIters rounds — raise maxIters")
+    if (!converged) throw notConverged(maxIters)
     org.apache.spark.sql.GraftShim.unpersistCheckpoint(edges) // final join reads only labels
-    docs.select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("keeper"),
-        (col("doc_id") === coalesce(col("label"), col("doc_id"))).as("kept"))
+    labels
+  }
+
+  /** [[labelsDistributed]]'s scalar twin over collected directed edges:
+    * the same folded init (min(v, min src into v)), the same per-round
+    * step (min of the vertex's label and its in-neighbors' labels), path
+    * halving against the stepped labels, the same `changed` count and
+    * round line, and the same failure past `maxIters`. Returns
+    * vertex → label for every vertex that is an edge's dst. */
+  private[operators] def labelsOnDriver(edges: Array[(Long, Long)],
+      maxIters: Int): Map[Long, Long] = {
+    var labels = edges.groupMapReduce(_._2)(_._1)(math.min)
+      .map { case (v, m) => v -> math.min(v, m) }
+    var converged = false
+    var it = 1
+    while (!converged && it <= maxIters) {
+      val prev = labels
+      val stepped = edges.groupMapReduce(_._2)(e => prev(e._1))(math.min)
+        .map { case (v, m) => v -> math.min(prev(v), m) }
+      labels = stepped.map { case (v, l) => v -> stepped.getOrElse(l, l) }
+      val changed = labels.count { case (v, l) => l < prev(v) }.toLong
+      converged = changed == 0
+      it += 1
+      logRound(it, "driver", changed)
+    }
+    if (!converged) throw notConverged(maxIters)
+    labels
   }
 
   /** [[dedupClusters]] with a KEEP-LONGEST policy: inside each duplicate

@@ -2449,13 +2449,33 @@ object EmbeddingSearch {
     * any partitioning and any engine (the DuckDB oracle replays it).
     * Returns the trained quantizer (cl, cv): k rows, eagerly checkpointed.
     *
+    * DRIVER-PLANNED when the training set is metadata-scale: at most
+    * [[LocalBatchCap]] sampled rows with no null vector or element, finite
+    * components of one width, distinct integral ids and int-range seeds
+    * come to the driver in one bounded collect and train in
+    * [[lloydOnDriver]], the rounds' scalar twin (same kernels, same
+    * centroids bit for bit), instead of paying an assignment job and a
+    * checkpoint per round. The quantizer is then a LocalRelation with
+    * the distributed result's schema. Larger sets train in Spark.
+    *
     * Train ONCE, serve many: persist the result with [[saveKmeansIndex]] and
     * answer queries via [[loadKmeansIndex]] + [[kmeansTopKWithIndex]] — at
     * 100 TB, training runs on a sample and every query after the first pays
     * only the probe + re-rank, never the training passes.
     */
   def trainKmeansIndex(emb: DataFrame, nClusters: Int = 8, iters: Int = 2,
-      samplePct: Int = 100): DataFrame = {
+      samplePct: Int = 100): DataFrame =
+    trainWith(emb, nClusters, iters, samplePct, driverTwin = true)
+
+  /** [[trainKmeansIndex]] through the Spark rounds whatever the training
+    * set's size — the path sets past the driver gate take, callable
+    * directly so small sets keep it covered. */
+  private[graft] def trainKmeansIndexDistributed(emb: DataFrame, nClusters: Int = 8,
+      iters: Int = 2, samplePct: Int = 100): DataFrame =
+    trainWith(emb, nClusters, iters, samplePct, driverTwin = false)
+
+  private def trainWith(emb: DataFrame, nClusters: Int, iters: Int,
+      samplePct: Int, driverTwin: Boolean): DataFrame = {
     require(samplePct >= 1 && samplePct <= 100, s"samplePct in [1,100], got $samplePct")
     kmeansTrainings.incrementAndGet()
     // At 100 TB training NEVER sees the full corpus: Lloyd rounds converge
@@ -2464,6 +2484,11 @@ object EmbeddingSearch {
     // is a predicate, not a shuffle — the training scans read a fraction
     // of the corpus and nothing is materialized driver-side.
     val train = if (samplePct >= 100) emb else emb.where(trainSamplePredicate(samplePct))
+    (if (driverTwin && iters >= 1) lloydOnDriver(train, nClusters, iters) else None)
+      .getOrElse(lloydDistributed(train, nClusters, iters))
+  }
+
+  private def lloydDistributed(train: DataFrame, nClusters: Int, iters: Int): DataFrame = {
     val embN = withNorm(train)
     // seeds = first nClusters of the TRAINING SET by vec_id (a k-row
     // TakeOrdered, metadata-scale); on a dense-id unsampled corpus this is
@@ -2490,11 +2515,7 @@ object EmbeddingSearch {
       // k rows: collapse to one partition before checkpointing so each
       // round materializes with 1 task, not shuffle.partitions of them
       val prev = cent
-      cent = cent.select(col("cl"), col("cv").as("cv_prev"))
-        .join(means, Seq("cl"), "left")
-        .select(col("cl"), coalesce(col("cv"), col("cv_prev")).as("cv"))
-        .coalesce(1)
-        .localCheckpoint()
+      cent = nextCentroids(cent, means).coalesce(1).localCheckpoint()
       // Previous round's checkpoint blocks are dead once the new one exists.
       // The FINAL round's checkpoint is NOT released here — it feeds the lazy
       // probe/re-rank plans downstream and stays pinned (k rows × dims, tiny)
@@ -2503,10 +2524,77 @@ object EmbeddingSearch {
       // reloaded table instead.
       if (prevIsOurs) org.apache.spark.sql.GraftShim.unpersistCheckpoint(prev)
       prevIsOurs = true
-      System.err.println(f"[graft] kmeans round: ${(System.nanoTime() - tRound) / 1e9}%.2f s")
+      logKmeansRound("distributed", tRound)
       tRound = System.nanoTime()
     }
     cent
+  }
+
+  /** One Lloyd update: each centroid takes its cell's mean, and a cell
+    * that lost all members keeps its previous centroid. */
+  private def nextCentroids(cent: DataFrame, means: DataFrame): DataFrame =
+    cent.select(col("cl"), col("cv").as("cv_prev"))
+      .join(means, Seq("cl"), "left")
+      .select(col("cl"), coalesce(col("cv"), col("cv_prev")).as("cv"))
+
+  private def logKmeansRound(path: String, t0: Long): Unit =
+    System.err.println(f"[graft] kmeans round ($path): ${(System.nanoTime() - t0) / 1e9}%.2f s")
+
+  /** [[lloydDistributed]]'s scalar twin over a collected training set, or
+    * None when the set fails the driver gate (see [[trainKmeansIndex]]).
+    * Seeds are the first `nClusters` rows by vec_id; each round assigns
+    * every vector with [[KmeansKernel.bestCell]] against the centroids
+    * sorted by cl (norms by the [[dotSeq]] fold and `math.sqrt`, as the
+    * DotProduct/sqrt columns compute them), and each assigned cell's mean
+    * is [[graft.functions.VectorMeanAggregator]]'s `reduce`/`finish` over
+    * the members' `round6` vectors — exact scaled-long sums, so the order
+    * the members arrive in cannot change a bit. An empty cell keeps its
+    * previous centroid. */
+  private def lloydOnDriver(train: DataFrame, nClusters: Int,
+      iters: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.types._
+    val typed = (train.schema("vec_id").dataType, train.schema("v").dataType) match {
+      case (LongType | IntegerType | ShortType | ByteType, ArrayType(DoubleType, _)) => true
+      case _ => false
+    }
+    if (!typed) None
+    else driverBatch(train.select(col("vec_id"), col("v")), 1).flatMap { case (rows, vs) =>
+      lazy val ids = rows.map(_.getAs[Number](0).longValue)
+      lazy val seeds = ids.indices.sortBy(ids(_)).take(nClusters)
+      val dim = vs.headOption.fold(0)(_.length)
+      if (rows.exists(_.isNullAt(0)) || ids.distinct.length != ids.length ||
+          !seeds.forall(ids(_).isValidInt) ||
+          !vs.forall(v => v.length == dim && v.forall(java.lang.Double.isFinite))) None
+      else {
+        val nv = vs.map(v => math.sqrt(dotSeq(v, v)))
+        val rv = vs.map(v => v.map(KmeansKernel.round6).toSeq)
+        val agg = new graft.functions.VectorMeanAggregator
+        var cent = seeds.map(i => (ids(i).toInt, vs(i))).sortBy(_._1).toArray
+        for (_ <- 1 to iters) {
+          val t0 = System.nanoTime()
+          val table = new KmeansKernel.Decoded(cent.length, dim, cent.map(_._1),
+            cent.map { case (_, cv) => math.sqrt(dotSeq(cv, cv)) }, cent.flatMap(_._2))
+          val sums = scala.collection.mutable.HashMap.empty[Int, graft.functions.VectorMeanAggregator.Buf]
+          vs.indices.foreach { i =>
+            val cl = -KmeansKernel.bestCell(vs(i), nv(i), table)._2
+            sums(cl) = agg.reduce(sums.getOrElse(cl, agg.zero), rv(i))
+          }
+          cent = cent.map { case (cl, cv) => (cl, sums.get(cl).fold(cv)(b => agg.finish(b).toArray)) }
+          logKmeansRound("driver", t0)
+        }
+        val spark = train.sparkSession
+        val rowsOut = cent.map { case (cl, cv) => org.apache.spark.sql.Row(cl, cv.toSeq) }
+        Some(spark.createDataFrame(java.util.Arrays.asList(rowsOut: _*), quantizerSchema(train)))
+      }
+    }
+  }
+
+  /** The schema [[lloydDistributed]]'s quantizer carries, from the
+    * analyzed plan of one update over the seeds' columns (no job). */
+  private def quantizerSchema(train: DataFrame): org.apache.spark.sql.types.StructType = {
+    val seed = train.select(col("vec_id").cast("int").as("cl"), col("v").as("cv"))
+    nextCentroids(seed, seed.groupBy(col("cl"))
+      .agg(graft.functions.VectorMeanAggregator.vectorMean(col("cv")).as("cv"))).schema
   }
 
   /** Persist a trained quantizer as parquet. array<double> roundtrips
@@ -4110,7 +4198,7 @@ object EmbeddingSearch {
     if (!fs.exists(done)) {
       val embL = Tables.embeddings(spark, dir)
         .select(col("vec_id"), toDouble(col("embedding")).as("v"), col("label"))
-      buildIvfIndex(embL, indexPath, ivfCellCount(embL.count()),
+      buildIvfIndex(embL, indexPath, ivfCellCount(Tables.embeddingsCount(spark, dir)),
         meta = Seq("label"))
     }
   }

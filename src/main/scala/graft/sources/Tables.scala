@@ -358,18 +358,26 @@ object Tables {
     * content identical (the dir name IS the key value either way) at
     * probe-set metadata cost. A named value with no dir holds nothing to
     * read, so skipping it is result-invariant; `where(key isin values)`
-    * stays on top as the semantic guard. Falls back to the full-listing
-    * read when every named dir is absent (the schema must still come from
-    * somewhere; only an empty serve reaches this).
+    * stays on top as the semantic guard. When every named dir is absent
+    * (an empty serve: no values, or only values without rows) the read
+    * is EMPTY: one existing dir gives the schema (the probed read of it,
+    * filtered to nothing, so no file is read and no job runs). Only a
+    * table without any `key=v` dir falls back to the full-listing read.
     */
   def probedPartitionRead(spark: SparkSession, tbl: String,
       key: String, values: Seq[Int]): DataFrame = {
-    val fs = hadoopFs(new org.apache.hadoop.fs.Path(tbl))
+    val root = new org.apache.hadoop.fs.Path(tbl)
+    val fs = hadoopFs(root)
     val paths = values.distinct.sorted
       .map(v => s"$tbl/$key=$v")
       .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    val df = if (paths.isEmpty) artifactParquet(spark, tbl)
-      else artifactPartitionedParquet(spark, tbl, paths)
+    lazy val anyDir = if (!fs.exists(root)) None
+      else fs.listStatus(root).iterator
+        .filter(e => e.isDirectory && e.getPath.getName.startsWith(s"$key="))
+        .map(_.getPath.toString).find(dirSchema(spark, _).isDefined)
+    val df = if (paths.nonEmpty) artifactPartitionedParquet(spark, tbl, paths)
+      else anyDir.fold(artifactParquet(spark, tbl))(d =>
+        artifactPartitionedParquet(spark, tbl, Seq(d)).where(lit(false)))
     df.where(col(key).isin(values.map(Integer.valueOf): _*))
   }
 
@@ -436,16 +444,18 @@ object Tables {
     * (r15): every count-gated auto default (MIPS/hybrid/kNN-join) pays
     * one metadata count() per call to pick its branch — correct but a
     * fixed ~0.15 s job on serves that now cost ~0.4 s total. The
-    * fingerprint walk is a listing (cheaper than the count job), and a
+    * fingerprint walk is a listing, the count itself sums the data
+    * files' parquet footers on the driver ([[footerRows]], no job), and a
     * regenerated table re-prices the branch exactly like the eval
     * memos. Compute runs outside the map lock (the memoizedExactPairs
     * discipline). */
   def embeddingsCount(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
-    val fp = datasetFingerprint(s"$dir/embeddings.parquet")
+    val path = s"$dir/embeddings.parquet"
+    val fp = datasetFingerprint(path)
     val cached = embCountMemo.get(dir)
     if (cached != null && cached._1 == fp) cached._2
     else {
-      val n = embeddings(spark, dir).count()
+      val n = footerRows(spark, path)
       embCountMemo.put(dir, (fp, n))
       n
     }

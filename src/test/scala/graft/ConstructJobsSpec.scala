@@ -78,4 +78,57 @@ class ConstructJobsSpec extends AnyFunSuite {
     assert(n == 0, s"dedupAgainst ran $n Spark jobs while building its frame")
     assert(Dedup.dedupAgainst(root, batch, 0.8).collect().length == 1)
   }
+
+  test("metadata-scale loops run on the driver: dedupClusters and trainKmeansIndex within ≤ 3 Spark jobs") {
+    import spark.implicits._
+    val docs = (0L until 40L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val pairs = Seq((0L, 1L), (1L, 2L), (5L, 9L), (9L, 12L), (20L, 21L), (30L, 39L))
+      .map { case (a, b) => (a, b, 1L, 1L, 1.0) }
+      .toDF("doc_a", "doc_b", "inter_len", "union_len", "jaccard")
+    assert(org.apache.spark.sql.GraftShim.isLocalRelation(pairs))
+    val n = constructJobs(Dedup.dedupClusters(docs, pairs))
+    assert(n <= 3, s"dedupClusters ran $n Spark jobs before returning (bound 3)")
+    val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    val k = constructJobs(EmbeddingSearch.trainKmeansIndex(emb, 8, 2))
+    assert(k <= 3, s"trainKmeansIndex ran $k Spark jobs before returning (bound 3)")
+  }
+
+  test("a forgotten doc's lexical read is empty and lists no postings dir") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_construct_fg").toString
+    val bm = s"$root/bm"
+    TextAnalysis.buildBm25Index(Tables.documents(spark, dir), bm)
+    val victim = 7L
+    graft.operators.Forget.forgetEverywhere(spark, s"$root/_MANIFEST",
+      Seq(victim).toDF("doc_id"), Seq(graft.operators.Forget.bm25Target(bm)))
+    val postingsDirs = new java.io.File(s"$bm/postings").listFiles().count(_.getName.startsWith("bucket="))
+    // the small fixture has fewer postings dirs than the default listing
+    // threshold (32), so lower it: a full read of postings then lists its
+    // dirs with a Spark job of one task per dir, as at corpus scale
+    val thresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val saved = spark.conf.getOption(thresholdKey)
+    spark.conf.set(thresholdKey, "4")
+    assert(postingsDirs > 4, s"$postingsDirs postings dirs: the fixture cannot show a listing job")
+    val sc = spark.sparkContext
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tasks.add(e.stageInfos.map(_.numTasks).sum)
+    }
+    try {
+      // warm: the first read after the commit fills the per-commit stats memo
+      assert(TextAnalysis.bm25TopDocsWithIndex(spark, bm, victim).collect().isEmpty)
+      GraftTestBus.drain(sc)
+      sc.addSparkListener(l)
+      assert(TextAnalysis.bm25TopDocsWithIndex(spark, bm, victim).collect().isEmpty)
+      GraftTestBus.drain(sc)
+    } finally {
+      sc.removeSparkListener(l)
+      saved.fold(spark.conf.unset(thresholdKey))(spark.conf.set(thresholdKey, _))
+    }
+    // the one probed dir: the victim's fwd bucket
+    assert(tasks.toArray.forall(_.asInstanceOf[Int] <= 1),
+      s"jobs with more tasks than probed dirs: ${tasks.toArray.mkString(",")}")
+  }
 }

@@ -364,10 +364,105 @@ class DedupSpec extends AnyFunSuite {
     val chainPairs = (0L until (n - 1).toLong)
       .map(i => (i, i + 1, 1L, 1L, 1.0))
       .toDF("doc_a", "doc_b", "inter_len", "union_len", "jaccard")
-    val clusters = Dedup.dedupClusters(chainDocs, chainPairs, checkpointDir = Some(ckpt))
-      .select("doc_id", "keeper").as[(Long, Long)].collect().toMap
+    // the checkpointed loop itself: a 238-edge chain is within the driver gate
+    val (clustersRows, log) = stderrOf(Dedup.dedupClustersDistributed(chainDocs, chainPairs,
+      checkpointDir = Some(ckpt)).select("doc_id", "keeper").as[(Long, Long)].collect())
+    val clusters = clustersRows.toMap
     assert(clusters.size == n && clusters.values.forall(_ == 0L),
       s"deep chain not fully collapsed: ${clusters.filter(_._2 != 0L)}")
+    assert(log.contains("(distributed)") && !log.contains("(driver)"), log)
+  }
+
+  /** What `body` prints to System.err (the `[graft]` progress lines),
+    * with its result. */
+  private def stderrOf[T](body: => T): (T, String) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try { val r = body; (r, buf.toString("UTF-8")) } finally System.setErr(saved)
+  }
+
+  /** The `dedupClusters round` lines with the path tag removed. */
+  private def rounds(log: String): Seq[String] =
+    log.linesIterator.filter(_.contains("dedupClusters round"))
+      .map(_.replaceAll(" \\((driver|distributed)\\)", "")).toSeq
+
+  private def pairsDf(ps: Seq[(Long, Long)]) =
+    ps.map { case (a, b) => (a, b, 1L, 1L, 1.0) }
+      .toDF("doc_a", "doc_b", "inter_len", "union_len", "jaccard")
+
+  /** Both paths over one graph: rows, schema and per-round `changed`
+    * counts must agree, and the public entry must have taken the driver. */
+  private def assertTwin(docs: org.apache.spark.sql.DataFrame,
+      pairs: org.apache.spark.sql.DataFrame, maxIters: Int = 10): Unit = {
+    val (drv, drvLog) = stderrOf {
+      val df = Dedup.dedupClusters(docs, pairs, maxIters)
+      (df.schema, df.collect().toSet)
+    }
+    val (dist, distLog) = stderrOf {
+      val df = Dedup.dedupClustersDistributed(docs, pairs, maxIters)
+      (df.schema, df.collect().toSet)
+    }
+    assert(drvLog.contains("(driver)") && !drvLog.contains("(distributed)"), drvLog)
+    assert(drv._1 == dist._1, "driver twin's schema differs")
+    assert(drv._2 == dist._2, s"driver twin's clusters differ: ${drv._2 diff dist._2}")
+    assert(rounds(drvLog) == rounds(distLog), s"round lines differ:\n$drvLog\n$distLog")
+  }
+
+  test("dedupClusters driver twin equals the checkpointed loop (random graphs, cap-length chain, star)") {
+    val rnd = new scala.util.Random(20261017)
+    (1 to 6).foreach { g =>
+      // sparse ids, self-loops and repeated pairs included; some docs isolated
+      val ids = Seq.fill(5 + rnd.nextInt(40))(rnd.nextInt(500).toLong).distinct
+      val ps = Seq.fill(1 + rnd.nextInt(60))((ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size))))
+      val docs = (ids ++ Seq(1000L + g)).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+      assertTwin(docs, pairsDf(ps))
+    }
+    // int ids keep their type through the driver twin
+    val intDocs = (0 until 12).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val intPairs = Seq((0, 3), (3, 7), (5, 9), (11, 10))
+      .map { case (a, b) => (a, b, 1L, 1L, 1.0) }
+      .toDF("doc_a", "doc_b", "inter_len", "union_len", "jaccard")
+    assertTwin(intDocs, intPairs)
+    // a chain of LocalBatchCap pairs: exactly 2 × cap directed edges
+    val cap = graft.operators.EmbeddingSearch.LocalBatchCap
+    val chainDocs = (0L to cap.toLong).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    assertTwin(chainDocs, pairsDf((0L until cap.toLong).map(i => (i, i + 1))), maxIters = 20)
+    val starDocs = (0L to 4L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    assertTwin(starDocs, pairsDf((1L to 4L).map(i => (0L, i))), maxIters = 1)
+  }
+
+  test("dedupClusters driver twin fails like the checkpointed loop when it cannot converge") {
+    val docs = (0L to 49L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val pairs = pairsDf((0L until 49L).map(i => (i, i + 1)))
+    val (drv, drvLog) = stderrOf(intercept[IllegalStateException](
+      Dedup.dedupClusters(docs, pairs, maxIters = 2)))
+    val (dist, distLog) = stderrOf(intercept[IllegalStateException](
+      Dedup.dedupClustersDistributed(docs, pairs, maxIters = 2)))
+    assert(drv.getMessage == dist.getMessage)
+    assert(drvLog.contains("(driver)"), drvLog)
+    assert(rounds(drvLog) == rounds(distLog) && rounds(drvLog).size == 2)
+  }
+
+  test("dedupClusters past the driver gate runs the checkpointed loop") {
+    // 110 clusters of 11 docs each (10-hop chains): 2,200 directed edges > 2 × cap
+    val ps = (0L until 110L).flatMap(c => (0L until 10L).map(i => (c * 100 + i, c * 100 + i + 1)))
+    val docs = (0L until 11000L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val (got, log) = stderrOf(Dedup.dedupClusters(docs, pairsDf(ps))
+      .select("doc_id", "keeper").as[(Long, Long)].collect().toMap)
+    assert(log.contains("(distributed)") && !log.contains("(driver)"), log)
+    assert(got.size == 11000)
+    got.foreach { case (d, k) =>
+      val want = if (d % 100 <= 10) d - d % 100 else d
+      assert(k == want, s"doc $d: keeper $k, want $want")
+    }
+    // a null endpoint also keeps the Spark loop (null join semantics)
+    val withNull = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null))
+      .toDF("doc_a", "doc_b")
+    val (nullRows, nullLog) = stderrOf(Dedup.dedupClusters(docs.where(col("doc_id") < 5), withNull)
+      .select("doc_id", "keeper").as[(Long, Long)].collect().toMap)
+    assert(nullLog.contains("(distributed)") && !nullLog.contains("(driver)"), nullLog)
+    assert(nullRows == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L))
   }
 
   test("maxIters=1 succeeds when the init round already converged (star graph)") {

@@ -2391,4 +2391,40 @@ class EmbeddingSpec extends AnyFunSuite {
     assert(part(victim)._3 == 0L && part(victim)._4 == 0.0)
     assert(part.values.filter(_._1 != victim).forall(r => r._4 == 1.0))
   }
+
+  /** What `body` prints to System.err (the `[graft]` progress lines),
+    * with its result. */
+  private def stderrOf[T](body: => T): (T, String) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try { val r = body; (r, buf.toString("UTF-8")) } finally System.setErr(saved)
+  }
+
+  /** A quantizer's schema and rows (cl, cv as raw double bits), sorted by cl. */
+  private def quantizer(cent: org.apache.spark.sql.DataFrame) =
+    (cent.schema, cent.collect().map(r => (r.getInt(0),
+      r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits))).sortBy(_._1).toSeq)
+
+  test("driver Lloyd equals the distributed rounds bit for bit (sf0.001, sampled, past the cap)") {
+    val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    val n = emb.count()
+    Seq((EmbeddingSearch.ivfCellCount(n), 2, 100), (8, 3, 100), (5, 2, 50)).foreach {
+      case (k, iters, pct) =>
+        val before = EmbeddingSearch.kmeansTrainings.get()
+        val (drv, log) = stderrOf(quantizer(EmbeddingSearch.trainKmeansIndex(emb, k, iters, pct)))
+        assert(EmbeddingSearch.kmeansTrainings.get() == before + 1)
+        assert(log.split("kmeans round \\(driver\\)", -1).length - 1 == iters, log)
+        val dist = quantizer(EmbeddingSearch.trainKmeansIndexDistributed(emb, k, iters, pct))
+        assert(drv._1 == dist._1, s"schema: ${drv._1} vs ${dist._1}")
+        assert(drv._2.size == k && drv._2 == dist._2, s"centroids differ at ($k, $iters, $pct)")
+    }
+    // three id-shifted copies: 1,500 rows > LocalBatchCap keep the Spark rounds
+    val big = (0 until 3).map(c => emb.withColumn("vec_id", col("vec_id") + c * 10000L))
+      .reduce(_ union _)
+    val (bigQ, bigLog) = stderrOf(quantizer(EmbeddingSearch.trainKmeansIndex(big, 8, 2)))
+    assert(bigLog.contains("kmeans round (distributed)") && !bigLog.contains("(driver)"), bigLog)
+    assert(bigQ == quantizer(EmbeddingSearch.trainKmeansIndexDistributed(big, 8, 2)))
+  }
 }
