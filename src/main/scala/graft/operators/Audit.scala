@@ -18,8 +18,8 @@ import graft.sources.Tables
   * single scan — never one job per column), constraints union one
   * conditional-sum aggregate per table with one anti-join COUNT AGGREGATE
   * per FK edge — no eager action fires until the caller runs the frame
-  * (the eager-`.count()`-at-plan-build anti-pattern documented at
-  * BookQuery.referenceScoresFor is exactly what this avoids). At 100 TB
+  * (an eager `.count()` per check at plan-build time would run a corpus
+  * job per rule before any row is asked for). At 100 TB
   * that is the floor: every check needs the rows it checks, each FK
   * mismatch set is an AQE-broadcast anti join, and nothing shuffles more
   * than the 1-row aggregates.

@@ -862,13 +862,13 @@ object Dedup {
   /** The directed (src, dst) edges on the driver, or None when the graph
     * is past 2 × [[EmbeddingSearch.LocalBatchCap]] edges, its ids are not
     * integral, or an endpoint is null (the scalar twin cannot mirror
-    * null join semantics). One bounded `limit(…+1)` collect. */
+    * null join semantics). One bounded read ([[Tables.firstRows]]). */
   private def localEdges(edges: DataFrame): Option[Array[(Long, Long)]] = {
     import org.apache.spark.sql.types._
     val cap = 2 * EmbeddingSearch.LocalBatchCap
     edges.schema("src").dataType match {
       case LongType | IntegerType | ShortType | ByteType =>
-        val rows = edges.limit(cap + 1).collect()
+        val rows = Tables.firstRows(edges, cap + 1)
         if (rows.length > cap || rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
         else Some(rows.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)))
       case _ => None

@@ -3056,17 +3056,20 @@ object EmbeddingSearch {
   /** Load the quantizer at `indexPath`, TRAINING AND PERSISTING it first
     * if absent — the one train-or-load prologue every persisted-quantizer
     * surface shares (kNN serve, cluster balance; a divergent copy would
-    * let two entries silently stop sharing an index).
+    * let two entries silently stop sharing an index). A quantizer trained
+    * here is returned as trained, not read back: serving from it is
+    * row-identical to serving from the saved copy ([[saveKmeansIndex]]).
     */
   def ensureKmeansIndex(spark: SparkSession, dir: String, indexPath: String,
       nClusters: Int = 8, iters: Int = 2, samplePct: Int = 100): DataFrame = {
     val marker = new org.apache.hadoop.fs.Path(indexPath, "_SUCCESS")
     val fs = marker.getFileSystem(org.apache.spark.sql.GraftShim.sessionHadoopConf())
-    if (!fs.exists(marker)) {
-      val emb = vectors(spark, dir)
-      saveKmeansIndex(trainKmeansIndex(emb, nClusters, iters, samplePct), indexPath)
+    if (fs.exists(marker)) loadKmeansIndex(spark, indexPath)
+    else {
+      val cent = trainKmeansIndex(vectors(spark, dir), nClusters, iters, samplePct)
+      saveKmeansIndex(cent, indexPath)
+      cent
     }
-    loadKmeansIndex(spark, indexPath)
   }
 
   /** Train-once/serve-many as one call: if no quantizer exists at
@@ -3664,12 +3667,10 @@ object EmbeddingSearch {
   private[graft] val LocalBatchCap = 1024
 
   /** The rows of a small query batch on the driver, or None past
-    * [[LocalBatchCap]]. A frame whose optimized plan is a LocalRelation is
-    * read with no Spark job; any other plan costs one bounded
-    * `limit(cap + 1)` collect. */
+    * [[LocalBatchCap]]: one bounded read ([[Tables.firstRows]] of cap + 1
+    * rows — no Spark job for a LocalRelation, else one). */
   private[graft] def smallBatchRows(batch: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
-    val rows = if (org.apache.spark.sql.GraftShim.isLocalRelation(batch)) batch.collect()
-      else batch.limit(LocalBatchCap + 1).collect()
+    val rows = Tables.firstRows(batch, LocalBatchCap + 1)
     if (rows.length > LocalBatchCap) None else Some(rows)
   }
 

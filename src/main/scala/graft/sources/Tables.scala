@@ -208,6 +208,20 @@ object Tables {
     spark.read.schema(schema).parquet(path)
   }
 
+  /** At most `n` rows of `df`: the first ones in partition order, as
+    * `limit(n).collect()` returns them, but in ONE Spark job over all
+    * partitions instead of `executeTake`'s rounds (first partition, then
+    * the rest). A frame whose optimized plan is a LocalRelation is read
+    * with no job.
+    */
+  def firstRows(df: DataFrame, n: Int): Array[org.apache.spark.sql.Row] =
+    if (org.apache.spark.sql.GraftShim.isLocalRelation(df)) df.collect().take(n)
+    else {
+      val rdd = df.rdd
+      rdd.sparkContext.runJob(rdd, (it: Iterator[org.apache.spark.sql.Row]) => it.take(n).toArray)
+        .flatten.take(n)
+    }
+
   /** THE write seam of graft's standing artifacts — index builds,
     * extends, compactions, forget rewrites, quantizers and models: one
     * parquet write of `df` to `path`. On the local filesystem the write

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.BookQuery
 
@@ -77,6 +79,64 @@ class BookQuerySpec extends AnyFunSuite {
       assert(batch(q) == solo,
         s"query $q: missing=${solo -- batch(q)} extra=${batch(q) -- solo}")
     }
+  }
+
+  /** Same schema (nullability included) and the same multiset of rows. */
+  private def assertSame(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.schema == want.schema, s"$what: schema ${got.schema} vs ${want.schema}")
+    val (g, w) = (got.collect().map(_.toString).sorted.toSeq, want.collect().map(_.toString).sorted.toSeq)
+    assert(g == w, s"$what: missing=${w.diff(g)} extra=${g.diff(w)}")
+  }
+
+  private def singleCases(docs: DataFrame, q: Column, what: String): Unit =
+    assertSame(BookQuery.referenceScoresFor(docs, q), BookQuery.inPlanScores(docs, q), what)
+
+  private def batchCases(docs: DataFrame, nQueries: Int, what: String): Unit =
+    assertSame(BookQuery.referenceScoresBatch(docs, nQueries), BookQuery.inPlanBatch(docs, nQueries), what)
+
+  test("driver plan ≡ in-plan DAG: sf0.001, string ids, null texts and ids, fallbacks, empty Q") {
+    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+    for (q <- Seq(0L, 7L, 42L)) singleCases(docs, lit(q), s"sf0.001 query $q")
+    assert(BookQuery.referenceScores(docs, 7L).count() > 0)
+    for (nq <- Seq(1, 3, 8)) batchCases(docs, nq, s"sf0.001 batch of $nq")
+    // string ids: the wholetext form's basename keys
+    val byName = docs.select(col("doc_id").cast("string").as("doc_id"), col("text"))
+    singleCases(byName, lit("3"), "string ids")
+    assert(BookQuery.referenceScoresFor(byName, lit("3")).count() > 0)
+    // a null text (query and corpus side) and a null id, which counts in n
+    val withNulls = Seq[(Option[Long], Option[String])](
+      (Some(0L), Some("a b c d")), (Some(1L), Some("a b c x")), (Some(2L), Some("a b c d e")),
+      (Some(3L), None), (None, Some("a b c d")), (Some(4L), Some("b c d a b c"))
+    ).toDF("doc_id", "text")
+    singleCases(withNulls, lit(0L), "null text and id")
+    singleCases(withNulls, lit(3L), "null query text")
+    batchCases(withNulls, 5, "batch over null text and id")
+    // absent and duplicated query ids take the in-plan DAG
+    singleCases(withNulls, lit(99L), "absent query id")
+    val dup = corpus1.union(Seq((0L, "a b c x y")).toDF("doc_id", "text"))
+    singleCases(dup, lit(0L), "duplicated query id")
+    batchCases(dup, 3, "batch with a duplicated query id")
+    // a query with an empty shingle set (fewer than k tokens)
+    val short = Seq((0L, "a b"), (1L, "a b c"), (2L, "a b")).toDF("doc_id", "text")
+    singleCases(short, lit(0L), "empty query shingle set")
+    batchCases(short, 3, "batch with an empty query shingle set")
+  }
+
+  test("driver plan ≡ in-plan DAG at the df ≤ n−2 boundary") {
+    // n = 5; Q = {s t u, t u a, u a b, a b c}. "s t u" is in every non-query
+    // doc (df_nq = 4 = n−1: dropped); "a b c" is in three (df_nq = 3 = n−2:
+    // kept)
+    val corpus = Seq(
+      (0L, "s t u a b c"), (1L, "s t u a b c"), (2L, "s t u x a b c"),
+      (3L, "s t u y a b c"), (4L, "s t u q r")
+    ).toDF("doc_id", "text")
+    singleCases(corpus, lit(0L), "boundary")
+    batchCases(corpus, 5, "boundary batch")
+    val got = BookQuery.referenceScores(corpus)
+      .select("doc_id", "len", "sum_shared", "score").as[(Long, Long, Long, Double)].collect().toSet
+    // doc1: t = Q, sum = 3 → 3/(4+4−3); docs 2, 3: t = {s t u, a b c},
+    // sum = 1 → 1/(2+4−1); doc4: t = {s t u} only → no row
+    assert(got == Set((1L, 4L, 3L, 0.6), (2L, 2L, 1L, 0.2), (3L, 2L, 1L, 0.2)))
   }
 
   test("top-k ranks by score with doc_id tie-break") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Dedup, EmbeddingSearch, TextAnalysis}
+import graft.operators.{BookQuery, Dedup, EmbeddingSearch, TextAnalysis}
 import graft.sources.Tables
 
 /** The standing-index reads build their frames from driver-side values:
@@ -20,8 +20,9 @@ class ConstructJobsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  /** Spark jobs started while `construct` builds (but does not run) a frame. */
-  private def constructJobs(construct: => DataFrame): Int = {
+  /** Spark jobs started while `construct` runs (building a frame, or
+    * building and running one). */
+  private def constructJobs(construct: => Any): Int = {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger(0)
     val l = new SparkListener {
@@ -92,6 +93,34 @@ class ConstructJobsSpec extends AnyFunSuite {
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val k = constructJobs(EmbeddingSearch.trainKmeansIndex(emb, 8, 2))
     assert(k <= 3, s"trainKmeansIndex ran $k Spark jobs before returning (bound 3)")
+  }
+
+  test("the paper's query runs in ≤ 3 Spark jobs, construct plus exec (single and batch)") {
+    val docs = Tables.documents(spark, dir)
+    val single = () => BookQuery.topK(BookQuery.referenceScoresFor(docs, lit(5L)), "score", 10).collect()
+    val batch = () => BookQuery.referenceScoresBatch(docs).collect()
+    // warm: the first read of the table fills the session's file caches
+    assert(single().nonEmpty && batch().nonEmpty)
+    val s = constructJobs(single())
+    assert(s <= 3, s"topK(referenceScoresFor) ran $s Spark jobs (bound 3)")
+    val b = constructJobs(batch())
+    assert(b <= 3, s"referenceScoresBatch ran $b Spark jobs (bound 3)")
+  }
+
+  test("a bounded read is one Spark job over a 4-partition frame, none over a LocalRelation") {
+    val df = spark.range(0, 100, 1, 4).toDF("id")
+    assert(!org.apache.spark.sql.GraftShim.isLocalRelation(df))
+    // 30 rows span two of the 25-row partitions: executeTake would run two jobs
+    var rows = Array.empty[Row]
+    val n = constructJobs { rows = Tables.firstRows(df, 30) }
+    assert(n == 1, s"firstRows ran $n Spark jobs over a 4-partition frame")
+    assert(rows.toSeq == df.limit(30).collect().toSeq, "firstRows must return limit(n)'s rows")
+    import spark.implicits._
+    val local = (0 until 5).toDF("id")
+    assert(org.apache.spark.sql.GraftShim.isLocalRelation(local))
+    var localRows = Array.empty[Row]
+    assert(constructJobs { localRows = Tables.firstRows(local, 3) } == 0)
+    assert(localRows.toSeq.map(_.getInt(0)) == Seq(0, 1, 2))
   }
 
   test("a forgotten doc's lexical read is empty and lists no postings dir") {

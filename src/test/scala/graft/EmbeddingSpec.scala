@@ -139,6 +139,25 @@ class EmbeddingSpec extends AnyFunSuite {
       "second invocation retrained instead of serving the persisted index")
   }
 
+  test("a quantizer ensureKmeansIndex trains is returned as trained: it serves as the saved copy does") {
+    val dir = "/root/testdata/sf0.001"
+    val idx = java.nio.file.Files.createTempDirectory("graft_kmidx_ret").toString + "/idx"
+    val emb = graft.sources.Tables.embeddings(spark, dir)
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    val before = EmbeddingSearch.kmeansTrainings.get()
+    val trained = EmbeddingSearch.ensureKmeansIndex(spark, dir, idx)
+    assert(EmbeddingSearch.kmeansTrainings.get() == before + 1, "a fresh index path must train once")
+    val reloaded = EmbeddingSearch.loadKmeansIndex(spark, idx)
+    assert(trained.collect().toSet == reloaded.collect().toSet)
+    def served(cent: org.apache.spark.sql.DataFrame) =
+      EmbeddingSearch.kmeansTopKWithIndex(emb, cent, k = 5, nQueries = 3).collect().toSet
+    val fromTrained = served(trained)
+    assert(fromTrained.nonEmpty && fromTrained == served(reloaded),
+      "serving from the returned quantizer diverged from serving the saved one")
+    EmbeddingSearch.ensureKmeansIndex(spark, dir, idx)
+    assert(EmbeddingSearch.kmeansTrainings.get() == before + 1, "a saved quantizer must load, not retrain")
+  }
+
   test("sampled k-means trains on the deterministic sample, serves everything, zero retrains") {
     val dir = "/root/testdata/sf0.001"
     val idx = java.nio.file.Files.createTempDirectory("graft_kmidx_smp").toString + "/idx"
@@ -997,6 +1016,11 @@ class EmbeddingSpec extends AnyFunSuite {
         nClusters = EmbeddingSearch.ivfCellCount(n))
       .as[(Long, Int, Boolean)].collect().toSet
     assert(graft.SparkEntry.queries("embed_knn_kmeans_sized")(spark, dir).count() > 0)
+    // that sibling serves the standing IVF index; the sized quantizer
+    // dedup_semantic loads is its own artifact, which nothing has trained
+    // yet on an empty artifact root, so warm it the same way
+    EmbeddingSearch.ensureKmeansIndex(spark, dir, graft.SparkEntry.sizedKmeansIndexDirFor(dir),
+      EmbeddingSearch.ivfCellCount(n))
     val before = EmbeddingSearch.kmeansTrainings.get()
     val persisted = graft.SparkEntry.queries("dedup_semantic")(spark, dir)
       .as[(Long, Int, Boolean)].collect().toSet

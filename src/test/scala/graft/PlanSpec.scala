@@ -18,17 +18,25 @@ class PlanSpec extends AnyFunSuite {
     try f finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  test("flagship plans with exactly 2 data shuffles and broadcast query/df sides") {
+  test("flagship plans are map-only: 0 shuffle and 0 broadcast exchanges") {
     withStaticPlans {
-      val plan = BookQuery.referenceScores(Tables.documents(spark, dir))
-        .queryExecution.executedPlan
-      // the folded-in corpus-count scalar adds a SinglePartition exchange
-      // (one long crosses the wire) — count only DATA shuffles
-      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }.filterNot(
-        _.outputPartitioning == org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
-      val broadcasts = plan.collect { case e: BroadcastExchangeExec => e }
-      assert(shuffles.size == 2, s"expected 2 data shuffles, got ${shuffles.size}:\n$plan")
-      assert(broadcasts.size >= 2, s"expected >=2 broadcasts:\n$plan")
+      val docs = Tables.documents(spark, dir)
+      val plans = Seq(
+        "referenceScores" -> BookQuery.referenceScores(docs),
+        "referenceScoresBatch" -> BookQuery.referenceScoresBatch(docs),
+        "topK" -> BookQuery.topK(BookQuery.referenceScores(docs), "score", 10))
+        .map { case (name, f) => name -> f.queryExecution.executedPlan }
+      for ((name, plan) <- plans) {
+        // every exchange counts, SinglePartition ones included
+        val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+        val broadcasts = plan.collect { case e: BroadcastExchangeExec => e }
+        assert(shuffles.isEmpty && broadcasts.isEmpty,
+          s"$name: ${shuffles.size} shuffle and ${broadcasts.size} broadcast exchanges:\n$plan")
+      }
+      val topK = plans.last._2
+      assert(topK.isInstanceOf[org.apache.spark.sql.execution.TakeOrderedAndProjectExec] &&
+        topK.collect { case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => t }.size == 1,
+        s"top-k is not a single TakeOrderedAndProject stage:\n$topK")
     }
   }
 
@@ -327,10 +335,28 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("scans prune columns: flagship reads only doc_id and text") {
-    val plan = BookQuery.referenceScores(Tables.documents(spark, dir))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ReadSchema"))
-    assert(!plan.contains("n_chars"), "scan reads unneeded columns")
+    // the returned frame reads the checkpointed intermediate; the corpus
+    // scans run in the jobs that build it, so check the plans those run
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        executed.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val returned = try {
+      val f = BookQuery.referenceScores(Tables.documents(spark, dir))
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      f.queryExecution.executedPlan.toString
+    } finally spark.listenerManager.unregister(listener)
+    val plans = executed.toArray.map(_.toString).toSeq :+ returned
+    val scans = plans.filter(_.contains("ReadSchema"))
+    assert(scans.nonEmpty, s"no corpus scan among the plans:\n${plans.mkString("\n---\n")}")
+    for (p <- plans) {
+      assert(!p.contains("n_chars"), s"scan reads unneeded columns:\n$p")
+      p.split("ReadSchema: ").drop(1).foreach(r =>
+        assert(r.startsWith("struct<doc_id:bigint,text:string>"), s"unexpected ReadSchema:\n$p"))
+    }
   }
 
   test("filtered kNN pushes the label predicate into the parquet scan") {
